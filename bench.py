@@ -617,7 +617,12 @@ def main() -> int:
         "unit": "sec",
         "perf_total_sec": perf_total,
         "lifecycle_total_sec": lifecycle_total,
-        "queries": {k: round(timings[k], 2) for k in COMPACT_QUERIES if k in timings},
+        # a pinned name that errored stays on the line as an explicit null
+        "queries": {
+            k: round(timings[k], 2) if k in timings else None
+            for k in COMPACT_QUERIES
+            if k in timings or k in errors
+        },
         "sf": out["sf"],
         "calib_spark_sec": out["calib_spark_sec"],
     }
@@ -626,12 +631,15 @@ def main() -> int:
         compact["full_n_queries"] = out["full"]["n_queries"]
     if errors:
         compact["n_errors"] = len(errors)
-    compact["queries_omitted"] = len(timings) - len(compact["queries"])
+    compact["queries_omitted"] = len(timings) - sum(v is not None for v in compact["queries"].values())
     # last-resort guard: the pinned set fits with margin today, but a
     # pathological slowdown adds digits — drop fastest before losing
-    # the whole line to the capture window
-    while len(json.dumps(compact)) > 1900 and compact["queries"]:
-        fastest = min(compact["queries"], key=compact["queries"].get)
+    # the whole line to the capture window (an errored name's null is
+    # kept: it is the evidence)
+    timed = [k for k, v in compact["queries"].items() if v is not None]
+    while len(json.dumps(compact)) > 1900 and timed:
+        fastest = min(timed, key=compact["queries"].get)
+        timed.remove(fastest)
         del compact["queries"][fastest]
         compact["queries_omitted"] += 1
     print(json.dumps(compact))

@@ -17,6 +17,12 @@ Here the same chain is *compiled into a Catalyst logical plan*:
   with LibMR's per-record error channel
   (``/root/reference/src/mr.c:954-957``: a step error turns the record
   into an ErrorRecord and the pipeline keeps running),
+* error records travel in-band, in the ``__mr_error__`` column, to the
+  end of the plan: later Python steps and relational filters pass them
+  through, and relational maps and accumulates carry them past
+  themselves, null-padded,
+* ``Execution.run`` evaluates the plan once, in one Spark job, and
+  splits the collected rows into results and errors,
 * ``reshuffle`` is a hash repartition (the reference routes records by
   CRC16 slot — ``/root/reference/src/mr.c:736-785``),
 * ``collect`` gathers to one task (the reference gathers to the
@@ -30,16 +36,22 @@ supplied by Spark's scheduler/shuffle and deliberately NOT rebuilt.
 from __future__ import annotations
 
 import dataclasses
+import datetime
+import decimal
 import threading
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from itertools import repeat
 from typing import Any, Callable, Iterator
 
+import numpy as np
 import pandas as pd
+from pandas.api.extensions import ExtensionDtype
+from pandas.core.dtypes.cast import maybe_box_native
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _create_row
 
 from .registry import GLOBAL_REGISTRY, PyAccumulator, Registry, StepImpl, StepType
 
@@ -120,62 +132,99 @@ def _resolve(registry: Registry, step_type: StepType, name_or_fn, relational_def
     )
 
 
+# Types whose values pandas' ``maybe_box_native`` returns unchanged: an
+# object column holding only these needs no per-cell boxing.
+_NATIVE_TYPES = frozenset(
+    {type(None), str, bytes, bool, int, float, decimal.Decimal, list, tuple, dict, np.ndarray,
+     datetime.date, datetime.datetime, datetime.timedelta, pd.Timestamp, pd.Timedelta}
+)
+
+
+def _column_values(s: pd.Series) -> list:
+    """``s`` as a list of the values pandas' records-orient ``to_dict`` gives.
+    Numpy columns unbox through ``tolist()``. Object columns are boxed
+    cell by cell only when they hold a type that boxing would change
+    (numpy scalars, ``pd.NA``); extension columns always are."""
+    if isinstance(s.dtype, ExtensionDtype):
+        return [maybe_box_native(v) for v in s]
+    vals = s.tolist()
+    if s.dtype == object and not _NATIVE_TYPES.issuperset(map(type, vals)):
+        return [maybe_box_native(v) for v in vals]
+    return vals
+
+
+def _records(pdf: pd.DataFrame) -> Iterator[tuple[str | None, dict]]:
+    """The one per-record loop of the Python stages: yield ``(error,
+    record)`` for each row of ``pdf``, where ``error`` is the row's
+    ERROR_COL value (None when the column is absent) and ``record`` is
+    the row without ERROR_COL, equal to its records-orient ``to_dict`` dict."""
+    names, columns, errors = [], [], repeat(None)
+    for name, s in pdf.items():
+        if name == ERROR_COL:
+            errors = s.tolist()
+        else:
+            names.append(name)
+            columns.append(_column_values(s))
+    rows = zip(*columns) if columns else repeat((), len(pdf))
+    return zip(errors, (dict(zip(names, row)) for row in rows))
+
+
+def _error_rows(cols: list[str], errors: list[str]) -> pd.DataFrame:
+    """Error records null-padded to ``cols`` (the reference's ErrorRecord)."""
+    return pd.DataFrame({**{c: [None] * len(errors) for c in cols}, ERROR_COL: errors})
+
+
 def _py_map_stage(df: DataFrame, fn: Callable, args: Any, out_schema: str | None) -> DataFrame:
     """Wrap a per-record Python mapper in mapInPandas with the error
     channel. Output = mapped columns (nulled on error) + ERROR_COL."""
-    in_cols = [c for c in df.columns if c != ERROR_COL]
     if out_schema is None:
-        out_fields = ", ".join(f"`{c}` {t}" for c, t in df.dtypes if c != ERROR_COL)
-    else:
-        out_fields = out_schema
-    full_schema = f"{out_fields}, {ERROR_COL} string"
+        out_schema = ", ".join(f"`{c}` {t}" for c, t in df.dtypes if c != ERROR_COL)
     # parse the DDL rather than splitting on ',' — field types like
     # decimal(18,2) or map<string,int> contain commas
-    out_cols = [f.name for f in StructType.fromDDL(out_fields).fields]
+    out_cols = [f.name for f in StructType.fromDDL(out_schema).fields]
+    null_row = (None,) * len(out_cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_rows = []
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                err = rec.pop(ERROR_COL, None) if had_err else None
+            rows, errors = [], []
+            for err, rec in _records(pdf):
+                if err is None:
+                    try:
+                        mapped = fn(rec, args) if args is not None else fn(rec)
+                        rows.append([mapped.get(c) for c in out_cols])
+                    except Exception as e:  # record-level error, keep going
+                        err = str(e)
                 if err is not None:
-                    out_rows.append({**{c: None for c in out_cols}, ERROR_COL: err})
-                    continue
-                try:
-                    mapped = fn(rec, args) if args is not None else fn(rec)
-                    out_rows.append({**{c: mapped.get(c) for c in out_cols}, ERROR_COL: None})
-                except Exception as e:  # record-level error, keep going
-                    out_rows.append({**{c: None for c in out_cols}, ERROR_COL: str(e)})
-            yield pd.DataFrame(out_rows, columns=[*out_cols, ERROR_COL])
+                    rows.append(null_row)
+                errors.append(err)
+            columns = list(zip(*rows)) if rows else [()] * len(out_cols)
+            yield pd.DataFrame({**dict(zip(out_cols, map(list, columns))), ERROR_COL: errors})
 
-    return df.select(*in_cols, *( [F.col(ERROR_COL)] if ERROR_COL in df.columns else [] )).mapInPandas(
-        run, schema=full_schema
-    )
+    return df.mapInPandas(run, schema=f"{out_schema}, {ERROR_COL} string")
 
 
 def _py_filter_stage(df: DataFrame, fn: Callable, args: Any) -> DataFrame:
     """Per-record Python predicate with the error channel; loops rows
-    like the reference's pipelined filter (/root/reference/src/mr.c:864-889)."""
+    like the reference's pipelined filter (its ``src/mr.c:864-889``).
+    Kept rows leave by position; error rows leave null-padded."""
     cols = [c for c in df.columns if c != ERROR_COL]
     schema = ", ".join(f"`{c}` {t}" for c, t in df.dtypes if c != ERROR_COL) + f", {ERROR_COL} string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_rows = []
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                err = rec.pop(ERROR_COL, None) if had_err else None
-                if err is not None:
-                    out_rows.append({**{c: None for c in cols}, ERROR_COL: err})
-                    continue
-                try:
-                    keep = fn(rec, args) if args is not None else fn(rec)
-                    if keep:
-                        out_rows.append({**rec, ERROR_COL: None})
-                except Exception as e:
-                    out_rows.append({**{c: None for c in cols}, ERROR_COL: str(e)})
-            yield pd.DataFrame(out_rows, columns=[*cols, ERROR_COL])
+            keep, errors = [], []
+            for i, (err, rec) in enumerate(_records(pdf)):
+                if err is None:
+                    try:
+                        if fn(rec, args) if args is not None else fn(rec):
+                            keep.append(i)
+                        continue
+                    except Exception as e:
+                        err = str(e)
+                errors.append(err)
+            yield pdf.iloc[keep].assign(**{ERROR_COL: None})
+            if errors:
+                yield _error_rows(cols, errors)
 
     return df.mapInPandas(run, schema=schema)
 
@@ -183,44 +232,69 @@ def _py_filter_stage(df: DataFrame, fn: Callable, args: Any) -> DataFrame:
 def _py_accumulate_stage(df: DataFrame, acc: PyAccumulator, global_fold: bool) -> DataFrame:
     """LibMR accumulate: streaming fold, one emitted record per shard;
     empty input emits nothing (/root/reference/src/mr.c:787-810,794-798).
+    Error records bypass the fold and pass through, null-padded.
 
     Per-partition fold via mapInPandas; a global fold (accumulate after
     collect) first gathers to a single partition, mirroring the
     reference's collect-then-fold-at-initiator.
     """
     if global_fold:
-        df = df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-    cols = [c for c in df.columns if c != ERROR_COL]
-    schema = acc.schema
+        df = df.coalesce(1)
+    carries_errors = ERROR_COL in df.columns
+    schema = f"{acc.schema}, {ERROR_COL} string" if carries_errors else acc.schema
+    out_cols = [f.name for f in StructType.fromDDL(acc.schema).fields] if carries_errors else []
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         state = acc.zero
         seen = False
         for pdf in batches:
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                if had_err and rec.pop(ERROR_COL, None) is not None:
-                    continue  # error records bypass the fold
+            errors = []
+            for err, rec in _records(pdf):
+                if err is not None:
+                    errors.append(err)
+                    continue
                 seen = True
                 state = acc.fn(state, rec)
+            if errors:
+                yield _error_rows(out_cols, errors)
         if seen:
             row = acc.finish(state) if acc.finish else state
             if not isinstance(row, dict):
                 raise ExecutionError("PyAccumulator must fold to a dict (or provide finish())")
+            if carries_errors:
+                row = {**row, ERROR_COL: None}
             yield pd.DataFrame([row])
 
-    return df.select(*cols).mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=schema)
+
+
+def _carry_errors(src: DataFrame, step: Callable[[DataFrame], DataFrame], shared: list[DataFrame]) -> DataFrame:
+    """Apply the relational ``step`` to the good rows of ``src`` and carry
+    its error rows past the step, null-padded to the step's output, in the
+    same plan. ``src`` is then read by two branches; it goes on ``shared``
+    so that ``Execution.run`` persists it and the steps upstream of it
+    still run once per record."""
+    if ERROR_COL not in src.columns:
+        return step(src)
+    shared.append(src)
+    out = step(src.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL))
+    if ERROR_COL not in out.columns:
+        out = out.withColumn(ERROR_COL, F.lit(None).cast("string"))
+    padded = [F.lit(None).cast(f.dataType).alias(f.name) for f in out.schema.fields if f.name != ERROR_COL]
+    return out.unionByName(src.filter(F.col(ERROR_COL).isNotNull()).select(*padded, ERROR_COL))
 
 
 class Execution:
-    """A compiled pipeline: a results DataFrame plus lazily-evaluated
-    error branches (the reference's in-band ErrorRecord list,
-    ``/root/reference/src/mr.c:954-957``)."""
+    """A compiled pipeline: one DataFrame whose error records travel
+    in-band to the end in ERROR_COL (the reference's ErrorRecords, its
+    ``src/mr.c:954-957``). ``run()`` evaluates it in one Spark job and
+    splits the collected rows into results and errors;
+    ``dataframe()`` and ``errors_dataframe()`` are lazy filters of it."""
 
-    def __init__(self, spark: SparkSession, df: DataFrame, error_dfs: list[DataFrame], max_idle_ms: int | None):
+    def __init__(self, spark: SparkSession, df: DataFrame, shared: list[DataFrame], max_idle_ms: int | None):
         self.spark = spark
         self._df = df
-        self._error_dfs = error_dfs
+        self._shared = shared  # frames read by two branches of the plan
         self.max_idle_ms = max_idle_ms
         self.execution_id = uuid.uuid4().hex  # ≈ shardId+counter id (/root/reference/src/mr.c:452-464)
 
@@ -231,15 +305,9 @@ class Execution:
         return self._df
 
     def errors_dataframe(self) -> DataFrame | None:
-        branches = list(self._error_dfs)
-        if ERROR_COL in self._df.columns:
-            branches.append(self._df.filter(F.col(ERROR_COL).isNotNull()).select(F.col(ERROR_COL).alias("error")))
-        if not branches:
+        if ERROR_COL not in self._df.columns:
             return None
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
+        return self._df.filter(F.col(ERROR_COL).isNotNull()).select(F.col(ERROR_COL).alias("error"))
 
     def run(self) -> ExecutionResult:
         """Execute and gather ``(results, errors)`` to the driver —
@@ -248,22 +316,36 @@ class Execution:
         kills idle executions after maxIdle — /root/reference/src/mr.c:26-28,1306-1331).
         """
         if self.max_idle_ms is None:
-            return ExecutionResult(self._collect_results(), self._collect_errors())
-        return run_with_job_group_timeout(
-            self.spark,
-            lambda: ExecutionResult(self._collect_results(), self._collect_errors()),
-            self.max_idle_ms,
-            MAX_IDLE_ERROR,
-        )
+            return self._run()
+        return run_with_job_group_timeout(self.spark, self._run, self.max_idle_ms, MAX_IDLE_ERROR)
 
-    def _collect_results(self) -> list:
-        return self.dataframe().collect()
-
-    def _collect_errors(self) -> list[str]:
-        edf = self.errors_dataframe()
-        if edf is None:
-            return []
-        return [r[0] for r in edf.collect()]
+    def _run(self) -> ExecutionResult:
+        # Persisting a frame that two branches read makes each of its
+        # partitions compute once: the second reader waits on the block's
+        # write lock, then reads the block. Frames the caller had already
+        # cached are left as they are.
+        persisted = [d for d in self._shared if d.storageLevel == StorageLevel.NONE]
+        for d in persisted:
+            d.persist()
+        try:
+            # a fresh Dataset: a Dataset fixes its physical plan, cache
+            # lookups included, at its first action
+            rows = self._df.select("*").collect()
+        finally:
+            for d in persisted:
+                d.unpersist()
+        cols = self._df.columns
+        if ERROR_COL not in cols:
+            return ExecutionResult(rows, [])
+        i = cols.index(ERROR_COL)
+        fields = cols[:i] + cols[i + 1 :]
+        results, errors = [], []
+        for r in rows:
+            if r[i] is None:
+                results.append(_create_row(fields, r[:i] + r[i + 1 :]))
+            else:
+                errors.append(r[i])
+        return ExecutionResult(results, errors)
 
 
 class ExecutionBuilder:
@@ -373,16 +455,8 @@ class ExecutionBuilder:
     # -- compile -------------------------------------------------------
     def create_execution(self) -> Execution:
         df: DataFrame | None = None
-        error_dfs: list[DataFrame] = []
+        shared: list[DataFrame] = []
         collected = False
-
-        def split_errors(d: DataFrame) -> DataFrame:
-            """Divert error rows out of the main stream before a step
-            that collapses/changes schema."""
-            if ERROR_COL in d.columns:
-                error_dfs.append(d.filter(F.col(ERROR_COL).isNotNull()).select(F.col(ERROR_COL).alias("error")))
-                return d.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-            return d
 
         for s in self._steps:
             impl = s.impl
@@ -390,8 +464,7 @@ class ExecutionBuilder:
                 df = impl.fn(self.spark, s.args)
             elif s.step_type is StepType.MAPPER:
                 if impl.relational:
-                    clean = split_errors(df)
-                    df = impl.fn(clean, s.args) if s.args is not None else impl.fn(clean)
+                    df = _carry_errors(df, lambda d: impl.fn(d, s.args) if s.args is not None else impl.fn(d), shared)
                 else:
                     df = _py_map_stage(df, impl.fn, s.args, impl.out_schema)
             elif s.step_type is StepType.FILTER:
@@ -405,19 +478,17 @@ class ExecutionBuilder:
                 else:
                     df = _py_filter_stage(df, impl.fn, s.args)
             elif s.step_type is StepType.RESHUFFLE:
-                clean = df
                 n = s.args
                 if s.key is None:
-                    df = clean.repartition(n) if n else clean.repartition(self.spark.sparkContext.defaultParallelism)
+                    df = df.repartition(n) if n else df.repartition(self.spark.sparkContext.defaultParallelism)
                 else:
                     keys = s.key if isinstance(s.key, (list, tuple)) else [s.key]
                     keys = [F.col(k) if isinstance(k, str) else k for k in keys]
-                    df = clean.repartition(n, *keys) if n else clean.repartition(*keys)
+                    df = df.repartition(n, *keys) if n else df.repartition(*keys)
             elif s.step_type is StepType.COLLECT:
                 collected = True
             elif s.step_type is StepType.ACCUMULATOR:
                 if impl.relational:
-                    clean = split_errors(df)
                     exprs = impl.fn(s.args) if s.args is not None else impl.fn()
                     if isinstance(exprs, Column):
                         exprs = [exprs]
@@ -425,26 +496,25 @@ class ExecutionBuilder:
                         # Global agg that emits NOTHING on empty input
                         # (/root/reference/src/mr.c:794-798): grouped agg
                         # on a constant yields 0 rows when input is empty.
-                        df = clean.groupBy(F.lit(1).alias("__g__")).agg(*exprs).drop("__g__")
+                        def agg(d: DataFrame) -> DataFrame:
+                            return d.groupBy(F.lit(1).alias("__g__")).agg(*exprs).drop("__g__")
                     else:
                         # per-shard partial: one row per non-empty partition
-                        df = (
-                            clean.withColumn("__pid__", F.spark_partition_id())
-                            .groupBy("__pid__")
-                            .agg(*exprs)
-                            .drop("__pid__")
-                        )
+                        def agg(d: DataFrame) -> DataFrame:
+                            return (
+                                d.withColumn("__pid__", F.spark_partition_id())
+                                .groupBy("__pid__")
+                                .agg(*exprs)
+                                .drop("__pid__")
+                            )
+
+                    df = _carry_errors(df, agg, shared)
                 else:
-                    clean = split_errors(df)
-                    df = _py_accumulate_stage(clean, impl.fn, global_fold=collected)
+                    df = _py_accumulate_stage(df, impl.fn, global_fold=collected)
             else:
                 raise ExecutionError(f"unhandled step {s.step_type}")
 
-        if collected and df is not None and ERROR_COL not in df.columns:
-            # "collect then keep processing" for python stages happens on
-            # one task; pure-relational chains need no physical gather.
-            pass
-        return Execution(self.spark, df, error_dfs, self._max_idle_ms)
+        return Execution(self.spark, df, shared, self._max_idle_ms)
 
     def run(self) -> ExecutionResult:
         return self.create_execution().run()

@@ -39,10 +39,11 @@ def load(path: str) -> dict:
 
 def queries_of(d: dict) -> dict:
     """Full-sweep timings when present (rotated-out queries regress
-    there), with the headline's min-of-2 winning on overlap."""
+    there), with the headline's min-of-2 winning on overlap. A pinned
+    name that errored is a null on the headline line and has no time."""
     q = dict((d.get("full") or {}).get("queries") or {})
     q.update(d.get("queries") or {})
-    return q
+    return {k: v for k, v in q.items() if v is not None}
 
 
 def main(argv: list[str]) -> int:

@@ -201,3 +201,130 @@ def test_reader_error_records(spark, duck, sf_dir):
     finally:
         GLOBAL_REGISTRY._steps.pop((StepType.READER, "FlakyReader"), None)
         GLOBAL_REGISTRY._steps.pop((StepType.READER, "DeadReader"), None)
+
+
+# -- single pass: each step runs once per record, results and errors come
+#    from one evaluation in one Spark job --------------------------------
+
+
+def _fail_even(rec):
+    k = int(rec["key"][3:])
+    if k % 2 == 0:
+        raise RuntimeError(f"bad {k}")
+    return {"key": rec["key"]}
+
+
+def _counting(spark, fn):
+    """``fn`` wrapped to bump a Spark accumulator once per call."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def step(rec):
+        calls.add(1)
+        return fn(rec)
+
+    return calls, step
+
+
+@pytest.mark.parametrize("shape", ["py_filter_py_map", "py_map_rel_map", "py_map_collect_rel_accumulate"])
+def test_python_step_runs_once_per_record(spark, duck, sf_dir, shape):
+    n = duck.sql("SELECT count(*) FROM orders").fetchone()[0]
+    b = create_builder(spark, "KeysReader", {"sf_dir": sf_dir})
+    if shape == "py_filter_py_map":
+        calls, keep = _counting(spark, lambda rec: True)
+        b = b.filter(keep, relational=False).map(_fail_even, relational=False, out_schema="key string")
+    elif shape == "py_map_rel_map":
+        calls, step = _counting(spark, _fail_even)
+        b = b.map(step, relational=False, out_schema="key string").map(lambda df: df.select(F.upper("key").alias("k")))
+    else:
+        calls, step = _counting(spark, _fail_even)
+        b = (
+            b.map(step, relational=False, out_schema="key string")
+            .collect()
+            .accumulate(lambda: F.count(F.lit(1)).alias("count"))
+        )
+    res = b.run()
+    assert calls.value == n
+    evens = duck.sql("SELECT count(*) FROM orders WHERE o_orderkey % 2 = 0").fetchone()[0]
+    assert len(res.errors) == evens
+    if shape == "py_map_collect_rel_accumulate":
+        assert [r["count"] for r in res.results] == [n - evens]
+    else:
+        assert len(res.results) == n - evens
+
+
+@pytest.mark.parametrize("relational_tail", [False, True])
+def test_random_failures_partition_the_input(spark, duck, sf_dir, relational_tail):
+    # a non-deterministic step: results and errors must come from the same
+    # evaluation, so every record lands in exactly one of the two lists
+    import random
+
+    def flaky(rec):
+        if random.random() < 0.5:
+            raise RuntimeError("coin flip")
+        return {"key": rec["key"]}
+
+    n = duck.sql("SELECT count(*) FROM orders").fetchone()[0]
+    b = create_builder(spark, "KeysReader", {"sf_dir": sf_dir}).map(flaky, relational=False, out_schema="key string")
+    if relational_tail:
+        b = b.map(lambda df: df.select("key", F.length("key").alias("n")))
+    res = b.collect().run()
+    assert len(res.results) + len(res.errors) == n
+    assert res.errors and res.results
+
+
+def test_run_is_one_spark_job(spark, sf_dir):
+    ex = (
+        create_builder(spark, "KeysReader", {"sf_dir": sf_dir})
+        .filter(lambda rec: rec["type"] == "string", relational=False)
+        .map(_fail_even, relational=False, out_schema="key string")
+        .create_execution()
+    )
+    sc = spark.sparkContext
+    group = "test-run-is-one-spark-job"
+    sc.setJobGroup(group, "one run()")
+    try:
+        ex.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("relational_tail", [False, True])
+def test_run_matches_lazy_frames(spark, sf_dir, relational_tail):
+    from collections import Counter
+
+    b = (
+        create_builder(spark, "KeysReader", {"sf_dir": sf_dir})
+        .filter(lambda rec: rec["type"] == "string", relational=False)
+        .map(lambda rec: {**_fail_even(rec), "type": rec["type"]}, relational=False, out_schema="key string, type string")
+    )
+    if relational_tail:
+        b = b.map(lambda df: df.select(F.length("key").alias("n"), "key"))
+    ex = b.create_execution()
+    res = ex.run()
+
+    def rows(rs):
+        return Counter((tuple(r.__fields__), tuple(r)) for r in rs)
+
+    assert res.results and res.errors
+    assert rows(res.results) == rows(ex.dataframe().collect())
+    assert Counter(res.errors) == Counter(r.error for r in ex.errors_dataframe().collect())
+
+
+def test_run_leaves_a_cached_reader_cached(spark, sf_dir):
+    # run() persists a frame two branches read, and unpersists only what
+    # it persisted itself: a reader frame the caller cached stays cached
+    from pyspark import StorageLevel
+
+    from libmr_spark.core.builder import ERROR_COL
+    from libmr_spark.sources.readers import kv_table
+
+    df = kv_table(spark, sf_dir).withColumn(ERROR_COL, F.when(F.col("type") == "hash", F.lit("bad")))
+    df.cache()
+    try:
+        res = create_builder(spark, df).map(lambda d: d.select("key")).run()
+        assert res.results and res.errors
+        assert df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()

@@ -4,6 +4,8 @@ they're fast enough for wide random coverage."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -173,3 +175,56 @@ def test_manifest_publish_cross_process_no_lost_update(tmp_path):
         assert p.exitcode == 0
     tags = json.load(open(manifest))["batches"]
     assert sorted(tags) == sorted(f"w{w}-{j}" for w in range(6) for j in range(5))
+
+
+# -- the Python stages' record loop ----------------------------------------
+
+_cell_kinds = {
+    "int": st.integers(-(2**62), 2**62),
+    "nullable_int": st.one_of(st.none(), st.integers(-(2**62), 2**62)),
+    "float": st.one_of(st.floats(allow_infinity=False), st.just(float("nan"))),
+    "str": st.one_of(st.none(), _text),
+    "bool": st.booleans(),
+    "nullable_bool": st.one_of(st.none(), st.booleans()),
+    "decimal": st.one_of(st.none(), st.decimals(allow_nan=False, allow_infinity=False, places=2)),
+    "timestamp": st.one_of(st.none(), st.datetimes(datetime(1900, 1, 1), datetime(2200, 1, 1))),
+    "list": st.one_of(st.none(), st.lists(st.integers(-100, 100), max_size=3)),
+}
+
+
+@st.composite
+def _frames(draw):
+    import numpy as np
+    import pandas as pd
+
+    n = draw(st.integers(0, 6))
+    kinds = draw(st.lists(st.sampled_from(sorted(_cell_kinds)), min_size=1, max_size=5))
+    data = {}
+    for i, kind in enumerate(kinds):
+        vals = draw(st.lists(_cell_kinds[kind], min_size=n, max_size=n))
+        if kind == "timestamp":
+            vals = pd.to_datetime(pd.Series(vals, dtype=object))
+        elif kind == "list" and draw(st.booleans()):
+            # Arrow hands list columns to pandas as numpy arrays
+            vals = pd.Series([None if v is None else np.array(v) for v in vals], dtype=object)
+        elif kind == "int" and draw(st.booleans()):
+            vals = pd.Series([np.int64(v) for v in vals], dtype=object)  # numpy scalars in an object column
+        elif kind == "nullable_int":
+            vals = pd.Series(vals, dtype="Int64")  # an extension column: pd.NA for nulls
+        data[f"c{i}_{kind}"] = vals
+    return pd.DataFrame(data, index=range(n))
+
+
+def _typed(records):
+    # compare types and reprs, so NaN equals NaN and int never equals float
+    return [{k: (type(v), repr(v)) for k, v in rec.items()} for rec in records]
+
+
+@given(_frames())
+@settings(max_examples=300, deadline=None)
+def test_records_match_to_dict(pdf):
+    from libmr_spark.core.builder import _records
+
+    got = list(_records(pdf))
+    assert all(err is None for err, _ in got)
+    assert _typed(rec for _, rec in got) == _typed(pdf.to_dict("records"))
