@@ -48,19 +48,6 @@ def top_k_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    agg_col: Column,
-    out_name: str,
-    fn=F.sum,
-) -> DataFrame:
-    """Running aggregate (unbounded-preceding → current row)."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_name, fn(agg_col).over(w))
-
-
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
@@ -191,15 +178,6 @@ def range_join(
         F.explode(F.sequence(F.floor(F.col(lo) / b), F.floor((F.col(hi) - F.lit(1e-9)) / b))),
     )
     return lb.join(rb, "__bin__").filter(pred).drop("__bin__")
-
-
-def grouping_sets(df: DataFrame, view_name: str, sets_sql: str, agg_sql: str, group_cols: str) -> DataFrame:
-    """GROUPING SETS via SQL (Catalyst expands to a single Expand node —
-    one pass over the data regardless of set count)."""
-    df.createOrReplaceTempView(view_name)
-    return df.sparkSession.sql(
-        f"SELECT {group_cols}, {agg_sql} FROM {view_name} GROUP BY GROUPING SETS {sets_sql}"
-    )
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str, num_buckets: int) -> None:

@@ -467,6 +467,12 @@ def kanon_dp_release(
     )
 
 
+#: Largest ``k`` that ``dsir_importance_select`` hands to the top-k
+#: operator as is (2 x 2^20 slots is a few MB per task); a larger one
+#: is capped at the scored row count first.
+_TOPK_MAX_K = 1 << 20
+
+
 def dsir_importance_select(
     docs: DataFrame,
     is_target: Column,
@@ -607,7 +613,11 @@ def dsir_importance_select(
     # k-bounded merge on the driver side of the exchange) — never a
     # global sort of the corpus-sized score table; rank is computed on
     # the k-bounded result, so the global window is k rows by
-    # construction.
+    # construction. Its selector allocates 2k slots per task up front,
+    # so a huge k is first capped at the scored row count: same rows,
+    # same ranks.
+    if k >= _TOPK_MAX_K:
+        k = min(k, scored.count())
     topk = keyed.orderBy(F.col("_key").desc(), F.col(id_col).asc()).limit(k)
     w = Window.orderBy(F.col("_key").desc(), F.col(id_col).asc())
     picked = topk.withColumn("rank", F.row_number().over(w))

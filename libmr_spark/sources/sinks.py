@@ -3,16 +3,14 @@ back into Redis (WriteDummyString,
 ``/root/reference/tests/mr_test_module/src/lib.rs:741-764``) or a RESP
 reply to the client (``/root/reference/src/mr.h:244,250``).
 
-Spark-native sinks: table writes (parquet/csv/json) and
-``foreachPartition`` for external systems. At scale, a write is a job:
+Spark-native sinks: table writes (parquet/csv/json) and store
+maintenance (merge, compaction, retention). At scale, a write is a job:
 partition the output sensibly (``partitionBy`` for pruning on read,
 sorted-within-partitions for locality) rather than coalescing to one
 file.
 """
 
 from __future__ import annotations
-
-from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -30,14 +28,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
-
-
-def foreach_partition_sink(df: DataFrame, fn: Callable[[Iterator], None]) -> None:
-    """Side-effecting sink: ``fn`` runs once per partition on the
-    executors (connection-per-partition pattern — the distributed
-    read-modify-write idiom of the reference,
-    ``tests/mr_test_module/src/lib.rs:323-353``)."""
-    df.foreachPartition(fn)
 
 
 def merge_upsert(

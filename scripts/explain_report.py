@@ -53,7 +53,9 @@ def main() -> int:
     print("  candidate volume by construction (see operators/dedup.py docstring).")
     print("* `kv_*` queries derive key from o_orderkey, so their scans prune to")
     print("  exactly the projected columns; derived-column predicates cannot")
-    print("  push down (documented in core/rpc.py:run_on_key).")
+    print("  push down. `run_on_key` reads only a small bare local parquet")
+    print("  scan on the driver (gate in the core/rpc.py module docstring);")
+    print("  a derived frame like these takes the Spark filter.")
     print("* `revenue_share_window` / `dense_rank_ties` intentionally use")
     print("  UNPARTITIONED windows (WindowExec warns during the audit): both")
     print("  window over POST-AGGREGATE rows bounded by group cardinality")

@@ -1,4 +1,5 @@
-"""InternalCommand fan-out parity and approximate-aggregate accuracy."""
+"""InternalCommand fan-out parity, run_on_key's driver-local read against
+its Spark filter, and approximate-aggregate accuracy."""
 
 from __future__ import annotations
 
@@ -110,3 +111,189 @@ def test_rpc_timeout_mirrors_reference(spark, sf_dir):
     # a fast call under deadline returns normal rows
     got = run_on_key(kv, "key", some_key, timeout_ms=30000)
     assert got.count() == 1
+
+
+# -- run_on_key's driver-local read ------------------------------------------
+# A small bare local parquet scan is read on the driver with pyarrow; every
+# case must match the Spark filter it replaces in schema (names, types,
+# order) and rows (as a multiset).
+
+
+def _kv_store(spark, sf_dir, path):
+    from libmr_spark.core import partitioner
+    from libmr_spark.sources import sinks
+
+    kv = kv_table(spark, sf_dir)
+    staged = kv.withColumn("bucket", (partitioner.slot_col("key") % 4).cast("int"))
+    sinks.write_parquet(staged, str(path), partition_by=["bucket"])
+    return spark.read.parquet(str(path))
+
+
+def _is_local(df) -> bool:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+
+
+def _assert_same(got, want):
+    from collections import Counter
+
+    assert got.schema == want.schema
+    assert Counter(got.collect()) == Counter(want.collect())
+
+
+def _check_key(scan, key_col, key, local=True):
+    from libmr_spark.core.rpc import run_on_key
+
+    got = run_on_key(scan, key_col, key)
+    assert _is_local(got) == local
+    _assert_same(got, scan.filter(F.col(key_col) == key))
+    return got
+
+
+def _collect_counting_jobs(df):
+    """(rows, Spark jobs the collect started), counted from a job group."""
+    import uuid
+
+    sc = df.sparkSession.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        rows = df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_on_key_local_present_absent_and_partition_key(spark, sf_dir, tmp_path):
+    scan = _kv_store(spark, sf_dir, tmp_path / "store")
+    present = scan.select("key").first().key
+    assert _check_key(scan, "key", present).count() == 1
+    assert _check_key(scan, "key", "no-such-key").count() == 0
+    # partition column: the value and type Spark inferred from bucket=<n>
+    assert _check_key(scan, "bucket", 2).count() > 0
+    assert _check_key(scan, "bucket", 99).count() == 0
+
+
+def test_run_on_key_local_after_merge_upserts(spark, sf_dir, tmp_path):
+    from libmr_spark.sources import sinks
+
+    base = tmp_path / "store"
+    scan = _kv_store(spark, sf_dir, base)
+    rows = scan.filter(F.col("bucket") == 1).limit(3).collect()
+    for i in range(2):
+        updates = spark.createDataFrame(
+            [(r.key, f"v{i}", "string", 1) for r in rows] + [(f"new{i}", "n", "string", 1)],
+            "key string, value string, type string, bucket int",
+        )
+        sinks.merge_upsert(spark, str(base), updates, ["key"], "bucket", staging_path=str(tmp_path / "staging"))
+    scan = spark.read.parquet(str(base))
+    assert sum("bucket=1/" in f for f in scan.inputFiles()) > 1  # a bucket of several files
+    assert [r.value for r in _check_key(scan, "key", rows[0].key).collect()] == ["v1"]
+    assert _check_key(scan, "key", "new0").count() == 1
+    _check_key(scan, "bucket", 1)
+
+
+def test_run_on_key_local_typed_columns_with_nulls(spark, tmp_path):
+    import datetime
+    from decimal import Decimal
+
+    from libmr_spark.sources import sinks
+
+    schema = "s string, i int, l bigint, d double, m decimal(12,2), dt date, b boolean, bin binary"
+    rows = [
+        ("a", 1, 10**12, 1.5, Decimal("3.25"), datetime.date(2024, 1, 2), True, b"\x00x"),
+        ("b", 2, -7, -0.0, Decimal("-1.00"), datetime.date(1970, 1, 1), False, b""),
+        (None, None, None, None, None, None, None, None),
+        ("a", 2, 10**12, 1.5, Decimal("3.25"), datetime.date(2024, 1, 2), False, b"\x00x"),
+    ]
+    sinks.write_parquet(spark.createDataFrame(rows, schema).repartition(3), str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+    for col_name, key in [
+        ("s", "a"), ("i", 2), ("l", 10**12), ("d", 1.5), ("d", 0.0), ("m", Decimal("3.25")),
+        ("m", Decimal("-1")), ("dt", datetime.date(2024, 1, 2)), ("b", False), ("bin", b"\x00x"),
+        ("bin", b""), ("i", 3),
+    ]:
+        _check_key(scan, col_name, key)
+
+
+def test_run_on_key_local_file_missing_a_column(spark, tmp_path):
+    from libmr_spark.sources import sinks
+
+    path = str(tmp_path / "t")
+    sinks.write_parquet(spark.createDataFrame([("k1", 1)], "key string, n int"), path)
+    sinks.write_parquet(spark.createDataFrame([("k2", 2, "x")], "key string, n int, extra string"), path, mode="append")
+    scan = spark.read.schema("key string, n int, extra string").parquet(path)
+    assert _check_key(scan, "key", "k1").collect()[0].extra is None
+    assert _check_key(scan, "key", "k2").collect()[0].extra == "x"
+    _check_key(scan, "extra", "x")
+
+
+def test_run_on_key_local_hit_in_last_file(spark, sf_dir, tmp_path):
+    # a filtered multi-file scan yields record batches [0, ..., 0, 1]; a
+    # frame built from them as-is would be empty
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote, urlsplit
+
+    scan = _kv_store(spark, sf_dir, tmp_path / "store")
+    last = pq.read_table(unquote(urlsplit(scan.inputFiles()[-1]).path), columns=["key"])
+    got = _check_key(scan, "key", last["key"][last.num_rows - 1].as_py())
+    assert got.count() == 1
+
+
+def test_run_on_key_falls_back_through_spark(spark, sf_dir, tmp_path):
+    from libmr_spark.sources import sinks
+
+    # a derived frame
+    kv = kv_table(spark, sf_dir)
+    _check_key(kv, "key", kv.select("key").first().key, local=False)
+    # a key that needs Spark's coercion: int against a string column
+    path = str(tmp_path / "t")
+    sinks.write_parquet(spark.createDataFrame([("7", 1), ("8", 2)], "sid string, n int"), path)
+    scan = spark.read.parquet(path)
+    assert _check_key(scan, "sid", 7, local=False).count() == 1
+    # a file whose column differs from the schema only in case: Spark
+    # matches it case-insensitively, a pyarrow read would see nulls
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "cased").mkdir()
+    pq.write_table(pa.table({"Key": ["k1"], "n": pa.array([1], pa.int32())}), str(tmp_path / "cased" / "part-0.parquet"))
+    cased = spark.read.schema("key string, n int").parquet(str(tmp_path / "cased"))
+    assert _check_key(cased, "key", "k1", local=False).count() == 1
+    # a caller-cached scan keeps reading from (and stays in) the cache
+    cached = spark.read.parquet(path).cache()
+    try:
+        assert _check_key(cached, "sid", "8", local=False).count() == 1
+        assert cached.is_cached and cached.storageLevel.useMemory
+    finally:
+        cached.unpersist()
+
+
+def test_run_on_key_local_no_jobs_task_and_timeout(spark, sf_dir, tmp_path):
+    import time
+
+    import pytest
+
+    from libmr_spark.core.builder import ExecutionError
+    from libmr_spark.core.rpc import REMOTE_TASK_TIMEOUT_ERROR, run_on_key
+
+    scan = _kv_store(spark, sf_dir, tmp_path / "store")
+    key = scan.select("key").first().key
+    want = scan.filter(F.col("key") == key).select("value").collect()
+    assert _collect_counting_jobs(run_on_key(scan, "key", key).select("value")) == (want, 0)
+    # task= post-processes the local hit, still without a job
+    got = run_on_key(scan, "key", key, task=lambda hit: hit.select("value"))
+    assert _collect_counting_jobs(got) == (want, 0)
+    # timeout_ms= returns the rows in time, and raises past the deadline
+    assert run_on_key(scan, "key", key, timeout_ms=30000).select("value").collect() == want
+    with pytest.raises(ExecutionError, match=REMOTE_TASK_TIMEOUT_ERROR):
+        run_on_key(
+            scan,
+            "key",
+            key,
+            task=lambda hit: hit.mapInPandas(
+                lambda it: (_ for _ in ()).throw(SystemError) if time.sleep(30) else it,
+                schema=hit.schema,
+            ),
+            timeout_ms=1500,
+        )
