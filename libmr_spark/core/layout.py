@@ -51,13 +51,15 @@ def rebalanced(df: DataFrame, *key_cols: str, probe: bool = False) -> DataFrame:
     ``_REBALANCE_MIN_PARTS`` partitions — never probe a lazy
     shuffle-tailed frame, ``.rdd`` materializes its AQE stages.
 
+    With ``key_cols`` a key's rows usually land in one file, but not
+    always: AQE (``optimizeSkewsInRebalancePartitions``, on by default)
+    splits a reducer partition larger than the advisory size, and a
+    hot key group can then span files. Callers may rely on clustering
+    for pruning, never on one file per key group.
+
     Under a non-AQE plan the hint degrades to a plain shuffle — no
     worse than the status quo (and foreachBatch batch plans DO get AQE
     in Spark 4: verified 32 files -> 1 inside a micro-batch)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_REBALANCE_WRITES", "1") == "0":
-        return df  # A/B escape hatch: measure the pre-r12 write layout
     if probe:
         try:
             if df.rdd.getNumPartitions() <= _REBALANCE_MIN_PARTS:

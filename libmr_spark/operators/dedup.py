@@ -201,11 +201,13 @@ def compact_incremental_store(
     row multiset per table is unchanged, only its directory layout.
 
     ``cluster_by`` (e.g. ``{"index": ["band", "bucket"]}``) hash-
-    repartitions a table on its join key during the rewrite, so every
-    key group lands wholly in ONE output file — restoring the
-    co-location that per-batch appends eroded, which is what makes the
-    admission join partition-local at 100 TB. ``n_files`` bounds the
-    clustered file count (defaults to the session's parallelism).
+    repartitions a table on its join key during the rewrite, so a key
+    group lands in ONE output file — restoring the co-location that
+    per-batch appends eroded, which is what makes the admission join
+    partition-local at 100 TB. ``n_files`` pins the clustered file
+    count and keeps every group whole; without it the write is
+    size-targeted (``rebalanced``), where AQE's skew split can spread
+    a hot group over several files.
 
     ``zone_by`` (e.g. ``{"fps": "doc_id"}``) instead RANGE-partitions
     + sorts a table by that column and writes per-file min/max ZONE
@@ -235,8 +237,10 @@ def compact_incremental_store(
             # size-targeted clustering (guide §6): hash-cluster on the
             # join key but let AQE coalesce toward the advisory size —
             # one file for a KB-scale store, ~64 MB files at scale.
-            # Coalescing merges whole hash partitions, so "every key
-            # group lands wholly in one file" is preserved.
+            # Coalescing merges whole hash partitions, so a key group
+            # usually lands in one file; AQE's skew split of an
+            # oversized partition can spread a hot group over several
+            # (see ``rebalanced``), so readers must not assume one.
             return rebalanced(df, *cols)
         zc = zone_by.get(table)
         if zc:

@@ -767,8 +767,9 @@ def fluency_bigram_deciles_q(spark, sf_dir):
     "oracle reconstructs the merged state relationally from the "
     "original table, so a lossy merge (dropped survivors, doubled "
     "updates, mangled partition values) fails the hash compare. See "
-    "sources/sinks.py::merge_upsert for the staging two-hop commit "
-    "note (a log-based table format replaces the second hop).",
+    "sources/sinks.py::merge_upsert for the one-write commit and its "
+    "per-partition delete+rename exposure window (a log-based table "
+    "format replaces it with a metadata swap).",
 )
 def sink_merge_upsert_q(spark, sf_dir):
     from .queries_ext import _sink_dir

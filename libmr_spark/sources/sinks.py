@@ -13,6 +13,7 @@ file.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
@@ -49,51 +50,92 @@ def merge_upsert(
     driver, bounded by the table's partition count, and pushed into
     the base scan as an ``isin`` filter so pruning happens at the
     file listing. Survivors (base rows not matched by an update key)
-    come from a left-anti join shuffled only across the touched
-    partitions' rows.
+    come from a left-anti join over the touched partitions' rows, and
+    each touched partition is rewritten as advisory-sized files
+    (``rebalanced``): one file for a KB-scale batch.
 
-    Plain parquet has no transaction log, so the merged data for the
-    touched partitions is staged to ``staging_path`` first and then
-    dynamically overwritten into place (Spark refuses — correctly —
-    to overwrite a path it is simultaneously reading). A production
-    deployment swaps this two-hop commit for a log-based table format
-    (the mechanics above are exactly what those formats' MERGE
-    executes under the hood); semantics and partition scoping are
-    identical.
+    The merge is ONE Spark write of the touched partitions straight
+    into ``base_path``. Spark accepts a dynamic overwrite of a path the
+    same plan reads: its tasks write under the hidden
+    ``base_path/.spark-staging-<job>`` directory (readers skip it), and
+    the job commit then deletes each touched partition's directory and
+    renames the staged one into its place. That per-partition
+    delete+rename is the whole exposure window: a reader listing the
+    table inside it can miss the partition, and a process killed inside
+    it leaves the partition missing. A failed write aborts before the
+    commit and leaves the table exactly as it was. A log-based table
+    format turns the commit into one metadata swap; semantics and
+    partition scoping are identical. ``staging_path`` is unused and
+    kept for callers that pass it.
+
+    The batch is checked before the write: at most one row per key,
+    and the partition list. A driver-bounded batch (its optimized plan
+    is a ``LocalRelation``) whose key and partition columns group in
+    Spark exactly as their Python values compare is checked on the
+    driver from one ``collect`` that starts no Spark job; any other
+    batch is checked by Spark. Both raise the same ``ValueError``.
     """
     from pyspark.sql import functions as F
 
-    # MERGE contract: at most one source row per key (SQL MERGE raises
-    # on multiple matches; silently inserting both would double rows)
-    dup = (
-        updates.groupBy(*keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
+    from ..core.layout import rebalanced
+
+    dup, parts = _check_batch(updates, keys, partition_col)
+    if dup is not None:
         raise ValueError(
-            f"duplicate key in update batch (e.g. {dict(zip(keys, dup[0][:-1]))}): "
+            f"duplicate key in update batch (e.g. {dict(zip(keys, dup))}): "
             "MERGE requires at most one source row per key"
         )
-
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
     if not parts:
-        # empty update batch: nothing to merge — and the staged rewrite
-        # of zero rows would produce a schema-less parquet dir that
-        # poisons the next read (a quiet micro-batch must be a no-op)
+        # empty update batch: nothing to merge — and a rewrite of zero
+        # rows would produce a schema-less parquet dir that poisons the
+        # next read (a quiet micro-batch must be a no-op)
         return
     base = spark.read.parquet(base_path)
     touched = base.filter(F.col(partition_col).isin(parts))
     survivors = touched.join(updates.select(*keys), keys, "left_anti")
-    merged = survivors.unionByName(updates)
-
-    staging = staging_path or base_path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").option(
+    rebalanced(survivors.unionByName(updates), partition_col).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(partition_col).parquet(base_path)
+
+
+#: Column types whose Python values compare equal exactly when Spark
+#: groups them together (with ``StringType()`` of the default collation).
+#: Floats (NaN, -0.0), binary (unhashable bytearray) and nested types
+#: are not among them.
+_DRIVER_GROUPABLE_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType, T.DateType, T.DecimalType,
+)
+
+
+def _check_batch(updates: DataFrame, keys: list[str], partition_col: str) -> tuple[tuple | None, list]:
+    """A merge batch's checks: (the values of one key that occurs more
+    than once, or None; the distinct ``partition_col`` values). A
+    driver-bounded batch whose key and partition columns are of
+    ``_DRIVER_GROUPABLE_TYPES`` is checked from one job-free
+    ``collect``; any other by Spark."""
+    from pyspark.sql import functions as F
+
+    cols = updates.select(*keys, partition_col)
+    plan = updates._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation" and all(
+        f.dataType == T.StringType() or isinstance(f.dataType, _DRIVER_GROUPABLE_TYPES)
+        for f in cols.schema.fields
+    ):
+        rows = cols.collect()
+        seen: set[tuple] = set()
+        for r in rows:
+            key = tuple(r[: len(keys)])
+            if key in seen:
+                return key, []
+            seen.add(key)
+        return None, list(dict.fromkeys(r[-1] for r in rows))
+
+    # MERGE contract: at most one source row per key (SQL MERGE raises
+    # on multiple matches; silently inserting both would double rows)
+    dup = updates.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
+    if dup:
+        return tuple(dup[0][:-1]), []
+    return None, [r[0] for r in updates.select(partition_col).distinct().collect()]
 
 
 def compact_small_files(
@@ -110,9 +152,11 @@ def compact_small_files(
     KB-sized files, and scan cost becomes file-listing + open overhead
     instead of IO. Compaction is one job: size the output file count
     from the ACTUAL byte total (never a hardcoded partition count),
-    repartition, rewrite. Uses the same staged two-hop commit as
-    ``merge_upsert`` (Spark refuses to overwrite a path being read);
-    a log-based table format does this as a background OPTIMIZE with a
+    repartition, rewrite. Unlike ``merge_upsert``'s dynamic overwrite,
+    this is a STATIC overwrite of the path it reads, which Spark
+    refuses (correctly: it deletes the input before reading it), so
+    the rewrite is staged to ``staging_path`` first and copied back; a
+    log-based table format does this as a background OPTIMIZE with a
     metadata swap. For hive-partitioned tables, run per partition (or
     with dynamic overwrite on the touched partitions) so compaction
     cost tracks the churned partitions, not the table.
@@ -249,8 +293,9 @@ def scd2_merge(
     not inferred from absence (a partial snapshot would otherwise
     mass-close the dimension).
 
-    Crash safety: the merge is two hops (history append, then staged
-    current-partition rewrite). A failure between them leaves closed
+    Crash safety: the merge is two writes (history append, then the
+    current partition's dynamic overwrite, committed as in
+    ``merge_upsert``). A failure between them leaves closed
     rows without their opened replacements until the retry — but the
     retry is IDEMPOTENT: closed rows are keyed by ``valid_to ==
     version`` and any already-appended ones are anti-joined out before
@@ -319,12 +364,12 @@ def scd2_merge(
     )
 
     # history partition: append-only (closed rows only; existing files
-    # untouched). current partition: staged rewrite + dynamic overwrite
-    # (same two-hop commit as merge_upsert — a log-based format turns
-    # the second hop into a metadata swap).
+    # untouched). current partition: one dynamic overwrite (the same
+    # commit as merge_upsert — a log-based format turns it into a
+    # metadata swap).
     #
     # Idempotent replay: the append runs BEFORE the current-partition
-    # rewrite, so a failure between the two hops and a retry would
+    # rewrite, so a failure between the two writes and a retry would
     # re-append the same closed rows. valid_to == version is the
     # replay key — any key already closed at this version in history
     # is anti-joined out (the filter pushes down to the parquet scan,
@@ -334,11 +379,7 @@ def scd2_merge(
     )
     closed = closed.join(already_closed.select(*keys), keys, "left_anti")
     closed.write.mode("append").partitionBy("is_current").parquet(path)
-    staging = path.rstrip("/") + "__scd2_staging"
-    opened.unionByName(kept).write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).withColumn(
-        "is_current", F.lit(True)
-    ).write.mode("overwrite").option(
+    opened.unionByName(kept).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("is_current").parquet(path)
 

@@ -186,6 +186,9 @@ def test_run_on_key_local_after_merge_upserts(spark, sf_dir, tmp_path):
             "key string, value string, type string, bucket int",
         )
         sinks.merge_upsert(spark, str(base), updates, ["key"], "bucket", staging_path=str(tmp_path / "staging"))
+    # a merge leaves its bucket as one file: append a second one
+    extra = spark.createDataFrame([("extra", "x", "string", 1)], "key string, value string, type string, bucket int")
+    sinks.write_parquet(extra, str(base), mode="append", partition_by=["bucket"])
     scan = spark.read.parquet(str(base))
     assert sum("bucket=1/" in f for f in scan.inputFiles()) > 1  # a bucket of several files
     assert [r.value for r in _check_key(scan, "key", rows[0].key).collect()] == ["v1"]

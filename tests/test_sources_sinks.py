@@ -265,14 +265,43 @@ def test_sorted_write_skips_row_groups(spark, sf_dir, tmp_path):
     assert f_sorted < f_unsorted / 2
 
 
+def _batch_shapes(spark, rows, schema):
+    """One merge batch in both shapes ``merge_upsert`` checks apart: as
+    a driver builds it (a pandas frame becomes a ``LocalRelation``,
+    checked on the driver) and repartitioned (checked by Spark)."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    names = _parse_datatype_string(schema).names
+    local = spark.createDataFrame(pd.DataFrame(rows, columns=names, dtype=object), schema)
+    plan = local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+    assert plan == "LocalRelation"
+    return {"local": local, "spark": local.repartition(2)}
+
+
+def _spark_jobs(spark, fn):
+    """(fn's result, the Spark jobs it started), from a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_merge_upsert_randomized_scenarios(spark, sf_dir, tmp_path):
     # seeded random update batches vs an in-memory reference merge:
     # covers pure-update, pure-insert, mixed, multi-partition, and
-    # empty batches; plus the duplicate-source-key contract
+    # empty batches, each as a driver-checked and a Spark-checked
+    # batch; plus the duplicate-source-key contract in both shapes
     import random
 
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
     from libmr_spark.sources.sinks import merge_upsert
 
@@ -280,12 +309,17 @@ def test_merge_upsert_randomized_scenarios(spark, sf_dir, tmp_path):
     base_rows = [(k, k % 5, float(k)) for k in range(200)]
     schema = "k bigint, p int, v double"
 
-    for trial in range(4):
-        path = str(tmp_path / f"tbl{trial}")
+    def fresh(name):
+        path = str(tmp_path / name)
         spark.createDataFrame(base_rows, schema).write.mode("overwrite").partitionBy(
             "p"
         ).parquet(path)
+        return path
 
+    def table(path):
+        return sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect()))
+
+    for trial in range(4):
         upd_keys = rng.sample(range(200), rng.randint(0, 40))          # updates
         ins_keys = rng.sample(range(1000, 1100), rng.randint(0, 20))   # inserts
         upd_rows = [(k, k % 5, float(k) + 0.5) for k in upd_keys] + [
@@ -293,28 +327,95 @@ def test_merge_upsert_randomized_scenarios(spark, sf_dir, tmp_path):
         ]
         if not upd_rows:
             continue
-        merge_upsert(
-            spark,
-            path,
-            spark.createDataFrame(upd_rows, schema),
-            keys=["k"],
-            partition_col="p",
-        )
-        got = sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect()))
         ref = {k: (k, k % 5, float(k)) for k in range(200)}
         for k, p, v in upd_rows:
             ref[k] = (k, p, v)
-        assert got == sorted(ref.values()), f"trial {trial}"
+        for shape, batch in _batch_shapes(spark, upd_rows, schema).items():
+            path = fresh(f"tbl{trial}_{shape}")
+            merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
+            assert table(path) == sorted(ref.values()), f"trial {trial} {shape}"
 
-    # duplicate source keys must be rejected, and the base untouched
-    path = str(tmp_path / "tbl_dup")
-    spark.createDataFrame(base_rows, schema).write.mode("overwrite").partitionBy(
-        "p"
-    ).parquet(path)
-    dup_batch = spark.createDataFrame([(1, 1, 9.0), (1, 1, 8.0)], schema)
-    with _pytest.raises(ValueError, match="duplicate key"):
-        merge_upsert(spark, path, dup_batch, keys=["k"], partition_col="p")
-    assert spark.read.parquet(path).count() == len(base_rows)
+    # duplicate source keys must be rejected alike in both shapes, and
+    # the base untouched: a repeated key, a repeated null key, and one
+    # key in two partitions
+    for dup_rows in ([(1, 1, 9.0), (1, 1, 8.0)], [(None, 1, 9.0), (2, 2, 1.0), (None, 1, 8.0)],
+                     [(3, 3, 9.0), (3, 4, 8.0)]):
+        messages = set()
+        for shape, batch in _batch_shapes(spark, dup_rows, schema).items():
+            path = fresh(f"tbl_dup_{shape}")
+            with _pytest.raises(ValueError, match="duplicate key") as err:
+                merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
+            messages.add(str(err.value))
+            assert table(path) == sorted(base_rows), shape
+        assert len(messages) == 1, messages
+
+
+def test_merge_upsert_checks_driver_bounded_batch_without_jobs(spark, tmp_path):
+    # the driver-side checks of a LocalRelation batch start no Spark
+    # job and agree with Spark's; a 256-key merge into one bucket leaves
+    # that bucket as one file
+    import pandas as pd
+
+    from libmr_spark.sources import sinks
+
+    schema = "key string, value string, bucket int"
+    path = str(tmp_path / "store")
+    base = [(f"k{i}", "old", i % 4) for i in range(2000)]
+    sinks.write_parquet(spark.createDataFrame(base, schema).repartition(3), path, partition_by=["bucket"])
+    rows = [(f"k{i}", "new", 1) for i in range(1, 2000, 4)[:200]] + [(f"n{i}", "ins", 1) for i in range(56)]
+    shapes = _batch_shapes(spark, rows, schema)
+    (dup, parts), jobs = _spark_jobs(spark, lambda: sinks._check_batch(shapes["local"], ["key"], "bucket"))
+    assert (dup, parts, jobs) == (None, [1], 0)
+    (dup, parts), jobs = _spark_jobs(spark, lambda: sinks._check_batch(shapes["spark"], ["key"], "bucket"))
+    assert (dup, parts) == (None, [1]) and jobs > 0
+    # float keys keep the Spark checks (Spark groups NaN with NaN)
+    floats = spark.createDataFrame(pd.DataFrame({"f": [0.0, -0.0], "p": [1, 1]}))
+    (dup, _), jobs = _spark_jobs(spark, lambda: sinks._check_batch(floats, ["f"], "p"))
+    assert dup == (0.0,) and jobs > 0
+
+    def bucket_files():
+        return [f for f in os.listdir(os.path.join(path, "bucket=1")) if f.endswith(".parquet")]
+
+    assert len(bucket_files()) > 1
+    sinks.merge_upsert(spark, path, shapes["local"], ["key"], "bucket")
+    assert len(bucket_files()) == 1
+    got = {r.key: r.value for r in spark.read.parquet(path).collect()}
+    want = {k: v for k, v, _ in base} | {k: v for k, v, _ in rows}
+    assert got == want
+
+
+def test_merge_upsert_failed_write_leaves_base_unchanged(spark, tmp_path):
+    # a batch whose value column fails while it is written: the checks
+    # prune the column away, so only the write fails — and the table
+    # must read exactly as before, with no staged file visible
+    from pyspark.sql.types import StringType
+
+    from libmr_spark.sources.sinks import merge_upsert
+
+    schema = "k bigint, p int, v string"
+    path = str(tmp_path / "tbl")
+    base_rows = [(k, k % 4, f"v{k}") for k in range(100)]
+    spark.createDataFrame(base_rows, schema).write.partitionBy("p").parquet(path)
+
+    @F.udf(StringType())
+    def fail_on_7(k):
+        if k == 7:
+            raise RuntimeError("injected write failure")
+        return f"new{k}"
+
+    batch = spark.range(0, 20, numPartitions=2).select(
+        F.col("id").alias("k"), (F.col("id") % 4).cast("int").alias("p"), fail_on_7("id").alias("v")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
+    back = spark.read.parquet(path)
+    assert sorted(map(tuple, back.select("k", "p", "v").collect())) == sorted(base_rows)
+    assert not any(".spark-staging" in f for f in back.inputFiles())
+    assert not [d for d in os.listdir(path) if d.startswith(".spark-staging")]
+
+    merge_upsert(spark, path, spark.createDataFrame([(7, 3, "seven")], schema), keys=["k"], partition_col="p")
+    got = sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect()))
+    assert got == sorted([r for r in base_rows if r[0] != 7] + [(7, 3, "seven")])
 
 
 def test_incremental_agg_refresh_touches_only_delta_partitions(spark, sf_dir, tmp_path):
