@@ -17,12 +17,11 @@
   - every input file is a ``file:`` path, and
     ``spark.sql.files.ignoreCorruptFiles`` / ``ignoreMissingFiles`` are off;
   - ``key_col`` names exactly one field, and the Python type of ``key``
-    is that field's type without coercion (``_KEY_TYPES``);
-  - every column type round-trips exactly through Arrow
-    (``_ARROW_EXACT_TYPES``; timestamps and nested types do not qualify),
-    and every file stores each column it has under that exact name and
-    Arrow type;
-  - the input is under ``_POINT_READ_DRIVER_MAX_BYTES``.
+    is that field's type without coercion (``smalldf._KEY_TYPES``);
+  - every column is of an Arrow-exact type (``smalldf.exact_type``;
+    timestamps and nested types do not qualify), and every file stores
+    each column it has under that exact name and Arrow type;
+  - the input is under ``smalldf._POINT_READ_DRIVER_MAX_BYTES``.
 
   Anything else, or an Arrow error on the way, takes the distributed
   twin: a keyed filter that Catalyst turns into partition/file pruning
@@ -36,8 +35,6 @@
 
 from __future__ import annotations
 
-import datetime
-import decimal
 import json
 from typing import Any, Callable, Iterator
 from urllib.parse import unquote, urlsplit
@@ -50,38 +47,11 @@ from pyspark.storagelevel import StorageLevel
 
 from .builder import run_with_job_group_timeout
 from .registry import GLOBAL_REGISTRY, Registry, StepType
-from .smalldf import local_df
+from .smalldf import _KEY_TYPES, _POINT_READ_DRIVER_MAX_BYTES, exact_type, local_df
 
 #: Error string raised when a per-call RPC deadline passes; matches the
 #: reference's "Remote task timeout" (/root/reference/src/mr.c:2085-2099).
 REMOTE_TASK_TIMEOUT_ERROR = "Remote task timeout"
-
-#: Input-byte ceiling of ``run_on_key``'s driver-local read. It sits at
-#: the measured crossover: on a 16-bucket kv store (``local[3]``, 4-core
-#: host) the pyarrow read plus ``LocalRelation`` costs 113 ms at 32 MB
-#: against 203 ms for the Spark filter, 170 against 183 ms at 51 MB, and
-#: 220 against 159 ms at 65 MB. Above it the Spark filter runs unchanged.
-_POINT_READ_DRIVER_MAX_BYTES = 48 << 20
-
-#: Spark types whose values come back unchanged through Arrow (with
-#: ``StringType()`` of the default collation).
-_ARROW_EXACT_TYPES = (
-    T.BinaryType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
-    T.LongType, T.FloatType, T.DoubleType, T.DecimalType, T.DateType,
-)
-
-#: Python key type → the column types it compares with, without coercion
-#: beyond integral/decimal widening (an out-of-range key fails to become
-#: an Arrow scalar and falls back).
-_KEY_TYPES = {
-    str: (T.StringType,),
-    bytes: (T.BinaryType,),
-    bool: (T.BooleanType,),
-    int: (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    float: (T.DoubleType,),
-    decimal.Decimal: (T.DecimalType,),
-    datetime.date: (T.DateType,),
-}
 
 _PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
 
@@ -109,8 +79,7 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
         len(key_fields) != 1
         or not isinstance(key_fields[0].dataType, _KEY_TYPES.get(type(key), ()))
         or key != key  # Spark's NaN = NaN is true, Arrow's is false
-        # a collated string compares differently from its UTF-8 bytes
-        or not all(f.dataType == T.StringType() or isinstance(f.dataType, _ARROW_EXACT_TYPES) for f in fields)
+        or not all(exact_type(f.dataType) for f in fields)
     ):
         return None
     plan = df._jdf.queryExecution().analyzed()
@@ -169,9 +138,7 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
         table = data.to_table(filter=ds.field(key_col) == value)
     except pa.ArrowException:
         return None
-    # createDataFrame drops every row when the leading batches are empty,
-    # and a filtered multi-file scan yields exactly that: one batch only
-    return df.sparkSession.createDataFrame(table.combine_chunks(), df.schema)
+    return local_df(df.sparkSession, table, df.schema)
 
 
 def run_on_key(

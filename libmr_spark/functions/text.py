@@ -136,12 +136,6 @@ def stopword_ratio(text: Column) -> Column:
     return stops / F.greatest(token_count(text).cast("double"), F.lit(1.0))
 
 
-def mean_word_len(text: Column) -> Column:
-    toks = F.split(F.trim(text), r"\s+")
-    total = F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks).cast("double"), F.lit(1.0))
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality score in [0,1]: rewards reasonable length and
     stopword density, penalizes punctuation noise. Weights are fixed so

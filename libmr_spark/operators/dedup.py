@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, word_shingles
 from ..functions.vector import cosine_similarity
 from ..core.layout import fan_out, rebalanced
+from ..core import smalldf
 from ..core.smalldf import local_df
 
 
@@ -723,16 +724,6 @@ def shingle_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n:
     return df.select(F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), n)).alias("shingles"))
 
 
-def _pair_jaccard(a: DataFrame, b: DataFrame, id_col: str) -> DataFrame:
-    inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
-    union = F.size(F.array_union(F.col("a.shingles"), F.col("b.shingles")))
-    return a.alias("a").join(b.alias("b"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}")).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        (inter / union).alias("jaccard"),
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float,
@@ -1368,9 +1359,9 @@ def connected_components(
     ``stats`` (optional dict) receives ``{"rounds": r}`` for
     observability and tests (0 = the driver-local fast path ran).
 
-    Fast path: an edge set under ``_CC_DRIVER_MAX_EDGES`` (a few MB
-    collected — the same size class a broadcast join moves to every
-    executor) is solved with one driver-side union-find pass instead
+    Fast path: an edge set under ``smalldf._CC_DRIVER_MAX_EDGES`` (a
+    few MB collected — the same size class a broadcast join moves to
+    every executor) is solved with one driver-side union-find pass instead
     of the iterative rounds, each of which costs two Spark jobs and
     several shuffles (guide §2.4).  Union-by-min keeps the smaller id
     as root, so a component's final root is exactly its minimum member
@@ -1384,7 +1375,7 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if e.count() <= _CC_DRIVER_MAX_EDGES:
+    if e.count() <= smalldf._CC_DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -2010,14 +2001,12 @@ def _shingle_hash_index(
     return sh.select(id_col, F.size("hs").alias("sz"), F.explode("hs").alias("shingle"))
 
 
-#: Edge/hop-count ceiling for the driver-local fast paths in
-#: connected_components and _resolve_remap: below it the graph is
-#: collected and solved in one pass on the driver (same decision
-#: structure as a broadcast join — a few MB of keys are cheaper to
-#: move once than to iterate over with 2 Spark jobs per round).
-#: 200k edges is ~3 MB collected; above it the distributed
-#: large-star/small-star (resp. pointer-doubling) path runs unchanged.
-_CC_DRIVER_MAX_EDGES = 200_000
+#: Raised by both paths of ``_resolve_remap`` for a forest that is not
+#: one: an ``old`` id on two rows, or a row pointing at itself.
+_MALFORMED_FOREST = (
+    "_resolve_remap: malformed merge forest: each old id must occur on "
+    "one row and differ from its new id"
+)
 
 
 def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -2026,18 +2015,24 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
     CC labels are already final), labels strictly decrease along a
     chain (min-id canonicalization), and pointer-doubling halves chain
     depth per round — O(log depth) joins over the REMAP table only,
-    never the member table.  A forest under ``_CC_DRIVER_MAX_EDGES``
-    hops (the overwhelmingly common case: |merges| grows with batch
-    count, not corpus size) is instead collected and compressed on the
-    driver in one pass — every store commit/serve was paying ~2 Spark
-    jobs per hop round for a table of a few hundred rows (guide §2.4:
-    remove work the operation never needed).  Same (old, root) rows
-    either way."""
+    never the member table.  A forest under
+    ``smalldf._CC_DRIVER_MAX_EDGES`` hops (the overwhelmingly common
+    case: |merges| grows with batch count, not corpus size) is instead
+    collected and compressed on the driver in one pass — every store
+    commit/serve was paying ~2 Spark jobs per hop round for a table of a
+    few hundred rows (guide §2.4: remove work the operation never
+    needed).  Same (old, root) rows
+    either way, and the same ``ValueError`` for a forest with an ``old``
+    id on two rows (nulls alike) or a row with ``old == new``."""
     r = remap.select("old", "new").localCheckpoint(eager=True)
-    if r.count() <= _CC_DRIVER_MAX_EDGES:
+    if r.count() <= smalldf._CC_DRIVER_MAX_EDGES:
         rows = r.collect()
         r.unpersist()
-        parent = {row["old"]: row["new"] for row in rows}
+        parent: dict = {}
+        for o, n in rows:
+            if o in parent or o == n:
+                raise ValueError(_MALFORMED_FOREST)
+            parent[o] = n
         memo: dict = {}
 
         def root(x):
@@ -2060,6 +2055,13 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
             [(o, root(o)) for o in parent],
             f"old {tname}, new {tname}",
         )
+    malformed = (
+        r.groupBy("old")
+        .agg(F.count(F.lit(1)).alias("n"), F.max(F.col("old").eqNullSafe(F.col("new"))).alias("self"))
+        .filter((F.col("n") > 1) | F.col("self"))
+    )
+    if not malformed.isEmpty():
+        raise ValueError(_MALFORMED_FOREST)
     for _ in range(max_iterations):
         hop = (
             r.alias("a")
@@ -2217,7 +2219,7 @@ def dedup_incremental_clusters(
             .localCheckpoint(eager=True)
         )
     else:
-        remap_new = spark.createDataFrame([], "old bigint, new bigint")
+        remap_new = local_df(spark, [], "old bigint, new bigint")
 
     tag = uuid.uuid4().hex
     # rebalanced: advisory-sized commit files (see exact-fp ingest)

@@ -67,7 +67,7 @@ shuffle left in the lifecycle is the rewrite itself
 and the tail net-fold, bounded by that cadence.  Serving follows the
 same decomposition (fold-free post-compaction).  The
 commit-cost-vs-state-size curve is measured in
-``scripts/matview_commit_curve.py``.
+``e2ba49c:scripts/matview_commit_curve.py``.
 
 Reference parity note: the reference engine (RedisGears/LibMR) has no
 incremental view maintenance at all — this is north-star surface, cited
@@ -315,7 +315,7 @@ def _empty_like(spark, df_or_none, store_path, table, tags, mcol):
         # requires both sides precisely so this read can never miss;
         # unlisted crash orphans are never consulted)
         schema = _read_table(spark, store_path, table, tags).schema
-    empty = spark.createDataFrame([], schema)
+    empty = local_df(spark, [], schema)
     if mcol not in empty.columns:
         empty = empty.withColumn(mcol, F.lit(0).cast("long"))
     return empty
@@ -1003,9 +1003,7 @@ def matview_changes(
         )
     window = tags[from_batches:]
     if not window:
-        empty = spark.createDataFrame(
-            [], _read_table(spark, store_path, "view", tags[:1]).schema
-        )
+        empty = local_df(spark, [], _read_table(spark, store_path, "view", tags[:1]).schema)
         return empty.withColumnRenamed("mult", "mult_delta")
     v = _read_table(spark, store_path, "view", window)
     return _net(v, "mult").withColumnRenamed("mult", "mult_delta")

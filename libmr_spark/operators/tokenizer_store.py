@@ -166,9 +166,11 @@ def bpe_store_train(
         ).localCheckpoint()
 
     tag = uuid.uuid4().hex
+    # coalesce: a local frame scans as up to defaultParallelism
+    # partitions, and the batch is one file
     local_df(
         spark, new_merges, "rnd int, l string, r string, n bigint"
-    ).write.mode("overwrite").parquet(
+    ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(store_path, "merges", f"batch={tag}")
     )
     _manifest_publish(os.path.join(store_path, "_BATCHES"), _PARAMS, add_tags=[tag])

@@ -29,17 +29,6 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     return any(fragment in p for p in info["pushed_filters"])
 
 
-def reads_only_columns(df: DataFrame, table_cols: list[str]) -> bool:
-    """True if some scan's ReadSchema is limited to ``table_cols`` —
-    i.e. column pruning reached the parquet footer."""
-    info = scan_info(df)
-    for s in info["read_schemas"]:
-        cols = re.findall(r"(\w+):", s)
-        if cols and set(cols) <= set(table_cols):
-            return True
-    return False
-
-
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 

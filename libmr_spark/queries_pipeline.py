@@ -7406,7 +7406,7 @@ def streaming_takedown_feed_q(spark, sf_dir):
         )
         local_df(
             s, sorted(audit.items()), "store string, n bigint"
-        ).write.mode("append").parquet(feed)
+        ).coalesce(1).write.mode("append").parquet(feed)
 
     q = (
         spark.readStream.schema("doc_id bigint, text string")

@@ -38,6 +38,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..core.partitioner import NUM_SLOTS
+from ..core.smalldf import local_df
 
 KV_SCHEMA = "key string, value string, type string"
 
@@ -338,7 +339,7 @@ def read_kv_stream_sink(spark, path: str, schema: str):
             manifest = json.load(f)
         files += [os.path.join(path, d, fn) for fn in manifest["files"]]
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     return spark.read.schema(schema).json(files)
 
 
@@ -379,7 +380,7 @@ def read_kv_sink(spark, path: str):
     atomicity contract the two-phase commit provides)."""
     files = _manifest_files(path)
     if not files:
-        return spark.createDataFrame([], KV_SCHEMA)
+        return local_df(spark, [], KV_SCHEMA)
     return spark.read.schema(KV_SCHEMA).json(files)
 
 

@@ -171,17 +171,6 @@ def events_stream(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     return _normalize_events_ts(sdf)
 
 
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on the
-    same names the DuckDB oracle uses."""
-    for n, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(n)
-
-
 # SQL used by BOTH the Spark kv view and the DuckDB oracle (FIXTURES.md
 # notes the kv shape "can be projected from any driver table").
 KV_PROJECTION_SQL = (

@@ -13,7 +13,6 @@ file.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
@@ -69,11 +68,12 @@ def merge_upsert(
     kept for callers that pass it.
 
     The batch is checked before the write: at most one row per key,
-    and the partition list. A driver-bounded batch (its optimized plan
-    is a ``LocalRelation``) whose key and partition columns group in
-    Spark exactly as their Python values compare is checked on the
-    driver from one ``collect`` that starts no Spark job; any other
-    batch is checked by Spark. Both raise the same ``ValueError``.
+    and the partition list. A driver-bounded batch (``smalldf.is_local``:
+    built by ``smalldf.local_df`` or from pandas/Arrow) whose key and
+    partition columns group in Spark exactly as their Python values
+    compare is checked on the driver from one ``collect`` that starts no
+    Spark job; any other batch is checked by Spark. Both raise the same
+    ``ValueError``.
     """
     from pyspark.sql import functions as F
 
@@ -98,29 +98,18 @@ def merge_upsert(
     ).partitionBy(partition_col).parquet(base_path)
 
 
-#: Column types whose Python values compare equal exactly when Spark
-#: groups them together (with ``StringType()`` of the default collation).
-#: Floats (NaN, -0.0), binary (unhashable bytearray) and nested types
-#: are not among them.
-_DRIVER_GROUPABLE_TYPES = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType, T.DateType, T.DecimalType,
-)
-
-
 def _check_batch(updates: DataFrame, keys: list[str], partition_col: str) -> tuple[tuple | None, list]:
     """A merge batch's checks: (the values of one key that occurs more
     than once, or None; the distinct ``partition_col`` values). A
     driver-bounded batch whose key and partition columns are of
-    ``_DRIVER_GROUPABLE_TYPES`` is checked from one job-free
+    ``smalldf._DRIVER_GROUPABLE_TYPES`` is checked from one job-free
     ``collect``; any other by Spark."""
     from pyspark.sql import functions as F
 
+    from ..core.smalldf import _DRIVER_GROUPABLE_TYPES, exact_type, is_local
+
     cols = updates.select(*keys, partition_col)
-    plan = updates._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "LocalRelation" and all(
-        f.dataType == T.StringType() or isinstance(f.dataType, _DRIVER_GROUPABLE_TYPES)
-        for f in cols.schema.fields
-    ):
+    if is_local(updates) and all(exact_type(f.dataType, _DRIVER_GROUPABLE_TYPES) for f in cols.schema.fields):
         rows = cols.collect()
         seen: set[tuple] = set()
         for r in rows:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from libmr_spark.core import smalldf
 from libmr_spark.operators import dedup as DD
 from libmr_spark.operators import similarity as SIM
 from libmr_spark.operators.relational import as_of_join, range_join
@@ -327,7 +328,7 @@ def test_connected_components_chain_converges_fast(spark, monkeypatch):
     # Force the DISTRIBUTED path (the driver union-find fast path would
     # otherwise absorb a 1000-edge graph) — this test pins the
     # at-scale algorithm's convergence, not the small-graph shortcut.
-    monkeypatch.setattr(DD, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(smalldf, "_CC_DRIVER_MAX_EDGES", 0)
     n = 1000
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
@@ -354,7 +355,7 @@ def test_connected_components_driver_fast_path_matches_distributed(spark, monkey
         for r in DD.connected_components(edges, nodes, stats=stats_fast).collect()
     }
     assert stats_fast["rounds"] == 0  # fast path actually ran
-    monkeypatch.setattr(DD, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(smalldf, "_CC_DRIVER_MAX_EDGES", 0)
     stats_dist: dict = {}
     dist = {
         (r.doc_id, r.cluster_id)
@@ -371,10 +372,29 @@ def test_resolve_remap_driver_fast_path_matches_joins(spark, monkeypatch):
         [(9, 7), (7, 4), (4, 1), (8, 2), (6, 5)], "old long, new long"
     )
     fast = {(r.old, r.new) for r in DD._resolve_remap(remap).collect()}
-    monkeypatch.setattr(DD, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(smalldf, "_CC_DRIVER_MAX_EDGES", 0)
     dist = {(r.old, r.new) for r in DD._resolve_remap(remap).collect()}
     assert fast == {(9, 1), (7, 1), (4, 1), (8, 2), (6, 5)}
     assert fast == dist
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [[(5, 3), (5, 2), (3, 1)], [(5, 5), (3, 1)], [(None, 3), (None, 2)], [(None, None)]],
+    ids=["duplicate-old", "self-row", "duplicate-null-old", "null-self-row"],
+)
+def test_resolve_remap_rejects_malformed_forest_on_both_paths(spark, monkeypatch, rows):
+    # a duplicate old id or an old == new row is not a forest: the
+    # driver union and the distributed pointer-doubling raise the same
+    # ValueError, before any hop round
+    remap = spark.createDataFrame(rows, "old long, new long")
+    messages = set()
+    for ceiling in (smalldf._CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(smalldf, "_CC_DRIVER_MAX_EDGES", ceiling)
+        with pytest.raises(ValueError, match="malformed merge forest") as err:
+            DD._resolve_remap(remap, max_iterations=1).collect()
+        messages.add(str(err.value))
+    assert len(messages) == 1
 
 
 def test_winnowing_robust_to_local_edit(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from libmr_spark.core.rpc import internal_command
+from libmr_spark.core.smalldf import is_local
 from libmr_spark.sources.readers import kv_table, load_table
 
 
@@ -129,10 +130,6 @@ def _kv_store(spark, sf_dir, path):
     return spark.read.parquet(str(path))
 
 
-def _is_local(df) -> bool:
-    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
-
-
 def _assert_same(got, want):
     from collections import Counter
 
@@ -144,7 +141,7 @@ def _check_key(scan, key_col, key, local=True):
     from libmr_spark.core.rpc import run_on_key
 
     got = run_on_key(scan, key_col, key)
-    assert _is_local(got) == local
+    assert is_local(got) == local
     _assert_same(got, scan.filter(F.col(key_col) == key))
     return got
 

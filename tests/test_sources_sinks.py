@@ -272,10 +272,11 @@ def _batch_shapes(spark, rows, schema):
     import pandas as pd
     from pyspark.sql.types import _parse_datatype_string
 
+    from libmr_spark.core.smalldf import is_local
+
     names = _parse_datatype_string(schema).names
     local = spark.createDataFrame(pd.DataFrame(rows, columns=names, dtype=object), schema)
-    plan = local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-    assert plan == "LocalRelation"
+    assert is_local(local)
     return {"local": local, "spark": local.repartition(2)}
 
 
