@@ -22,144 +22,8 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, word_shingles
 from ..functions.vector import cosine_similarity
 from ..core.layout import fan_out, rebalanced
-from ..core import smalldf
+from ..core import smalldf, store
 from ..core.smalldf import local_df
-
-
-# --- incremental-store batch manifest ---------------------------------
-# Shared by dedup_incremental_minhash / dedup_incremental_embedding /
-# compact_incremental_store. The manifest (`_BATCHES`) is the store's
-# single source of truth: readers load ONLY manifest-listed
-# ``batch=<tag>`` directories, and a batch becomes visible in one
-# atomic ``os.replace`` — so a crash anywhere before the swap leaves
-# the old snapshot intact.
-#
-# Concurrency contract: PUBLICATION is lost-update-free — the
-# read-modify-write of the tag list happens under an O_EXCL lock file
-# and re-reads the manifest inside the critical section, so two
-# concurrent committers serialize and neither orphans the other's
-# batch. ADMISSION, however, reads the store before its batch commits:
-# two batches admitted concurrently each check the PRE-batch history
-# and can both admit near-twins of each other. That is the same
-# semantic as near-dups arriving inside one batch (documented on each
-# store), so the supported deployment is one logical ingest pipeline
-# per store; the lock only guarantees the store never LOSES a batch.
-# At warehouse scale the same two properties come from the table
-# format's commit protocol (optimistic CAS on the metadata pointer).
-
-
-def _manifest_read(manifest_path: str, params: dict | None) -> list:
-    """Committed batch tags; validates ``params`` against the store's
-    recorded signature parameters (a mismatched call would band over
-    different signature slices, find zero candidates, and silently
-    admit every near-dup of history — refused loudly instead)."""
-    import json
-    import os
-
-    if not os.path.exists(manifest_path):
-        return []
-    with open(manifest_path) as f:
-        m = json.load(f)
-    stored = m.get("params")
-    if params is not None and stored is not None and stored != params:
-        raise ValueError(
-            f"signature-store parameter mismatch at "
-            f"{os.path.dirname(manifest_path)}: store was built with "
-            f"{stored}, call uses {params}"
-        )
-    return m["batches"]
-
-
-class _manifest_lock:
-    """``flock``-based lock guarding the manifest read-modify-write
-    window (and, on a separate path, serializing store rewrites). The
-    kernel owns the lock state and releases it when the holder's fd
-    closes — including on process crash — so there is NO stale-lock
-    problem and no mtime-based breaking at all. Earlier revisions used
-    an O_EXCL lock file with staleness breaking; every variant of
-    "stat, decide stale, remove" has a TOCTOU window in which a
-    breaker can remove a lock a new holder just acquired, and flock
-    eliminates the whole class. The lock FILE persists on disk after
-    release (harmless — only the kernel lock matters); local-fs
-    semantics are all this deployment needs, and the warehouse-scale
-    swap (a table format's optimistic metadata CAS) is documented on
-    the manifest section comment. Acquisition past ``timeout_s``
-    raises rather than deadlocking silently."""
-
-    def __init__(self, manifest_path: str, timeout_s: float = 30.0):
-        self.path = manifest_path + ".lock"
-        self.timeout_s = timeout_s
-        self._fd = None
-
-    def __enter__(self):
-        import fcntl
-        import os
-        import time
-
-        self._fd = os.open(self.path, os.O_CREAT | os.O_RDWR)
-        deadline = time.monotonic() + self.timeout_s
-        while True:
-            try:
-                fcntl.flock(self._fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                return self
-            except (BlockingIOError, InterruptedError):
-                if time.monotonic() > deadline:
-                    os.close(self._fd)
-                    self._fd = None
-                    raise TimeoutError(
-                        f"could not acquire store manifest lock {self.path} "
-                        f"within {self.timeout_s}s (a concurrent holder is "
-                        "live — a crashed holder's lock is released by the "
-                        "kernel automatically)"
-                    )
-                time.sleep(0.05)
-
-    def __exit__(self, *exc):
-        import os
-
-        if self._fd is not None:
-            os.close(self._fd)  # closing the fd releases the flock
-            self._fd = None
-        return False
-
-
-def _manifest_publish(
-    manifest_path: str,
-    params: dict | None,
-    add_tags=(),
-    drop_tags=(),
-    timeout_s: float = 30.0,
-    set_params: dict | None = None,
-) -> list:
-    """Atomically publish a manifest update: under the lock, RE-READ the
-    current tag list (so a tag committed concurrently since the caller's
-    admission snapshot survives), drop ``drop_tags``, append
-    ``add_tags``, and swap the file in with ``os.replace``. A ``None``
-    ``params`` (compaction, which is parameter-agnostic) preserves the
-    store's recorded params verbatim. ``set_params`` REPLACES the
-    recorded params in the same atomic swap (no validation against the
-    old ones) — the re-train path, where new quantizer parameters and
-    the batch list they describe must become visible together or not
-    at all. Returns the published tag list."""
-    import json
-    import os
-
-    with _manifest_lock(manifest_path, timeout_s=timeout_s):
-        current = _manifest_read(manifest_path, None if set_params is not None else params)
-        if set_params is not None:
-            params = set_params
-        elif params is None and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                params = json.load(f).get("params")
-        drop = set(drop_tags)
-        new_tags = [t for t in current if t not in drop] + [
-            t for t in add_tags if t not in current
-        ]
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batches": new_tags, "params": params}, f)
-        os.replace(tmp, manifest_path)
-    return new_tags
 
 
 def compact_incremental_store(
@@ -256,20 +120,18 @@ def compact_incremental_store(
     # an evolved column from the compacted rewrite. Rewrite cost is
     # dominated by the data read, so the all-footers read is noise here
     # (unlike on the admission hot path).
-    rewritten = _rewrite_store(
+    rewritten = store._rewrite_store(
         spark, store_path, xform, tables, min_batches=2,
         respect_snapshots=True, merge_schema=True,
     )
     if rewritten and zone_by:
         from .zones import write_zones_if_col
 
-        tags = _manifest_read(os.path.join(store_path, "_BATCHES"), None)
+        tags = store._manifest_read(store.manifest_path(store_path), None)
         for t in tags:
             if t.startswith("compact-"):
                 for table, zc in zone_by.items():
-                    if os.path.isdir(
-                        os.path.join(store_path, table, f"batch={t}")
-                    ):
+                    if os.path.isdir(store.batch_path(store_path, table, t)):
                         write_zones_if_col(store_path, table, t, zc)
     return len(rewritten)
 
@@ -308,7 +170,7 @@ def delete_from_incremental_store(
 
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(os.path.join(store_path, "_BATCHES")):
+    if not os.path.exists(store.manifest_path(store_path)):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -329,158 +191,11 @@ def delete_from_incremental_store(
         # store rewrite leaves one tiny file per task
         return rebalanced(df.join(F.broadcast(ids), id_col, "left_anti"))
 
-    _rewrite_store(
+    store._rewrite_store(
         spark, store_path, drop_ids, tables, min_batches=1,
         merge_schema=True,  # an evolved store's scrub keeps the union schema
     )
     return deleted["n"]
-
-
-#: Unlisted non-rewrite orphan directories (crash leftovers from an
-#: ingest commit or an interrupted sweep) become sweepable after this
-#: many seconds. Must exceed the longest plausible ingest-commit
-#: window (write dirs → publish tag).
-_REWRITE_STALE_S = 3600.0
-
-
-def _rewrite_store(
-    spark,
-    store_path: str,
-    transform,
-    tables: tuple,
-    min_batches: int = 1,
-    set_params: dict | None = None,
-    respect_snapshots: bool = False,
-    merge_schema: bool = False,
-) -> list:
-    """Shared crash-safe store rewrite: under the per-store REWRITE
-    lock (a kernel-held flock serializing rewriters against each other
-    — a crashed rewriter's lock auto-releases; ingest commits are
-    unaffected), snapshot the manifest, read each table's snapshot
-    directories, apply ``transform(df, table)``, write ONE fresh
-    ``batch=compact-<uuid>`` directory, republish atomically (dropping
-    exactly the snapshot tags — concurrent ingest commits survive),
-    then sweep superseded and crash-orphaned directories. Returns the
-    snapshot tag list that was rewritten ([] if the store has fewer
-    than ``min_batches`` committed batches). ``set_params`` swaps the
-    store's recorded params in the SAME manifest publish (see
-    :func:`_manifest_publish`) — the ANN re-train path, where the new
-    quantizer's parameters must become visible atomically with the
-    re-assigned cells.
-
-    Sweep rules: (a) the snapshot tags just superseded — removed
-    IMMEDIATELY, because takedown deletion must not retain bytes for a
-    grace period; the accepted consequence is that an admission READ
-    that straddles the rewrite can hit a vanished file and must retry
-    (the retry sees the rewritten store; a warehouse table format's
-    snapshot isolation removes even that window — this is the same
-    tradeoff as a VACUUM with zero retention); (b) unlisted
-    ``compact-``-prefixed dirs — safe, because rewriters serialize on
-    the kernel lock, so an unlisted rewrite dir can only be a CRASHED
-    rewriter's leftover, never a live one's in-flight write; (c)
-    unlisted non-rewrite dirs older than ``_REWRITE_STALE_S`` — crash
-    leftovers from an ingest commit or a prior rewrite's interrupted
-    sweep; younger ones are left alone since they may be an in-flight
-    ingest batch awaiting its manifest publish.
-
-    Raises if a non-empty store has NONE of the requested tables on
-    disk — publishing a data-less compact tag there would silently
-    unlink the whole history (e.g. calling compaction on an exact-fp
-    store with the near-dup stores' default ``tables``).
-
-    ``respect_snapshots`` (compaction entry points set it): refuse to
-    collapse the commit log while any snapshot pin is registered under
-    ``<store>/_SNAPSHOTS/`` (``operators/snapshot.py::register_snapshot``
-    — the retention contract a reproducible training run relies on).
-    Deletion paths deliberately do NOT set it: right-to-be-forgotten
-    beats reproducibility, and a pinned read invalidated by takedown
-    raises out-of-range instead of serving silently-different state."""
-    import os
-    import shutil
-    import time
-    import uuid
-
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    with _manifest_lock(os.path.join(store_path, "_REWRITE"), timeout_s=300.0):
-        if respect_snapshots:
-            import json as _json
-
-            snapdir = os.path.join(store_path, "_SNAPSHOTS")
-            now = time.time()
-            pins = []
-            for p in sorted(os.listdir(snapdir) if os.path.isdir(snapdir) else []):
-                if not p.endswith(".json"):
-                    continue
-                fp = os.path.join(snapdir, p)
-                try:
-                    with open(fp) as fh:
-                        exp = _json.load(fh).get("expires_at")
-                except (OSError, ValueError):
-                    exp = None  # unreadable pin: treat as live (fail safe)
-                if exp is not None and exp < now:
-                    # TTL retention GC: an expired pin stops guarding
-                    # and is swept, so a forgotten snapshot cannot
-                    # block compaction forever
-                    try:
-                        os.remove(fp)
-                    except OSError:
-                        pass
-                    continue
-                pins.append(p[:-5])
-            if pins:
-                raise ValueError(
-                    f"store rewrite at {store_path} blocked by live snapshot "
-                    f"pin(s) {pins}: compaction would collapse the pinned "
-                    "commit-log prefix; release_snapshot() them first"
-                )
-        snapshot = _manifest_read(manifest_path, None)
-        if len(snapshot) < min_batches:
-            return []
-        new_tag = "compact-" + uuid.uuid4().hex
-        present = [t for t in tables if os.path.isdir(os.path.join(store_path, t))]
-        if not present:
-            raise ValueError(
-                f"store rewrite at {store_path}: none of the requested "
-                f"tables {tables} exists on disk — wrong `tables` for "
-                "this store's layout (rewriting anyway would publish a "
-                "data-less manifest and orphan the entire history)"
-            )
-        for table in present:
-            src = [os.path.join(store_path, table, f"batch={t}") for t in snapshot]
-            # merge_schema (matview passes it): a rewrite must see the
-            # UNION schema when the snapshot spans a schema evolution
-            # (add-column) — the default footer-sampled schema would
-            # nondeterministically drop the evolved column from the
-            # fold.  Off for the fixed-schema store families, whose
-            # rewrites would only pay the all-footers read for nothing.
-            reader = spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            transform(reader.parquet(*src), table).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(store_path, table, f"batch={new_tag}"))
-        _manifest_publish(
-            manifest_path, None, add_tags=[new_tag], drop_tags=snapshot,
-            set_params=set_params,
-        )
-        listed = set(_manifest_read(manifest_path, None))
-        now = time.time()
-        for table in present:
-            tdir = os.path.join(store_path, table)
-            for t in snapshot:
-                shutil.rmtree(os.path.join(tdir, f"batch={t}"), ignore_errors=True)
-            for entry in os.listdir(tdir):
-                tag = entry.removeprefix("batch=")
-                if tag in listed:
-                    continue
-                path = os.path.join(tdir, entry)
-                try:
-                    aged = now - os.path.getmtime(path) > _REWRITE_STALE_S
-                except OSError:
-                    continue
-                if tag.startswith("compact-") or aged:
-                    shutil.rmtree(path, ignore_errors=True)
-    return snapshot
 
 
 def incremental_store_stats(spark, store_path: str) -> dict:
@@ -493,8 +208,7 @@ def incremental_store_stats(spark, store_path: str) -> dict:
     listing is proportional to live directories, never rows."""
     import os
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    tags = store._manifest_read(store.manifest_path(store_path), None)
     stats: dict = {"n_batches": len(tags), "tables": {}}
     if not tags:
         return stats
@@ -503,9 +217,7 @@ def incremental_store_stats(spark, store_path: str) -> dict:
         if not os.path.isdir(tdir):
             continue
         live = [
-            os.path.join(tdir, f"batch={t}")
-            for t in tags
-            if os.path.isdir(os.path.join(tdir, f"batch={t}"))
+            d for d in store.batch_paths(store_path, entry, tags) if os.path.isdir(d)
         ]
         if not live:
             continue
@@ -623,7 +335,7 @@ def read_incremental_store_asof(
     manifest — reproducing exactly the table state any reader saw after
     that many commits, because the manifest's tag list IS the store's
     ordered commit log and every commit appends its tag at the end
-    (:func:`_manifest_publish`). ``None`` reads the full current
+    (:func:`..core.store._manifest_publish`). ``None`` reads the full current
     snapshot (what admission itself reads).
 
     This is what an audit/debug/repro workflow needs against a 100 TB
@@ -642,7 +354,7 @@ def read_incremental_store_asof(
     silently returning the full store."""
     import os
 
-    tags = _manifest_read(os.path.join(store_path, "_BATCHES"), None)
+    tags = store._manifest_read(store.manifest_path(store_path), None)
     if as_of_batches is None:
         as_of_batches = len(tags)
     if not 0 < as_of_batches <= len(tags):
@@ -656,14 +368,8 @@ def read_incremental_store_asof(
     # add-column semantics the matview family pins. Off by default:
     # fixed-schema stores shouldn't pay the all-footers read on the
     # admission hot path.
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(
-        *[
-            os.path.join(store_path, table, f"batch={t}")
-            for t in tags[:as_of_batches]
-        ]
+    return store.read_batches(
+        spark, store_path, table, tags[:as_of_batches], merge_schema
     )
 
 
@@ -691,18 +397,15 @@ def read_incremental_store_zoned(
 
     if hi is None:
         hi = lo
-    tags = _manifest_read(os.path.join(store_path, "_BATCHES"), None)
+    tags = store._manifest_read(store.manifest_path(store_path), None)
     paths = pruned_paths(store_path, table, tags, zone_col, lo, hi)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
     if not paths:
         # every candidate file pruned: exact empty result, typed from
         # the store schema
-        full = reader.parquet(
-            *[os.path.join(store_path, table, f"batch={t}") for t in tags]
-        )
-        return full.limit(0)
+        return store.read_batches(spark, store_path, table, tags, merge_schema).limit(0)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
     return reader.parquet(*paths).filter(
         (F.col(zone_col) >= lo) & (F.col(zone_col) <= hi)
     )
@@ -1473,7 +1176,7 @@ def _table_zoned(store_path: str, table: str, tags: list, zone_col: str) -> bool
     from .zones import _load_zones
 
     return any(
-        _load_zones(os.path.join(store_path, table, f"batch={t}"), zone_col)
+        _load_zones(store.batch_path(store_path, table, t), zone_col)
         for t in tags
     )
 
@@ -1490,7 +1193,7 @@ def _probe_paths(
     history."""
     from .zones import pruned_paths_probes
 
-    full = [os.path.join(store_path, table, f"batch={t}") for t in tags]
+    full = store.batch_paths(store_path, table, tags)
     if values is None or not _table_zoned(store_path, table, tags, zone_col):
         return full
     return pruned_paths_probes(store_path, table, tags, zone_col, values)
@@ -1522,7 +1225,7 @@ def _admission_paths(spark, fp_table_path: str, tags: list, batch_fp) -> list:
     file is PROVEN to contain none of the batch's fps, so it cannot
     contribute semi-join hits)."""
     if not _table_zoned(fp_table_path, "fps", tags, "fp"):
-        return [os.path.join(fp_table_path, "fps", f"batch={t}") for t in tags]
+        return store.batch_paths(fp_table_path, "fps", tags)
     return _probe_paths(
         fp_table_path, "fps", tags, "fp", _collect_probes(batch_fp, "fp")
     )
@@ -1571,7 +1274,7 @@ def dedup_incremental_exact(
     import os
     import uuid
 
-    manifest_path = os.path.join(fp_table_path, "_BATCHES")
+    manifest_path = store.manifest_path(fp_table_path)
     params = {"kind": "exact-fp"}
     if not os.path.exists(manifest_path) and os.path.exists(
         os.path.join(fp_table_path, "_SUCCESS")
@@ -1608,7 +1311,7 @@ def dedup_incremental_exact(
             .groupBy("fp")
             .agg(F.min(id_col).alias(id_col))
         )
-    tags = _manifest_read(manifest_path, params)
+    tags = store._manifest_read(manifest_path, params)
     if tags:
         # freeze the batch aggregate once: it feeds the probe collect,
         # the history semi-probe, and the anti-join (and admission
@@ -1659,8 +1362,8 @@ def dedup_incremental_exact(
     # commit is the store's compounding cost (guide §6)
     rebalanced(admitted.select("fp", id_col, *(payload_cols or [])), probe=True).write.mode(
         "overwrite"
-    ).parquet(os.path.join(fp_table_path, "fps", f"batch={tag}"))
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    ).parquet(store.batch_path(fp_table_path, "fps", tag))
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return admitted
 
 
@@ -1728,7 +1431,7 @@ def dedup_incremental_minhash(
             f"bands ({bands}) — banding slices the signature into equal rows"
         )
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     params = {"num_hashes": num_hashes, "bands": bands, "n": n, "threshold": threshold}
 
     def _band_keys(sdf):
@@ -1752,9 +1455,7 @@ def dedup_incremental_minhash(
 
     sigs = minhash_signature(batch, num_hashes, text_col, id_col, n)
     banded = _band_keys(sigs)
-    idx_path = os.path.join(store_path, "index")
-    pay_path = os.path.join(store_path, "payload")
-    tags = _manifest_read(manifest_path, params)
+    tags = store._manifest_read(manifest_path, params)
     if tags:
         # bucket-probe pruning (the fp-clustered layout generalized to
         # the band index): when compaction zoned index/ by `bucket`
@@ -1763,7 +1464,7 @@ def dedup_incremental_minhash(
         # xxhash64 buckets are hash-uniform, so only per-value probes
         # prune; the probe set is |batch| x bands, capped. Zero extra
         # work on an unzoned store (the gate is a metadata check).
-        idx_paths = [os.path.join(idx_path, f"batch={t}") for t in tags]
+        idx_paths = store.batch_paths(store_path, "index", tags)
         if _table_zoned(store_path, "index", tags, "bucket"):
             banded = banded.localCheckpoint(eager=True)
             idx_paths = _probe_paths(
@@ -1791,7 +1492,7 @@ def dedup_incremental_minhash(
             # payload (zone_by={"payload": "<id_col>"}) the candidate
             # hid set (batch-bounded) prunes the read to the covering
             # files — the scan becomes O(candidates), not O(corpus).
-            pay_paths = [os.path.join(pay_path, f"batch={t}") for t in tags]
+            pay_paths = store.batch_paths(store_path, "payload", tags)
             if _table_zoned(store_path, "payload", tags, id_col):
                 cand = cand.localCheckpoint(eager=True)
                 pay_paths = _probe_paths(
@@ -1826,12 +1527,12 @@ def dedup_incremental_minhash(
     tag = uuid.uuid4().hex
     # rebalanced: advisory-sized commit files (see exact-fp ingest)
     rebalanced(_band_keys(admitted), probe=True).write.mode("overwrite").parquet(
-        os.path.join(idx_path, f"batch={tag}")
+        store.batch_path(store_path, "index", tag)
     )
     rebalanced(admitted.select(id_col, "shingles"), probe=True).write.mode("overwrite").parquet(
-        os.path.join(pay_path, f"batch={tag}")
+        store.batch_path(store_path, "payload", tag)
     )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return admitted.select(id_col, F.size("shingles").cast("bigint").alias("sz"))
 
 
@@ -1878,7 +1579,7 @@ def dedup_incremental_embedding(
     import os
     import uuid
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     params = {
         "planes_per_band": planes_per_band,
         "bands": bands,
@@ -1890,15 +1591,13 @@ def dedup_incremental_embedding(
     band_hashes = _sign_band_hashes(planes_per_band, bands, seed)
     sig = batch.select(id_col, vec_col).withColumn("__bh__", band_hashes(F.col(vec_col)))
     banded = sig.select(F.col(id_col), F.explode("__bh__").alias("bucket"))
-    idx_path = os.path.join(store_path, "index")
-    pay_path = os.path.join(store_path, "payload")
-    tags = _manifest_read(manifest_path, params)
+    tags = store._manifest_read(manifest_path, params)
     if tags:
         # bucket-probe index pruning + candidate-id payload pruning —
         # the same two layout levers as dedup_incremental_minhash
         # (sign-LSH buckets are hash-uniform; the payload's vector
         # column is the fat read): zero extra work on unzoned stores.
-        idx_paths = [os.path.join(idx_path, f"batch={t}") for t in tags]
+        idx_paths = store.batch_paths(store_path, "index", tags)
         if _table_zoned(store_path, "index", tags, "bucket"):
             banded = banded.localCheckpoint(eager=True)
             idx_paths = _probe_paths(
@@ -1916,7 +1615,7 @@ def dedup_incremental_embedding(
             )
         rejected = None
         if cand is not None:
-            pay_paths = [os.path.join(pay_path, f"batch={t}") for t in tags]
+            pay_paths = store.batch_paths(store_path, "payload", tags)
             if _table_zoned(store_path, "payload", tags, id_col):
                 cand = cand.localCheckpoint(eager=True)
                 pay_paths = _probe_paths(
@@ -1958,7 +1657,7 @@ def dedup_incremental_embedding(
     rebalanced(
         admitted.select(F.col(id_col), F.explode("__bh__").alias("bucket")),
         probe=True,
-    ).write.mode("overwrite").parquet(os.path.join(idx_path, f"batch={tag}"))
+    ).write.mode("overwrite").parquet(store.batch_path(store_path, "index", tag))
     if payload_int8:
         from ..functions.vector import symmetric_int8
 
@@ -1971,9 +1670,9 @@ def dedup_incremental_embedding(
     else:
         payload = admitted.select(id_col, vec_col)
     rebalanced(payload, probe=True).write.mode("overwrite").parquet(
-        os.path.join(pay_path, f"batch={tag}")
+        store.batch_path(store_path, "payload", tag)
     )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return admitted.select(id_col)
 
 
@@ -2002,10 +1701,11 @@ def _shingle_hash_index(
 
 
 #: Raised by both paths of ``_resolve_remap`` for a forest that is not
-#: one: an ``old`` id on two rows, or a row pointing at itself.
+#: one: an ``old`` id on two rows, or a row whose ``new`` is not below
+#: its ``old`` (a self-row, a null, or a link of a cycle).
 _MALFORMED_FOREST = (
     "_resolve_remap: malformed merge forest: each old id must occur on "
-    "one row and differ from its new id"
+    "one row and be greater than its new id"
 )
 
 
@@ -2022,15 +1722,19 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
     commit/serve was paying ~2 Spark jobs per hop round for a table of a
     few hundred rows (guide §2.4: remove work the operation never
     needed).  Same (old, root) rows
-    either way, and the same ``ValueError`` for a forest with an ``old``
-    id on two rows (nulls alike) or a row with ``old == new``."""
+    either way, and the same ``ValueError``, before any hop round, for
+    a forest with an ``old`` id on two rows (nulls alike) or a row
+    whose ``new`` is not below its ``old``.  The one writer of remap
+    rows, :func:`dedup_incremental_clusters`, maps a doc to its
+    component's minimum id, so ``new < old`` holds on every valid row;
+    the same check rules out cycles, self-rows and nulls."""
     r = remap.select("old", "new").localCheckpoint(eager=True)
     if r.count() <= smalldf._CC_DRIVER_MAX_EDGES:
         rows = r.collect()
         r.unpersist()
         parent: dict = {}
         for o, n in rows:
-            if o in parent or o == n:
+            if o is None or n is None or not n < o or o in parent:
                 raise ValueError(_MALFORMED_FOREST)
             parent[o] = n
         memo: dict = {}
@@ -2040,10 +1744,6 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
             while x in parent and x not in memo:
                 chain.append(x)
                 x = parent[x]
-                if len(chain) > len(parent):
-                    raise RuntimeError(
-                        "_resolve_remap: merge forest contains a cycle"
-                    )
             t = memo.get(x, x)
             for c in chain:
                 memo[c] = t
@@ -2055,10 +1755,11 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
             [(o, root(o)) for o in parent],
             f"old {tname}, new {tname}",
         )
+    descends = F.coalesce(F.col("new") < F.col("old"), F.lit(False))
     malformed = (
         r.groupBy("old")
-        .agg(F.count(F.lit(1)).alias("n"), F.max(F.col("old").eqNullSafe(F.col("new"))).alias("self"))
-        .filter((F.col("n") > 1) | F.col("self"))
+        .agg(F.count(F.lit(1)).alias("n"), F.min(descends).alias("descends"))
+        .filter((F.col("n") > 1) | ~F.col("descends"))
     )
     if not malformed.isEmpty():
         raise ValueError(_MALFORMED_FOREST)
@@ -2137,23 +1838,16 @@ def dedup_incremental_clusters(
     import os
     import uuid
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     params = {"kind": "cc-exact", "n": n, "threshold": threshold}
-    tags = _manifest_read(manifest_path, params)
-    paths = {t: os.path.join(store_path, t) for t in ("members", "remap", "shingles")}
+    tags = store._manifest_read(manifest_path, params)
 
     uniq = batch.dropDuplicates([id_col])
     touched = None
     if tags:
-        hist_mem = spark.read.parquet(
-            *[os.path.join(paths["members"], f"batch={t}") for t in tags]
-        )
-        hist_rem = spark.read.parquet(
-            *[os.path.join(paths["remap"], f"batch={t}") for t in tags]
-        )
-        hist_shg = spark.read.parquet(
-            *[os.path.join(paths["shingles"], f"batch={t}") for t in tags]
-        )
+        hist_mem = store.read_batches(spark, store_path, "members", tags)
+        hist_rem = store.read_batches(spark, store_path, "remap", tags)
+        hist_shg = store.read_batches(spark, store_path, "shingles", tags)
         # restrict-then-anti (the exact-store admission pattern): the
         # history side of an anti join cannot broadcast, so semi-probe
         # it with the broadcast batch ids first — history is scanned,
@@ -2224,15 +1918,15 @@ def dedup_incremental_clusters(
     tag = uuid.uuid4().hex
     # rebalanced: advisory-sized commit files (see exact-fp ingest)
     rebalanced(members_new, probe=True).write.mode("overwrite").parquet(
-        os.path.join(paths["members"], f"batch={tag}")
+        store.batch_path(store_path, "members", tag)
     )
     rebalanced(remap_new, probe=True).write.mode("overwrite").parquet(
-        os.path.join(paths["remap"], f"batch={tag}")
+        store.batch_path(store_path, "remap", tag)
     )
     rebalanced(sh_new, probe=True).write.mode("overwrite").parquet(
-        os.path.join(paths["shingles"], f"batch={tag}")
+        store.batch_path(store_path, "shingles", tag)
     )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return members_new
 
 
@@ -2242,16 +1936,12 @@ def read_incremental_clusters(spark, store_path: str, id_col: str = "doc_id") ->
     tiny remap table) + ONE join onto members — never a CC recompute."""
     import os
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, None)
     if not tags:
         raise ValueError(f"empty cluster store at {store_path} (no committed batches)")
-    members = spark.read.parquet(
-        *[os.path.join(store_path, "members", f"batch={t}") for t in tags]
-    )
-    remap = spark.read.parquet(
-        *[os.path.join(store_path, "remap", f"batch={t}") for t in tags]
-    )
+    members = store.read_batches(spark, store_path, "members", tags)
+    remap = store.read_batches(spark, store_path, "remap", tags)
     return _apply_remap(members, _resolve_remap(remap), id_col).select(
         id_col, F.col("cid").cast("bigint").alias("cluster_id")
     )
@@ -2261,7 +1951,7 @@ def compact_incremental_clusters(spark, store_path: str, id_col: str = "doc_id")
     """Fold the merge forest into the member table (path compression
     made durable): members are rewritten with their ROOT labels, the
     remap table empties, and shingle postings compact to one directory
-    — all through :func:`_rewrite_store`'s crash-safe swap. Readers
+    — all through :func:`..core.store._rewrite_store`'s crash-safe swap. Readers
     before/after see the identical partition; post-compaction reads
     skip the resolution joins entirely. Returns the number of batch
     directories compacted."""
@@ -2279,7 +1969,7 @@ def compact_incremental_clusters(spark, store_path: str, id_col: str = "doc_id")
         return rebalanced(df, probe=True)
 
     return len(
-        _rewrite_store(
+        store._rewrite_store(
             spark, store_path, fold, tables=("remap", "members", "shingles"),
             min_batches=1, respect_snapshots=True,
         )
@@ -2305,13 +1995,13 @@ def delete_from_cluster_store(
     clusters' sizes, never the corpus). Untouched members keep their
     labels (path-compressed during the same rewrite), the merge
     forest folds to empty, and everything publishes through
-    :func:`_rewrite_store`'s crash-safe swap. Returns the number of
+    :func:`..core.store._rewrite_store`'s crash-safe swap. Returns the number of
     member rows deleted."""
     import os
 
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(os.path.join(store_path, "_BATCHES")):
+    if not os.path.exists(store.manifest_path(store_path)):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -2361,7 +2051,7 @@ def delete_from_cluster_store(
             probe=True,
         )
 
-    _rewrite_store(
+    store._rewrite_store(
         spark, store_path, takedown, tables=("remap", "shingles", "members"),
         min_batches=1,
     )
@@ -2473,16 +2163,13 @@ def dedup_incremental_spans(
     import os
     import uuid
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     params = {"kind": "substr-spans", "w": _SPAN_STORE_W, "stride": _SPAN_STORE_S}
-    tags = _manifest_read(manifest_path, params)
-    paths = {t: os.path.join(store_path, t) for t in ("windows", "revspans", "revdocs")}
+    tags = store._manifest_read(manifest_path, params)
 
     uniq = batch.dropDuplicates([id_col])
     if tags:
-        stored_win = spark.read.parquet(
-            *[os.path.join(paths["windows"], f"batch={t}") for t in tags]
-        )
+        stored_win = store.read_batches(spark, store_path, "windows", tags)
         # restrict-then-anti: semi-probe the stored windows with the
         # broadcast batch ids (scan, no shuffle, no history-wide
         # distinct), then dedup the batch-bounded hit set
@@ -2505,12 +2192,10 @@ def dedup_incremental_spans(
     tag = uuid.uuid4().hex
     # rebalanced: advisory-sized commit files (see exact-fp ingest)
     _span_windows(uniq, id_col, text_col).write.mode("overwrite").parquet(
-        os.path.join(paths["windows"], f"batch={tag}")
+        store.batch_path(store_path, "windows", tag)
     )
-    win_new = spark.read.parquet(os.path.join(paths["windows"], f"batch={tag}"))
-    full_win = spark.read.parquet(
-        *[os.path.join(paths["windows"], f"batch={t}") for t in [*tags, tag]]
-    )
+    win_new = spark.read.parquet(store.batch_path(store_path, "windows", tag))
+    full_win = store.read_batches(spark, store_path, "windows", [*tags, tag])
 
     # docs whose spans may change: any holder of a hash the batch made
     # (or found) shared. New docs recompute unconditionally.
@@ -2544,12 +2229,12 @@ def dedup_incremental_spans(
     # spans/recompute are shuffle-tailed: AQE partition coalescing
     # already bounds their write parallelism — no REBALANCE hint
     spans.write.mode("overwrite").parquet(
-        os.path.join(paths["revspans"], f"batch={tag}")
+        store.batch_path(store_path, "revspans", tag)
     )
     recompute.write.mode("overwrite").parquet(
-        os.path.join(paths["revdocs"], f"batch={tag}")
+        store.batch_path(store_path, "revdocs", tag)
     )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return spans
 
 
@@ -2564,8 +2249,8 @@ def read_incremental_spans(
     history-collapse caveat as :func:`read_incremental_store_asof`)."""
     import os
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, None)
     if not tags:
         raise ValueError(f"empty span store at {store_path} (no committed batches)")
     if as_of_batches is not None:
@@ -2579,7 +2264,7 @@ def read_incremental_spans(
     def tagged(table):
         parts = []
         for p, t in enumerate(tags):
-            d = os.path.join(store_path, table, f"batch={t}")
+            d = store.batch_path(store_path, table, t)
             if os.path.isdir(d):
                 parts.append(spark.read.parquet(d).withColumn("__p__", F.lit(p)))
         out = parts[0]
@@ -2600,7 +2285,7 @@ def _rewrite_span_store(spark, store_path: str, drop_ids=None, id_col: str = "do
     affected-docs-only recompute would not change the complexity),
     and the revision history folded to a single batch (every
     surviving doc's latest revision is the fresh one). Runs through
-    :func:`_rewrite_store`'s crash-safe swap. Returns
+    :func:`..core.store._rewrite_store`'s crash-safe swap. Returns
     {"n_deleted": member docs dropped, "n_batches": dirs folded}."""
     state: dict = {"n": 0}
 
@@ -2632,7 +2317,7 @@ def _rewrite_span_store(spark, store_path: str, drop_ids=None, id_col: str = "do
         return state["win"].select(id_col).distinct()
 
     n_b = len(
-        _rewrite_store(
+        store._rewrite_store(
             spark, store_path, fold,
             tables=("windows", "revspans", "revdocs"), min_batches=1,
             respect_snapshots=drop_ids is None,  # compaction respects pins; takedown wins over them
@@ -2654,7 +2339,7 @@ def delete_from_span_store(spark, store_path: str, ids, id_col: str = "doc_id") 
 
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(os.path.join(store_path, "_BATCHES")):
+    if not os.path.exists(store.manifest_path(store_path)):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -2692,13 +2377,11 @@ def table_store_ingest(
     import os
     import uuid
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, params)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, params)
     uniq = batch.dropDuplicates([id_col])
     if tags:
-        hist = spark.read.parquet(
-            *[os.path.join(store_path, table, f"batch={t}") for t in tags]
-        ).select(id_col)
+        hist = store.read_batches(spark, store_path, table, tags).select(id_col)
         # restrict-then-anti: scan (never shuffle) the history
         _hits = hist.join(F.broadcast(uniq.select(id_col)), id_col, "semi")
         uniq = uniq.join(F.broadcast(_hits), id_col, "left_anti")
@@ -2706,9 +2389,9 @@ def table_store_ingest(
     tag = uuid.uuid4().hex
     # rebalanced: advisory-sized commit files (see exact-fp ingest)
     rebalanced(uniq, probe=True).write.mode("overwrite").parquet(
-        os.path.join(store_path, table, f"batch={tag}")
+        store.batch_path(store_path, table, tag)
     )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return uniq
 
 
@@ -2716,10 +2399,8 @@ def table_store_read(spark, store_path: str, table: str = "rows") -> DataFrame:
     """Manifest-snapshot read of a keyed-append store table."""
     import os
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, None)
     if not tags:
         raise ValueError(f"empty table store at {store_path} (no committed batches)")
-    return spark.read.parquet(
-        *[os.path.join(store_path, table, f"batch={t}") for t in tags]
-    )
+    return store.read_batches(spark, store_path, table, tags)

@@ -41,8 +41,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core import store
 from ..core.layout import rebalanced
-from .dedup import _manifest_publish, _manifest_read
 
 _PARAMS = {"kind": "sharded-export"}
 
@@ -71,11 +71,11 @@ def export_manifest_rows(exp: DataFrame) -> DataFrame:
 def read_export_manifest(spark, store_path: str) -> DataFrame:
     """The live manifest: the LATEST committed manifest batch (each
     commit writes the full |shards|-row table)."""
-    tags = _manifest_read(os.path.join(store_path, "_BATCHES"), _PARAMS)
+    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
     if not tags:
         raise ValueError(f"empty export store at {store_path} (no committed batches)")
     return spark.read.parquet(
-        os.path.join(store_path, "manifest", f"batch={tags[-1]}")
+        store.batch_path(store_path, "manifest", tags[-1])
     )
 
 
@@ -90,8 +90,8 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
     an aged orphan sweep can reclaim, same rule as everywhere).
     Returns the committed manifest (with ``data_tag`` and a ``reused``
     flag per shard). Driver-side state is |shards| rows — metadata."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, _PARAMS)
     tag = uuid.uuid4().hex
 
     # freeze the frame ONCE: the manifest aggregation and the
@@ -104,7 +104,7 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
     rows = export_manifest_rows(exp)
     if tags:
         prev = (
-            spark.read.parquet(os.path.join(store_path, "manifest", f"batch={tags[-1]}"))
+            spark.read.parquet(store.batch_path(store_path, "manifest", tags[-1]))
             .select(
                 "file_idx",
                 F.col("n_docs").alias("_pn"),
@@ -142,11 +142,11 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
         # file_idx directory instead of one per upstream task
         rebalanced(exp.filter(F.col("file_idx").isin(changed)), "file_idx").write.mode(
             "overwrite"
-        ).partitionBy("file_idx").parquet(os.path.join(store_path, "files", f"batch={tag}"))
+        ).partitionBy("file_idx").parquet(store.batch_path(store_path, "files", tag))
     rows.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_path, "manifest", f"batch={tag}")
+        store.batch_path(store_path, "manifest", tag)
     )
-    _manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
     return rows
 
 

@@ -82,21 +82,23 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..core import store
 from ..core.layout import rebalanced
 from ..core.smalldf import local_df
-
-from .dedup import (
-    _manifest_lock,
-    _manifest_publish,
-    _manifest_read,
-    _rewrite_store,
-)
 
 MATVIEW_TABLES = ("left", "right", "view")
 
 
 def _params(on: list[str]) -> dict:
     return {"kind": "matview-join", "on": ",".join(on)}
+
+
+def _params_of(store_path: str) -> dict:
+    return store.read_manifest(store.manifest_path(store_path))[1] or {}
+
+
+def _join_keys(store_path: str) -> list:
+    return _params_of(store_path)["on"].split(",")
 
 
 def _store_view_tables(store_path: str) -> tuple:
@@ -108,15 +110,7 @@ def _store_view_tables(store_path: str) -> tuple:
     hard-coded default — a rewrite that folds only ``left``/``right``
     publishes a manifest whose tags the custom view tables never got,
     orphaning (and later sweeping) the served multi-view data."""
-    import json
-
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    try:
-        with open(manifest_path) as f:
-            params = json.load(f).get("params") or {}
-    except (OSError, ValueError):
-        params = {}
-    views = params.get("views")
+    views = _params_of(store_path).get("views")
     if views:
         return tuple(views.split(","))
     return ("view",)
@@ -145,16 +139,6 @@ def _net(df: DataFrame, mcol: str) -> DataFrame:
         df.groupBy(*cols)
         .agg(F.sum(mcol).cast("long").alias(mcol))
         .filter(F.col(mcol) != 0)
-    )
-
-
-def _read_table(spark, store_path: str, table: str, tags: list) -> DataFrame:
-    # mergeSchema: a store whose history spans a SCHEMA EVOLUTION
-    # (a column added in a later commit) reads as the union schema,
-    # rows from pre-evolution batches null-filled — the standard
-    # lakehouse add-column semantics
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(store_path, table, f"batch={t}") for t in tags]
     )
 
 
@@ -298,12 +282,15 @@ def _pre_parts(
                     spark.read.option("mergeSchema", "true").parquet(*paths)
                 )
         else:
-            parts.append(_read_table(spark, store_path, table, tags[:1]))
+            parts.append(
+                store.read_batches(spark, store_path, table, tags[:1], merge_schema=True)
+            )
         rest = tags[1:]
     else:
         rest = tags
     if rest:
-        parts.append(_net(_read_table(spark, store_path, table, rest), mcol))
+        rest_df = store.read_batches(spark, store_path, table, rest, merge_schema=True)
+        parts.append(_net(rest_df, mcol))
     return parts
 
 
@@ -314,7 +301,7 @@ def _empty_like(spark, df_or_none, store_path, table, tags, mcol):
         # union schema over the MANIFEST-LISTED batch dirs (bootstrap
         # requires both sides precisely so this read can never miss;
         # unlisted crash orphans are never consulted)
-        schema = _read_table(spark, store_path, table, tags).schema
+        schema = store.read_batches(spark, store_path, table, tags, merge_schema=True).schema
     empty = local_df(spark, [], schema)
     if mcol not in empty.columns:
         empty = empty.withColumn(mcol, F.lit(0).cast("long"))
@@ -350,11 +337,9 @@ def matview_ingest(
     if left_delta is None and right_delta is None:
         raise ValueError("matview_ingest called with no delta on either side")
     keys = [on] if isinstance(on, str) else list(on)
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     os.makedirs(store_path, exist_ok=True)
-    with _manifest_lock(
-        os.path.join(store_path, "_INGEST"), timeout_s=lock_timeout_s
-    ):
+    with store.ingest_lock(store_path, lock_timeout_s):
         return _ingest_locked(
             spark, store_path, manifest_path, left_delta, right_delta, keys, m_col
         )
@@ -391,11 +376,9 @@ def matview_multi_ingest(
     if left_delta is None and right_delta is None:
         raise ValueError("matview_multi_ingest called with no delta on either side")
     keys = [on] if isinstance(on, str) else list(on)
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     os.makedirs(store_path, exist_ok=True)
-    with _manifest_lock(
-        os.path.join(store_path, "_INGEST"), timeout_s=lock_timeout_s
-    ):
+    with store.ingest_lock(store_path, lock_timeout_s):
         return _ingest_locked(
             spark,
             store_path,
@@ -421,7 +404,7 @@ def _ingest_locked(
     params = _params(keys)
     if views is not None:
         params = dict(params, views=",".join(sorted(views)))
-    tags = _manifest_read(manifest_path, params)
+    tags = store._manifest_read(manifest_path, params)
     if not tags and (left_delta is None or right_delta is None):
         raise ValueError(
             "matview bootstrap commit must supply both left_delta and "
@@ -433,16 +416,8 @@ def _ingest_locked(
         # that carries zone maps on the join key
         if not tags or not tags[0].startswith("compact-"):
             return False
-        import json as _json
-
-        zpath = os.path.join(
-            store_path, table, f"batch={tags[0]}", "_ZONES.json"
-        )
-        try:
-            with open(zpath) as f:
-                return _json.load(f).get("column") == keys[0]
-        except (OSError, ValueError):
-            return False
+        d = store.batch_path(store_path, table, tags[0])
+        return _load_zones(d, keys[0]) is not None
 
     zoned = {t: _base_zoned(t) for t in ("left", "right")}
 
@@ -595,16 +570,16 @@ def _ingest_locked(
     # later commit re-lists and re-scans the whole state history, so
     # per-commit file count is the soak's compounding cost (guide §6)
     rebalanced(ad_l, probe=True).write.mode("overwrite").parquet(
-        os.path.join(store_path, "left", f"batch={tag}")
+        store.batch_path(store_path, "left", tag)
     )
     rebalanced(ad_r, probe=True).write.mode("overwrite").parquet(
-        os.path.join(store_path, "right", f"batch={tag}")
+        store.batch_path(store_path, "right", tag)
     )
     if views is None:
         # dv is aggregation-tailed: AQE partition coalescing already
         # bounds the write parallelism — no REBALANCE hint needed
         dv.write.mode("overwrite").parquet(
-            os.path.join(store_path, "view", f"batch={tag}")
+            store.batch_path(store_path, "view", tag)
         )
     else:
         # ONE shared delta computation; the (linear) per-view
@@ -619,14 +594,14 @@ def _ingest_locked(
                 .agg(F.sum("mult").cast("long").alias("mult"))
                 .filter(F.col("mult") != 0)
                 .write.mode("overwrite")
-                .parquet(os.path.join(store_path, name, f"batch={tag}"))
+                .parquet(store.batch_path(store_path, name, tag))
             )
-    _manifest_publish(manifest_path, params, add_tags=[tag])
+    store._manifest_publish(manifest_path, params, add_tags=[tag])
     return tag
 
 
 def _tags_asof(manifest_path: str, store_path: str, as_of_batches: int | None):
-    tags = _manifest_read(manifest_path, None)
+    tags = store._manifest_read(manifest_path, None)
     if as_of_batches is not None:
         if not 0 < as_of_batches <= len(tags):
             raise ValueError(
@@ -658,7 +633,7 @@ def matview_read(
     broadcasts, untouched base rows stream through as-is, and the
     state-sized groupBy disappears from the serve entirely.  Exact by
     the same linearity the commit path relies on."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, as_of_batches)
     return _serve_net(spark, store_path, view_table, tags, "mult")
 
@@ -708,9 +683,9 @@ def matview_agg(
     dropped (matching the from-scratch aggregate, which never sees
     them).  ``value_col`` is a Column expression over the view's
     columns (use exact decimal casts for hash-stable money math)."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, as_of_batches)
-    v = _read_table(spark, store_path, "view", tags)
+    v = store.read_batches(spark, store_path, "view", tags, merge_schema=True)
     return (
         v.groupBy(*group_cols)
         .agg(
@@ -759,15 +734,11 @@ def matview_takedown(
     publish joined rows derived from just-deleted victim rows —
     deleted data resurfacing in the view, exactly the pre-state race
     the ingest lock exists to prevent."""
-    import json
-
     ids = victims.select(id_col).distinct()
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    with _manifest_lock(
-        os.path.join(store_path, "_INGEST"), timeout_s=lock_timeout_s
-    ):
+    manifest_path = store.manifest_path(store_path)
+    with store.ingest_lock(store_path, lock_timeout_s):
         tables = _store_tables(store_path)
-        tags = _manifest_read(manifest_path, None)
+        tags = store._manifest_read(manifest_path, None)
         if not tags:
             return 0
         removed = 0
@@ -775,9 +746,10 @@ def matview_takedown(
         before = {}
         probes = []  # (tag, frame) — counted in ONE union job below
         for vt in tables[2:]:
-            v = _net(_read_table(spark, store_path, vt, tags), "mult").filter(
-                F.col("mult") > 0
-            )
+            v = _net(
+                store.read_batches(spark, store_path, vt, tags, merge_schema=True),
+                "mult",
+            ).filter(F.col("mult") > 0)
             if id_col in v.columns:
                 probes.append((f"rm:{vt}", v.join(ids, id_col, "semi")))
             else:
@@ -813,11 +785,15 @@ def matview_takedown(
             # the scrubbed full-join frame every recomputed view derives
             # from — takedown holds the ingest lock, so `tags` IS the
             # snapshot the rewrite will fold
-            with open(manifest_path) as f:
-                keys = json.load(f)["params"]["on"].split(",")
+            keys = _join_keys(store_path)
 
             def _scrubbed_side(table):
-                s = _net(_read_table(spark, store_path, table, tags), "m")
+                s = _net(
+                    store.read_batches(
+                        spark, store_path, table, tags, merge_schema=True
+                    ),
+                    "m",
+                )
                 if id_col in s.columns:
                     s = s.join(ids, id_col, "left_anti")
                 return s.filter(F.col("m") > 0)
@@ -848,7 +824,7 @@ def matview_takedown(
                 return _net(df, mcol)
             return _net(df.join(ids, id_col, "left_anti"), mcol)
 
-        _rewrite_store(
+        store._rewrite_store(
             spark,
             store_path,
             transform,
@@ -877,15 +853,12 @@ def matview_integrity(
     avoids, paid deliberately here because an AUDIT's job is to
     re-derive the answer the cheap path must match.  Scalars only
     transit the driver."""
-    import json
-
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, as_of_batches)
-    with open(manifest_path) as f:
-        keys = json.load(f)["params"]["on"].split(",")
+    keys = _join_keys(store_path)
 
-    L = _net(_read_table(spark, store_path, "left", tags), "m")
-    R = _net(_read_table(spark, store_path, "right", tags), "m")
+    L = _net(store.read_batches(spark, store_path, "left", tags, merge_schema=True), "m")
+    R = _net(store.read_batches(spark, store_path, "right", tags, merge_schema=True), "m")
     served = matview_read(spark, store_path, as_of_batches=as_of_batches)
 
     non_key_r = [c for c in R.columns if c not in keys and c != "m"]
@@ -958,12 +931,9 @@ def matview_read_outer(
     The anti-join keys on the join key (batch-bounded distinct list),
     so the plan is two scans and one shuffle — never a recompute of
     the join."""
-    import json
-
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, as_of_batches)
-    with open(manifest_path) as f:
-        keys = json.load(f)["params"]["on"].split(",")
+    keys = _join_keys(store_path)
 
     v = _serve_net(spark, store_path, "view", tags, "mult")
     L = _serve_net(spark, store_path, "left", tags, "m")
@@ -994,7 +964,7 @@ def matview_changes(
     genesis equals the as-of state itself).  Compaction collapses the
     commit log, after which a slice that straddles it is out of range
     and raises — the same honesty contract as every pinned read."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, to_batches)
     if not 0 <= from_batches <= len(tags):
         raise ValueError(
@@ -1003,9 +973,12 @@ def matview_changes(
         )
     window = tags[from_batches:]
     if not window:
-        empty = local_df(spark, [], _read_table(spark, store_path, "view", tags[:1]).schema)
+        schema = store.read_batches(
+            spark, store_path, "view", tags[:1], merge_schema=True
+        ).schema
+        empty = local_df(spark, [], schema)
         return empty.withColumnRenamed("mult", "mult_delta")
-    v = _read_table(spark, store_path, "view", window)
+    v = store.read_batches(spark, store_path, "view", window, merge_schema=True)
     return _net(v, "mult").withColumnRenamed("mult", "mult_delta")
 
 
@@ -1015,12 +988,9 @@ def matview_read_full_outer(
     """FULL OUTER serving — both anti-join legs, since the store keeps
     BOTH net inputs as tables (see :func:`matview_read_outer` for why
     this needs no extra maintenance state)."""
-    import json
-
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     tags = _tags_asof(manifest_path, store_path, as_of_batches)
-    with open(manifest_path) as f:
-        keys = json.load(f)["params"]["on"].split(",")
+    keys = _join_keys(store_path)
 
     v = _serve_net(spark, store_path, "view", tags, "mult")
     L = _serve_net(spark, store_path, "left", tags, "m")
@@ -1056,6 +1026,7 @@ def matview_read_full_outer(
 # write-after-publish, null-zones-serve-unpruned, dirs-without-zones
 # contribute whole — operators/zones.py holds the one copy
 from .zones import (  # noqa: E402
+    _load_zones,
     pruned_paths as _pruned_paths,
     write_zones as _write_zones,  # noqa: F401  (re-export for tests)
     write_zones_if_col as _write_zones_if_col,
@@ -1094,20 +1065,11 @@ def compact_matview_store(
     contract.  This is the documented 100 TB layout lever: the
     manifest protocol is unchanged, a zoneless dir just serves
     unpruned."""
-    import json
-
-    with _manifest_lock(
-        os.path.join(store_path, "_INGEST"), timeout_s=lock_timeout_s
-    ):
+    with store.ingest_lock(store_path, lock_timeout_s):
         tables = _store_tables(store_path)
         view_tables = set(tables[2:])
-        key0 = None
-        if zone_side_tables:
-            try:
-                with open(os.path.join(store_path, "_BATCHES")) as f:
-                    key0 = json.load(f)["params"]["on"].split(",")[0]
-            except (OSError, ValueError, KeyError):
-                key0 = None  # pre-bootstrap store: nothing to zone
+        on = _params_of(store_path).get("on")  # None before the bootstrap
+        key0 = on.split(",")[0] if zone_side_tables and on else None
 
         def transform(df: DataFrame, table: str) -> DataFrame:
             mcol = "m" if table in ("left", "right") else "mult"
@@ -1130,7 +1092,7 @@ def compact_matview_store(
             # coalescing bounds the write — no hint needed)
             return out
 
-        rewritten = _rewrite_store(
+        rewritten = store._rewrite_store(
             spark,
             store_path,
             transform,
@@ -1140,20 +1102,18 @@ def compact_matview_store(
             merge_schema=True,
         )
         if rewritten:
-            tags = _manifest_read(os.path.join(store_path, "_BATCHES"), None)
+            tags = store._manifest_read(store.manifest_path(store_path), None)
             for t in tags:
                 if not t.startswith("compact-"):
                     continue
                 if zone_by is not None:
                     for vt in view_tables:
-                        d = os.path.join(store_path, vt, f"batch={t}")
+                        d = store.batch_path(store_path, vt, t)
                         if os.path.isdir(d):
                             _write_zones_if_col(store_path, vt, t, zone_by)
                 if key0 is not None:
                     for st in ("left", "right"):
-                        if os.path.isdir(
-                            os.path.join(store_path, st, f"batch={t}")
-                        ):
+                        if os.path.isdir(store.batch_path(store_path, st, t)):
                             _write_zones_if_col(store_path, st, t, key0)
     return rewritten
 
@@ -1178,13 +1138,13 @@ def matview_lookup(
     compaction when it kept the zone column)."""
     if hi is None:
         hi = lo
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    manifest_path = store.manifest_path(store_path)
+    tags = store._manifest_read(manifest_path, None)
     paths = _pruned_paths(store_path, view_table, tags, zone_col, lo, hi)
     if not paths:
         # every candidate file pruned: exact empty result, typed from
         # the store schema
-        v = _read_table(spark, store_path, view_table, tags)
+        v = store.read_batches(spark, store_path, view_table, tags, merge_schema=True)
         return _net(v.limit(0), "mult")
     v = spark.read.option("mergeSchema", "true").parquet(*paths)
     v = v.filter((F.col(zone_col) >= lo) & (F.col(zone_col) <= hi))

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..core import store
 from ..core.smalldf import local_df
 
 from . import dedup as DD
@@ -51,14 +52,10 @@ def read_policy_log(spark, log_store: str) -> DataFrame:
     feed). This is the ops log AS A STORE: queryable, time-travelable
     via ``read_incremental_store_asof(..., "audit", k)``, compactable
     like everything else."""
-    import os
-
-    tags = DD._manifest_read(os.path.join(log_store, "_BATCHES"), _LOG_PARAMS)
+    tags = store._manifest_read(store.manifest_path(log_store), _LOG_PARAMS)
     if not tags:
         raise ValueError(f"empty policy log at {log_store} (no committed passes)")
-    return spark.read.parquet(
-        *[os.path.join(log_store, "audit", f"batch={t}") for t in tags]
-    )
+    return store.read_batches(spark, log_store, "audit", tags)
 
 
 _LOG_PARAMS = {"kind": "policy-log"}
@@ -185,14 +182,13 @@ def apply_maintenance_policy(
         "trigger_value double, result bigint, executed boolean",
     )
     if log_store is not None:
-        import os
         import uuid
 
-        manifest_path = os.path.join(log_store, "_BATCHES")
-        seq = len(DD._manifest_read(manifest_path, _LOG_PARAMS)) + 1
+        manifest_path = store.manifest_path(log_store)
+        seq = len(store._manifest_read(manifest_path, _LOG_PARAMS)) + 1
         tag = uuid.uuid4().hex
         out.withColumn("pass_seq", F.lit(seq).cast("int")).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(os.path.join(log_store, "audit", f"batch={tag}"))
-        DD._manifest_publish(manifest_path, _LOG_PARAMS, add_tags=[tag])
+        ).parquet(store.batch_path(log_store, "audit", tag))
+        store._manifest_publish(manifest_path, _LOG_PARAMS, add_tags=[tag])
     return out

@@ -5,7 +5,7 @@ inverted index.
 every call; a serving layer cannot afford that at 100 TB, so the index
 (postings = the tf table, doclen = the per-doc length table) lives as
 a store under the SAME atomic ``_BATCHES`` manifest contract as the
-incremental dedup stores (``operators/dedup.py`` — two-phase commit:
+incremental dedup stores (``core/store.py`` — two-phase commit:
 write ``<table>/batch=<tag>`` directories, then one ``os.replace``
 manifest swap under the flock; a torn ingest is invisible, replay is
 idempotent because already-indexed doc_ids are anti-joined out). That
@@ -35,10 +35,9 @@ import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from ..core import store
 from ..core.layout import rebalanced
 from ..core.smalldf import local_df
-
-from .dedup import _manifest_publish, _manifest_read
 
 _PARAMS = {"kind": "bm25", "tokenizer": "ws-lower", "k1": "1.2", "b": "0.75"}
 
@@ -117,13 +116,11 @@ def bm25_index_ingest(
     one doc_id anti-join — never a re-scan of indexed text, the same
     admission contract as ``dedup_incremental_exact``. Returns the
     admitted (doc_id, dl) rows."""
-    manifest_path = os.path.join(index_path, "_BATCHES")
+    manifest_path = store.manifest_path(index_path)
     uniq = batch.groupBy(id_col).agg(F.min(text_col).alias(text_col))
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(manifest_path, _PARAMS)
     if tags:
-        hist_ids = spark.read.parquet(
-            *[os.path.join(index_path, "doclen", f"batch={t}") for t in tags]
-        ).select(id_col)
+        hist_ids = store.read_batches(spark, index_path, "doclen", tags).select(id_col)
         # restrict-then-anti (the store-family admission pattern): an
         # anti join cannot broadcast its big right side, so semi-probe
         # the history with the broadcast batch ids first — history is
@@ -146,12 +143,12 @@ def bm25_index_ingest(
     # write); dl is checkpointed — rebalanced(probe) gives it
     # advisory-sized commit files (guide §6)
     tf.write.mode("overwrite").parquet(
-        os.path.join(index_path, "postings", f"batch={tag}")
+        store.batch_path(index_path, "postings", tag)
     )
     rebalanced(dl, probe=True).write.mode("overwrite").parquet(
-        os.path.join(index_path, "doclen", f"batch={tag}")
+        store.batch_path(index_path, "doclen", tag)
     )
-    _manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
     return dl
 
 
@@ -172,21 +169,17 @@ def bm25_index_topk(spark, index_path: str, queries: DataFrame, k: int = 10) -> 
     postings I/O by the terms probed instead of the vocabulary."""
     from .zones import pruned_paths_probes
 
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(store.manifest_path(index_path), _PARAMS)
     if not tags:
         raise ValueError(f"empty bm25 index at {index_path} (no committed batches)")
-    full = [os.path.join(index_path, "postings", f"batch={t}") for t in tags]
     terms = [r.token for r in queries.select("token").distinct().collect()]
     paths = pruned_paths_probes(index_path, "postings", tags, "token", terms)
     if paths:
         tf = spark.read.parquet(*paths)
     else:
         # every postings file pruned: no query term is indexed
-        tf = spark.read.parquet(*full).limit(0)
-    dl = spark.read.parquet(
-        *[os.path.join(index_path, "doclen", f"batch={t}") for t in tags]
-    )
+        tf = store.read_batches(spark, index_path, "postings", tags).limit(0)
+    dl = store.read_batches(spark, index_path, "doclen", tags)
     return bm25_rank(tf, dl, queries, k=k)
 
 
@@ -213,29 +206,10 @@ def _centroids_path(index_path: str) -> str:
     return os.path.join(index_path, "_CENTROIDS")
 
 
-def _ann_manifest(manifest_path: str) -> tuple:
-    """(tags, stored params) without validation — ANN callers check the
-    SUBSET of params that affects them (quant_digits for ingest/serve),
-    because re-training legitimately changes k_cells/rounds and adds
-    the centroids-file pointer."""
-    import json
-
-    if not os.path.exists(manifest_path):
-        return [], {}
-    with open(manifest_path) as f:
-        m = json.load(f)
-    return m["batches"], (m.get("params") or {})
-
-
 def _centroids_write(path: str, cents: list) -> None:
-    import json
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"centroids": [[list(map(str, s)), str(n)] for s, n in cents]}, f
-        )
-    os.replace(tmp, path)
+    store.write_json(
+        path, {"centroids": [[list(map(str, s)), str(n)] for s, n in cents]}
+    )
 
 
 def _centroids_read(index_path: str) -> list:
@@ -246,8 +220,8 @@ def _centroids_read(index_path: str) -> list:
     bootstrap default ``_CENTROIDS``."""
     import json
 
-    _tags, params = _ann_manifest(os.path.join(index_path, "_BATCHES"))
-    fname = params.get("centroids_file", "_CENTROIDS")
+    _tags, params = store.read_manifest(store.manifest_path(index_path))
+    fname = (params or {}).get("centroids_file", "_CENTROIDS")
     with open(os.path.join(index_path, fname)) as f:
         return [(list(map(int, s)), int(n)) for s, n in json.load(f)["centroids"]]
 
@@ -298,14 +272,17 @@ def ann_index_ingest(
     a long store at the same quant_digits (pinned by
     test_ann_index_int8_parity); serving widens the codes back to long
     before the distance math. Mixed int8/long usage of one store is
-    refused like any parameter mismatch."""
-    import json
+    refused like any parameter mismatch.
 
+    ANN callers check only the SUBSET of the recorded params that
+    affects them (quant_digits, cells_int8), because re-training
+    legitimately changes k_cells/rounds and adds the centroids-file
+    pointer."""
     from .similarity import assign_exact, kmeans_exact
 
-    manifest_path = os.path.join(index_path, "_BATCHES")
+    manifest_path = store.manifest_path(index_path)
     params = _ann_params(k_cells, rounds, quant_digits, store_int8)
-    tags, stored = _ann_manifest(manifest_path)
+    tags, stored = store.read_manifest(manifest_path)
     if tags and stored.get("quant_digits") != str(quant_digits):
         # quant_digits changes v itself — refused; k_cells/rounds are
         # bootstrap-training inputs only, irrelevant once the quantizer
@@ -322,9 +299,7 @@ def ann_index_ingest(
         )
     uniq = batch.dropDuplicates([id_col])
     if tags:
-        hist_ids = spark.read.parquet(
-            *[os.path.join(index_path, "cells", f"batch={t}") for t in tags]
-        ).select(id_col)
+        hist_ids = store.read_batches(spark, index_path, "cells", tags).select(id_col)
         # restrict-then-anti (the store-family admission pattern): an
         # anti join cannot broadcast its big right side, so semi-probe
         # the history with the broadcast batch ids first — history is
@@ -374,20 +349,15 @@ def ann_index_ingest(
         assigned = assigned.localCheckpoint(eager=True)
         tag = uuid.uuid4().hex
         rebalanced(assigned, probe=True).write.mode("overwrite").parquet(
-            os.path.join(index_path, "cells", f"batch={tag}")
+            store.batch_path(index_path, "cells", tag)
         )
-        from .dedup import _manifest_lock
-
-        with _manifest_lock(manifest_path):
-            if _ann_manifest(manifest_path)[0]:
-                lost = True
-            else:
-                lost = False
+        with store._manifest_lock(manifest_path):
+            lost = bool(store.read_manifest(manifest_path)[0])
+            if not lost:
                 _centroids_write(_centroids_path(index_path), stats["centroids"])
-                mtmp = manifest_path + ".tmp"
-                with open(mtmp, "w") as f:
-                    json.dump({"batches": [tag], "params": params}, f)
-                os.replace(mtmp, manifest_path)
+                store._manifest_swap(
+                    manifest_path, None, add_tags=[tag], set_params=params
+                )
         if lost:
             return ann_index_ingest(
                 spark, index_path, batch, k_cells=k_cells, rounds=rounds,
@@ -400,13 +370,13 @@ def ann_index_ingest(
     assigned = assigned.localCheckpoint(eager=True)
     tag = uuid.uuid4().hex
     rebalanced(assigned, probe=True).write.mode("overwrite").parquet(
-        os.path.join(index_path, "cells", f"batch={tag}")
+        store.batch_path(index_path, "cells", tag)
     )
     # params=None preserves the store's recorded params verbatim — an
     # established store's quantizer params were validated above and may
     # legitimately differ from this call's bootstrap-only k_cells/rounds
     # (and carry centroids_file after a re-train)
-    _manifest_publish(manifest_path, None, add_tags=[tag])
+    store._manifest_publish(manifest_path, None, add_tags=[tag])
     return assigned.select(id_col, "cid")
 
 
@@ -444,14 +414,9 @@ def ann_index_topk(
     cells; raise nprobe with selectivity (the documented trade-off)."""
     from .similarity import ivf_rank_exact
 
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    tags, stored = store.read_manifest(store.manifest_path(index_path))
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
-    import json
-
-    with open(manifest_path) as f:
-        stored = json.load(f)["params"]
     if stored.get("quant_digits") != str(quant_digits):
         raise ValueError(
             f"ann index at {index_path} was built with quant_digits="
@@ -485,9 +450,11 @@ def ann_index_topk(
             for cid in probe_cells_exact([int(x) for x in r.v], cents, nprobe)
         }
     )
-    full = [os.path.join(index_path, "cells", f"batch={t}") for t in tags]
     paths = pruned_paths_probes(index_path, "cells", tags, "cid", probe_cids)
-    assigned = spark.read.parquet(*paths) if paths else spark.read.parquet(*full).limit(0)
+    if paths:
+        assigned = spark.read.parquet(*paths)
+    else:
+        assigned = store.read_batches(spark, index_path, "cells", tags).limit(0)
     if candidate_filter is not None:
         assigned = assigned.filter(candidate_filter)
     # widen int8 codes back to long before the distance math (no-op on
@@ -514,7 +481,7 @@ def ann_index_retrain(
     and MIGRATE, never mix). Runs :func:`lloyd_exact` over the STORED
     quantized vectors (the cells table keeps v, so no original corpus
     is re-read), re-assigns every vector under the new centroids, and
-    publishes through :func:`_rewrite_store`'s crash-safe protocol —
+    publishes through :func:`..core.store._rewrite_store`'s crash-safe protocol —
     with one extension: the new centroids live in a fresh
     ``_CENTROIDS.retrain-<tag>`` file written BEFORE the manifest
     publish, and the manifest's params gain ``centroids_file`` in the
@@ -537,11 +504,10 @@ def ann_index_retrain(
     empty)."""
     import time
 
-    from .dedup import _rewrite_store
     from .similarity import _kmeans_assign_udf, lloyd_exact
 
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags, stored = _ann_manifest(manifest_path)
+    manifest_path = store.manifest_path(index_path)
+    tags, stored = store.read_manifest(manifest_path)
     if not tags:
         return []
     kc = int(stored["k_cells"]) if k_cells is None else int(k_cells)
@@ -571,7 +537,7 @@ def ann_index_retrain(
             out = out.withColumn("v", F.col("v").cast("array<tinyint>"))
         return rebalanced(out)
 
-    snapshot = _rewrite_store(
+    snapshot = store._rewrite_store(
         spark, index_path, retrain, tables=("cells",), min_batches=1,
         set_params=new_params,
     )
@@ -580,9 +546,7 @@ def ann_index_retrain(
     # sweep superseded centroid files: unreferenced by the CURRENT
     # manifest and aged past the ingest-commit grace window (a younger
     # unreferenced file may be a concurrent retrain's pre-publish write)
-    from .dedup import _REWRITE_STALE_S
-
-    _tags, live = _ann_manifest(manifest_path)
+    _tags, live = store.read_manifest(manifest_path)
     keep = live.get("centroids_file", "_CENTROIDS")
     now = time.time()
     for entry in os.listdir(index_path):
@@ -590,7 +554,7 @@ def ann_index_retrain(
             continue
         p = os.path.join(index_path, entry)
         try:
-            if now - os.path.getmtime(p) > _REWRITE_STALE_S:
+            if now - os.path.getmtime(p) > store._REWRITE_STALE_S:
                 os.remove(p)
         except OSError:
             pass
@@ -611,13 +575,10 @@ def ann_drift_stats(spark, index_path: str) -> DataFrame:
     the bootstrap shows drift2 == 0 exactly (the frozen stats ARE the
     final Lloyd stats over the same members)."""
     dec = "decimal(38,0)"
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags, _params = _ann_manifest(manifest_path)
+    tags = store._manifest_read(store.manifest_path(index_path), None)
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
-    cells = spark.read.parquet(
-        *[os.path.join(index_path, "cells", f"batch={t}") for t in tags]
-    )
+    cells = store.read_batches(spark, index_path, "cells", tags)
     cents = _centroids_read(index_path)
     frozen = local_df(
         spark,
@@ -870,7 +831,7 @@ def hybrid_index_ingest(
     cluster postings by token while leaving the payload tables id-
     clustered, time travel truncates all four to the same commit
     prefix. Returns the admitted (doc_id, dl) rows."""
-    manifest_path = os.path.join(index_path, "_BATCHES")
+    manifest_path = store.manifest_path(index_path)
     uniq = (
         batch.groupBy(id_col)
         .agg(F.min(F.struct(text_col, vec_col)).alias("tv"))
@@ -880,11 +841,9 @@ def hybrid_index_ingest(
             F.col(f"tv.{vec_col}").alias(vec_col),
         )
     )
-    tags = _manifest_read(manifest_path, _HYBRID_PARAMS)
+    tags = store._manifest_read(manifest_path, _HYBRID_PARAMS)
     if tags:
-        hist_ids = spark.read.parquet(
-            *[os.path.join(index_path, "doclen", f"batch={t}") for t in tags]
-        ).select(id_col)
+        hist_ids = store.read_batches(spark, index_path, "doclen", tags).select(id_col)
         # restrict-then-anti (the store-family admission pattern): an
         # anti join cannot broadcast its big right side, so semi-probe
         # the history with the broadcast batch ids first — history is
@@ -908,19 +867,19 @@ def hybrid_index_ingest(
     # tf/dl are aggregation-tailed (AQE bounds their writes); the two
     # uniq projections are narrow over the checkpointed batch (probe)
     tf.write.mode("overwrite").parquet(
-        os.path.join(index_path, "postings", f"batch={tag}")
+        store.batch_path(index_path, "postings", tag)
     )
     dl.write.mode("overwrite").parquet(
-        os.path.join(index_path, "doclen", f"batch={tag}")
+        store.batch_path(index_path, "doclen", tag)
     )
     rebalanced(uniq.select(id_col, vec_col), probe=True).write.mode(
         "overwrite"
-    ).parquet(os.path.join(index_path, "vectors", f"batch={tag}"))
+    ).parquet(store.batch_path(index_path, "vectors", tag))
     rebalanced(uniq.select(id_col, prefix.alias("prefix")), probe=True).write.mode(
         "overwrite"
-    ).parquet(os.path.join(index_path, "prefixes", f"batch={tag}"))
+    ).parquet(store.batch_path(index_path, "prefixes", tag))
     # THE transaction: all four table writes become visible here or never
-    _manifest_publish(manifest_path, _HYBRID_PARAMS, add_tags=[tag])
+    store._manifest_publish(manifest_path, _HYBRID_PARAMS, add_tags=[tag])
     return dl
 
 
@@ -944,8 +903,8 @@ def hybrid_index_rrf(
     because they share the commit clock, a pinned hybrid serve can
     never tear (a doc's lexical leg without its vector leg), which is
     what makes the fleet-snapshot contract meaningful for serving."""
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _HYBRID_PARAMS)
+    manifest_path = store.manifest_path(index_path)
+    tags = store._manifest_read(manifest_path, _HYBRID_PARAMS)
     if not tags:
         raise ValueError(f"empty hybrid index at {index_path} (no committed batches)")
     if as_of_batches is not None:
@@ -956,9 +915,7 @@ def hybrid_index_rrf(
             )
         tags = tags[:as_of_batches]
     t = {
-        name: spark.read.parquet(
-            *[os.path.join(index_path, name, f"batch={b}") for b in tags]
-        )
+        name: store.read_batches(spark, index_path, name, tags)
         for name in HYBRID_TABLES
     }
     # lexical-leg zone pruning (same contract as bm25_index_topk):
@@ -1010,18 +967,13 @@ def ann_index_topk_auto(
     min/max-pruned by the same pushed predicate the serve uses, and a
     deployment would cache per-predicate selectivities the way any
     cost-based optimizer caches column stats."""
-    import json
     import math
 
-    manifest_path = os.path.join(index_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, None)
+    tags, params = store.read_manifest(store.manifest_path(index_path))
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
-    with open(manifest_path) as f:
-        k_cells = int(json.load(f)["params"]["k_cells"])
-    cells = spark.read.parquet(
-        *[os.path.join(index_path, "cells", f"batch={t}") for t in tags]
-    )
+    k_cells = int(params["k_cells"])
+    cells = store.read_batches(spark, index_path, "cells", tags)
     agg = cells.agg(
         F.count(F.lit(1)).alias("total"),
         F.count(F.when(candidate_filter, F.lit(1))).alias("matched"),

@@ -34,9 +34,8 @@ rebuild adds (SURVEY §7.2a round-10 #1).
 from __future__ import annotations
 
 import json
-import os
 
-from .dedup import _manifest_read
+from ..core import store
 
 #: descriptor format version, bumped on any schema change
 _SNAPSHOT_VERSION = 1
@@ -49,7 +48,7 @@ def fleet_snapshot(stores: dict[str, str]) -> dict:
     never touches data files, O(#stores) cost."""
     snap: dict = {"version": _SNAPSHOT_VERSION, "stores": {}}
     for name, path in sorted(stores.items()):
-        tags = _manifest_read(os.path.join(path, "_BATCHES"), None)
+        tags = store._manifest_read(store.manifest_path(path), None)
         if not tags:
             raise ValueError(f"store {name!r} at {path} has no committed batches")
         snap["stores"][name] = {"path": path, "n_batches": len(tags)}
@@ -57,13 +56,9 @@ def fleet_snapshot(stores: dict[str, str]) -> dict:
 
 
 def save_snapshot(snapshot_path: str, snap: dict) -> None:
-    """Persist the descriptor atomically (write-temp + ``os.replace``,
-    the same swap discipline as the store manifests)."""
-    tmp = snapshot_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(snap, f, sort_keys=True)
-        f.write("\n")
-    os.replace(tmp, snapshot_path)
+    """Persist the descriptor atomically, with the same swap as the
+    store manifests."""
+    store.write_json(snapshot_path, snap)
 
 
 def load_snapshot(snapshot_path: str) -> dict:
@@ -94,8 +89,6 @@ def register_snapshot(snap: dict, snapshot_id: str, ttl_s: float | None = None) 
     ends up needing."""
     import time
 
-    from .dedup import _manifest_lock
-
     expires_at = (time.time() + ttl_s) if ttl_s is not None else None
     for name, entry in snap["stores"].items():
         # write the pin under the store's REWRITE flock and re-validate
@@ -104,8 +97,8 @@ def register_snapshot(snap: dict, snapshot_id: str, ttl_s: float | None = None) 
         # block, then see the collapsed log and raise STALE instead of
         # returning success for a pin that protects nothing (the
         # TOCTOU window between capture and registration, closed)
-        with _manifest_lock(os.path.join(entry["path"], "_REWRITE"), timeout_s=300.0):
-            tags = _manifest_read(os.path.join(entry["path"], "_BATCHES"), None)
+        with store.rewrite_lock(entry["path"]):
+            tags = store._manifest_read(store.manifest_path(entry["path"]), None)
             if len(tags) < entry["n_batches"]:
                 raise ValueError(
                     f"snapshot {snapshot_id!r} is stale for store {name!r}: "
@@ -113,24 +106,17 @@ def register_snapshot(snap: dict, snapshot_id: str, ttl_s: float | None = None) 
                     f"batches (< pinned {entry['n_batches']}) between "
                     "capture and registration — re-capture the fleet"
                 )
-            d = os.path.join(entry["path"], "_SNAPSHOTS")
-            os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f"{snapshot_id}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump({"id": snapshot_id, "store": name,
-                           "n_batches": entry["n_batches"],
-                           "expires_at": expires_at}, f)
-            os.replace(tmp, os.path.join(d, f"{snapshot_id}.json"))
+            store.write_pin(entry["path"], snapshot_id, {
+                "id": snapshot_id, "store": name,
+                "n_batches": entry["n_batches"], "expires_at": expires_at,
+            })
 
 
 def release_snapshot(snap: dict, snapshot_id: str) -> None:
     """Remove the pin from every store in the snapshot (missing files
     are fine — release is idempotent)."""
     for entry in snap["stores"].values():
-        try:
-            os.remove(os.path.join(entry["path"], "_SNAPSHOTS", f"{snapshot_id}.json"))
-        except FileNotFoundError:
-            pass
+        store.remove_pin(entry["path"], snapshot_id)
 
 
 def snapshot_batches(snap: dict, name: str) -> int:

@@ -37,8 +37,12 @@ compliance log wants."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 
+from ..core import store
 from . import dedup as DD
 
 
@@ -72,24 +76,29 @@ def takedown_everywhere(
     # anti-join inside the family deletes)
     ids = victims.select(id_col).distinct()
 
-    # Each family delete is an independent rewrite of a DISTINCT store
-    # directory (own manifest/rewrite locks, own output paths), so the
-    # fleet pass overlaps them from a small thread pool (guide §2.6:
-    # actions are only sequential because the driver calls them
-    # sequentially — the next store's scan back-fills executors idled
-    # by the previous store's commit tail).  2-3 in flight is enough
-    # to fill the tail without lock contention.  Per-store semantics
-    # are unchanged (each delete is individually crash-safe and
-    # idempotent); on a failure the OTHER in-flight stores run to
+    # Family deletes of DISTINCT store directories (own manifest/
+    # rewrite locks, own output paths) overlap from a small thread pool
+    # (guide §2.6: actions are only sequential because the driver calls
+    # them sequentially — the next store's scan back-fills executors
+    # idled by the previous store's commit tail).  2-3 in flight is
+    # enough to fill the tail without lock contention.  Deletes that
+    # share a directory (one store listed under two names or two
+    # families, by any spelling of its path) run in order inside one
+    # pool slot: a rewrite sweeps the superseded batch directories at
+    # once, and a concurrent read of the same store (another rewrite's
+    # snapshot, a vocab admission) would be scanning them.  Per-store
+    # semantics are unchanged (each delete is individually crash-safe
+    # and idempotent); on a failure the OTHER in-flight groups run to
     # completion before the error propagates — safe for the same
     # reason a crashed sequential pass is: the txlog coordinator
     # re-runs, completed stores no-op.
     from .matview import matview_takedown
 
-    tasks: list[tuple[str, object]] = []
+    tasks: list[tuple[str, str, object]] = []
     for name, (path, tables) in (table_stores or {}).items():
         tasks.append((
             name,
+            path,
             lambda p=path, t=tables: DD.delete_from_incremental_store(
                 spark, p, ids, id_col=id_col, tables=t
             ),
@@ -97,11 +106,13 @@ def takedown_everywhere(
     for name, path in cluster_stores or []:
         tasks.append((
             name,
+            path,
             lambda p=path: DD.delete_from_cluster_store(spark, p, ids, id_col=id_col),
         ))
     for name, path in span_stores or []:
         tasks.append((
             name,
+            path,
             lambda p=path: DD.delete_from_span_store(spark, p, ids, id_col=id_col),
         ))
     for entry in matview_stores or []:
@@ -112,6 +123,7 @@ def takedown_everywhere(
         name, path, *rest = entry
         tasks.append((
             name,
+            path,
             lambda p=path, v=(rest[0] if rest else None): matview_takedown(
                 spark, p, ids, id_col=id_col, views=v
             ),
@@ -120,18 +132,27 @@ def takedown_everywhere(
         ev = victims.select(id_col, text_col).withColumn("sign", F.lit(-1))
         tasks.append((
             name,
+            path,
             lambda p=path, e=ev: pmi_store_ingest(
                 spark, p, e, text_col=text_col, id_col=id_col
             ).count(),
         ))
 
-    if len(tasks) <= 1:
-        return {name: fn() for name, fn in tasks}
+    groups: dict[str, list] = {}
+    for name, path, fn in tasks:
+        groups.setdefault(os.path.realpath(path), []).append((name, fn))
+    if len(groups) <= 1:
+        return {name: fn() for name, _path, fn in tasks}
+
+    def run(group):
+        return {name: fn() for name, fn in group}
+
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(3, len(tasks))) as pool:
-        futs = [(name, pool.submit(fn)) for name, fn in tasks]
-        return {name: f.result() for name, f in futs}
+    with ThreadPoolExecutor(max_workers=min(3, len(groups))) as pool:
+        futs = [pool.submit(run, g) for g in groups.values()]
+        done = {name: r for f in futs for name, r in f.result().items()}
+    return {name: done[name] for name, _path, _fn in tasks}
 
 
 def takedown_with_txlog(
@@ -160,9 +181,6 @@ def takedown_with_txlog(
     ``stores`` forwards the family routings of
     :func:`takedown_everywhere`.  ``_crash_after`` (tests only) raises
     after N family deletes to simulate the coordinator dying."""
-    import json
-    import os
-
     os.makedirs(txlog_dir, exist_ok=True)
     vic_path = os.path.join(txlog_dir, f"{request_id}.victims")
     intent_path = os.path.join(txlog_dir, f"{request_id}.intent")
@@ -190,17 +208,13 @@ def takedown_with_txlog(
             for k, v in stores.items()
             if v
         }
-        tmp = intent_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"id_col": id_col, "text_col": text_col, "stores": routing}, f)
-        os.replace(tmp, intent_path)
+        store.write_json(
+            intent_path, {"id_col": id_col, "text_col": text_col, "stores": routing}
+        )
     return _run_intent(spark, txlog_dir, request_id, _crash_after)
 
 
 def _run_intent(spark, txlog_dir: str, request_id: str, _crash_after=None) -> dict:
-    import json
-    import os
-
     intent_path = os.path.join(txlog_dir, f"{request_id}.intent")
     with open(intent_path) as f:
         intent = json.load(f)
@@ -235,11 +249,7 @@ def _run_intent(spark, txlog_dir: str, request_id: str, _crash_after=None) -> di
     audit = takedown_everywhere(
         spark, vic, id_col=intent["id_col"], text_col=intent["text_col"], **kwargs
     )
-    done_path = os.path.join(txlog_dir, f"{request_id}.done")
-    tmp = done_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(audit, f)
-    os.replace(tmp, done_path)
+    store.write_json(os.path.join(txlog_dir, f"{request_id}.done"), audit)
     return audit
 
 
@@ -248,8 +258,6 @@ def recover_takedowns(spark, txlog_dir: str) -> dict:
     called at coordinator startup.  Returns {request_id: audit} for
     the requests recovered this pass (idempotent per-store deletes
     make the replay exactly-once in effect)."""
-    import os
-
     recovered = {}
     if not os.path.isdir(txlog_dir):
         return recovered

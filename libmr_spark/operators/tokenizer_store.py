@@ -23,14 +23,13 @@ surface); SURVEY §7.2a round-10 #3.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..core import store
 from ..core.smalldf import local_df
 
-from .dedup import _manifest_publish, _manifest_read
 
 _PARAMS = {"kind": "bpe-merges", "tokenizer": "ws-lower"}
 
@@ -115,8 +114,7 @@ def bpe_store_merges(
     Driver-side rows by design — the merge table is the tokenizer
     artifact (vocab-scale, ~10⁴-10⁵ rows at production size), and
     encode needs it sequentially."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
     if not tags:
         return []
     if as_of_batches is not None:
@@ -127,9 +125,7 @@ def bpe_store_merges(
             )
         tags = tags[:as_of_batches]
     rows = (
-        spark.read.parquet(
-            *[os.path.join(store_path, "merges", f"batch={t}") for t in tags]
-        )
+        store.read_batches(spark, store_path, "merges", tags)
         .orderBy("rnd")
         .collect()
     )
@@ -171,9 +167,9 @@ def bpe_store_train(
     local_df(
         spark, new_merges, "rnd int, l string, r string, n bigint"
     ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_path, "merges", f"batch={tag}")
+        store.batch_path(store_path, "merges", tag)
     )
-    _manifest_publish(os.path.join(store_path, "_BATCHES"), _PARAMS, add_tags=[tag])
+    store._manifest_publish(store.manifest_path(store_path), _PARAMS, add_tags=[tag])
     return new_merges
 
 

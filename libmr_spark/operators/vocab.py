@@ -30,24 +30,17 @@ the fold without changing any sum, so serving is provably invariant.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core import store
 from ..core.layout import rebalanced
-from .dedup import _manifest_publish, _manifest_read
 
 _PARAMS = {"kind": "vocab-pmi", "tokenizer": "ws-lower", "ngram": "2"}
 
 VOCAB_TABLES = ("uni", "bi", "docs")
-
-
-def _read_table(spark, store_path: str, table: str, tags: list) -> DataFrame:
-    return spark.read.parquet(
-        *[os.path.join(store_path, table, f"batch={t}") for t in tags]
-    )
 
 
 def pmi_store_ingest(
@@ -84,7 +77,7 @@ def pmi_store_ingest(
     the stamp survives compaction instead of being dropped by a
     footer-sampled schema."""
     payload_cols = list(payload_cols or [])
-    manifest_path = os.path.join(store_path, "_BATCHES")
+    manifest_path = store.manifest_path(store_path)
     ev = (
         batch.groupBy(id_col)
         .agg(F.min(F.struct(sign_col, text_col, *payload_cols)).alias("st"))
@@ -95,7 +88,7 @@ def pmi_store_ingest(
             *[F.col(f"st.{c}").alias(c) for c in payload_cols],
         )
     )
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(manifest_path, _PARAMS)
     if tags:
         # net only the batch's slice of the docs log: semi-probe the
         # log with the broadcast batch ids (scan, never a log-wide
@@ -103,7 +96,7 @@ def pmi_store_ingest(
         # consults no other doc's net, so this is exact (the
         # restrict-then-fold decomposition the store family shares)
         net = (
-            _read_table(spark, store_path, "docs", tags)
+            store.read_batches(spark, store_path, "docs", tags)
             .join(F.broadcast(ev.select(id_col)), id_col, "semi")
             .groupBy(id_col)
             .agg(F.sum("sign").alias("net"))
@@ -131,18 +124,18 @@ def pmi_store_ingest(
     # their writes); the docs log below is narrow over the checkpointed
     # batch — rebalanced(probe) gives it advisory-sized commit files
     uni.write.mode("overwrite").parquet(
-        os.path.join(store_path, "uni", f"batch={tag}")
+        store.batch_path(store_path, "uni", tag)
     )
     bi.write.mode("overwrite").parquet(
-        os.path.join(store_path, "bi", f"batch={tag}")
+        store.batch_path(store_path, "bi", tag)
     )
     # the id column is written FIRST — vocab_docs_net and the
     # compaction fold key the log off position 0, which mergeSchema
     # preserves because every batch leads with it
     rebalanced(ev.select(id_col, "sign", *payload_cols), probe=True).write.mode(
         "overwrite"
-    ).parquet(os.path.join(store_path, "docs", f"batch={tag}"))
-    _manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+    ).parquet(store.batch_path(store_path, "docs", tag))
+    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
     return ev.select(id_col, "sign", *payload_cols)
 
 
@@ -154,17 +147,16 @@ def pmi_store_topk(spark, store_path: str) -> DataFrame:
     from-scratch oracle over the surviving corpus."""
     from ..queries_pipeline import _pmi_topk_from_counts
 
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
     uni = (
-        _read_table(spark, store_path, "uni", tags)
+        store.read_batches(spark, store_path, "uni", tags)
         .groupBy("w")
         .agg(F.sum("c").alias("c"))
     )
     bi = (
-        _read_table(spark, store_path, "bi", tags)
+        store.read_batches(spark, store_path, "bi", tags)
         .groupBy("a", "b")
         .agg(F.sum("c").alias("c"))
     )
@@ -182,8 +174,7 @@ def vocab_net_counts(spark, store_path: str, as_of_batches: int | None = None) -
     ``as_of_batches`` pins the read to the first k manifest entries
     (time travel — the fleet-snapshot serving path; post-compaction
     history collapse applies as everywhere)."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
     if as_of_batches is not None:
@@ -194,13 +185,13 @@ def vocab_net_counts(spark, store_path: str, as_of_batches: int | None = None) -
             )
         tags = tags[:as_of_batches]
     uni = (
-        _read_table(spark, store_path, "uni", tags)
+        store.read_batches(spark, store_path, "uni", tags)
         .groupBy("w")
         .agg(F.sum("c").alias("c"))
         .filter(F.col("c") != 0)
     )
     bi = (
-        _read_table(spark, store_path, "bi", tags)
+        store.read_batches(spark, store_path, "bi", tags)
         .groupBy("a", "b")
         .agg(F.sum("c").alias("c"))
         .filter(F.col("c") != 0)
@@ -221,17 +212,12 @@ def vocab_docs_net(
     fold applies, so this read is provably compaction-invariant.
     ``merge_schema=True`` serves the union schema when the log spans
     a payload evolution (pre-evolution rows null-filled)."""
-    manifest_path = os.path.join(store_path, "_BATCHES")
-    tags = _manifest_read(manifest_path, _PARAMS)
+    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(
-        *[os.path.join(store_path, "docs", f"batch={t}") for t in tags]
+    return _docs_net_fold(
+        store.read_batches(spark, store_path, "docs", tags, merge_schema)
     )
-    return _docs_net_fold(df)
 
 
 def _docs_net_fold(df: DataFrame) -> DataFrame:
@@ -272,8 +258,6 @@ def compact_vocab_store(spark, store_path: str, merge_schema: bool = False) -> i
     never a mix; serving (a sum over deltas) is provably invariant
     because addition is what compaction performs. Returns the number
     of folded batches (0 if the store has < 2 commits)."""
-    from .dedup import _rewrite_store
-
     def fold(df, table):
         # all three folds are aggregation-tailed: AQE partition
         # coalescing bounds the rewrite's write parallelism
@@ -286,7 +270,7 @@ def compact_vocab_store(spark, store_path: str, merge_schema: bool = False) -> i
         return _docs_net_fold(df)
 
     return len(
-        _rewrite_store(
+        store._rewrite_store(
             spark, store_path, fold, tables=VOCAB_TABLES, min_batches=2,
             respect_snapshots=True, merge_schema=merge_schema,
         )

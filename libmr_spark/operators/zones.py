@@ -28,6 +28,8 @@ import decimal
 import json
 import os
 
+from ..core import store
+
 
 def _zone_encode(v):
     """JSON encoding for a zone bound. Parquet footer statistics are
@@ -91,7 +93,7 @@ def write_zones(store_path: str, table: str, tag: str, zone_col: str) -> dict:
     ``_ZONES.json`` inside the batch directory."""
     import pyarrow.parquet as pq
 
-    d = os.path.join(store_path, table, f"batch={tag}")
+    d = store.batch_path(store_path, table, tag)
     zones = {}
     for fn in sorted(os.listdir(d)):
         if not fn.endswith(".parquet"):
@@ -129,10 +131,7 @@ def write_zones(store_path: str, table: str, tag: str, zone_col: str) -> dict:
                 if elo is not _UNSUPPORTED and ehi is not _UNSUPPORTED
                 else None
             )
-    tmp = os.path.join(d, "_ZONES.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"column": zone_col, "files": zones}, f)
-    os.replace(tmp, os.path.join(d, "_ZONES.json"))
+    store.write_json(os.path.join(d, "_ZONES.json"), {"column": zone_col, "files": zones})
     return zones
 
 
@@ -142,7 +141,7 @@ def write_zones_if_col(store_path: str, table: str, tag: str, zone_col: str) -> 
     compaction — the multi-view-projection case."""
     import pyarrow.parquet as pq
 
-    d = os.path.join(store_path, table, f"batch={tag}")
+    d = store.batch_path(store_path, table, tag)
     for fn in sorted(os.listdir(d)):
         if fn.endswith(".parquet"):
             schema = pq.ParquetFile(os.path.join(d, fn)).schema_arrow
@@ -170,7 +169,7 @@ def pruned_paths_probes(
     probes = sorted(probes)
     paths = []
     for t in tags:
-        d = os.path.join(store_path, table, f"batch={t}")
+        d = store.batch_path(store_path, table, t)
         zones = _load_zones(d, zone_col)
         if zones is None:
             paths.append(d)
@@ -215,7 +214,7 @@ def pruned_paths(
     matching) zones, serve unconditionally."""
     paths = []
     for t in tags:
-        d = os.path.join(store_path, table, f"batch={t}")
+        d = store.batch_path(store_path, table, t)
         zones = _load_zones(d, zone_col)
         if zones is None:
             paths.append(d)

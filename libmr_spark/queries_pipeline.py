@@ -5971,19 +5971,15 @@ def streaming_hybrid_index_q(spark, sf_dir):
     "touches the corpus.",
 )
 def hybrid_store_mmr_q(spark, sf_dir):
-    from .operators.dedup import _manifest_read
+    from .core import store
     from .operators.retrieval import _HYBRID_PARAMS
     from .queries_ext import _sink_dir
 
     path = _sink_dir("hybrid_store_mmr", sf_dir)
     _hybrid_store_build(spark, sf_dir, path)
-    import os
-
-    tags = _manifest_read(os.path.join(path, "_BATCHES"), _HYBRID_PARAMS)
+    tags = store._manifest_read(store.manifest_path(path), _HYBRID_PARAMS)
     t = {
-        name: spark.read.parquet(
-            *[os.path.join(path, name, f"batch={b}") for b in tags]
-        )
+        name: store.read_batches(spark, path, name, tags)
         for name in ("postings", "doclen", "vectors")
     }
     qt, qv = _hybrid_queries(spark, sf_dir)
@@ -8089,9 +8085,7 @@ FROM c JOIN l ON c.o_custkey = l.o_custkey
     "manifest clock, compaction and takedown.",
 )
 def matview_cascade_q(spark, sf_dir):
-    import os
-
-    from .operators.dedup import _manifest_read
+    from .core import store
     from .operators.matview import matview_ingest, matview_read
     from .queries_ext import _sink_dir
 
@@ -8106,11 +8100,11 @@ def matview_cascade_q(spark, sf_dir):
         .select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
         .withColumn("m", F.lit(1))
     )
-    tags = _manifest_read(os.path.join(p1, "_BATCHES"), None)
+    tags = store._manifest_read(store.manifest_path(p1), None)
     for i, tag in enumerate(tags):
-        dv = spark.read.parquet(
-            os.path.join(p1, "view", f"batch={tag}")
-        ).withColumnRenamed("mult", "m")
+        dv = store.read_batches(spark, p1, "view", [tag]).withColumnRenamed(
+            "mult", "m"
+        )
         matview_ingest(
             spark,
             p2,
@@ -8525,10 +8519,9 @@ FROM c JOIN l ON c.o_custkey = l.o_custkey
     "replay.",
 )
 def matview_backfill_subscriber_q(spark, sf_dir):
-    import os
     import shutil
 
-    from .operators.dedup import _manifest_read
+    from .core import store
     from .operators.matview import matview_changes, matview_ingest, matview_read
     from .queries_ext import _sink_dir
 
@@ -8547,7 +8540,7 @@ def matview_backfill_subscriber_q(spark, sf_dir):
     )
     matview_ingest(spark, p2, cust, snapshot, on="o_custkey")
     # subscribe: per-commit deltas AFTER the snapshot point
-    tags = _manifest_read(os.path.join(p1, "_BATCHES"), None)
+    tags = store._manifest_read(store.manifest_path(p1), None)
     for k in range(3, len(tags)):
         dv = matview_changes(
             spark, p1, from_batches=k, to_batches=k + 1

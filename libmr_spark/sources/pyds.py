@@ -39,6 +39,7 @@ from pyspark.sql.datasource import (
 
 from ..core.partitioner import NUM_SLOTS
 from ..core.smalldf import local_df
+from ..core.store import write_json
 
 KV_SCHEMA = "key string, value string, type string"
 
@@ -239,10 +240,7 @@ class KvDataSourceWriter(DataSourceArrowWriter):
         # manifest-honoring reader ignores and the next overwrite
         # commit sweeps.
         new_files = set(published)
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"files": sorted(published), "n_rows": total}, f)
-        os.replace(tmp, manifest_path)
+        write_json(manifest_path, {"files": sorted(published), "n_rows": total})
         if self.overwrite:
             for f in os.listdir(self.path):
                 if f.endswith(".jsonl") and f not in new_files:

@@ -324,7 +324,7 @@ def test_matview_ingest_serializes_on_store_lock(spark, tmp_path):
     # commits must linearize (the delta-join rule is only exact
     # against the committed pre-state): with the _INGEST lock held by
     # another "writer", an ingest must time out rather than race
-    from libmr_spark.operators.dedup import _manifest_lock
+    from libmr_spark.core.store import _manifest_lock
 
     p = _store(tmp_path, "mv_lock")
     matview_ingest(
@@ -643,7 +643,7 @@ def test_matview_pre_parts_base_served_without_refold(spark, tmp_path):
     # the scale lever's structural pin: after compaction the leading
     # compact batch is served AS WRITTEN (a bare scan — no Aggregate in
     # its plan), and only the post-compaction ingest tail is net-folded
-    from libmr_spark.operators.dedup import _manifest_read
+    from libmr_spark.core.store import _manifest_read
     from libmr_spark.operators.matview import _pre_parts
 
     p = _store(tmp_path, "mv_preparts")
@@ -667,11 +667,14 @@ def test_matview_pre_parts_base_served_without_refold(spark, tmp_path):
     assert "Aggregate" not in base_plan, base_plan
     assert "Aggregate" in tail_plan, tail_plan
     # the part sum equals the netted full state
-    from libmr_spark.operators.matview import _net, _read_table
+    from libmr_spark.core.store import read_batches
+    from libmr_spark.operators.matview import _net
 
     full = {
         (r.k, r.lv): r.m
-        for r in _net(_read_table(spark, p, "left", tags), "m").collect()
+        for r in _net(
+            read_batches(spark, p, "left", tags, merge_schema=True), "m"
+        ).collect()
     }
     summed = {}
     for part in parts:
@@ -904,7 +907,7 @@ def test_matview_rewrite_waits_for_ingest_lock(spark, tmp_path):
     # racing an in-flight commit would let that commit publish view
     # rows derived from just-deleted inputs (the pre-state race the
     # ingest lock exists to prevent)
-    from libmr_spark.operators.dedup import _manifest_lock
+    from libmr_spark.core.store import _manifest_lock
 
     p = _store(tmp_path, "mv_rewrite_lock")
     matview_ingest(
@@ -1078,7 +1081,7 @@ def test_matview_ingest_prunes_state_by_batch_key_range(spark, tmp_path):
     # post-compaction, a commit's state reads open only the files
     # whose zone covers the BATCH's key range; a disjoint-range batch
     # contributes no base part at all — and every serve stays exact
-    from libmr_spark.operators.dedup import _manifest_read
+    from libmr_spark.core.store import _manifest_read
     from libmr_spark.operators.matview import _pre_parts
 
     p = _store(tmp_path, "mv_prune_ingest")
@@ -1173,13 +1176,13 @@ def test_matview_read_skips_fold_post_compaction(spark, tmp_path):
     got = _served(spark, p)
     assert got == (want - {(2, "l2", "r2", 1)}) | {(50, "l50", "r50", 1)}
     # cross-check against the naive full fold
-    from libmr_spark.operators.dedup import _manifest_read
-    from libmr_spark.operators.matview import _net, _read_table
+    from libmr_spark.core.store import _manifest_read, read_batches
+    from libmr_spark.operators.matview import _net
 
     tags = _manifest_read(os.path.join(p, "_BATCHES"), None)
     naive = {
         (r.k, r.lv, r.rv, r.mult)
-        for r in _net(_read_table(spark, p, "view", tags), "mult")
+        for r in _net(read_batches(spark, p, "view", tags, merge_schema=True), "mult")
         .filter(F.col("mult") > 0)
         .collect()
     }

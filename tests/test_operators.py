@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from libmr_spark.core import smalldf
+from libmr_spark.core import store as ST
 from libmr_spark.operators import dedup as DD
 from libmr_spark.operators import similarity as SIM
 from libmr_spark.operators.relational import as_of_join, range_join
@@ -380,13 +381,19 @@ def test_resolve_remap_driver_fast_path_matches_joins(spark, monkeypatch):
 
 @pytest.mark.parametrize(
     "rows",
-    [[(5, 3), (5, 2), (3, 1)], [(5, 5), (3, 1)], [(None, 3), (None, 2)], [(None, None)]],
-    ids=["duplicate-old", "self-row", "duplicate-null-old", "null-self-row"],
+    [
+        [(5, 3), (5, 2), (3, 1)],
+        [(5, 5), (3, 1)],
+        [(None, 3), (None, 2)],
+        [(None, None)],
+        [(2, 1), (1, 2), (9, 7)],
+    ],
+    ids=["duplicate-old", "self-row", "duplicate-null-old", "null-self-row", "cycle"],
 )
 def test_resolve_remap_rejects_malformed_forest_on_both_paths(spark, monkeypatch, rows):
-    # a duplicate old id or an old == new row is not a forest: the
-    # driver union and the distributed pointer-doubling raise the same
-    # ValueError, before any hop round
+    # a duplicate old id, an old == new row or a cycle is not a forest:
+    # the driver union and the distributed pointer-doubling raise the
+    # same ValueError, before any hop round
     remap = spark.createDataFrame(rows, "old long, new long")
     messages = set()
     for ceiling in (smalldf._CC_DRIVER_MAX_EDGES, 0):
@@ -1222,9 +1229,9 @@ def test_manifest_publish_is_lost_update_free(tmp_path):
     import json
 
     mp = str(tmp_path / "_BATCHES")
-    DD._manifest_publish(mp, {"p": 1}, add_tags=["a"])
-    DD._manifest_publish(mp, {"p": 1}, add_tags=["b"])  # B lands mid-window
-    DD._manifest_publish(mp, {"p": 1}, add_tags=["c"])  # A's stale-snapshot commit
+    ST._manifest_publish(mp, {"p": 1}, add_tags=["a"])
+    ST._manifest_publish(mp, {"p": 1}, add_tags=["b"])  # B lands mid-window
+    ST._manifest_publish(mp, {"p": 1}, add_tags=["c"])  # A's stale-snapshot commit
     assert json.load(open(mp))["batches"] == ["a", "b", "c"]
 
     # hammer it from 8 threads — every tag must survive
@@ -1232,7 +1239,7 @@ def test_manifest_publish_is_lost_update_free(tmp_path):
 
     tags = [f"t{i}" for i in range(8)]
     threads = [
-        threading.Thread(target=DD._manifest_publish, args=(mp, {"p": 1}, [t]))
+        threading.Thread(target=ST._manifest_publish, args=(mp, {"p": 1}, [t]))
         for t in tags
     ]
     for t in threads:
@@ -1253,13 +1260,13 @@ def test_manifest_lock_timeout_and_crash_release(tmp_path):
     fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX)
     with pytest.raises(TimeoutError, match="manifest lock"):
-        with DD._manifest_lock(mp, timeout_s=0.3):
+        with ST._manifest_lock(mp, timeout_s=0.3):
             pass
     # a CRASHED holder's lock releases with its fd — closing here stands
     # in for process death; acquisition then succeeds instantly, and a
     # mere leftover lock FILE (no kernel lock) never blocks at all
     os.close(fd)
-    with DD._manifest_lock(mp, timeout_s=0.3):
+    with ST._manifest_lock(mp, timeout_s=0.3):
         pass
     assert os.path.exists(lock)  # the file persists; only the flock matters
 
@@ -1335,7 +1342,7 @@ def test_compaction_crash_leaves_store_readable(spark, docs, tmp_path):
     before = json.load(open(manifest))
 
     # simulate the crash: run steps 1-2 of the protocol only
-    tags = DD._manifest_read(manifest, None)
+    tags = ST._manifest_read(manifest, None)
     for table in ("index", "payload"):
         spark.read.parquet(
             *[os.path.join(store, table, f"batch={t}") for t in tags]
@@ -1456,7 +1463,7 @@ def test_delete_from_store_unblocks_readmission(spark, docs, tmp_path):
     assert rejected <= retry
 
     # no trace of the deleted ids in any live directory
-    tags = DD._manifest_read(os.path.join(store, "_BATCHES"), None)
+    tags = ST._manifest_read(os.path.join(store, "_BATCHES"), None)
     for table in ("index", "payload"):
         live = spark.read.parquet(
             *[os.path.join(store, table, f"batch={t}") for t in tags]
@@ -1502,7 +1509,7 @@ def test_rewrite_sweep_grace_rules(spark, docs, tmp_path):
     aged = os.path.join(idx, "batch=crashed02")
     os.makedirs(young)
     os.makedirs(aged)
-    old = time.time() - 2 * DD._REWRITE_STALE_S
+    old = time.time() - 2 * ST._REWRITE_STALE_S
     os.utime(aged, (old, old))
 
     assert DD.compact_incremental_store(spark, store) == 2
@@ -1623,7 +1630,7 @@ def test_compaction_cluster_by_colocates_join_key(spark, docs, tmp_path):
     after = DD.incremental_store_stats(spark, store)
     assert after["tables"]["index"]["n_rows"] == before["tables"]["index"]["n_rows"]
 
-    tags = DD._manifest_read(os.path.join(store, "_BATCHES"), None)
+    tags = ST._manifest_read(os.path.join(store, "_BATCHES"), None)
     idx = spark.read.parquet(os.path.join(store, "index", f"batch={tags[0]}"))
     per_key_files = (
         idx.select("band", "bucket", F.input_file_name().alias("f"))
@@ -2530,7 +2537,6 @@ def test_ann_index_int8_parity(spark, emb, tmp_path):
 
     from libmr_spark.operators.dedup import delete_from_incremental_store
     from libmr_spark.operators.retrieval import (
-        _ann_manifest,
         ann_index_ingest,
         ann_index_retrain,
         ann_index_topk,
@@ -2563,7 +2569,7 @@ def test_ann_index_int8_parity(spark, emb, tmp_path):
     assert serve(p8) == serve(p64)
 
     # the codes really are int8 on disk
-    tags, params = _ann_manifest(os.path.join(p8, "_BATCHES"))
+    tags, params = ST.read_manifest(os.path.join(p8, "_BATCHES"))
     assert params["cells_int8"] == "true"
     cells = spark.read.parquet(
         *[os.path.join(p8, "cells", f"batch={t}") for t in tags]
@@ -2586,7 +2592,7 @@ def test_ann_index_int8_parity(spark, emb, tmp_path):
     c8 = ann_index_retrain(spark, p8)
     c64 = ann_index_retrain(spark, p64)
     assert c8 == c64
-    tags, params = _ann_manifest(os.path.join(p8, "_BATCHES"))
+    tags, params = ST.read_manifest(os.path.join(p8, "_BATCHES"))
     assert params["cells_int8"] == "true"
     cells = spark.read.parquet(
         *[os.path.join(p8, "cells", f"batch={t}") for t in tags]
@@ -2861,6 +2867,69 @@ def test_takedown_everywhere_routes_all_store_kinds(spark, docs, emb, tmp_path):
     )
     assert audit2 == {"hybrid": 0, "clusters": 0, "mv": 0, "vocab": 0}
     assert {tuple(r) for r in pmi_store_topk(spark, vocab).collect()} == want
+
+
+def test_takedown_everywhere_serializes_tasks_sharing_a_store(
+    spark, tmp_path, monkeypatch
+):
+    # one store listed under two names (the second through a symlink)
+    # plus a distinct store: the two deletes of the shared directory
+    # run one after the other in one pool slot, never overlapping, and
+    # both take effect — the first removes the victims, the second
+    # finds them gone; the distinct store still runs beside them
+    import os
+    import threading
+    import time
+
+    from libmr_spark.operators.takedown import takedown_everywhere
+
+    rows = [(i, f"r{i}") for i in range(20)]
+    shared = str(tmp_path / "shared")
+    other = str(tmp_path / "other")
+    for path in (shared, other):
+        DD.table_store_ingest(
+            spark, path, spark.createDataFrame(rows, "id long, v string"), "id",
+            {"kind": "rows"},
+        )
+    alias = str(tmp_path / "alias")
+    os.symlink(shared, alias)
+
+    real_delete = DD.delete_from_incremental_store
+    lock = threading.Lock()
+    active: dict = {}
+    peak: dict = {}
+
+    def tracked(spark_, path, *args, **kwargs):
+        key = os.path.realpath(path)
+        with lock:
+            active[key] = active.get(key, 0) + 1
+            peak[key] = max(peak.get(key, 0), active[key])
+        try:
+            time.sleep(0.2)  # widen the window an overlap would need
+            return real_delete(spark_, path, *args, **kwargs)
+        finally:
+            with lock:
+                active[key] -= 1
+
+    monkeypatch.setattr(DD, "delete_from_incremental_store", tracked)
+    victims = spark.createDataFrame([(2,), (3,), (5,)], "id long")
+    audit = takedown_everywhere(
+        spark,
+        victims,
+        table_stores={
+            "a": (shared, ("rows",)),
+            "b": (alias, ("rows",)),
+            "c": (other, ("rows",)),
+        },
+        id_col="id",
+    )
+    assert audit == {"a": 3, "b": 0, "c": 3}
+    assert list(audit) == ["a", "b", "c"]
+    assert peak[os.path.realpath(shared)] == 1
+    want = {i for i, _ in rows} - {2, 3, 5}
+    for path in (shared, other):
+        live = DD.table_store_read(spark, path)
+        assert {r.id for r in live.select("id").collect()} == want
 
 
 def test_fleet_snapshot_lifecycle(spark, tmp_path):
@@ -3396,7 +3465,7 @@ def test_exact_store_fp_clustered_admission_prunes_files(spark, tmp_path):
     assert len(total) >= 12
 
     # probe path: a 3-fp batch must open at most 3 of the files
-    tags = DD._manifest_read(os.path.join(store, "_BATCHES"), None)
+    tags = ST._manifest_read(os.path.join(store, "_BATCHES"), None)
     probe_batch = docs.filter("doc_id IN (5, 150, 399)").select(
         DD.fingerprint(F.col("text")).alias("fp"), "doc_id"
     )
@@ -3611,7 +3680,7 @@ def test_minhash_store_zoned_probe_pruning(spark, tmp_path):
 
     # structural: a single bucket probe opens a strict subset of the
     # compacted index files; a single id probe of the payload likewise
-    tags = DD._manifest_read(os.path.join(store, "_BATCHES"), None)
+    tags = ST._manifest_read(os.path.join(store, "_BATCHES"), None)
     cdir = [d for d in os.listdir(os.path.join(store, "index"))
             if d.startswith("batch=compact-")][0]
     total_idx = [f for f in os.listdir(os.path.join(store, "index", cdir))

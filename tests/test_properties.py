@@ -150,7 +150,7 @@ def test_slot_col_expr_spark_parity(spark):
 
 
 def test_manifest_publish_cross_process_no_lost_update(tmp_path):
-    # the manifest lock is a FILESYSTEM contract (O_EXCL), so prove it
+    # the manifest lock is a FILESYSTEM contract (a kernel flock), so prove it
     # across real processes, not just threads: 6 processes each publish
     # 5 tags concurrently; every tag must survive and the manifest must
     # remain parseable. No SparkSession needed — publication is pure
@@ -158,7 +158,7 @@ def test_manifest_publish_cross_process_no_lost_update(tmp_path):
     import json
     import multiprocessing as mp
 
-    from libmr_spark.operators.dedup import _manifest_publish
+    from libmr_spark.core.store import _manifest_publish
 
     mp_ctx = mp.get_context("fork")
     manifest = str(tmp_path / "_BATCHES")

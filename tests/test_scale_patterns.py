@@ -436,6 +436,7 @@ def test_store_lifecycle_random_interleaving_matches_model(spark, tmp_path):
     import random
     import re
 
+    from libmr_spark.core import store as ST
     from libmr_spark.operators import dedup as DD
 
     def py_fp(text: str) -> str:
@@ -447,7 +448,7 @@ def test_store_lifecycle_random_interleaving_matches_model(spark, tmp_path):
     rng = random.Random(42)
 
     def live_rows():
-        tags = DD._manifest_read(os.path.join(store, "_BATCHES"), None)
+        tags = ST._manifest_read(os.path.join(store, "_BATCHES"), None)
         if not tags:
             return set()
         df = spark.read.parquet(
@@ -659,8 +660,8 @@ def test_hybrid_store_random_interleaving_matches_model(spark, tmp_path):
     import random
     import shutil
 
+    from libmr_spark.core.store import _manifest_read
     from libmr_spark.operators.dedup import (
-        _manifest_read,
         compact_incremental_store,
         delete_from_incremental_store,
     )
