@@ -25,6 +25,23 @@ from pyspark.sql import DataFrame
 _REBALANCE_MIN_PARTS = 8
 
 
+#: Tree patterns of the logical operators that plan a shuffle when the
+#: frame runs (a subquery expression plans a job of its own).
+_SHUFFLE_PATTERNS = (
+    "AGGREGATE", "JOIN", "AS_OF_JOIN", "LATERAL_JOIN", "DISTINCT_LIKE", "INTERSECT", "EXCEPT",
+    "REPARTITION_OPERATION", "REBALANCE_PARTITIONS", "SORT", "WINDOW", "PLAN_EXPRESSION",
+)
+
+
+def _plans_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s analyzed plan holds an aggregate, join,
+    repartition, window or other shuffling operator, read from Catalyst's
+    tree-pattern bits without planning it."""
+    plan = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    return any(plan.containsPattern(getattr(patterns, name)()) for name in _SHUFFLE_PATTERNS)
+
+
 def rebalanced(df: DataFrame, *key_cols: str, probe: bool = False) -> DataFrame:
     """Size-targeted output partitioning for store-table writes (guide
     §6 — aim for advisory-sized output files): an AQE ``REBALANCE``
@@ -48,8 +65,10 @@ def rebalanced(df: DataFrame, *key_cols: str, probe: bool = False) -> DataFrame:
     an exchange.  ``probe=True`` (for frames whose partition count is
     knowable WITHOUT running jobs: checkpointed / narrow-over-scan
     lineage) skips the hint when the frame is already at most
-    ``_REBALANCE_MIN_PARTS`` partitions — never probe a lazy
-    shuffle-tailed frame, ``.rdd`` materializes its AQE stages.
+    ``_REBALANCE_MIN_PARTS`` partitions. A frame whose logical plan
+    has a shuffle (``_plans_shuffle``) is not probed and keeps the
+    hint: ``.rdd`` on a lazy shuffle-tailed frame materializes its AQE
+    stages.
 
     With ``key_cols`` a key's rows usually land in one file, but not
     always: AQE (``optimizeSkewsInRebalancePartitions``, on by default)
@@ -62,7 +81,7 @@ def rebalanced(df: DataFrame, *key_cols: str, probe: bool = False) -> DataFrame:
     in Spark 4: verified 32 files -> 1 inside a micro-batch)."""
     if probe:
         try:
-            if df.rdd.getNumPartitions() <= _REBALANCE_MIN_PARTS:
+            if not _plans_shuffle(df) and df.rdd.getNumPartitions() <= _REBALANCE_MIN_PARTS:
                 return df
         except Exception:  # noqa: BLE001 — probe failure must never break a commit
             pass

@@ -1,36 +1,63 @@
 """Point and broadcast task analogs of the reference's RPC surface.
 
 * ``run_on_key`` ≈ MR_RunOnKey (``/root/reference/src/mr.c:2120-2173``):
-  run a named task against the rows owning one key. The reference
-  short-circuits to a direct call when the key's slot is local
-  (``:2133-2136``); the analog here is a driver-local read. When ``df``
-  is a small bare local parquet scan, the matching rows are read on the
-  driver with ``pyarrow.dataset`` (the key filter pushed into the scan)
-  and come back as a ``LocalRelation`` frame with exactly ``df.schema``,
-  which collects without a Spark job. The gate is one rule and has no
-  knob; every condition must hold:
-
-  - the analyzed plan is a ``LogicalRelation`` over a parquet
-    ``HadoopFsRelation`` read with no option beyond its path (and from a
-    single root path when hive-partitioned), and the frame is not cached
-    by the caller;
-  - every input file is a ``file:`` path, and
-    ``spark.sql.files.ignoreCorruptFiles`` / ``ignoreMissingFiles`` are off;
-  - ``key_col`` names exactly one field, and the Python type of ``key``
-    is that field's type without coercion (``smalldf._KEY_TYPES``);
-  - every column is of an Arrow-exact type (``smalldf.exact_type``;
-    timestamps and nested types do not qualify), and every file stores
-    each column it has under that exact name and Arrow type;
-  - the input is under ``smalldf._POINT_READ_DRIVER_MAX_BYTES``.
-
-  Anything else, or an Arrow error on the way, takes the distributed
-  twin: a keyed filter that Catalyst turns into partition/file pruning
-  plus parquet predicate pushdown, at scan latency (SURVEY §7.4).
-
+  run a named task against the rows owning one key.
 * ``run_on_all_shards`` ≈ MR_RunOnAllShards
   (``/root/reference/src/mr.c:2263-2311``): run a task once per shard
-  and gather the per-shard results at the initiator — here one result
-  row per partition via ``mapInPandas``, gathered by ``collect``.
+  and gather the per-shard results at the initiator.
+* ``internal_command`` ≈ the reference's internal-commands execution
+  (``src/mr.c:1160-1220``): named admin commands fanned
+  out to every shard, one reply record per (shard, command).
+
+A **shard** is one of Spark's own planned partitions of ``df``. For a
+file scan that is one ``FilePartition`` of the executed plan's
+``FileSourceScanExec.inputRDD()``: a group of file splits that one task
+reads. Both paths below fan out over exactly those partitions, in
+partition order.
+
+**The driver-local gate.** The reference short-circuits to a direct
+call when the data is local (``src/mr.c:2133-2136``); here the analog
+is answering on the driver, with no Spark job, from a frame Spark would
+only scan. One structural rule decides it (``_bare_local_scan``), with
+no knob; every condition must hold:
+
+- the analyzed plan is a ``LogicalRelation`` over a parquet
+  ``HadoopFsRelation`` read with no option beyond its path, through an
+  ``InMemoryFileIndex``, and the frame is not cached by the caller;
+- every root path is a ``file:`` path (so is every file listed under
+  it), and ``spark.sql.files.ignoreCorruptFiles`` /
+  ``ignoreMissingFiles`` are off.
+
+Its three consumers add their own conditions on top:
+
+- ``run_on_key`` reads the matching rows with ``pyarrow.dataset`` (the
+  key filter pushed into the scan) into a ``LocalRelation`` of exactly
+  ``df.schema``, when also: ``key_col`` names exactly one field and the
+  Python type of ``key`` is that field's type without coercion
+  (``smalldf._KEY_TYPES``); every column is of an Arrow-exact type
+  (``smalldf.exact_type``; timestamps and nested types do not qualify)
+  and every file stores each column it has under that exact name and
+  Arrow type; a hive-partitioned scan has a single root path; and the
+  input is under ``smalldf._POINT_READ_DRIVER_MAX_BYTES``.
+- ``run_on_all_shards`` with the built-in ``dbsize`` task and no
+  ``args``, and
+- ``internal_command`` when every command needs only a row count
+  (``DBSIZE``, ``PING``, and unknown commands, which reply ``ERR …``),
+  answer from parquet footers: a shard's size is the sum of the footer
+  ``num_rows`` of its files. The executed plan must be a single
+  ``FileSourceScanExec`` leaf and every split a whole file. The sizes
+  go through the same per-shard reply code the distributed path runs,
+  and the replies come back as a ``LocalRelation`` of ``out_schema``
+  (every field of an Arrow-exact type, every reply a dict with exactly
+  its field names, accepted by PySpark's row verifier).
+
+Anything else, or an Arrow or OS error on the way, takes the
+distributed twin: a keyed filter that Catalyst turns into
+partition/file pruning plus parquet predicate pushdown (SURVEY §7.4),
+or a ``mapInPandas`` fan-out gathered by ``collect``. A fan-out that
+needs only row counts first projects ``df`` to one literal column, so
+the scan decodes no column (a zero-column projection fails in the
+Python worker); ``MEMORY`` and user tasks see the full frame.
 """
 
 from __future__ import annotations
@@ -69,19 +96,9 @@ def _maybe_timed(result: DataFrame, timeout_ms: int | None) -> DataFrame:
     return local_df(result.sparkSession, rows, result.schema)
 
 
-def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None:
-    """The rows of ``df`` where ``key_col == key``, read on the driver
-    with pyarrow, or None when ``df`` fails the gate in the module
-    docstring."""
-    fields = df.schema.fields
-    key_fields = [f for f in fields if f.name == key_col]
-    if (
-        len(key_fields) != 1
-        or not isinstance(key_fields[0].dataType, _KEY_TYPES.get(type(key), ()))
-        or key != key  # Spark's NaN = NaN is true, Arrow's is false
-        or not all(exact_type(f.dataType) for f in fields)
-    ):
-        return None
+def _bare_local_scan(df: DataFrame):
+    """The ``HadoopFsRelation`` ``df`` scans when it passes the
+    driver-local gate in the module docstring, else None."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
@@ -92,20 +109,42 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
     conf = df.sparkSession.conf
     if (
         index.getClass().getSimpleName() != "InMemoryFileIndex"
-        or index.sizeInBytes() >= _POINT_READ_DRIVER_MAX_BYTES
         or not set(rel.options().keySet().mkString("\n").split("\n")) <= {"", "path"}
         or conf.get("spark.sql.files.ignoreCorruptFiles").lower() != "false"
         or conf.get("spark.sql.files.ignoreMissingFiles").lower() != "false"
         or df.storageLevel != StorageLevel.NONE
+        # a root's file system lists its files: file: roots, file: inputs
+        or not all(p.startswith("file:") for p in index.rootPaths().mkString("\n").split("\n"))
     ):
         return None
-    uris = df.inputFiles()
-    if not all(u.startswith("file:") for u in uris):
+    return rel
+
+
+def _local_path(uri: str) -> str:
+    return unquote(urlsplit(uri).path)
+
+
+def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None:
+    """The rows of ``df`` where ``key_col == key``, read on the driver
+    with pyarrow, or None when ``df`` fails ``run_on_key``'s gate."""
+    fields = df.schema.fields
+    key_fields = [f for f in fields if f.name == key_col]
+    if (
+        len(key_fields) != 1
+        or not isinstance(key_fields[0].dataType, _KEY_TYPES.get(type(key), ()))
+        or key != key  # Spark's NaN = NaN is true, Arrow's is false
+        or not all(exact_type(f.dataType) for f in fields)
+    ):
         return None
+    rel = _bare_local_scan(df)
+    if rel is None:
+        return None
+    index = rel.location()
     part_names = T.StructType.fromJson(json.loads(rel.partitionSchema().json())).names
     roots = index.rootPaths()
-    if part_names and roots.size() != 1:
+    if index.sizeInBytes() >= _POINT_READ_DRIVER_MAX_BYTES or (part_names and roots.size() != 1):
         return None
+    uris = df.inputFiles()
 
     import pyarrow as pa
     import pyarrow.dataset as ds
@@ -115,7 +154,7 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
     by_lower = {n.lower(): n for n in schema.names}
     try:
         data = ds.dataset(
-            [unquote(urlsplit(u).path) for u in uris],
+            [_local_path(u) for u in uris],
             schema=schema,
             format="parquet",
             # Spark's partition values: hive dirs under the root, parsed to
@@ -139,6 +178,62 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
     except pa.ArrowException:
         return None
     return local_df(df.sparkSession, table, df.schema)
+
+
+def _shard_sizes(df: DataFrame) -> list[int] | None:
+    """The row count of each shard (planned partition) of ``df``, in
+    partition order, from parquet footers and without a Spark job; None
+    when ``df`` fails the gate, the plan is not a single file-scan leaf,
+    a split covers part of a file, or a footer read fails."""
+    if _bare_local_scan(df) is None:
+        return None
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    if leaves.size() != 1 or leaves.head().getClass().getSimpleName() != "FileSourceScanExec":
+        return None
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sizes = []
+    try:
+        for part in leaves.head().inputRDD().partitions():
+            n = 0
+            for f in part.files():
+                if f.start() != 0 or f.length() != f.fileSize():
+                    return None
+                n += pq.read_metadata(_local_path(f.filePath().urlEncoded())).num_rows
+            sizes.append(n)
+    except (pa.ArrowException, OSError):
+        return None
+    return sizes
+
+
+def _footer_replies(df: DataFrame, shard_rows: Callable[[pd.DataFrame], list], out_schema) -> DataFrame | None:
+    """The fan-out answered on the driver: ``shard_rows`` (the per-shard
+    reply code both paths run) applied to each shard as a column-less
+    frame of its footer row count, the replies gathered in shard order
+    into a ``LocalRelation`` of ``out_schema``; None when ``df`` or a
+    reply leaves the gate (see the module docstring)."""
+    schema = df.sparkSession._parse_ddl(out_schema) if isinstance(out_schema, str) else out_schema
+    if not all(exact_type(f.dataType) for f in schema.fields):
+        return None
+    sizes = _shard_sizes(df)
+    if sizes is None:
+        return None
+    rows = [r for n in sizes for r in shard_rows(pd.DataFrame(index=pd.RangeIndex(n)))]
+    names = set(schema.names)
+    if not all(isinstance(r, dict) and r.keys() == names for r in rows):
+        return None  # the twin's by-name column match decides
+    try:
+        return local_df(df.sparkSession, rows, schema)
+    except (TypeError, ValueError):
+        return None  # a value the row verifier refuses: the twin's Arrow cast decides
+
+
+def _one_column(df: DataFrame) -> DataFrame:
+    """``df`` projected to one literal column: the rows and shards a
+    count-only fan-out needs, with no column decoded."""
+    return df.select(F.lit(0).alias("_"))
 
 
 def run_on_key(
@@ -178,11 +273,14 @@ def run_on_all_shards(
     registry: Registry | None = None,
     timeout_ms: int | None = None,
 ) -> DataFrame:
-    """One task invocation per partition ("shard"), each emitting one
-    result row; the caller gathers with ``.collect()`` like the
-    reference's initiator barrier (``/root/reference/src/mr.c:1904-1949``).
+    """One task invocation per shard, each emitting at most one result
+    row; the caller gathers with ``.collect()`` like the reference's
+    initiator barrier (``src/mr.c:1904-1949``).
     ``timeout_ms`` bounds the whole fan-out+gather, as MR_RunOnAllShards'
-    deadline does (``/root/reference/src/mr.c:2263-2311``).
+    deadline does (``src/mr.c:2263-2311``). The built-in
+    ``dbsize`` is answered from parquet footers on a frame that passes
+    the driver-local gate, and otherwise counts the rows of a one-column
+    projection; other tasks see every column.
 
     Example parity target: RemoteTaskDBSize — per-shard dbsize summed at
     the initiator (``/root/reference/tests/mr_test_module/src/lib.rs:478-505``)
@@ -190,14 +288,45 @@ def run_on_all_shards(
     """
     fn = (registry or GLOBAL_REGISTRY).get(StepType.REMOTE_TASK, task).fn if isinstance(task, str) else task
 
+    def shard_rows(part: pd.DataFrame) -> list[dict]:
+        row = fn(part, args) if args is not None else fn(part)
+        return [] if row is None else [row]
+
+    if fn is dbsize and args is None:
+        local = _footer_replies(df, shard_rows, out_schema)
+        if local is not None:
+            return _maybe_timed(local, timeout_ms)
+        df = _one_column(df)
+
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches]
-        part = pd.concat(frames) if frames else pd.DataFrame()
-        row = fn(part, args) if args is not None else fn(part)
-        if row is not None:
-            yield pd.DataFrame([row])
+        rows = shard_rows(pd.concat(frames) if frames else pd.DataFrame())
+        if rows:
+            yield pd.DataFrame(rows)
 
     return _maybe_timed(df.mapInPandas(per_partition, schema=out_schema), timeout_ms)
+
+
+#: The admin commands ``internal_command`` knows, each a reply from one
+#: shard's rows; every one but ``MEMORY`` needs only their count.
+_COMMANDS: dict[str, Callable[[pd.DataFrame], str]] = {
+    "DBSIZE": lambda part: str(len(part)),
+    "PING": lambda part: "PONG",
+    "MEMORY": lambda part: str(int(part.memory_usage(deep=True).sum()) if len(part) else 0),
+}
+
+
+def _command_rows(part: pd.DataFrame, commands: list[str], reply_parser: Callable | None) -> list[dict]:
+    """One shard's ``internal_command`` replies, one per command, with a
+    failing command or parser as an ``ERR …`` record."""
+    rows = []
+    for cmd in commands:
+        try:
+            raw = _COMMANDS[cmd.upper()](part)
+            rows.append(reply_parser(cmd, raw) if reply_parser else {"command": cmd, "reply": raw})
+        except Exception as e:  # per-element error record
+            rows.append({"command": cmd, "reply": f"ERR {e}"})
+    return rows
 
 
 def internal_command(
@@ -212,31 +341,29 @@ def internal_command(
     parsed into a record on the initiator; per-element errors become
     error records (``/root/reference/src/mr.c:1203-1214``).
 
-    Here a "shard" is a partition and a command is a named admin
-    operation evaluated against the partition's rows. One result row
-    per (partition, command); a ``reply_parser`` turns the raw reply
-    into the record shape, mirroring InternalCommandReplyParser
-    (``/root/reference/src/mr.h:212-214``).
+    A command is a named admin operation evaluated against one shard's
+    rows. One result row per (shard, command); a ``reply_parser`` turns
+    the raw reply into the record shape, mirroring
+    InternalCommandReplyParser (``src/mr.h:212-214``).
+    Commands that need only row counts are answered from parquet
+    footers on a frame that passes the driver-local gate, and otherwise
+    from a one-column projection; ``MEMORY`` sees every column. A reply
+    the driver path cannot carry sends the call to the twin, which runs
+    ``reply_parser`` again.
     """
-    known = {
-        "DBSIZE": lambda part: str(len(part)),
-        "PING": lambda part: "PONG",
-        "MEMORY": lambda part: str(int(part.memory_usage(deep=True).sum()) if len(part) else 0),
-    }
 
-    def per_partition(batches) -> "Iterator[pd.DataFrame]":
+    def shard_rows(part: pd.DataFrame) -> list[dict]:
+        return _command_rows(part, commands, reply_parser)
+
+    if not any(isinstance(c, str) and c.upper() == "MEMORY" for c in commands):
+        local = _footer_replies(df, shard_rows, out_schema)
+        if local is not None:
+            return local
+        df = _one_column(df)
+
+    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches]
-        part = pd.concat(frames) if frames else pd.DataFrame()
-        rows = []
-        for cmd in commands:
-            try:
-                raw = known[cmd.upper()](part)
-                rows.append(
-                    reply_parser(cmd, raw) if reply_parser else {"command": cmd, "reply": raw}
-                )
-            except Exception as e:  # per-element error record
-                rows.append({"command": cmd, "reply": f"ERR {e}"})
-        yield pd.DataFrame(rows)
+        yield pd.DataFrame(shard_rows(pd.concat(frames) if frames else pd.DataFrame()))
 
     return df.mapInPandas(per_partition, schema=out_schema)
 

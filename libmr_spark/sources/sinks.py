@@ -65,7 +65,9 @@ def merge_upsert(
     commit and leaves the table exactly as it was. A log-based table
     format turns the commit into one metadata swap; semantics and
     partition scoping are identical. ``staging_path`` is unused and
-    kept for callers that pass it.
+    kept for callers that pass it. The base is opened with the data
+    schema of one Spark-written footer (``_footer_data_schema``), so the
+    open runs no schema-inference job.
 
     The batch is checked before the write: at most one row per key,
     and the partition list. A driver-bounded batch (``smalldf.is_local``:
@@ -90,12 +92,62 @@ def merge_upsert(
         # rows would produce a schema-less parquet dir that poisons the
         # next read (a quiet micro-batch must be a no-op)
         return
-    base = spark.read.parquet(base_path)
+    schema = _footer_data_schema(spark, base_path)
+    base = (spark.read.schema(schema) if schema is not None else spark.read).parquet(base_path)
     touched = base.filter(F.col(partition_col).isin(parts))
     survivors = touched.join(updates.select(*keys), keys, "left_anti")
     rebalanced(survivors.unionByName(updates), partition_col).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(partition_col).parquet(base_path)
+
+
+#: The footer key under which Spark stores the schema of every parquet
+#: file it writes; its schema inference reads this before the parquet
+#: types (``ParquetFileFormat.readSchemaFromFooter``).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for paths a file-index listing skips."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+
+
+def _footer_data_schema(spark, path: str):
+    """The data schema Spark would infer for the parquet table at
+    ``path``, read from the Spark schema in the footer of one data file
+    with pyarrow, so the open starts no schema-inference job; Spark
+    still infers the hive partition columns from the directory names.
+    Spark's inference with ``mergeSchema`` off also reads one footer
+    and assumes the files agree. None (infer as usual) when
+    ``mergeSchema`` is on, the table has a summary file, the file was
+    not written by Spark or stores a partition column, or the read
+    fails."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() != "false":
+        return None
+    for root, dirs, files in os.walk(path):
+        if "_metadata" in files or "_common_metadata" in files:
+            return None
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        data = sorted(f for f in files if not _hidden(f))
+        if not data:
+            continue
+        part_cols = {d.split("=", 1)[0].lower() for d in os.path.relpath(root, path).split(os.sep) if "=" in d}
+        try:
+            raw = (pq.read_metadata(os.path.join(root, data[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        except (pa.ArrowException, OSError):
+            return None
+        if raw is None:
+            return None
+        schema = T.StructType.fromJson(json.loads(raw))
+        return None if any(f.name.lower() in part_cols for f in schema.fields) else schema
+    return None
 
 
 def _check_batch(updates: DataFrame, keys: list[str], partition_col: str) -> tuple[tuple | None, list]:

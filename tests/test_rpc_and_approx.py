@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from libmr_spark.core.rpc import internal_command
+from libmr_spark.core.rpc import internal_command, run_on_all_shards
 from libmr_spark.core.smalldf import is_local
 from libmr_spark.sources.readers import kv_table, load_table
 
@@ -297,3 +297,143 @@ def test_run_on_key_local_no_jobs_task_and_timeout(spark, sf_dir, tmp_path):
             ),
             timeout_ms=1500,
         )
+
+
+# -- admin fan-outs answered from parquet footers ------------------------------
+# dbsize, DBSIZE, PING and unknown commands on a frame that passes the
+# driver-local gate are answered per planned partition from footer row
+# counts; every reply must equal the distributed twin's, in order.
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, the Spark jobs started while it ran, in any job
+    group: a deadline runs its work under a job group of its own)."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = fn()
+    return out, sched.nextJobId() - before
+
+
+def _admin_stores(spark, sf_dir, root):
+    """Stores whose planned partitions differ in shape: hive-partitioned,
+    flat with several files, one bucket of several files, and empty."""
+    from libmr_spark.sources import sinks
+
+    hive = _kv_store(spark, sf_dir, root / "hive")
+    flat = str(root / "flat")
+    sinks.write_parquet(kv_table(spark, sf_dir).repartition(5), flat)
+    multi = str(root / "multi")
+    _kv_store(spark, sf_dir, root / "multi")
+    for i in range(3):
+        extra = spark.createDataFrame([(f"extra{i}", "x", "string", 1)], "key string, value string, type string, bucket int")
+        sinks.write_parquet(extra, multi, mode="append", partition_by=["bucket"])
+    empty = str(root / "empty")
+    sinks.write_parquet(spark.createDataFrame([], "key string, value string"), empty)
+    return {
+        "hive": hive,
+        "flat": spark.read.parquet(flat),
+        "multi": spark.read.parquet(multi),
+        "empty": spark.read.parquet(empty),
+    }
+
+
+_ADMIN_CALLS = {
+    "dbsize": lambda df: run_on_all_shards(df, "dbsize", "n bigint"),
+    "commands": lambda df: internal_command(df, ["DBSIZE", "PING", "BOGUS"]),
+    "parser": lambda df: internal_command(
+        df,
+        ["DBSIZE", "PING"],
+        reply_parser=lambda cmd, raw: {"command": cmd, "n": int(raw) if cmd == "DBSIZE" else len(raw)},
+        out_schema="command string, n bigint",
+    ),
+}
+
+
+def test_admin_driver_path_matches_distributed_twin(spark, sf_dir, tmp_path, monkeypatch):
+    from libmr_spark.core import rpc
+
+    stores = _admin_stores(spark, sf_dir, tmp_path)
+    assert sum("bucket=1/" in f for f in stores["multi"].inputFiles()) > 1
+    # planned partitions of several files each
+    assert stores["multi"].rdd.getNumPartitions() < len(stores["multi"].inputFiles())
+    assert 1 < len(stores["flat"].inputFiles())
+    for store, df in stores.items():
+        for name, call in _ADMIN_CALLS.items():
+            driver = call(df)
+            assert is_local(driver), (store, name)
+            got, jobs = _jobs_started(spark, driver.collect)
+            assert jobs == 0, (store, name)
+            with monkeypatch.context() as m:
+                m.setattr(rpc, "_shard_sizes", lambda df: None)
+                twin = call(df)
+                assert not is_local(twin)
+                want = twin.collect()
+            assert got == want, (store, name)
+            assert len(want) >= (store != "empty"), (store, name)
+    count = stores["multi"].count()
+    assert sum(r.n for r in _ADMIN_CALLS["dbsize"](stores["multi"]).collect()) == count
+    replies = _ADMIN_CALLS["commands"](stores["multi"]).collect()
+    assert sum(int(r.reply) for r in replies if r.command == "DBSIZE") == count
+    assert {r.reply for r in replies if r.command == "PING"} == {"PONG"}
+    assert {r.reply for r in replies if r.command == "BOGUS"} == {"ERR 'BOGUS'"}
+
+
+def test_admin_driver_path_starts_no_job(spark, sf_dir, tmp_path):
+    scan = _kv_store(spark, sf_dir, tmp_path / "store")
+    count = scan.count()
+    rows, jobs = _jobs_started(spark, lambda: run_on_all_shards(scan, "dbsize", "n bigint").collect())
+    assert (sum(r.n for r in rows), jobs) == (count, 0)
+    rows, jobs = _jobs_started(spark, lambda: run_on_all_shards(scan, "dbsize", "n bigint", timeout_ms=30000).collect())
+    assert (sum(r.n for r in rows), jobs) == (count, 0)
+    rows, jobs = _jobs_started(spark, lambda: internal_command(scan, ["DBSIZE", "PING"]).collect())
+    assert (sum(int(r.reply) for r in rows if r.command == "DBSIZE"), jobs) == (count, 0)
+
+
+def test_admin_falls_back_to_distributed_twin(spark, sf_dir, tmp_path):
+    from libmr_spark.core.registry import Registry, StepImpl, StepType
+    from libmr_spark.core.rpc import dbsize
+
+    scan = _kv_store(spark, sf_dir, tmp_path / "store")
+    count = scan.count()
+
+    def check_twin(df, n=count):
+        out = run_on_all_shards(df, "dbsize", "n bigint")
+        assert not is_local(out)
+        assert sum(r.n for r in out.collect()) == n
+        out = internal_command(df, ["DBSIZE", "PING"])
+        assert not is_local(out)
+        assert sum(int(r.reply) for r in out.collect() if r.command == "DBSIZE") == n
+
+    # a caller-cached frame
+    cached = spark.read.parquet(str(tmp_path / "store")).cache()
+    try:
+        check_twin(cached)
+    finally:
+        cached.unpersist()
+    # splits that cover part of a file
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        split = spark.read.parquet(str(tmp_path / "store"))
+        assert split.rdd.getNumPartitions() > len(split.inputFiles())
+        check_twin(split)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    # a derived frame
+    check_twin(scan.filter(F.col("bucket") == 1), scan.filter(F.col("bucket") == 1).count())
+    # "dbsize" registered to another task: it runs, and sees every column
+    reg = Registry()
+    reg.register(StepImpl("dbsize", StepType.REMOTE_TASK, lambda part: {"n": len(part.columns)}, relational=False))
+    out = run_on_all_shards(scan, "dbsize", "n bigint", registry=reg)
+    assert not is_local(out)
+    assert {r.n for r in out.collect()} == {len(scan.columns)}
+    # the built-in with args keeps the twin (and its error)
+    assert not is_local(run_on_all_shards(scan, dbsize, "n bigint", args=1))
+    # MEMORY reads the rows
+    out = internal_command(scan, ["DBSIZE", "MEMORY"])
+    assert not is_local(out)
+    rows = out.collect()
+    assert sum(int(r.reply) for r in rows if r.command == "DBSIZE") == count
+    assert all(int(r.reply) > 0 for r in rows if r.command == "MEMORY")
+    # a reply the twin's by-name column match refuses
+    bad = internal_command(scan, ["DBSIZE"], reply_parser=lambda cmd, raw: {"c": cmd}, out_schema="command string, n bigint")
+    assert not is_local(bad)

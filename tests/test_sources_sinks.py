@@ -689,3 +689,70 @@ def test_kv_writer_commit_crash_leaves_old_snapshot(tmp_path, monkeypatch):
     assert manifest["files"] == ["new2.jsonl"]
     assert not os.path.exists(os.path.join(path, "old.jsonl"))
     assert not os.path.exists(os.path.join(path, "_KV_SUCCESS.tmp"))
+
+
+def test_merge_upsert_base_schema_from_one_footer(spark, sf_dir, tmp_path):
+    # the schema merge_upsert gives its base open equals the one Spark
+    # infers, and the open with it starts no job; stores Spark did not
+    # write keep the inference
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from libmr_spark.core import partitioner
+    from libmr_spark.sources.sinks import _footer_data_schema, merge_upsert
+
+    rows = [
+        ("a", 1, 10**12, 1.5, decimal.Decimal("3.25"), datetime.date(2024, 1, 2),
+         datetime.datetime(2024, 1, 2, 3, 4, 5), [1, 2], {"x": 1}, (1, "s"), "p/1", datetime.date(2024, 1, 1), 5),
+        ("b", None, -7, None, None, None, None, None, None, None, None, datetime.date(2024, 1, 2), -3),
+    ]
+    typed = spark.createDataFrame(rows, (
+        "s string not null, i int, l bigint, d double, m decimal(12,2), dt date, ts timestamp, arr array<int>, "
+        "mp map<string,int>, st struct<a:int,b:string>, ps string, pd date, pi int"
+    ))
+    kv = kv_table(spark, sf_dir)
+    stores = {
+        "kv_buckets": (kv.withColumn("bucket", (partitioner.slot_col("key") % 4).cast("int")), ["bucket"]),
+        "typed_flat": (typed, []),
+        "by_string": (typed, ["ps"]),
+        "by_date": (typed, ["pd"]),
+        "by_int": (typed, ["pi"]),
+        "by_long": (spark.range(3).select((F.col("id") + 10**11).alias("b"), F.col("id").alias("v")), ["b"]),
+        "by_double": (spark.range(3).select((F.col("id") + 0.5).alias("b"), F.col("id").alias("v")), ["b"]),
+        "two_levels": (spark.range(6).select((F.col("id") % 2).alias("a"), (F.col("id") % 3).cast("string").alias("b"),
+                                             F.col("id").alias("v")), ["a", "b"]),
+    }
+    for name, (df, parts) in stores.items():
+        path = str(tmp_path / name)
+        write_parquet(df, path, partition_by=parts)
+        given = _footer_data_schema(spark, path)
+        assert given is not None, name
+        opened, jobs = _spark_jobs(spark, lambda: spark.read.schema(given).parquet(path))
+        assert opened.schema == spark.read.parquet(path).schema, name
+        assert jobs == 0, name
+    # a store written by pyarrow carries no Spark schema: inferred as before
+    (tmp_path / "pyarrow" / "k=1").mkdir(parents=True)
+    pq.write_table(pa.table({"v": [1, 2]}), str(tmp_path / "pyarrow" / "k=1" / "part-0.parquet"))
+    assert _footer_data_schema(spark, str(tmp_path / "pyarrow")) is None
+    # and a merge into it still works
+    merge_upsert(spark, str(tmp_path / "pyarrow"), spark.createDataFrame([(3, 1)], "v bigint, k int"), ["v"], "k")
+    assert sorted(r.v for r in spark.read.parquet(str(tmp_path / "pyarrow")).collect()) == [1, 2, 3]
+
+
+def test_rebalanced_probe_skips_shuffled_frames(spark, tmp_path):
+    # probing a lazy shuffle-tailed frame would run its AQE stages: it
+    # keeps the hint instead, with no job; a scan is still probed
+    from libmr_spark.core.layout import rebalanced
+
+    grouped = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    out, jobs = _spark_jobs(spark, lambda: rebalanced(grouped, probe=True))
+    assert jobs == 0
+    assert "RebalancePartitions" in out._jdf.queryExecution().analyzed().toString()
+    path = str(tmp_path / "t")
+    write_parquet(spark.range(100), path)
+    scan = spark.read.parquet(path)
+    out, jobs = _spark_jobs(spark, lambda: rebalanced(scan, probe=True))
+    assert out is scan and jobs == 0
