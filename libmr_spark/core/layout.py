@@ -58,15 +58,13 @@ def rebalanced(df: DataFrame, *key_cols: str, probe: bool = False) -> DataFrame:
     keep the written files clustered by a key the store's readers
     prune on.
 
-    Shuffle-TAILED frames (aggregation/join outputs) should NOT come
-    here: AQE's partition coalescing already bounds their write
-    parallelism toward the advisory size (measured: matview/vocab
-    net-fold commits write 1 file with no hint), so the hint only adds
-    an exchange.  ``probe=True`` (for frames whose partition count is
-    knowable WITHOUT running jobs: checkpointed / narrow-over-scan
-    lineage) skips the hint when the frame is already at most
-    ``_REBALANCE_MIN_PARTS`` partitions. A frame whose logical plan
-    has a shuffle (``_plans_shuffle``) is not probed and keeps the
+    Store writes do not call this directly: ``core.store``'s one sizing
+    rule (its module docstring) decides, and reaches here only for a
+    frame with no shuffle of its own. ``probe=True`` (for frames whose
+    partition count is knowable WITHOUT running jobs: checkpointed /
+    narrow-over-scan lineage) skips the hint when the frame is already
+    at most ``_REBALANCE_MIN_PARTS`` partitions. A frame whose logical
+    plan has a shuffle (``_plans_shuffle``) is not probed and keeps the
     hint: ``.rdd`` on a lazy shuffle-tailed frame materializes its AQE
     stages.
 

@@ -14,13 +14,37 @@ merges, export shards, the policy log) is a directory of this shape::
 LibMR keeps its records in the Redis keyspace and persists nothing, so
 this commit protocol is the engine's own.
 
-Commit. The manifest is the store's single source of truth: readers
-load ONLY manifest-listed ``batch=<tag>`` directories, and a batch
-becomes visible in one atomic ``os.replace`` of the manifest. A process
-killed anywhere before the swap leaves the old snapshot intact: a batch
-directory written but not published is an invisible orphan, a leftover
-``_BATCHES.tmp`` is overwritten by the next publish, and a lock held by
-the dead process is released by the kernel.
+Commit. :func:`commit` is the one append path: ``with
+store.commit(store_path, params) as tx:`` mints ``tx.tag``, each
+``tx.write(table, df)`` writes one ``<table>/batch=<tag>`` directory,
+and the tag is published only when the block exits cleanly.
+The manifest is the store's single source of truth: readers load ONLY
+manifest-listed ``batch=<tag>`` directories (:func:`tags`,
+:func:`read_batches`), and a batch becomes visible in one atomic
+``os.replace`` of the manifest. A block that raises, or a process
+killed anywhere before the swap, leaves the old snapshot intact: a
+batch directory written but not published is an invisible orphan, a
+leftover ``_BATCHES.tmp`` is overwritten by the next publish, and a
+lock held by the dead process is released by the kernel.
+
+File sizing. Every batch and rewrite directory is written by one rule
+(``_sized``), because each later commit re-lists and re-scans the
+whole history, so the file count per commit is a store's compounding
+cost:
+
+- a frame whose analyzed plan already shuffles or repartitions
+  (``layout._plans_shuffle``: an aggregate, a join, or the caller's own
+  ``coalesce``, ``repartitionByRange`` or ``rebalanced``) is written as
+  given, since AQE's partition coalescing already bounds its write
+  parallelism toward the advisory size and a hint would only add an
+  exchange;
+- a driver-local frame (``smalldf.is_local``) is written as one file,
+  since a ``LocalRelation`` scans as up to ``defaultParallelism``
+  slices;
+- anything else (a checkpointed batch, a narrow projection over one)
+  goes through ``layout.rebalanced(df, probe=True)``: written as given
+  when it has at most ``_REBALANCE_MIN_PARTS`` partitions, else
+  rebalanced toward advisory-sized files.
 
 Concurrency. PUBLICATION is lost-update-free: the read-modify-write of
 the tag list happens under a kernel ``flock`` and re-reads the manifest
@@ -34,7 +58,7 @@ pipeline per store; the lock only guarantees the store never LOSES a
 batch. At warehouse scale the same two properties come from the table
 format's commit protocol (optimistic CAS on the metadata pointer).
 
-Rewrites (:func:`_rewrite_store`) serialize on the store's rewrite lock,
+Rewrites (:func:`rewrite`) serialize on the store's rewrite lock,
 publish one ``batch=compact-<uuid>`` directory per table in place of the
 snapshot they read, and then sweep:
 
@@ -52,6 +76,7 @@ snapshot they read, and then sweep:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -106,6 +131,19 @@ def read_manifest(manifest_path: str) -> tuple:
     with open(manifest_path) as f:
         m = json.load(f)
     return m["batches"], m.get("params")
+
+
+def manifest(store_path: str) -> tuple:
+    """``(tags, params)`` of the store at ``store_path`` as recorded,
+    without validation; ``([], None)`` before its first commit."""
+    return read_manifest(manifest_path(store_path))
+
+
+def tags(store_path: str, params: dict | None = None) -> list:
+    """The store's committed batch tags, in commit order. A non-``None``
+    ``params`` is checked against the store's recorded parameters
+    (see :func:`_manifest_read`)."""
+    return _manifest_read(manifest_path(store_path), params)
 
 
 def _check_params(manifest_path: str, stored: dict | None, params: dict | None) -> None:
@@ -238,6 +276,65 @@ def _manifest_publish(
         return _manifest_swap(manifest_path, params, add_tags, drop_tags, set_params)
 
 
+def _sized(df):
+    """``df`` under the file-sizing rule of the module docstring."""
+    from .layout import _plans_shuffle, rebalanced
+    from .smalldf import is_local
+
+    if _plans_shuffle(df):
+        return df
+    return df.coalesce(1) if is_local(df) else rebalanced(df, probe=True)
+
+
+def _write(df, path: str, partition_by: str | None = None) -> None:
+    """Write ``df`` as the parquet directory ``path``, sized by
+    :func:`_sized`."""
+    writer = _sized(df).write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+
+
+class Batch:
+    """One unpublished batch of the store at ``store_path``: a fresh
+    ``tag`` and the table writes under it."""
+
+    def __init__(self, store_path: str):
+        import uuid
+
+        self.store_path = store_path
+        self.tag = uuid.uuid4().hex
+
+    def write(self, table: str, df, partition_by: str | None = None) -> None:
+        """Write ``df`` as this batch's ``table`` directory."""
+        _write(df, batch_path(self.store_path, table, self.tag), partition_by)
+
+
+@contextlib.contextmanager
+def commit(store_path: str, params: dict | None):
+    """``with commit(store_path, params) as tx:`` yields a
+    :class:`Batch` and publishes its tag when the block exits cleanly,
+    validating ``params`` against the store's (``None`` keeps the
+    recorded params verbatim). A block that raises publishes nothing:
+    what it wrote stays an unlisted orphan that no reader opens and a
+    later rewrite sweeps."""
+    batch = Batch(store_path)
+    yield batch
+    _manifest_publish(manifest_path(store_path), params, add_tags=[batch.tag])
+
+
+def stale(path: str) -> bool:
+    """Whether the unlisted file or directory at ``path`` is older than
+    ``_REWRITE_STALE_S``, so it cannot be an in-flight commit's write
+    (``False`` when it is gone)."""
+    import time
+
+    try:
+        return time.time() - os.path.getmtime(path) > _REWRITE_STALE_S
+    except OSError:
+        return False
+
+
 def write_pin(store_path: str, snapshot_id: str, pin: dict) -> None:
     """Register snapshot pin ``snapshot_id`` at the store (atomic)."""
     d = os.path.join(store_path, _SNAPSHOTS)
@@ -282,7 +379,7 @@ def _live_pins(store_path: str) -> list:
     return pins
 
 
-def _rewrite_store(
+def rewrite(
     spark,
     store_path: str,
     transform,
@@ -297,7 +394,9 @@ def _rewrite_store(
     — a crashed rewriter's lock auto-releases; ingest commits are
     unaffected), snapshot the manifest, read each table's snapshot
     directories, apply ``transform(df, table)``, write ONE fresh
-    ``batch=compact-<uuid>`` directory, republish atomically (dropping
+    ``batch=compact-<uuid>`` directory (sized by the module's rule, so
+    a transform returns its frame unhinted unless it wants a layout of
+    its own), republish atomically (dropping
     exactly the snapshot tags — concurrent ingest commits survive),
     then sweep superseded and crash-orphaned directories by the rules
     in the module docstring. Returns the snapshot tag list that was
@@ -326,7 +425,6 @@ def _rewrite_store(
     beats reproducibility, and a pinned read invalidated by takedown
     raises out-of-range instead of serving silently-different state."""
     import shutil
-    import time
     import uuid
 
     mpath = manifest_path(store_path)
@@ -353,15 +451,12 @@ def _rewrite_store(
             )
         for table in present:
             df = read_batches(spark, store_path, table, snapshot, merge_schema)
-            transform(df, table).write.mode("overwrite").parquet(
-                batch_path(store_path, table, new_tag)
-            )
+            _write(transform(df, table), batch_path(store_path, table, new_tag))
         _manifest_publish(
             mpath, None, add_tags=[new_tag], drop_tags=snapshot,
             set_params=set_params,
         )
         listed = set(_manifest_read(mpath, None))
-        now = time.time()
         for table in present:
             tdir = os.path.join(store_path, table)
             for t in snapshot:
@@ -371,10 +466,6 @@ def _rewrite_store(
                 if tag in listed:
                     continue
                 path = os.path.join(tdir, entry)
-                try:
-                    aged = now - os.path.getmtime(path) > _REWRITE_STALE_S
-                except OSError:
-                    continue
-                if tag.startswith("compact-") or aged:
+                if tag.startswith("compact-") or stale(path):
                     shutil.rmtree(path, ignore_errors=True)
     return snapshot

@@ -112,22 +112,21 @@ def compact_incremental_store(
             return df.repartitionByRange(
                 n_files or 8, F.col(zc)
             ).sortWithinPartitions(zc)
-        # un-keyed rewrite: same size targeting, round-robin
-        return rebalanced(df, probe=True)
+        return df  # un-keyed: store.rewrite's sizing rule lays it out
 
     # merge_schema: an evolved store's fold must see the union schema —
     # the default footer-sampled schema would nondeterministically drop
     # an evolved column from the compacted rewrite. Rewrite cost is
     # dominated by the data read, so the all-footers read is noise here
     # (unlike on the admission hot path).
-    rewritten = store._rewrite_store(
+    rewritten = store.rewrite(
         spark, store_path, xform, tables, min_batches=2,
         respect_snapshots=True, merge_schema=True,
     )
     if rewritten and zone_by:
         from .zones import write_zones_if_col
 
-        tags = store._manifest_read(store.manifest_path(store_path), None)
+        tags = store.tags(store_path)
         for t in tags:
             if t.startswith("compact-"):
                 for table, zc in zone_by.items():
@@ -166,11 +165,9 @@ def delete_from_incremental_store(
 
     ``ids``: a DataFrame with ``id_col``, or an iterable of id values.
     Returns the number of store documents deleted (payload rows)."""
-    import os
-
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(store.manifest_path(store_path)):
+    if not store.tags(store_path):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -191,7 +188,7 @@ def delete_from_incremental_store(
         # store rewrite leaves one tiny file per task
         return rebalanced(df.join(F.broadcast(ids), id_col, "left_anti"))
 
-    store._rewrite_store(
+    store.rewrite(
         spark, store_path, drop_ids, tables, min_batches=1,
         merge_schema=True,  # an evolved store's scrub keeps the union schema
     )
@@ -208,7 +205,7 @@ def incremental_store_stats(spark, store_path: str) -> dict:
     listing is proportional to live directories, never rows."""
     import os
 
-    tags = store._manifest_read(store.manifest_path(store_path), None)
+    tags = store.tags(store_path)
     stats: dict = {"n_batches": len(tags), "tables": {}}
     if not tags:
         return stats
@@ -335,7 +332,7 @@ def read_incremental_store_asof(
     manifest — reproducing exactly the table state any reader saw after
     that many commits, because the manifest's tag list IS the store's
     ordered commit log and every commit appends its tag at the end
-    (:func:`..core.store._manifest_publish`). ``None`` reads the full current
+    (:func:`..core.store.commit`). ``None`` reads the full current
     snapshot (what admission itself reads).
 
     This is what an audit/debug/repro workflow needs against a 100 TB
@@ -352,9 +349,7 @@ def read_incremental_store_asof(
     table format makes when VACUUM trims its version history. Raises if
     ``as_of_batches`` exceeds the committed batch count rather than
     silently returning the full store."""
-    import os
-
-    tags = store._manifest_read(store.manifest_path(store_path), None)
+    tags = store.tags(store_path)
     if as_of_batches is None:
         as_of_batches = len(tags)
     if not 0 < as_of_batches <= len(tags):
@@ -397,7 +392,7 @@ def read_incremental_store_zoned(
 
     if hi is None:
         hi = lo
-    tags = store._manifest_read(store.manifest_path(store_path), None)
+    tags = store.tags(store_path)
     paths = pruned_paths(store_path, table, tags, zone_col, lo, hi)
     if not paths:
         # every candidate file pruned: exact empty result, typed from
@@ -1025,6 +1020,26 @@ def embedding_neardup_pairs_bucketed(
     )
 
 
+def _local_pairs(spark, names: tuple, dt, left: list, right: list) -> DataFrame:
+    """A two-column ``local_df`` frame of type ``dt`` from driver-side
+    id lists. The ids were collected from typed ``dt`` columns, so
+    PySpark's per-row verifier would check nothing new: an Arrow-exact
+    ``dt`` goes in as a ``pyarrow.Table``, any other keeps the row path."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField(n, dt) for n in names])
+    if not smalldf.exact_type(dt):
+        return local_df(spark, list(zip(left, right)), schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return local_df(
+        spark,
+        pa.Table.from_pydict(dict(zip(names, (left, right))), schema=to_arrow_schema(schema)),
+        schema,
+    )
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -1096,11 +1111,10 @@ def connected_components(
                     ra, rb = rb, ra
                 parent[rb] = ra
         e.unpersist()
-        tname = dict(e.dtypes).get("u", "bigint")
-        roots = local_df(
-            edges.sparkSession,
-            [(x, find(x)) for x in parent if find(x) != x],
-            f"u {tname}, __root__ {tname}",
+        moved = [x for x in parent if find(x) != x]
+        roots = _local_pairs(
+            edges.sparkSession, ("u", "__root__"), e.schema["u"].dataType,
+            moved, [find(x) for x in moved],
         )
         out = (
             nodes.select(F.col(id_col))
@@ -1272,13 +1286,10 @@ def dedup_incremental_exact(
     history.
     """
     import os
-    import uuid
 
-    manifest_path = store.manifest_path(fp_table_path)
     params = {"kind": "exact-fp"}
-    if not os.path.exists(manifest_path) and os.path.exists(
-        os.path.join(fp_table_path, "_SUCCESS")
-    ):
+    tags = store.tags(fp_table_path, params)
+    if not tags and os.path.exists(os.path.join(fp_table_path, "_SUCCESS")):
         # pre-manifest layout (flat parquet + _SUCCESS): reading it as
         # an empty store would silently re-admit every historical dup —
         # refuse and name the migration instead
@@ -1311,7 +1322,6 @@ def dedup_incremental_exact(
             .groupBy("fp")
             .agg(F.min(id_col).alias(id_col))
         )
-    tags = store._manifest_read(manifest_path, params)
     if tags:
         # freeze the batch aggregate once: it feeds the probe collect,
         # the history semi-probe, and the anti-join (and admission
@@ -1355,15 +1365,8 @@ def dedup_incremental_exact(
         # commit is never skipped — an empty FIRST batch still creates
         # the store.)
         return admitted
-    tag = uuid.uuid4().hex
-    # rebalanced: a commit writes advisory-sized files (one for a small
-    # batch) instead of one tiny file per upstream task — every later
-    # admission re-lists and re-scans ALL history, so file count per
-    # commit is the store's compounding cost (guide §6)
-    rebalanced(admitted.select("fp", id_col, *(payload_cols or [])), probe=True).write.mode(
-        "overwrite"
-    ).parquet(store.batch_path(fp_table_path, "fps", tag))
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+    with store.commit(fp_table_path, params) as tx:
+        tx.write("fps", admitted.select("fp", id_col, *(payload_cols or [])))
     return admitted
 
 
@@ -1422,16 +1425,12 @@ def dedup_incremental_minhash(
     batches); ADMISSION concurrency is the caller's contract — see the
     manifest section comment at the top of this module.
     """
-    import os
-    import uuid
-
     if bands <= 0 or num_hashes % bands:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a positive multiple of "
             f"bands ({bands}) — banding slices the signature into equal rows"
         )
 
-    manifest_path = store.manifest_path(store_path)
     params = {"num_hashes": num_hashes, "bands": bands, "n": n, "threshold": threshold}
 
     def _band_keys(sdf):
@@ -1455,7 +1454,7 @@ def dedup_incremental_minhash(
 
     sigs = minhash_signature(batch, num_hashes, text_col, id_col, n)
     banded = _band_keys(sigs)
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
     if tags:
         # bucket-probe pruning (the fp-clustered layout generalized to
         # the band index): when compaction zoned index/ by `bucket`
@@ -1524,15 +1523,9 @@ def dedup_incremental_minhash(
     # two-phase commit: write both batch directories, THEN publish the
     # tag with an atomic manifest swap — unpublished directories are
     # invisible to every reader (see docstring)
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see exact-fp ingest)
-    rebalanced(_band_keys(admitted), probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "index", tag)
-    )
-    rebalanced(admitted.select(id_col, "shingles"), probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "payload", tag)
-    )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+    with store.commit(store_path, params) as tx:
+        tx.write("index", _band_keys(admitted))
+        tx.write("payload", admitted.select(id_col, "shingles"))
     return admitted.select(id_col, F.size("shingles").cast("bigint").alias("sz"))
 
 
@@ -1576,10 +1569,6 @@ def dedup_incremental_embedding(
 
     Returns the admitted (id) rows; first call bootstraps the store.
     """
-    import os
-    import uuid
-
-    manifest_path = store.manifest_path(store_path)
     params = {
         "planes_per_band": planes_per_band,
         "bands": bands,
@@ -1591,7 +1580,7 @@ def dedup_incremental_embedding(
     band_hashes = _sign_band_hashes(planes_per_band, bands, seed)
     sig = batch.select(id_col, vec_col).withColumn("__bh__", band_hashes(F.col(vec_col)))
     banded = sig.select(F.col(id_col), F.explode("__bh__").alias("bucket"))
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
     if tags:
         # bucket-probe index pruning + candidate-id payload pruning —
         # the same two layout levers as dedup_incremental_minhash
@@ -1652,12 +1641,6 @@ def dedup_incremental_embedding(
     else:
         admitted = sig
     admitted = admitted.select(id_col, vec_col, "__bh__").localCheckpoint(eager=True)
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see exact-fp ingest)
-    rebalanced(
-        admitted.select(F.col(id_col), F.explode("__bh__").alias("bucket")),
-        probe=True,
-    ).write.mode("overwrite").parquet(store.batch_path(store_path, "index", tag))
     if payload_int8:
         from ..functions.vector import symmetric_int8
 
@@ -1669,10 +1652,9 @@ def dedup_incremental_embedding(
         )
     else:
         payload = admitted.select(id_col, vec_col)
-    rebalanced(payload, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "payload", tag)
-    )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+    with store.commit(store_path, params) as tx:
+        tx.write("index", admitted.select(F.col(id_col), F.explode("__bh__").alias("bucket")))
+        tx.write("payload", payload)
     return admitted.select(id_col)
 
 
@@ -1749,11 +1731,9 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
                 memo[c] = t
             return t
 
-        tname = dict(remap.dtypes).get("old", "bigint")
-        return local_df(
-            remap.sparkSession,
-            [(o, root(o)) for o in parent],
-            f"old {tname}, new {tname}",
+        return _local_pairs(
+            remap.sparkSession, ("old", "new"), r.schema["old"].dataType,
+            list(parent), [root(o) for o in parent],
         )
     descends = F.coalesce(F.col("new") < F.col("old"), F.lit(False))
     malformed = (
@@ -1835,12 +1815,8 @@ def dedup_incremental_clusters(
 
     Returns the admitted (doc_id, cid) rows (already-stored doc_ids
     replay idempotently to an empty admission)."""
-    import os
-    import uuid
-
-    manifest_path = store.manifest_path(store_path)
     params = {"kind": "cc-exact", "n": n, "threshold": threshold}
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
 
     uniq = batch.dropDuplicates([id_col])
     touched = None
@@ -1915,18 +1891,10 @@ def dedup_incremental_clusters(
     else:
         remap_new = local_df(spark, [], "old bigint, new bigint")
 
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see exact-fp ingest)
-    rebalanced(members_new, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "members", tag)
-    )
-    rebalanced(remap_new, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "remap", tag)
-    )
-    rebalanced(sh_new, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "shingles", tag)
-    )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+    with store.commit(store_path, params) as tx:
+        tx.write("members", members_new)
+        tx.write("remap", remap_new)
+        tx.write("shingles", sh_new)
     return members_new
 
 
@@ -1934,10 +1902,7 @@ def read_incremental_clusters(spark, store_path: str, id_col: str = "doc_id") ->
     """Serve (doc_id, cluster_id) from the cluster store: one
     path-compression over the merge forest (O(log depth) joins on the
     tiny remap table) + ONE join onto members — never a CC recompute."""
-    import os
-
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, None)
+    tags = store.tags(store_path)
     if not tags:
         raise ValueError(f"empty cluster store at {store_path} (no committed batches)")
     members = store.read_batches(spark, store_path, "members", tags)
@@ -1951,7 +1916,7 @@ def compact_incremental_clusters(spark, store_path: str, id_col: str = "doc_id")
     """Fold the merge forest into the member table (path compression
     made durable): members are rewritten with their ROOT labels, the
     remap table empties, and shingle postings compact to one directory
-    — all through :func:`..core.store._rewrite_store`'s crash-safe swap. Readers
+    — all through :func:`..core.store.rewrite`'s crash-safe swap. Readers
     before/after see the identical partition; post-compaction reads
     skip the resolution joins entirely. Returns the number of batch
     directories compacted."""
@@ -1966,10 +1931,10 @@ def compact_incremental_clusters(spark, store_path: str, id_col: str = "doc_id")
             return df.filter(F.lit(False))
         if table == "members":
             return rebalanced(_apply_remap(df, state["rr"], id_col))
-        return rebalanced(df, probe=True)
+        return df
 
     return len(
-        store._rewrite_store(
+        store.rewrite(
             spark, store_path, fold, tables=("remap", "members", "shingles"),
             min_batches=1, respect_snapshots=True,
         )
@@ -1995,13 +1960,11 @@ def delete_from_cluster_store(
     clusters' sizes, never the corpus). Untouched members keep their
     labels (path-compressed during the same rewrite), the merge
     forest folds to empty, and everything publishes through
-    :func:`..core.store._rewrite_store`'s crash-safe swap. Returns the number of
+    :func:`..core.store.rewrite`'s crash-safe swap. Returns the number of
     member rows deleted."""
-    import os
-
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(store.manifest_path(store_path)):
+    if not store.tags(store_path):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -2018,7 +1981,7 @@ def delete_from_cluster_store(
                 eager=True
             )
             state["sh"] = rem
-            return rebalanced(rem, probe=True)
+            return rem
         # members: resolve, drop, recompute within touched clusters
         res = _apply_remap(df, state["rr"], id_col)
         hit = res.join(F.broadcast(ids), id_col, "left_semi")
@@ -2046,12 +2009,9 @@ def delete_from_cluster_store(
         relabeled = connected_components(pairs, affected, id_col=id_col).select(
             id_col, F.col("cluster_id").alias("cid")
         )
-        return rebalanced(
-            untouched.unionByName(relabeled).localCheckpoint(eager=True),
-            probe=True,
-        )
+        return untouched.unionByName(relabeled).localCheckpoint(eager=True)
 
-    store._rewrite_store(
+    store.rewrite(
         spark, store_path, takedown, tables=("remap", "shingles", "members"),
         min_batches=1,
     )
@@ -2160,12 +2120,8 @@ def dedup_incremental_spans(
     revisions are monotone. Oracle-provable: after any slicing, the
     served spans hash-match the from-scratch ``dedup_substring_spans``
     query. Returns the recomputed docs' fresh span rows."""
-    import os
-    import uuid
-
-    manifest_path = store.manifest_path(store_path)
     params = {"kind": "substr-spans", "w": _SPAN_STORE_W, "stride": _SPAN_STORE_S}
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
 
     uniq = batch.dropDuplicates([id_col])
     if tags:
@@ -2189,52 +2145,42 @@ def dedup_incremental_spans(
     # stays last, so a crash after this write leaves only an orphan
     # batch directory no reader ever sees. Tokenize-once amortization
     # is preserved (windows are computed once, read back thereafter).
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see exact-fp ingest)
-    _span_windows(uniq, id_col, text_col).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "windows", tag)
-    )
-    win_new = spark.read.parquet(store.batch_path(store_path, "windows", tag))
-    full_win = store.read_batches(spark, store_path, "windows", [*tags, tag])
+    with store.commit(store_path, params) as tx:
+        tx.write("windows", _span_windows(uniq, id_col, text_col))
+        win_new = spark.read.parquet(store.batch_path(store_path, "windows", tx.tag))
+        full_win = store.read_batches(spark, store_path, "windows", [*tags, tx.tag])
 
-    # docs whose spans may change: any holder of a hash the batch made
-    # (or found) shared. New docs recompute unconditionally.
-    newh = win_new.select("h").distinct()
-    shared_new = (
-        full_win.join(newh, "h", "left_semi")
-        .groupBy("h")
-        .agg(F.count_distinct(id_col).alias("d"))
-        .filter(F.col("d") >= 2)
-        .select("h")
-    )
-    affected = (
-        full_win.join(shared_new, "h", "left_semi").select(id_col).distinct()
-    )
-    recompute = affected.unionByName(win_new.select(id_col).distinct()).distinct()
+        # docs whose spans may change: any holder of a hash the batch made
+        # (or found) shared. New docs recompute unconditionally.
+        newh = win_new.select("h").distinct()
+        shared_new = (
+            full_win.join(newh, "h", "left_semi")
+            .groupBy("h")
+            .agg(F.count_distinct(id_col).alias("d"))
+            .filter(F.col("d") >= 2)
+            .select("h")
+        )
+        affected = (
+            full_win.join(shared_new, "h", "left_semi").select(id_col).distinct()
+        )
+        recompute = affected.unionByName(win_new.select(id_col).distinct()).distinct()
 
-    # duplicated windows of the recompute set, judged against the FULL
-    # store (a stored doc's old shared hashes must count too)
-    rw = full_win.join(recompute, id_col, "left_semi")
-    shared_all = (
-        full_win.join(rw.select("h").distinct(), "h", "left_semi")
-        .groupBy("h")
-        .agg(F.count_distinct(id_col).alias("d"))
-        .filter(F.col("d") >= 2)
-        .select("h")
-    )
-    spans = _spans_from_dup_windows(
-        rw.join(shared_all, "h", "left_semi").select(id_col, "i"), id_col
-    ).persist()
+        # duplicated windows of the recompute set, judged against the FULL
+        # store (a stored doc's old shared hashes must count too)
+        rw = full_win.join(recompute, id_col, "left_semi")
+        shared_all = (
+            full_win.join(rw.select("h").distinct(), "h", "left_semi")
+            .groupBy("h")
+            .agg(F.count_distinct(id_col).alias("d"))
+            .filter(F.col("d") >= 2)
+            .select("h")
+        )
+        spans = _spans_from_dup_windows(
+            rw.join(shared_all, "h", "left_semi").select(id_col, "i"), id_col
+        ).persist()
 
-    # spans/recompute are shuffle-tailed: AQE partition coalescing
-    # already bounds their write parallelism — no REBALANCE hint
-    spans.write.mode("overwrite").parquet(
-        store.batch_path(store_path, "revspans", tag)
-    )
-    recompute.write.mode("overwrite").parquet(
-        store.batch_path(store_path, "revdocs", tag)
-    )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+        tx.write("revspans", spans)
+        tx.write("revdocs", recompute)
     return spans
 
 
@@ -2249,8 +2195,7 @@ def read_incremental_spans(
     history-collapse caveat as :func:`read_incremental_store_asof`)."""
     import os
 
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, None)
+    tags = store.tags(store_path)
     if not tags:
         raise ValueError(f"empty span store at {store_path} (no committed batches)")
     if as_of_batches is not None:
@@ -2285,7 +2230,7 @@ def _rewrite_span_store(spark, store_path: str, drop_ids=None, id_col: str = "do
     affected-docs-only recompute would not change the complexity),
     and the revision history folded to a single batch (every
     surviving doc's latest revision is the fresh one). Runs through
-    :func:`..core.store._rewrite_store`'s crash-safe swap. Returns
+    :func:`..core.store.rewrite`'s crash-safe swap. Returns
     {"n_deleted": member docs dropped, "n_batches": dirs folded}."""
     state: dict = {"n": 0}
 
@@ -2317,7 +2262,7 @@ def _rewrite_span_store(spark, store_path: str, drop_ids=None, id_col: str = "do
         return state["win"].select(id_col).distinct()
 
     n_b = len(
-        store._rewrite_store(
+        store.rewrite(
             spark, store_path, fold,
             tables=("windows", "revspans", "revdocs"), min_batches=1,
             respect_snapshots=drop_ids is None,  # compaction respects pins; takedown wins over them
@@ -2335,11 +2280,9 @@ def delete_from_span_store(spark, store_path: str, ids, id_col: str = "doc_id") 
     rows, recompute the cut list over the survivors, fold the
     revision history — all in one crash-safe rewrite. Returns the
     number of store docs deleted."""
-    import os
-
     from pyspark.sql import DataFrame as _DF
 
-    if not os.path.exists(store.manifest_path(store_path)):
+    if not store.tags(store_path):
         return 0
     if not isinstance(ids, _DF):
         ids = local_df(spark, [(i,) for i in ids], f"{id_col} bigint")
@@ -2374,11 +2317,7 @@ def table_store_ingest(
     drained store rather than incrementally. The standard lifecycle
     (compaction / takedown via the generic rewrite, as-of reads)
     applies unchanged. Returns the admitted rows."""
-    import os
-    import uuid
-
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
     uniq = batch.dropDuplicates([id_col])
     if tags:
         hist = store.read_batches(spark, store_path, table, tags).select(id_col)
@@ -2386,21 +2325,14 @@ def table_store_ingest(
         _hits = hist.join(F.broadcast(uniq.select(id_col)), id_col, "semi")
         uniq = uniq.join(F.broadcast(_hits), id_col, "left_anti")
     uniq = uniq.localCheckpoint(eager=True)
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see exact-fp ingest)
-    rebalanced(uniq, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, table, tag)
-    )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
+    with store.commit(store_path, params) as tx:
+        tx.write(table, uniq)
     return uniq
 
 
 def table_store_read(spark, store_path: str, table: str = "rows") -> DataFrame:
     """Manifest-snapshot read of a keyed-append store table."""
-    import os
-
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, None)
+    tags = store.tags(store_path)
     if not tags:
         raise ValueError(f"empty table store at {store_path} (no committed batches)")
     return store.read_batches(spark, store_path, table, tags)

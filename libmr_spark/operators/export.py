@@ -36,7 +36,6 @@ SURVEY §7.2a round-10 follow-on to `quota_export_diff` +
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,7 +70,7 @@ def export_manifest_rows(exp: DataFrame) -> DataFrame:
 def read_export_manifest(spark, store_path: str) -> DataFrame:
     """The live manifest: the LATEST committed manifest batch (each
     commit writes the full |shards|-row table)."""
-    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if not tags:
         raise ValueError(f"empty export store at {store_path} (no committed batches)")
     return spark.read.parquet(
@@ -90,9 +89,7 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
     an aged orphan sweep can reclaim, same rule as everywhere).
     Returns the committed manifest (with ``data_tag`` and a ``reused``
     flag per shard). Driver-side state is |shards| rows — metadata."""
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, _PARAMS)
-    tag = uuid.uuid4().hex
+    tags = store.tags(store_path, _PARAMS)
 
     # freeze the frame ONCE: the manifest aggregation and the
     # changed-shard data write below must describe the same rows (a
@@ -102,51 +99,51 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
     # shouldn't pay its export chain twice either
     exp = exp.localCheckpoint(eager=True)
     rows = export_manifest_rows(exp)
-    if tags:
-        prev = (
-            spark.read.parquet(store.batch_path(store_path, "manifest", tags[-1]))
-            .select(
-                "file_idx",
-                F.col("n_docs").alias("_pn"),
-                F.col("sum_tokens").alias("_pt"),
-                F.col("content_hash").alias("_ph"),
-                F.col("data_tag").alias("_ptag"),
+    with store.commit(store_path, _PARAMS) as tx:
+        if tags:
+            prev = (
+                spark.read.parquet(store.batch_path(store_path, "manifest", tags[-1]))
+                .select(
+                    "file_idx",
+                    F.col("n_docs").alias("_pn"),
+                    F.col("sum_tokens").alias("_pt"),
+                    F.col("content_hash").alias("_ph"),
+                    F.col("data_tag").alias("_ptag"),
+                )
             )
-        )
-        rows = (
-            rows.join(prev, "file_idx", "left")
-            .withColumn(
-                "reused",
-                (F.col("n_docs") == F.col("_pn"))
-                & (F.col("sum_tokens") == F.col("_pt"))
-                & (F.col("content_hash") == F.col("_ph")),
+            rows = (
+                rows.join(prev, "file_idx", "left")
+                .withColumn(
+                    "reused",
+                    (F.col("n_docs") == F.col("_pn"))
+                    & (F.col("sum_tokens") == F.col("_pt"))
+                    & (F.col("content_hash") == F.col("_ph")),
+                )
+                .fillna({"reused": False})
+                .withColumn(
+                    "data_tag",
+                    F.when(F.col("reused"), F.col("_ptag")).otherwise(F.lit(tx.tag)),
+                )
+                .drop("_pn", "_pt", "_ph", "_ptag")
             )
-            .fillna({"reused": False})
-            .withColumn(
-                "data_tag",
-                F.when(F.col("reused"), F.col("_ptag")).otherwise(F.lit(tag)),
+        else:
+            rows = rows.withColumn("reused", F.lit(False)).withColumn(
+                "data_tag", F.lit(tx.tag)
             )
-            .drop("_pn", "_pt", "_ph", "_ptag")
-        )
-    else:
-        rows = rows.withColumn("reused", F.lit(False)).withColumn(
-            "data_tag", F.lit(tag)
-        )
-    rows = rows.localCheckpoint(eager=True)  # freeze before the writes below
+        rows = rows.localCheckpoint(eager=True)  # freeze before the writes below
 
-    changed = [
-        r.file_idx for r in rows.filter(~F.col("reused")).select("file_idx").collect()
-    ]  # |shards|-bounded driver list — the write plan, not data
-    if changed:
-        # rebalanced on the partition key: one advisory-sized file per
-        # file_idx directory instead of one per upstream task
-        rebalanced(exp.filter(F.col("file_idx").isin(changed)), "file_idx").write.mode(
-            "overwrite"
-        ).partitionBy("file_idx").parquet(store.batch_path(store_path, "files", tag))
-    rows.coalesce(1).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "manifest", tag)
-    )
-    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+        changed = [
+            r.file_idx for r in rows.filter(~F.col("reused")).select("file_idx").collect()
+        ]  # |shards|-bounded driver list — the write plan, not data
+        if changed:
+            # rebalanced on the partition key: one advisory-sized file
+            # per file_idx directory instead of one per upstream task
+            tx.write(
+                "files",
+                rebalanced(exp.filter(F.col("file_idx").isin(changed)), "file_idx"),
+                partition_by="file_idx",
+            )
+        tx.write("manifest", rows.coalesce(1))
     return rows
 
 

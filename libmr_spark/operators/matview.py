@@ -9,7 +9,7 @@ side, so maintenance cost is ``O(|Δ| ⋈ state)`` — batch-bounded on one
 input — instead of ``O(A ⋈ B)``.
 
 Tables under one atomic ``_BATCHES`` manifest (the dedup-store
-protocol — crash-safe publish, compaction through ``_rewrite_store``,
+protocol — crash-safe publish, compaction through ``store.rewrite``,
 snapshot pins respected):
 
 - ``left``  — the left input's signed row deltas ``(L-cols..., m)``;
@@ -78,12 +78,10 @@ any reference file.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..core import store
-from ..core.layout import rebalanced
 from ..core.smalldf import local_df
 
 MATVIEW_TABLES = ("left", "right", "view")
@@ -94,7 +92,7 @@ def _params(on: list[str]) -> dict:
 
 
 def _params_of(store_path: str) -> dict:
-    return store.read_manifest(store.manifest_path(store_path))[1] or {}
+    return store.manifest(store_path)[1] or {}
 
 
 def _join_keys(store_path: str) -> list:
@@ -337,12 +335,9 @@ def matview_ingest(
     if left_delta is None and right_delta is None:
         raise ValueError("matview_ingest called with no delta on either side")
     keys = [on] if isinstance(on, str) else list(on)
-    manifest_path = store.manifest_path(store_path)
     os.makedirs(store_path, exist_ok=True)
     with store.ingest_lock(store_path, lock_timeout_s):
-        return _ingest_locked(
-            spark, store_path, manifest_path, left_delta, right_delta, keys, m_col
-        )
+        return _ingest_locked(spark, store_path, left_delta, right_delta, keys, m_col)
 
 
 def matview_multi_ingest(
@@ -376,13 +371,11 @@ def matview_multi_ingest(
     if left_delta is None and right_delta is None:
         raise ValueError("matview_multi_ingest called with no delta on either side")
     keys = [on] if isinstance(on, str) else list(on)
-    manifest_path = store.manifest_path(store_path)
     os.makedirs(store_path, exist_ok=True)
     with store.ingest_lock(store_path, lock_timeout_s):
         return _ingest_locked(
             spark,
             store_path,
-            manifest_path,
             left_delta,
             right_delta,
             keys,
@@ -394,7 +387,6 @@ def matview_multi_ingest(
 def _ingest_locked(
     spark,
     store_path,
-    manifest_path,
     left_delta,
     right_delta,
     keys,
@@ -404,7 +396,7 @@ def _ingest_locked(
     params = _params(keys)
     if views is not None:
         params = dict(params, views=",".join(sorted(views)))
-    tags = store._manifest_read(manifest_path, params)
+    tags = store.tags(store_path, params)
     if not tags and (left_delta is None or right_delta is None):
         raise ValueError(
             "matview bootstrap commit must supply both left_delta and "
@@ -564,44 +556,30 @@ def _ingest_locked(
         .filter(F.col("mult") != 0)
     )
 
-    tag = uuid.uuid4().hex
-    # rebalanced: each commit writes advisory-sized files (one for a
-    # small delta) instead of one tiny file per shuffle task — every
-    # later commit re-lists and re-scans the whole state history, so
-    # per-commit file count is the soak's compounding cost (guide §6)
-    rebalanced(ad_l, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "left", tag)
-    )
-    rebalanced(ad_r, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "right", tag)
-    )
-    if views is None:
-        # dv is aggregation-tailed: AQE partition coalescing already
-        # bounds the write parallelism — no REBALANCE hint needed
-        dv.write.mode("overwrite").parquet(
-            store.batch_path(store_path, "view", tag)
-        )
-    else:
-        # ONE shared delta computation; the (linear) per-view
-        # transforms project/filter it, re-canonicalize, and commit
-        # under the same tag — all views share the commit clock
-        dv = dv.localCheckpoint(eager=True)
-        for name, fn in sorted(views.items()):
-            out = fn(dv)
-            vcols = [c for c in out.columns if c != "mult"]
-            (
-                out.groupBy(*vcols)
-                .agg(F.sum("mult").cast("long").alias("mult"))
-                .filter(F.col("mult") != 0)
-                .write.mode("overwrite")
-                .parquet(store.batch_path(store_path, name, tag))
-            )
-    store._manifest_publish(manifest_path, params, add_tags=[tag])
-    return tag
+    with store.commit(store_path, params) as tx:
+        tx.write("left", ad_l)
+        tx.write("right", ad_r)
+        if views is None:
+            tx.write("view", dv)
+        else:
+            # ONE shared delta computation; the (linear) per-view
+            # transforms project/filter it, re-canonicalize, and commit
+            # under the same tag — all views share the commit clock
+            dv = dv.localCheckpoint(eager=True)
+            for name, fn in sorted(views.items()):
+                out = fn(dv)
+                vcols = [c for c in out.columns if c != "mult"]
+                tx.write(
+                    name,
+                    out.groupBy(*vcols)
+                    .agg(F.sum("mult").cast("long").alias("mult"))
+                    .filter(F.col("mult") != 0),
+                )
+    return tx.tag
 
 
-def _tags_asof(manifest_path: str, store_path: str, as_of_batches: int | None):
-    tags = store._manifest_read(manifest_path, None)
+def _tags_asof(store_path: str, as_of_batches: int | None):
+    tags = store.tags(store_path)
     if as_of_batches is not None:
         if not 0 < as_of_batches <= len(tags):
             raise ValueError(
@@ -633,8 +611,7 @@ def matview_read(
     broadcasts, untouched base rows stream through as-is, and the
     state-sized groupBy disappears from the serve entirely.  Exact by
     the same linearity the commit path relies on."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, as_of_batches)
+    tags = _tags_asof(store_path, as_of_batches)
     return _serve_net(spark, store_path, view_table, tags, "mult")
 
 
@@ -683,8 +660,7 @@ def matview_agg(
     dropped (matching the from-scratch aggregate, which never sees
     them).  ``value_col`` is a Column expression over the view's
     columns (use exact decimal casts for hash-stable money math)."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, as_of_batches)
+    tags = _tags_asof(store_path, as_of_batches)
     v = store.read_batches(spark, store_path, "view", tags, merge_schema=True)
     return (
         v.groupBy(*group_cols)
@@ -735,10 +711,9 @@ def matview_takedown(
     deleted data resurfacing in the view, exactly the pre-state race
     the ingest lock exists to prevent."""
     ids = victims.select(id_col).distinct()
-    manifest_path = store.manifest_path(store_path)
     with store.ingest_lock(store_path, lock_timeout_s):
         tables = _store_tables(store_path)
-        tags = store._manifest_read(manifest_path, None)
+        tags = store.tags(store_path)
         if not tags:
             return 0
         removed = 0
@@ -815,8 +790,6 @@ def matview_takedown(
             # serves a leading compact batch as written, which is only
             # exact if compact batches are always net
             mcol = "m" if table in ("left", "right") else "mult"
-            # _net is aggregation-tailed: AQE coalescing bounds the
-            # rewrite's write parallelism — no REBALANCE hint needed
             if table in recompute:
                 out = views[table](full)
                 return _net(out, "mult")
@@ -824,7 +797,7 @@ def matview_takedown(
                 return _net(df, mcol)
             return _net(df.join(ids, id_col, "left_anti"), mcol)
 
-        store._rewrite_store(
+        store.rewrite(
             spark,
             store_path,
             transform,
@@ -853,8 +826,7 @@ def matview_integrity(
     avoids, paid deliberately here because an AUDIT's job is to
     re-derive the answer the cheap path must match.  Scalars only
     transit the driver."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, as_of_batches)
+    tags = _tags_asof(store_path, as_of_batches)
     keys = _join_keys(store_path)
 
     L = _net(store.read_batches(spark, store_path, "left", tags, merge_schema=True), "m")
@@ -931,8 +903,7 @@ def matview_read_outer(
     The anti-join keys on the join key (batch-bounded distinct list),
     so the plan is two scans and one shuffle — never a recompute of
     the join."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, as_of_batches)
+    tags = _tags_asof(store_path, as_of_batches)
     keys = _join_keys(store_path)
 
     v = _serve_net(spark, store_path, "view", tags, "mult")
@@ -964,8 +935,7 @@ def matview_changes(
     genesis equals the as-of state itself).  Compaction collapses the
     commit log, after which a slice that straddles it is out of range
     and raises — the same honesty contract as every pinned read."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, to_batches)
+    tags = _tags_asof(store_path, to_batches)
     if not 0 <= from_batches <= len(tags):
         raise ValueError(
             f"from_batches={from_batches} out of range for store "
@@ -988,8 +958,7 @@ def matview_read_full_outer(
     """FULL OUTER serving — both anti-join legs, since the store keeps
     BOTH net inputs as tables (see :func:`matview_read_outer` for why
     this needs no extra maintenance state)."""
-    manifest_path = store.manifest_path(store_path)
-    tags = _tags_asof(manifest_path, store_path, as_of_batches)
+    tags = _tags_asof(store_path, as_of_batches)
     keys = _join_keys(store_path)
 
     v = _serve_net(spark, store_path, "view", tags, "mult")
@@ -1088,11 +1057,9 @@ def compact_matview_store(
                 out = out.repartitionByRange(
                     n_files or 8, F.col(key0)
                 ).sortWithinPartitions(key0)
-            # (unzoned fold: _net is aggregation-tailed, AQE
-            # coalescing bounds the write — no hint needed)
             return out
 
-        rewritten = store._rewrite_store(
+        rewritten = store.rewrite(
             spark,
             store_path,
             transform,
@@ -1102,7 +1069,7 @@ def compact_matview_store(
             merge_schema=True,
         )
         if rewritten:
-            tags = store._manifest_read(store.manifest_path(store_path), None)
+            tags = store.tags(store_path)
             for t in tags:
                 if not t.startswith("compact-"):
                     continue
@@ -1138,8 +1105,7 @@ def matview_lookup(
     compaction when it kept the zone column)."""
     if hi is None:
         hi = lo
-    manifest_path = store.manifest_path(store_path)
-    tags = store._manifest_read(manifest_path, None)
+    tags = store.tags(store_path)
     paths = _pruned_paths(store_path, view_table, tags, zone_col, lo, hi)
     if not paths:
         # every candidate file pruned: exact empty result, typed from

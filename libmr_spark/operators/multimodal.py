@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.builder import _records
+
 # -- codec availability, probed once at import ------------------------
 try:
     from PIL import Image as _PIL_Image  # noqa: N811
@@ -152,7 +154,7 @@ def decode_images(df: DataFrame, mode: str = "fake") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows, nbytes = [], 0
-            for rec in pdf.to_dict("records"):
+            for _err, rec in _records(pdf):
                 rows.append(decode_one(rec))
                 nbytes += len(rec["payload"])
                 if nbytes >= MAX_BATCH_BYTES:
@@ -204,7 +206,7 @@ def resize_images(df: DataFrame, target_w: int, target_h: int, mode: str = "fake
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.to_dict("records"):
+            for _err, rec in _records(pdf):
                 rows.append(
                     {
                         "media_id": rec["media_id"],
@@ -288,7 +290,7 @@ def sample_video_frames(df: DataFrame, every_nth: int = 2, mode: str = "fake") -
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.to_dict("records"):
+            for _err, rec in _records(pdf):
                 payload = bytes(rec["payload"])
                 if mode == "real" and HAS_FFMPEG:
                     rows.extend(real_frames(rec["media_id"], payload))
@@ -356,7 +358,7 @@ def audio_features(df: DataFrame, mode: str = "fake") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rec in pdf.to_dict("records"):
+            for _err, rec in _records(pdf):
                 if mode == "real":
                     rows.append(real_features(rec))
                     continue

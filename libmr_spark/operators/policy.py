@@ -52,7 +52,7 @@ def read_policy_log(spark, log_store: str) -> DataFrame:
     feed). This is the ops log AS A STORE: queryable, time-travelable
     via ``read_incremental_store_asof(..., "audit", k)``, compactable
     like everything else."""
-    tags = store._manifest_read(store.manifest_path(log_store), _LOG_PARAMS)
+    tags = store.tags(log_store, _LOG_PARAMS)
     if not tags:
         raise ValueError(f"empty policy log at {log_store} (no committed passes)")
     return store.read_batches(spark, log_store, "audit", tags)
@@ -182,13 +182,7 @@ def apply_maintenance_policy(
         "trigger_value double, result bigint, executed boolean",
     )
     if log_store is not None:
-        import uuid
-
-        manifest_path = store.manifest_path(log_store)
-        seq = len(store._manifest_read(manifest_path, _LOG_PARAMS)) + 1
-        tag = uuid.uuid4().hex
-        out.withColumn("pass_seq", F.lit(seq).cast("int")).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(store.batch_path(log_store, "audit", tag))
-        store._manifest_publish(manifest_path, _LOG_PARAMS, add_tags=[tag])
+        seq = len(store.tags(log_store, _LOG_PARAMS)) + 1
+        with store.commit(log_store, _LOG_PARAMS) as tx:
+            tx.write("audit", out.withColumn("pass_seq", F.lit(seq).cast("int")))
     return out

@@ -116,9 +116,8 @@ def bm25_index_ingest(
     one doc_id anti-join — never a re-scan of indexed text, the same
     admission contract as ``dedup_incremental_exact``. Returns the
     admitted (doc_id, dl) rows."""
-    manifest_path = store.manifest_path(index_path)
     uniq = batch.groupBy(id_col).agg(F.min(text_col).alias(text_col))
-    tags = store._manifest_read(manifest_path, _PARAMS)
+    tags = store.tags(index_path, _PARAMS)
     if tags:
         hist_ids = store.read_batches(spark, index_path, "doclen", tags).select(id_col)
         # restrict-then-anti (the store-family admission pattern): an
@@ -138,17 +137,9 @@ def bm25_index_ingest(
     # materialize before the append (no lazy re-run of the anti-join
     # after the store gains this batch's own doc_ids)
     dl = dl.localCheckpoint(eager=True)
-    tag = uuid.uuid4().hex
-    # tf is aggregation-tailed (AQE partition coalescing bounds the
-    # write); dl is checkpointed — rebalanced(probe) gives it
-    # advisory-sized commit files (guide §6)
-    tf.write.mode("overwrite").parquet(
-        store.batch_path(index_path, "postings", tag)
-    )
-    rebalanced(dl, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(index_path, "doclen", tag)
-    )
-    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+    with store.commit(index_path, _PARAMS) as tx:
+        tx.write("postings", tf)
+        tx.write("doclen", dl)
     return dl
 
 
@@ -169,7 +160,7 @@ def bm25_index_topk(spark, index_path: str, queries: DataFrame, k: int = 10) -> 
     postings I/O by the terms probed instead of the vocabulary."""
     from .zones import pruned_paths_probes
 
-    tags = store._manifest_read(store.manifest_path(index_path), _PARAMS)
+    tags = store.tags(index_path, _PARAMS)
     if not tags:
         raise ValueError(f"empty bm25 index at {index_path} (no committed batches)")
     terms = [r.token for r in queries.select("token").distinct().collect()]
@@ -220,7 +211,7 @@ def _centroids_read(index_path: str) -> list:
     bootstrap default ``_CENTROIDS``."""
     import json
 
-    _tags, params = store.read_manifest(store.manifest_path(index_path))
+    _tags, params = store.manifest(index_path)
     fname = (params or {}).get("centroids_file", "_CENTROIDS")
     with open(os.path.join(index_path, fname)) as f:
         return [(list(map(int, s)), int(n)) for s, n in json.load(f)["centroids"]]
@@ -280,9 +271,8 @@ def ann_index_ingest(
     pointer."""
     from .similarity import assign_exact, kmeans_exact
 
-    manifest_path = store.manifest_path(index_path)
     params = _ann_params(k_cells, rounds, quant_digits, store_int8)
-    tags, stored = store.read_manifest(manifest_path)
+    tags, stored = store.manifest(index_path)
     if tags and stored.get("quant_digits") != str(quant_digits):
         # quant_digits changes v itself — refused; k_cells/rounds are
         # bootstrap-training inputs only, irrelevant once the quantizer
@@ -347,16 +337,16 @@ def ann_index_ingest(
                 ),
             )
         assigned = assigned.localCheckpoint(eager=True)
-        tag = uuid.uuid4().hex
-        rebalanced(assigned, probe=True).write.mode("overwrite").parquet(
-            store.batch_path(index_path, "cells", tag)
-        )
+        tx = store.Batch(index_path)
+        tx.write("cells", assigned)
+        # the one commit that drives the manifest lock itself (see above)
+        manifest_path = store.manifest_path(index_path)
         with store._manifest_lock(manifest_path):
-            lost = bool(store.read_manifest(manifest_path)[0])
+            lost = bool(store.tags(index_path))
             if not lost:
                 _centroids_write(_centroids_path(index_path), stats["centroids"])
                 store._manifest_swap(
-                    manifest_path, None, add_tags=[tag], set_params=params
+                    manifest_path, None, add_tags=[tx.tag], set_params=params
                 )
         if lost:
             return ann_index_ingest(
@@ -368,15 +358,12 @@ def ann_index_ingest(
     if store_int8:
         assigned = assigned.withColumn("v", F.col("v").cast("array<tinyint>"))
     assigned = assigned.localCheckpoint(eager=True)
-    tag = uuid.uuid4().hex
-    rebalanced(assigned, probe=True).write.mode("overwrite").parquet(
-        store.batch_path(index_path, "cells", tag)
-    )
     # params=None preserves the store's recorded params verbatim — an
     # established store's quantizer params were validated above and may
     # legitimately differ from this call's bootstrap-only k_cells/rounds
     # (and carry centroids_file after a re-train)
-    store._manifest_publish(manifest_path, None, add_tags=[tag])
+    with store.commit(index_path, None) as tx:
+        tx.write("cells", assigned)
     return assigned.select(id_col, "cid")
 
 
@@ -414,7 +401,7 @@ def ann_index_topk(
     cells; raise nprobe with selectivity (the documented trade-off)."""
     from .similarity import ivf_rank_exact
 
-    tags, stored = store.read_manifest(store.manifest_path(index_path))
+    tags, stored = store.manifest(index_path)
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
     if stored.get("quant_digits") != str(quant_digits):
@@ -481,7 +468,7 @@ def ann_index_retrain(
     and MIGRATE, never mix). Runs :func:`lloyd_exact` over the STORED
     quantized vectors (the cells table keeps v, so no original corpus
     is re-read), re-assigns every vector under the new centroids, and
-    publishes through :func:`..core.store._rewrite_store`'s crash-safe protocol —
+    publishes through :func:`..core.store.rewrite`'s crash-safe protocol —
     with one extension: the new centroids live in a fresh
     ``_CENTROIDS.retrain-<tag>`` file written BEFORE the manifest
     publish, and the manifest's params gain ``centroids_file`` in the
@@ -502,12 +489,9 @@ def ann_index_retrain(
 
     Returns the new (sum, count) centroid list ([] if the store is
     empty)."""
-    import time
-
     from .similarity import _kmeans_assign_udf, lloyd_exact
 
-    manifest_path = store.manifest_path(index_path)
-    tags, stored = store.read_manifest(manifest_path)
+    tags, stored = store.manifest(index_path)
     if not tags:
         return []
     kc = int(stored["k_cells"]) if k_cells is None else int(k_cells)
@@ -537,7 +521,7 @@ def ann_index_retrain(
             out = out.withColumn("v", F.col("v").cast("array<tinyint>"))
         return rebalanced(out)
 
-    snapshot = store._rewrite_store(
+    snapshot = store.rewrite(
         spark, index_path, retrain, tables=("cells",), min_batches=1,
         set_params=new_params,
     )
@@ -546,18 +530,17 @@ def ann_index_retrain(
     # sweep superseded centroid files: unreferenced by the CURRENT
     # manifest and aged past the ingest-commit grace window (a younger
     # unreferenced file may be a concurrent retrain's pre-publish write)
-    _tags, live = store.read_manifest(manifest_path)
+    _tags, live = store.manifest(index_path)
     keep = live.get("centroids_file", "_CENTROIDS")
-    now = time.time()
     for entry in os.listdir(index_path):
         if not entry.startswith("_CENTROIDS") or entry == keep:
             continue
         p = os.path.join(index_path, entry)
-        try:
-            if now - os.path.getmtime(p) > store._REWRITE_STALE_S:
+        if store.stale(p):
+            try:
                 os.remove(p)
-        except OSError:
-            pass
+            except OSError:
+                pass
     return state["centroids"]
 
 
@@ -575,7 +558,7 @@ def ann_drift_stats(spark, index_path: str) -> DataFrame:
     the bootstrap shows drift2 == 0 exactly (the frozen stats ARE the
     final Lloyd stats over the same members)."""
     dec = "decimal(38,0)"
-    tags = store._manifest_read(store.manifest_path(index_path), None)
+    tags = store.tags(index_path)
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
     cells = store.read_batches(spark, index_path, "cells", tags)
@@ -831,7 +814,6 @@ def hybrid_index_ingest(
     cluster postings by token while leaving the payload tables id-
     clustered, time travel truncates all four to the same commit
     prefix. Returns the admitted (doc_id, dl) rows."""
-    manifest_path = store.manifest_path(index_path)
     uniq = (
         batch.groupBy(id_col)
         .agg(F.min(F.struct(text_col, vec_col)).alias("tv"))
@@ -841,7 +823,7 @@ def hybrid_index_ingest(
             F.col(f"tv.{vec_col}").alias(vec_col),
         )
     )
-    tags = store._manifest_read(manifest_path, _HYBRID_PARAMS)
+    tags = store.tags(index_path, _HYBRID_PARAMS)
     if tags:
         hist_ids = store.read_batches(spark, index_path, "doclen", tags).select(id_col)
         # restrict-then-anti (the store-family admission pattern): an
@@ -862,24 +844,13 @@ def hybrid_index_ingest(
     prefix = F.substring(
         F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), 1, 64
     )
-    tag = uuid.uuid4().hex
-    # rebalanced: advisory-sized commit files (see bm25_index_ingest)
-    # tf/dl are aggregation-tailed (AQE bounds their writes); the two
-    # uniq projections are narrow over the checkpointed batch (probe)
-    tf.write.mode("overwrite").parquet(
-        store.batch_path(index_path, "postings", tag)
-    )
-    dl.write.mode("overwrite").parquet(
-        store.batch_path(index_path, "doclen", tag)
-    )
-    rebalanced(uniq.select(id_col, vec_col), probe=True).write.mode(
-        "overwrite"
-    ).parquet(store.batch_path(index_path, "vectors", tag))
-    rebalanced(uniq.select(id_col, prefix.alias("prefix")), probe=True).write.mode(
-        "overwrite"
-    ).parquet(store.batch_path(index_path, "prefixes", tag))
-    # THE transaction: all four table writes become visible here or never
-    store._manifest_publish(manifest_path, _HYBRID_PARAMS, add_tags=[tag])
+    # THE transaction: all four table writes become visible together
+    # or never
+    with store.commit(index_path, _HYBRID_PARAMS) as tx:
+        tx.write("postings", tf)
+        tx.write("doclen", dl)
+        tx.write("vectors", uniq.select(id_col, vec_col))
+        tx.write("prefixes", uniq.select(id_col, prefix.alias("prefix")))
     return dl
 
 
@@ -903,8 +874,7 @@ def hybrid_index_rrf(
     because they share the commit clock, a pinned hybrid serve can
     never tear (a doc's lexical leg without its vector leg), which is
     what makes the fleet-snapshot contract meaningful for serving."""
-    manifest_path = store.manifest_path(index_path)
-    tags = store._manifest_read(manifest_path, _HYBRID_PARAMS)
+    tags = store.tags(index_path, _HYBRID_PARAMS)
     if not tags:
         raise ValueError(f"empty hybrid index at {index_path} (no committed batches)")
     if as_of_batches is not None:
@@ -969,7 +939,7 @@ def ann_index_topk_auto(
     cost-based optimizer caches column stats."""
     import math
 
-    tags, params = store.read_manifest(store.manifest_path(index_path))
+    tags, params = store.manifest(index_path)
     if not tags:
         raise ValueError(f"empty ann index at {index_path} (no committed batches)")
     k_cells = int(params["k_cells"])

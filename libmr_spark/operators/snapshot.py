@@ -48,7 +48,7 @@ def fleet_snapshot(stores: dict[str, str]) -> dict:
     never touches data files, O(#stores) cost."""
     snap: dict = {"version": _SNAPSHOT_VERSION, "stores": {}}
     for name, path in sorted(stores.items()):
-        tags = store._manifest_read(store.manifest_path(path), None)
+        tags = store.tags(path)
         if not tags:
             raise ValueError(f"store {name!r} at {path} has no committed batches")
         snap["stores"][name] = {"path": path, "n_batches": len(tags)}
@@ -75,7 +75,7 @@ def register_snapshot(snap: dict, snapshot_id: str, ttl_s: float | None = None) 
     """Pin the snapshot AT each store: writes
     ``<store>/_SNAPSHOTS/<id>.json`` (atomic swap) so the store's own
     COMPACTION refuses to collapse the pinned prefix while the pin is
-    live (``_rewrite_store(respect_snapshots=True)`` — the retention
+    live (``store.rewrite(respect_snapshots=True)`` — the retention
     contract from SURVEY round-10 #1). Precedence is documented and
     deliberate: TAKEDOWN and quantizer RETRAIN ignore pins —
     right-to-be-forgotten and operational index migration beat
@@ -98,7 +98,7 @@ def register_snapshot(snap: dict, snapshot_id: str, ttl_s: float | None = None) 
         # returning success for a pin that protects nothing (the
         # TOCTOU window between capture and registration, closed)
         with store.rewrite_lock(entry["path"]):
-            tags = store._manifest_read(store.manifest_path(entry["path"]), None)
+            tags = store.tags(entry["path"])
             if len(tags) < entry["n_batches"]:
                 raise ValueError(
                     f"snapshot {snapshot_id!r} is stale for store {name!r}: "

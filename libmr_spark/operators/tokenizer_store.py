@@ -23,8 +23,6 @@ surface); SURVEY §7.2a round-10 #3.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..core import store
@@ -114,7 +112,7 @@ def bpe_store_merges(
     Driver-side rows by design — the merge table is the tokenizer
     artifact (vocab-scale, ~10⁴-10⁵ rows at production size), and
     encode needs it sequentially."""
-    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if not tags:
         return []
     if as_of_batches is not None:
@@ -161,15 +159,8 @@ def bpe_store_train(
             "word", "freq", apply_merge("syms", l, r).alias("syms")
         ).localCheckpoint()
 
-    tag = uuid.uuid4().hex
-    # coalesce: a local frame scans as up to defaultParallelism
-    # partitions, and the batch is one file
-    local_df(
-        spark, new_merges, "rnd int, l string, r string, n bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        store.batch_path(store_path, "merges", tag)
-    )
-    store._manifest_publish(store.manifest_path(store_path), _PARAMS, add_tags=[tag])
+    with store.commit(store_path, _PARAMS) as tx:
+        tx.write("merges", local_df(spark, new_merges, "rnd int, l string, r string, n bigint"))
     return new_merges
 
 

@@ -24,19 +24,16 @@ from-scratch PMI over the surviving corpus under ANY batch slicing.
 At 100 TB the uni/bi delta tables are vocabulary artifacts
 (Heaps-bounded, far smaller than the corpus); :func:`compact_vocab_store`
 folds the deltas into one NET-count batch per table through the
-crash-safe ``_rewrite_store`` protocol — zero-net rows vanish from
+crash-safe ``store.rewrite`` protocol — zero-net rows vanish from
 the fold without changing any sum, so serving is provably invariant.
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import store
-from ..core.layout import rebalanced
 
 _PARAMS = {"kind": "vocab-pmi", "tokenizer": "ws-lower", "ngram": "2"}
 
@@ -77,7 +74,6 @@ def pmi_store_ingest(
     the stamp survives compaction instead of being dropped by a
     footer-sampled schema."""
     payload_cols = list(payload_cols or [])
-    manifest_path = store.manifest_path(store_path)
     ev = (
         batch.groupBy(id_col)
         .agg(F.min(F.struct(sign_col, text_col, *payload_cols)).alias("st"))
@@ -88,7 +84,7 @@ def pmi_store_ingest(
             *[F.col(f"st.{c}").alias(c) for c in payload_cols],
         )
     )
-    tags = store._manifest_read(manifest_path, _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if tags:
         # net only the batch's slice of the docs log: semi-probe the
         # log with the broadcast batch ids (scan, never a log-wide
@@ -119,23 +115,13 @@ def pmi_store_ingest(
     # _pmi_counts tokenizes the column literally named "text" — rename
     # (no-op at the default) so a custom text_col tokenizes correctly.
     uni, bi = _pmi_counts(ev.withColumnRenamed(text_col, "text"), sign_col="sign")
-    tag = uuid.uuid4().hex
-    # uni/bi are aggregation-tailed (AQE partition coalescing bounds
-    # their writes); the docs log below is narrow over the checkpointed
-    # batch — rebalanced(probe) gives it advisory-sized commit files
-    uni.write.mode("overwrite").parquet(
-        store.batch_path(store_path, "uni", tag)
-    )
-    bi.write.mode("overwrite").parquet(
-        store.batch_path(store_path, "bi", tag)
-    )
-    # the id column is written FIRST — vocab_docs_net and the
-    # compaction fold key the log off position 0, which mergeSchema
-    # preserves because every batch leads with it
-    rebalanced(ev.select(id_col, "sign", *payload_cols), probe=True).write.mode(
-        "overwrite"
-    ).parquet(store.batch_path(store_path, "docs", tag))
-    store._manifest_publish(manifest_path, _PARAMS, add_tags=[tag])
+    with store.commit(store_path, _PARAMS) as tx:
+        tx.write("uni", uni)
+        tx.write("bi", bi)
+        # the id column is written FIRST — vocab_docs_net and the
+        # compaction fold key the log off position 0, which mergeSchema
+        # preserves because every batch leads with it
+        tx.write("docs", ev.select(id_col, "sign", *payload_cols))
     return ev.select(id_col, "sign", *payload_cols)
 
 
@@ -147,7 +133,7 @@ def pmi_store_topk(spark, store_path: str) -> DataFrame:
     from-scratch oracle over the surviving corpus."""
     from ..queries_pipeline import _pmi_topk_from_counts
 
-    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
     uni = (
@@ -174,7 +160,7 @@ def vocab_net_counts(spark, store_path: str, as_of_batches: int | None = None) -
     ``as_of_batches`` pins the read to the first k manifest entries
     (time travel — the fleet-snapshot serving path; post-compaction
     history collapse applies as everywhere)."""
-    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
     if as_of_batches is not None:
@@ -212,7 +198,7 @@ def vocab_docs_net(
     fold applies, so this read is provably compaction-invariant.
     ``merge_schema=True`` serves the union schema when the log spans
     a payload evolution (pre-evolution rows null-filled)."""
-    tags = store._manifest_read(store.manifest_path(store_path), _PARAMS)
+    tags = store.tags(store_path, _PARAMS)
     if not tags:
         raise ValueError(f"empty vocab store at {store_path} (no committed batches)")
     return _docs_net_fold(
@@ -253,14 +239,12 @@ def compact_vocab_store(spark, store_path: str, merge_schema: bool = False) -> i
     ``merge_schema=True`` when the log's history spans a payload
     evolution so the fold sees the union schema instead of a
     footer-sampled one that could silently drop the evolved column.
-    Runs through the standard crash-safe ``_rewrite_store`` protocol,
+    Runs through the standard crash-safe ``store.rewrite`` protocol,
     so a crash anywhere leaves either the delta history or the fold,
     never a mix; serving (a sum over deltas) is provably invariant
     because addition is what compaction performs. Returns the number
     of folded batches (0 if the store has < 2 commits)."""
     def fold(df, table):
-        # all three folds are aggregation-tailed: AQE partition
-        # coalescing bounds the rewrite's write parallelism
         if table == "uni":
             return df.groupBy("w").agg(F.sum("c").alias("c")).filter(F.col("c") != 0)
         if table == "bi":
@@ -270,7 +254,7 @@ def compact_vocab_store(spark, store_path: str, merge_schema: bool = False) -> i
         return _docs_net_fold(df)
 
     return len(
-        store._rewrite_store(
+        store.rewrite(
             spark, store_path, fold, tables=VOCAB_TABLES, min_batches=2,
             respect_snapshots=True, merge_schema=merge_schema,
         )

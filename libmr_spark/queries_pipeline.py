@@ -5489,7 +5489,7 @@ def hybrid_store_rrf_q(spark, sf_dir):
     "rewrite: after three multi-table commits, every doc_id % 7 == 3 "
     "document leaves postings, doclen, vectors AND prefixes together "
     "(delete_from_incremental_store over the four manifest-listed "
-    "tables — the same _rewrite_store protocol as every other store, "
+    "tables — the same store.rewrite protocol as every other store, "
     "now spanning the tables of two retrieval modalities atomically). "
     "The oracle is the from-scratch fusion over the corpus minus the "
     "victims, so the hash proves the deletion shifted every BM25 "
@@ -5977,7 +5977,7 @@ def hybrid_store_mmr_q(spark, sf_dir):
 
     path = _sink_dir("hybrid_store_mmr", sf_dir)
     _hybrid_store_build(spark, sf_dir, path)
-    tags = store._manifest_read(store.manifest_path(path), _HYBRID_PARAMS)
+    tags = store.tags(path, _HYBRID_PARAMS)
     t = {
         name: store.read_batches(spark, path, name, tags)
         for name in ("postings", "doclen", "vectors")
@@ -7882,7 +7882,7 @@ def matview_agg_join_q(spark, sf_dir):
     ),
     "Compaction invariance for the join MV: fold all five commits "
     "(bootstrap, two one-sided deltas, replay, both-side delete) to "
-    "ONE net batch per table through the crash-safe _rewrite_store "
+    "ONE net batch per table through the crash-safe store.rewrite "
     "protocol, then serve — the hash must equal the uncompacted "
     "retracted serve because zero-net rows vanish from a fold "
     "without changing any sum. This is the maintenance operation the "
@@ -8100,7 +8100,7 @@ def matview_cascade_q(spark, sf_dir):
         .select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
         .withColumn("m", F.lit(1))
     )
-    tags = store._manifest_read(store.manifest_path(p1), None)
+    tags = store.tags(p1)
     for i, tag in enumerate(tags):
         dv = store.read_batches(spark, p1, "view", [tag]).withColumnRenamed(
             "mult", "m"
@@ -8540,7 +8540,7 @@ def matview_backfill_subscriber_q(spark, sf_dir):
     )
     matview_ingest(spark, p2, cust, snapshot, on="o_custkey")
     # subscribe: per-commit deltas AFTER the snapshot point
-    tags = store._manifest_read(store.manifest_path(p1), None)
+    tags = store.tags(p1)
     for k in range(3, len(tags)):
         dv = matview_changes(
             spark, p1, from_batches=k, to_batches=k + 1

@@ -1271,6 +1271,126 @@ def test_manifest_lock_timeout_and_crash_release(tmp_path):
     assert os.path.exists(lock)  # the file persists; only the flock matters
 
 
+def _part_files(path):
+    import glob
+    import os
+
+    return len(glob.glob(os.path.join(path, "part-*")))
+
+
+def _frame_checkpointed(spark, n_parts):
+    return spark.range(0, 300, numPartitions=n_parts).localCheckpoint(eager=True)
+
+
+@pytest.mark.parametrize(
+    "make, max_files, rebalance",
+    [
+        (lambda spark: _frame_checkpointed(spark, 3), 3, False),
+        (lambda spark: _frame_checkpointed(spark, 12), 11, True),
+        (lambda spark: _frame_checkpointed(spark, 12).groupBy(
+            (F.col("id") % 7).alias("id")).count(), 12, False),
+        (lambda spark: smalldf.local_df(spark, [(1,), (2,)], "id bigint"), 1, False),
+        (lambda spark: _frame_checkpointed(spark, 12).coalesce(1), 1, False),
+    ],
+    ids=["checkpointed-3", "checkpointed-12", "groupby", "local-2-rows", "coalesced"],
+)
+def test_store_write_sizing_rule(spark, tmp_path, make, max_files, rebalance):
+    # store.commit's one sizing rule: a frame that already shuffles or
+    # repartitions is written as given, a driver-local frame as one
+    # file, anything else probed (rebalanced only above 8 partitions)
+    import os
+
+    df = make(spark)
+    sized = ST._sized(df)._jdf.queryExecution().analyzed().toString()
+    assert sized.count("RebalancePartitions") == int(rebalance)
+    path = str(tmp_path / "s")
+    with ST.commit(path, None) as tx:
+        tx.write("t", df)
+    assert ST.tags(path) == [tx.tag]
+    n = _part_files(os.path.join(path, "t", f"batch={tx.tag}"))
+    assert 1 <= n <= max_files
+
+
+def test_dedup_incremental_minhash_aborted_commit_publishes_nothing(
+    spark, docs, tmp_path, monkeypatch
+):
+    # an exception inside store.commit after the first table is written
+    # publishes nothing: the manifest keeps exactly the old tags, the
+    # union read never opens the written orphan, and the retry admits
+    # what a clean run admits
+    import os
+
+    base = docs.limit(20).select("doc_id", "text")
+    batch = docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 210)).select(
+        "doc_id", "text"
+    )
+    clean = str(tmp_path / "clean")
+    DD.dedup_incremental_minhash(spark, clean, base)
+    want = sorted(r.doc_id for r in DD.dedup_incremental_minhash(spark, clean, batch).collect())
+
+    store = str(tmp_path / "aborted")
+    DD.dedup_incremental_minhash(spark, store, base)
+    old_tags = ST.tags(store)
+    write = ST.Batch.write
+
+    def fail_second_table(tx, table, df, partition_by=None):
+        if table == "payload":
+            raise RuntimeError("aborted between table writes")
+        write(tx, table, df, partition_by)
+
+    monkeypatch.setattr(ST.Batch, "write", fail_second_table)
+    with pytest.raises(RuntimeError, match="aborted between table writes"):
+        DD.dedup_incremental_minhash(spark, store, batch)
+    monkeypatch.undo()
+
+    assert ST.tags(store) == old_tags
+    orphans = [
+        d for d in os.listdir(os.path.join(store, "index"))
+        if d.removeprefix("batch=") not in old_tags
+    ]
+    assert len(orphans) == 1  # the index table was written, payload was not
+    orphan_dir = os.path.join(store, "index", orphans[0])
+    assert _part_files(orphan_dir) >= 1
+    assert not os.path.exists(os.path.join(store, "payload", orphans[0]))
+    files = ST.read_batches(spark, store, "index", ST.tags(store)).inputFiles()
+    assert files and not any(orphans[0] in f for f in files)
+
+    got = sorted(r.doc_id for r in DD.dedup_incremental_minhash(spark, store, batch).collect())
+    assert got == want
+    assert len(ST.tags(store)) == len(old_tags) + 1
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_driver_fast_paths_keep_id_type(spark, monkeypatch, id_type):
+    # the driver paths of connected_components and _resolve_remap build
+    # their result from an Arrow table typed from the collected column:
+    # the id type is kept, and the rows equal the distributed paths'
+    ident = (lambda i: i) if id_type == "bigint" else (lambda i: f"d{i:03d}")
+    edges = spark.createDataFrame(
+        [(ident(a), ident(b)) for a, b in [(1, 2), (2, 3), (3, 4), (6, 7), (9, 7)]],
+        f"id_a {id_type}, id_b {id_type}",
+    )
+    nodes = spark.createDataFrame([(ident(i),) for i in range(1, 11)], f"doc_id {id_type}")
+    remap = spark.createDataFrame(
+        [(ident(o), ident(n)) for o, n in [(9, 7), (7, 4), (4, 1), (8, 2)]],
+        f"old {id_type}, new {id_type}",
+    )
+    results = []
+    for ceiling in (smalldf._CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(smalldf, "_CC_DRIVER_MAX_EDGES", ceiling)
+        stats: dict = {}
+        cc = DD.connected_components(edges, nodes, stats=stats)
+        rr = DD._resolve_remap(remap)
+        assert (stats["rounds"] == 0) == (ceiling > 0)
+        assert smalldf.is_local(rr) == (ceiling > 0)
+        for out in (cc, rr):
+            assert [f.dataType.simpleString() for f in out.schema] == [id_type] * 2
+        results.append(({tuple(r) for r in cc.collect()}, {tuple(r) for r in rr.collect()}))
+    assert results[0] == results[1]
+    assert results[0][1] == {(ident(9), ident(1)), (ident(7), ident(1)),
+                             (ident(4), ident(1)), (ident(8), ident(2))}
+
+
 def test_compaction_preserves_admission(spark, docs, tmp_path):
     # three committed batches -> compact -> ONE manifest entry, one
     # directory per table, and a probe batch admits IDENTICALLY against

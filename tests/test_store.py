@@ -1,5 +1,6 @@
 """The batch store's commit protocol under a killed committer, and the
-guard that keeps the store format inside ``libmr_spark/core/store.py``.
+guard that keeps the store format and internals inside
+``libmr_spark/core/store.py``.
 
 No SparkSession: the union read goes through a stand-in whose
 ``read.parquet`` is pyarrow, so these tests exercise the real
@@ -146,7 +147,34 @@ def _format_leaks(tree: ast.AST) -> list:
             for alias in node.names:
                 if alias.name.startswith(("_manifest", "_rewrite_store")):
                     leaks.append((node.lineno, f"imports {alias.name} from dedup"))
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[-2:] in (
+            ["store"], ["core", "store"],
+        ):
+            for alias in node.names:
+                if alias.name.startswith("_"):
+                    leaks.append((node.lineno, f"imports store.{alias.name}"))
+        elif (
+            isinstance(node, ast.Attribute)
+            and (node.attr.startswith("_") or node.attr in _BY_MANIFEST_PATH)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "store"
+        ):
+            leaks.append((node.lineno, f"uses store.{node.attr}"))
     return leaks
+
+
+#: Public store functions keyed by the manifest file rather than the
+#: store: the package goes through ``store.tags``/``store.manifest``.
+_BY_MANIFEST_PATH = {"manifest_path", "read_manifest"}
+
+#: The one commit that drives the manifest lock itself: the ANN
+#: bootstrap's race re-check and ``_CENTROIDS`` write share the
+#: publish's critical section (``retrieval.ann_index_ingest``).
+_ALLOWED = {
+    ("operators/retrieval.py", "uses store.manifest_path"),
+    ("operators/retrieval.py", "uses store._manifest_lock"),
+    ("operators/retrieval.py", "uses store._manifest_swap"),
+}
 
 
 def test_store_format_lives_in_core_store_only():
@@ -158,9 +186,23 @@ def test_store_format_lives_in_core_store_only():
         rel = path.relative_to(_PACKAGE).as_posix()
         if rel == "core/store.py":
             continue
-        leaks += [(rel, *leak) for leak in _format_leaks(ast.parse(path.read_text()))]
+        leaks += [
+            (rel, *leak)
+            for leak in _format_leaks(ast.parse(path.read_text()))
+            if (rel, leak[1]) not in _ALLOWED
+        ]
     assert leaks == []
     # and the scan does see them where they live
     store_src = (_PACKAGE / "core" / "store.py").read_text()
     kinds = {kind.split()[0] for _line, kind in _format_leaks(ast.parse(store_src))}
     assert kinds == {"names", "builds", "calls"}
+    # store internals reached from outside, both spellings
+    outside = (
+        "from ..core import store\n"
+        "from ..core.store import _manifest_read\n"
+        "store._manifest_publish(store.manifest_path(p), None, add_tags=[t])\n"
+    )
+    assert [kind for _line, kind in _format_leaks(ast.parse(outside))] == [
+        "imports store._manifest_read", "uses store._manifest_publish",
+        "uses store.manifest_path",
+    ]
