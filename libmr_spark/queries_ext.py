@@ -698,9 +698,9 @@ def props_map_stats_q(spark, sf_dir):
 )
 def streaming_foreach_batch_sink_q(spark, sf_dir):
     import shutil
-    import tempfile
 
     from .sources.readers import events_stream
+    from .streaming.windows import drain
 
     path = _sink_dir("foreach_batch_out", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
@@ -708,15 +708,7 @@ def streaming_foreach_batch_sink_q(spark, sf_dir):
     def write_batch(bdf, batch_id):
         bdf.write.mode("append").parquet(path)
 
-    q = (
-        events_stream(spark, sf_dir)
-        .select("event_id", "event_type")
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_feb_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events_stream(spark, sf_dir).select("event_id", "event_type"), write_batch)
     return (
         spark.read.parquet(path)
         .groupBy("event_type")

@@ -32,6 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from .core.layout import rebalanced
 from .core.smalldf import local_df
+from .streaming.windows import drain, replay_chunks, run_to_memory_sink
 
 from .queries import QUERIES, _SHINGLE_SQL, _t, defquery, top_k  # noqa: F401
 
@@ -846,7 +847,6 @@ def sink_merge_upsert_q(spark, sf_dir):
 def streaming_rolling_extremes_q(spark, sf_dir):
     from .sources.readers import events_stream
     from .streaming.stateful import rolling_extremes
-    from .streaming.windows import run_to_memory_sink
 
     sdf = events_stream(spark, sf_dir).select("event_id", "ts", "event_type", "value")
     out = rolling_extremes(
@@ -1326,10 +1326,7 @@ def leakage_safe_split_q(spark, sf_dir):
     "checkpoint makes each chunk's batch replay-safe.",
 )
 def streaming_incremental_dedup_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .queries_ext import _sink_dir
@@ -1337,45 +1334,24 @@ def streaming_incremental_dedup_q(spark, sf_dir):
     srcdir = _sink_dir("stream_dedup_in", sf_dir)
     store = _sink_dir("stream_dedup_store", sf_dir)
     results = _sink_dir("stream_dedup_admitted", sf_dir)
-    for p in (srcdir, store, results):
+    for p in (store, results):
         shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
-    n_chunks = 4
-    span = (max_id + n_chunks) // n_chunks
-    base_t = 1_700_000_000
-    for k in range(n_chunks):
-        chunk = d.filter(
-            (F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span)
-        )
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))  # oldest-first order
+    span = (max_id + 4) // 4
+    chunks = [
+        d.filter((F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span))
+        for k in range(4)
+    ]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         admitted = DD.dedup_incremental_exact(bdf.sparkSession, store, bdf)
         rebalanced(admitted.select("fp", "doc_id"), probe=True).write.mode("append").parquet(
             results
         )
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_sid_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string"), apply_batch)
     return spark.read.parquet(results).select("fp", "doc_id")
 
 
@@ -1838,10 +1814,7 @@ def quality_classifier_hashed_q(spark, sf_dir):
     "hash match pins the streaming loop's history semantics exactly.",
 )
 def streaming_incremental_embedding_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .queries_ext import _sink_dir
@@ -1849,9 +1822,8 @@ def streaming_incremental_embedding_q(spark, sf_dir):
     srcdir = _sink_dir("stream_emb_in", sf_dir)
     store = _sink_dir("stream_emb_store", sf_dir)
     results = _sink_dir("stream_emb_admitted", sf_dir)
-    for p in (srcdir, store, results):
+    for p in (store, results):
         shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     max_id = e.agg(F.max("vec_id")).first()[0]  # 1-row driver scalar
@@ -1859,37 +1831,17 @@ def streaming_incremental_embedding_q(spark, sf_dir):
     copies = e.filter(F.col("vec_id") % 10 == 1).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
-    base_t = 1_700_000_000
-    for k in range(4):
-        chunk = e.filter(
-            (F.col("vec_id") >= k * span) & (F.col("vec_id") < (k + 1) * span)
-        )
-        if k == 3:
-            chunk = chunk.unionByName(copies)
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
+    chunks = [
+        e.filter((F.col("vec_id") >= k * span) & (F.col("vec_id") < (k + 1) * span))
+        for k in range(4)
+    ]
+    chunks[3] = chunks[3].unionByName(copies)
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         admitted = DD.dedup_incremental_embedding(bdf.sparkSession, store, bdf)
         rebalanced(admitted, probe=True).write.mode("append").parquet(results)
 
-    q = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_sie_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, e.schema), apply_batch)
     return spark.read.parquet(results).select("vec_id")
 
 
@@ -2150,19 +2102,15 @@ def dedup_incremental_minhash_deleted_q(spark, sf_dir):
     "aggregates.",
 )
 def streaming_agg_retract_q(spark, sf_dir):
-    import glob
     import os
     import shutil
-    import tempfile
 
     from .queries_ext import _sink_dir
 
     dec = "decimal(18,6)"
     srcdir = _sink_dir("agg_retract_in", sf_dir)
     state = _sink_dir("agg_retract_stream_state", sf_dir)
-    for p in (srcdir, state):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(state, ignore_errors=True)
 
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
     chunks = [
@@ -2176,19 +2124,8 @@ def streaming_agg_retract_q(spark, sf_dir):
             "event_type", "value", F.lit(-1).alias("sign")
         ),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         s = bdf.sparkSession
         delta = bdf.groupBy("event_type").agg(
             F.sum("sign").cast("bigint").alias("dn"),
@@ -2217,16 +2154,8 @@ def streaming_agg_retract_q(spark, sf_dir):
         # materialize before overwriting the directory we just read
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state)
 
-    q = (
-        spark.readStream.schema("event_type string, value double, sign int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_sar_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sdf = replay_chunks(spark, srcdir, chunks, "event_type string, value double, sign int")
+    drain(sdf, apply_batch)
     st = spark.read.parquet(state)
     return st.select(
         "event_type",
@@ -2466,18 +2395,14 @@ def dedup_clusters_deleted_q(spark, sf_dir):
     "smaller state admits a retraction it cannot answer).",
 )
 def streaming_ohlc_hourly_q(spark, sf_dir):
-    import glob
     import os
     import shutil
-    import tempfile
 
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("ohlc_retract_in", sf_dir)
     state = _sink_dir("ohlc_stream_state", sf_dir)
-    for p in (srcdir, state):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(state, ignore_errors=True)
 
     e = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -2497,21 +2422,9 @@ def streaming_ohlc_hourly_q(spark, sf_dir):
             *cols, F.lit(-1).alias("sign")
         ),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
-
     key = ["event_type", "window_start_ms", "ms", "event_id", "value"]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         s = bdf.sparkSession
         delta = bdf.groupBy(*key).agg(F.sum("sign").cast("bigint").alias("cnt"))
         if os.path.exists(os.path.join(state, "_SUCCESS")):
@@ -2527,19 +2440,11 @@ def streaming_ohlc_hourly_q(spark, sf_dir):
         # materialize before overwriting the directory we just read
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state)
 
-    q = (
-        spark.readStream.schema(
-            "event_type string, window_start_ms bigint, ms bigint, "
-            "event_id bigint, value double, sign int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_ohlc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    schema = (
+        "event_type string, window_start_ms bigint, ms bigint, "
+        "event_id bigint, value double, sign int"
     )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, schema), apply_batch)
     live = spark.read.parquet(state)
     ordk = F.struct(F.col("ms"), F.col("event_id"))
     return live.groupBy("event_type", "window_start_ms").agg(
@@ -2812,16 +2717,9 @@ def semantic_dedup_kmeans_q(spark, sf_dir):
     "emitted aggregate, never raw events.",
 )
 def streaming_late_data_accounting_q(spark, sf_dir):
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("late_acct_in", sf_dir)
-    shutil.rmtree(srcdir, ignore_errors=True)
-    os.makedirs(srcdir)
     e = _t(spark, sf_dir, "events").select(
         "ts", "user_id", F.unix_millis("ts").alias("ms")
     )
@@ -2834,33 +2732,14 @@ def streaming_late_data_accounting_q(spark, sf_dir):
         e.filter((F.col("ms") >= t1) & (F.col("ms") < t2)),
         e.filter((F.col("ms") >= t2) | held),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.select("ts", "user_id").coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
-
+    staged = [c.select("ts", "user_id") for c in chunks]
     agg = (
-        spark.readStream.schema("ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
+        replay_chunks(spark, srcdir, staged, "ts timestamp, user_id long")
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("ns"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("q_late_acct")
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_late_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory_sink(agg, "q_late_acct", output_mode="append")
     streamed = spark.table("q_late_acct").select(
         F.unix_millis(F.col("w.start")).alias("w"), "ns"
     )
@@ -3476,50 +3355,25 @@ def _multipass_er_sql() -> str:
     "function of it.",
 )
 def streaming_snm_er_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.dedup import table_store_ingest, table_store_read
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("snm_er_in", sf_dir)
     store = _sink_dir("snm_er_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     parts = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
     chunks = [parts.filter(F.col("p_partkey") % 4 == k) for k in range(4)]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         table_store_ingest(
             bdf.sparkSession, store, bdf, id_col="p_partkey",
             params={"kind": "er-keys"},
         )
 
-    q = (
-        spark.readStream.schema("p_partkey bigint, p_name string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_snm_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "p_partkey bigint, p_name string"), apply_batch)
     return _multipass_er(table_store_read(spark, store))
 
 
@@ -4257,52 +4111,27 @@ def bm25_index_incremental_q(spark, sf_dir):
     "compact on cadence, serve forever).",
 )
 def streaming_bm25_index_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.retrieval import bm25_index_ingest, bm25_index_topk
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_bm25_in", sf_dir)
     store = _sink_dir("stream_bm25_index", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
-    n_chunks = 4
-    span = (max_id + n_chunks) // n_chunks
-    base_t = 1_700_000_000
-    for k in range(n_chunks):
-        chunk = d.filter(
-            (F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span)
-        )
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))  # oldest-first order
+    span = (max_id + 4) // 4
+    chunks = [
+        d.filter((F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span))
+        for k in range(4)
+    ]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         bm25_index_ingest(bdf.sparkSession, store, bdf)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_sbi_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string"), apply_batch)
     qt = local_df(spark, _BM25_QUERIES, "query_id int, token string")
     return bm25_index_topk(spark, store, qt, k=_BM25_K)
 
@@ -4695,10 +4524,7 @@ def ann_drift_monitor_q(spark, sf_dir):
     "pins.",
 )
 def streaming_drift_retrain_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.retrieval import (
         ann_drift_stats,
@@ -4710,9 +4536,7 @@ def streaming_drift_retrain_q(spark, sf_dir):
 
     srcdir = _sink_dir("drift_retrain_in", sf_dir)
     store = _sink_dir("drift_retrain_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
@@ -4722,35 +4546,16 @@ def streaming_drift_retrain_q(spark, sf_dir):
         rest.filter(F.col("vec_id") % 2 == 0),
         rest.filter(F.col("vec_id") % 2 == 1),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         s = bdf.sparkSession
         ann_index_ingest(s, store, bdf)
         drift = ann_drift_stats(s, store).agg(F.max("drift2").alias("m")).first()[0]
         if drift and drift > 0:
             ann_index_retrain(s, store)
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_adr_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sdf = replay_chunks(spark, srcdir, chunks, "vec_id bigint, embedding array<double>")
+    drain(sdf, apply_batch)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5228,52 +5033,27 @@ SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id FROM reach GROUP BY v
     "forever.",
 )
 def streaming_dedup_clusters_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_cc_in", sf_dir)
     store = _sink_dir("stream_cc_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
-    n_chunks = 4
-    span = (max_id + n_chunks) // n_chunks
-    base_t = 1_700_000_000
-    for k in range(n_chunks):
-        chunk = d.filter(
-            (F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span)
-        )
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))  # oldest-first order
+    span = (max_id + 4) // 4
+    chunks = [
+        d.filter((F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span))
+        for k in range(4)
+    ]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         DD.dedup_incremental_clusters(bdf.sparkSession, store, bdf)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_scc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string"), apply_batch)
     return DD.read_incremental_clusters(spark, store)
 
 
@@ -5900,19 +5680,14 @@ def _quota_sampled_clusters(labels, d):
     "commit all legs transactionally, serve one snapshot forever).",
 )
 def streaming_hybrid_index_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.retrieval import hybrid_index_ingest, hybrid_index_rrf
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_hybrid_in", sf_dir)
     store = _sink_dir("stream_hybrid_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     e = _t(spark, sf_dir, "embeddings").select(
@@ -5920,36 +5695,17 @@ def streaming_hybrid_index_q(spark, sf_dir):
     )
     de = d.join(e, "doc_id")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
-    n_chunks = 4
-    span = (max_id + n_chunks) // n_chunks
-    base_t = 1_700_000_000
-    for k in range(n_chunks):
-        chunk = de.filter(
-            (F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span)
-        )
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))  # oldest-first order
+    span = (max_id + 4) // 4
+    chunks = [
+        de.filter((F.col("doc_id") >= k * span) & (F.col("doc_id") < (k + 1) * span))
+        for k in range(4)
+    ]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         hybrid_index_ingest(bdf.sparkSession, store, bdf)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_shy_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sdf = replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string, embedding array<float>")
+    drain(sdf, apply_batch)
     qt, qv = _hybrid_queries(spark, sf_dir)
     return hybrid_index_rrf(spark, store, qt, qv, shortlist=_RERANK_SHORTLIST, k=_RERANK_K)
 
@@ -6449,10 +6205,8 @@ SELECT {k}, 'bm25', 'postings', 'n_rows',
     "(stores x tables x commits) rows — metadata-sized.",
 )
 def streaming_ops_metrics_q(spark, sf_dir):
-    import glob
     import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .operators.retrieval import bm25_index_ingest
@@ -6462,26 +6216,14 @@ def streaming_ops_metrics_q(spark, sf_dir):
     exact = _sink_dir("stream_ops_exact", sf_dir)
     bm25 = _sink_dir("stream_ops_bm25", sf_dir)
     feed = _sink_dir("stream_ops_feed", sf_dir)
-    for p in (srcdir, exact, bm25, feed):
+    for p in (exact, bm25, feed):
         shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     src_num = F.substring("source", 4, 10).cast("int")
-    base_t = 1_700_000_000
-    for k in range(4):
-        chunk = d.filter((src_num >= 5 * k) & (src_num < 5 * (k + 1)))
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))  # oldest-first order
+    chunks = [d.filter((src_num >= 5 * k) & (src_num < 5 * (k + 1))) for k in range(4)]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         s = bdf.sparkSession
         DD.dedup_incremental_exact(s, exact, bdf)
         bm25_index_ingest(s, bm25, bdf)
@@ -6495,16 +6237,8 @@ def streaming_ops_metrics_q(spark, sf_dir):
             os.path.join(feed, f"seq={seq}")
         )
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_ops_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sdf = replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string, source string")
+    drain(sdf, apply_batch)
     return spark.read.parquet(feed).select(
         F.col("batch_seq").cast("int").alias("batch_seq"),
         "store_kind",
@@ -7165,49 +6899,26 @@ def _span_cutlist_sql(where: str | None = None) -> str:
     "shuffle settings.",
 )
 def streaming_span_store_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_span_in", sf_dir)
     store = _sink_dir("stream_span_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     dd = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
-    base_t = 1_700_000_000
-    bounds = [(0, 7), (7, 14), (14, 99)]
-    for k, (lo, hi) in enumerate(bounds):
-        chunk = dd.filter((src_num >= lo) & (src_num < hi)).select("doc_id", "text")
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
+    chunks = [
+        dd.filter((src_num >= lo) & (src_num < hi)).select("doc_id", "text")
+        for lo, hi in [(0, 7), (7, 14), (14, 99)]
+    ]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         DD.dedup_incremental_spans(bdf.sparkSession, store, bdf)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_sss_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string"), apply_batch)
     return DD.read_incremental_spans(spark, store)
 
 
@@ -7229,19 +6940,14 @@ def streaming_span_store_q(spark, sf_dir):
     "twin that completes CDC parity for the vocabulary family.",
 )
 def streaming_vocab_cdc_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.vocab import pmi_store_ingest, pmi_store_topk
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_vocab_in", sf_dir)
     store = _sink_dir("stream_vocab_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     src = F.col("doc_id") % 3
@@ -7251,31 +6957,11 @@ def streaming_vocab_cdc_q(spark, sf_dir):
         d.filter(src == 2).withColumn("sign", F.lit(1)),
         d.filter(F.col("doc_id") % 9 == 4).withColumn("sign", F.lit(-1)),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         pmi_store_ingest(bdf.sparkSession, store, bdf)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string, sign int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_svc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string, sign int"), apply_batch)
     return pmi_store_topk(spark, store)
 
 
@@ -7357,10 +7043,7 @@ UNION ALL SELECT 'vocab:bi', a || ' ' || b, CAST(c AS BIGINT) FROM vbi
     "regulator-facing deletion log.",
 )
 def streaming_takedown_feed_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators import dedup as DD
     from .operators.takedown import takedown_everywhere
@@ -7371,28 +7054,16 @@ def streaming_takedown_feed_q(spark, sf_dir):
     exact = _sink_dir("stream_td_exact", sf_dir)
     vocab = _sink_dir("stream_td_vocab", sf_dir)
     feed = _sink_dir("stream_td_feed", sf_dir)
-    for p in (srcdir, exact, vocab, feed):
+    for p in (exact, vocab, feed):
         shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     DD.dedup_incremental_exact(spark, exact, d)
     pmi_store_ingest(spark, vocab, d.withColumn("sign", F.lit(1)))
 
-    base_t = 1_700_000_000
-    for k, residue in enumerate((2, 7)):
-        chunk = d.filter(F.col("doc_id") % 11 == residue)
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
+    chunks = [d.filter(F.col("doc_id") % 11 == residue) for residue in (2, 7)]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         s = bdf.sparkSession
         audit = takedown_everywhere(
             s,
@@ -7404,16 +7075,7 @@ def streaming_takedown_feed_q(spark, sf_dir):
             s, sorted(audit.items()), "store string, n bigint"
         ).coalesce(1).write.mode("append").parquet(feed)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_std_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, "doc_id bigint, text string"), apply_batch)
 
     audit_rows = (
         spark.read.parquet(feed)
@@ -7924,19 +7586,14 @@ def matview_compacted_q(spark, sf_dir):
     "one groupBy-SUM behind the freshest commit.",
 )
 def streaming_matview_join_q(spark, sf_dir):
-    import glob
-    import os
     import shutil
-    import tempfile
 
     from .operators.matview import matview_ingest, matview_read
     from .queries_ext import _sink_dir
 
     srcdir = _sink_dir("stream_mv_in", sf_dir)
     store = _sink_dir("stream_mv_store", sf_dir)
-    for p in (srcdir, store):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(srcdir)
+    shutil.rmtree(store, ignore_errors=True)
 
     left = (
         _t(spark, sf_dir, "orders")
@@ -8005,22 +7662,11 @@ def streaming_matview_join_q(spark, sf_dir):
             )
         ),
     ]
-    base_t = 1_700_000_000
-    for k, c in enumerate(chunks):
-        stage = os.path.join(srcdir, f"_stage{k}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
 
     lcols = ["orderkey", "o_custkey", "o_orderstatus", "m"]
     rcols = ["orderkey", "l_linenumber", "l_extendedprice", "l_discount", "m"]
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         ld = bdf.filter(F.col("side") == "L").select(*lcols)
         rd = bdf.filter(F.col("side") == "R").select(*rcols)
         matview_ingest(
@@ -8031,20 +7677,12 @@ def streaming_matview_join_q(spark, sf_dir):
             on="orderkey",
         )
 
-    q = (
-        spark.readStream.schema(
-            "side string, orderkey bigint, o_custkey bigint, "
-            "o_orderstatus string, l_linenumber int, "
-            "l_extendedprice double, l_discount double, m int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_smv_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    schema = (
+        "side string, orderkey bigint, o_custkey bigint, "
+        "o_orderstatus string, l_linenumber int, "
+        "l_extendedprice double, l_discount double, m int"
     )
-    q.awaitTermination()
+    drain(replay_chunks(spark, srcdir, chunks, schema), apply_batch)
     return matview_read(spark, store)
 
 
@@ -9483,36 +9121,14 @@ FROM events GROUP BY user_id
     "unchanged; tests pin that the TWS path is what executes here).",
 )
 def streaming_tws_user_stats_q(spark, sf_dir):
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from .queries_ext import _sink_dir
     from .session import ensure_protobuf
     from .streaming.stateful import running_accumulator, user_stats_tws
-    from .streaming.windows import run_to_memory_sink
 
     srcdir = _sink_dir("stream_tws_in", sf_dir)
-    shutil.rmtree(srcdir, ignore_errors=True)
-    os.makedirs(srcdir)
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    base_t = 1_700_000_000
-    for k in range(3):
-        chunk = e.filter(F.col("event_id") % 3 == k).drop("event_id")
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
-
-    sdf = (
-        spark.readStream.schema("user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-    )
+    chunks = [e.filter(F.col("event_id") % 3 == k).drop("event_id") for k in range(3)]
+    sdf = replay_chunks(spark, srcdir, chunks, "user_id bigint, value double")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(prov_key, None)
     spark.conf.set(
@@ -9978,37 +9594,16 @@ def span_corruption_examples_q(spark, sf_dir):
     "documented fallback).",
 )
 def streaming_tws_event_profile_q(spark, sf_dir):
-    import glob
-    import os
-    import shutil
-
     from .queries_ext import _sink_dir
     from .session import ensure_protobuf
     from .streaming.stateful import event_profile_tws, running_accumulator
-    from .streaming.windows import run_to_memory_sink
 
     srcdir = _sink_dir("stream_tws_profile_in", sf_dir)
-    shutil.rmtree(srcdir, ignore_errors=True)
-    os.makedirs(srcdir)
     e = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base_t = 1_700_000_000
-    for k in range(3):
-        chunk = e.filter(F.col("event_id") % 3 == k).drop("event_id")
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(srcdir, f"chunk_{k:02d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (base_t + 60 * k, base_t + 60 * k))
-
-    sdf = (
-        spark.readStream.schema("user_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-    )
+    chunks = [e.filter(F.col("event_id") % 3 == k).drop("event_id") for k in range(3)]
+    sdf = replay_chunks(spark, srcdir, chunks, "user_id bigint, event_type string, value double")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(prov_key, None)
     spark.conf.set(

@@ -1722,11 +1722,11 @@ def ab_welch_t_q(spark, sf_dir):
 )
 def streaming_merge_apply_q(spark, sf_dir):
     import shutil
-    import tempfile
 
     from .queries_ext import _sink_dir
     from .sources.readers import events_stream
     from .sources.sinks import merge_upsert_latest
+    from .streaming.windows import drain
 
     path = _sink_dir("merge_apply_state", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
@@ -1749,16 +1749,12 @@ def streaming_merge_apply_q(spark, sf_dir):
             payload_cols=["d", "last_value"],
         )
 
-    q = (
+    purchases = (
         events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "ts", "user_id", "value")
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="libmr_ma_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    drain(purchases, apply_batch)
     return spark.read.parquet(path).select(
         "user_id",
         F.col("b").cast("int").alias("b"),

@@ -10,7 +10,6 @@ instead of Spark's legacy default of 200.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -98,9 +97,12 @@ def _ship_package(spark: SparkSession) -> None:
     register-on-every-node-at-load (``/root/reference/src/mr.c:1698-1762``).
     ``addPyFile`` ships a zip of the package through Spark's file
     server, which works identically on a real cluster and in local mode.
+    The zip lives in the SparkContext's own temporary directory, which
+    Spark removes at shutdown, so sessions that share ``TMPDIR`` (two
+    checkouts side by side) never overwrite each other's zip.
     """
     pkg_dir = os.path.join(_package_root(), "libmr_spark")
-    zpath = os.path.join(tempfile.gettempdir(), "libmr_spark_pkg.zip")
+    zpath = os.path.join(spark.sparkContext._temp_dir, "libmr_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

@@ -331,3 +331,37 @@ def test_python_map_comma_typed_schema(spark, sf_dir):
     assert len(res.results) == 5 and res.errors == []
     r0 = sorted(res.results, key=lambda r: r.key)[0]
     assert r0.price is not None and r0.tags["n"] == len(r0.key)
+
+
+def test_package_zip_is_per_session_and_imports_on_executors(spark, tmp_path, monkeypatch):
+    # the shipped zip lives in the SparkContext's own temporary
+    # directory, never at one fixed path under TMPDIR that another
+    # session (another checkout) could overwrite
+    import os
+    import tempfile
+
+    from libmr_spark import session
+
+    sc = spark.sparkContext
+    shipped = []
+    monkeypatch.setattr(sc, "_temp_dir", str(tmp_path))
+    monkeypatch.setattr(sc, "addPyFile", shipped.append)
+    session._ship_package(spark)
+    assert shipped == [str(tmp_path / "libmr_spark_pkg.zip")]
+    assert shipped[0] != os.path.join(tempfile.gettempdir(), "libmr_spark_pkg.zip")
+    monkeypatch.undo()
+
+    def on_executor(_):
+        # the package imports, and the session's zip reached the worker
+        # whole
+        import sys
+        import zipfile
+
+        import libmr_spark
+
+        zips = [p for p in sys.path if p.endswith("libmr_spark_pkg.zip")]
+        return libmr_spark.__name__, [
+            "libmr_spark/session.py" in zipfile.ZipFile(z).namelist() for z in zips
+        ]
+
+    assert sc.parallelize([0], 1).map(on_executor).collect() == [("libmr_spark", [True])]
