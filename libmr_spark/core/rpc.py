@@ -37,8 +37,9 @@ Its three consumers add their own conditions on top:
   (``smalldf._KEY_TYPES``); every column is of an Arrow-exact type
   (``smalldf.exact_type``; timestamps and nested types do not qualify)
   and every file stores each column it has under that exact name and
-  Arrow type; a hive-partitioned scan has a single root path; and the
-  input is under ``smalldf._POINT_READ_DRIVER_MAX_BYTES``.
+  Arrow type (``smalldf.stored_exactly``); a hive-partitioned scan has
+  a single root path; and the input is under
+  ``smalldf._DRIVER_READ_MAX_BYTES``.
 - ``run_on_all_shards`` with the built-in ``dbsize`` task and no
   ``args``, and
 - ``internal_command`` when every command needs only a row count
@@ -74,7 +75,7 @@ from pyspark.storagelevel import StorageLevel
 
 from .builder import run_with_job_group_timeout
 from .registry import GLOBAL_REGISTRY, Registry, StepType
-from .smalldf import _KEY_TYPES, _POINT_READ_DRIVER_MAX_BYTES, exact_type, local_df
+from .smalldf import _DRIVER_READ_MAX_BYTES, _KEY_TYPES, exact_type, local_df, stored_exactly
 
 #: Error string raised when a per-call RPC deadline passes; matches the
 #: reference's "Remote task timeout" (/root/reference/src/mr.c:2085-2099).
@@ -142,7 +143,7 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
     index = rel.location()
     part_names = T.StructType.fromJson(json.loads(rel.partitionSchema().json())).names
     roots = index.rootPaths()
-    if index.sizeInBytes() >= _POINT_READ_DRIVER_MAX_BYTES or (part_names and roots.size() != 1):
+    if index.sizeInBytes() >= _DRIVER_READ_MAX_BYTES or (part_names and roots.size() != 1):
         return None
     uris = df.inputFiles()
 
@@ -151,7 +152,6 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(df.schema)
-    by_lower = {n.lower(): n for n in schema.names}
     try:
         data = ds.dataset(
             [_local_path(u) for u in uris],
@@ -164,15 +164,8 @@ def _driver_local_hit(df: DataFrame, key_col: str, key: Any) -> DataFrame | None
             ) if part_names else None,
             partition_base_dir=roots.head().toUri().getPath() if part_names else None,
         )
-        for frag in data.get_fragments():
-            for f in frag.physical_schema:
-                name = by_lower.get(f.name.lower())
-                # Spark matches names case-insensitively and takes partition
-                # values over file columns: only exact matches read the same
-                if name is not None and (
-                    name != f.name or name in part_names or schema.field(name).type != f.type
-                ):
-                    return None
+        if not all(stored_exactly(schema, frag.physical_schema, part_names) for frag in data.get_fragments()):
+            return None
         value = pa.scalar(key, schema.field(key_col).type)
         table = data.to_table(filter=ds.field(key_col) == value)
     except pa.ArrowException:

@@ -7,8 +7,10 @@ call when the data is local (``src/mr.c:2133-2136``); here such a frame
 is a ``LocalRelation``, whose actions start no Spark job (``is_local``).
 ``local_df`` builds one from rows or an Arrow table, and the fast paths
 that act on the driver (``rpc.run_on_key``'s point read,
-``sinks.merge_upsert``'s batch checks, the union-find of
-``operators.dedup``) take their type tables and size bounds from here.
+``sinks.merge_upsert``'s batch checks and its pyarrow merge of the
+touched partitions, the union-find of ``operators.dedup``) take their
+type tables, file-schema rule (``stored_exactly``) and size bounds from
+here.
 """
 
 from __future__ import annotations
@@ -48,12 +50,17 @@ _KEY_TYPES = {
     datetime.date: (T.DateType,),
 }
 
-#: Input-byte ceiling of ``run_on_key``'s driver-local read. It sits at
-#: the measured crossover: on a 16-bucket kv store (``local[3]``, 4-core
-#: host) the pyarrow read plus ``LocalRelation`` costs 113 ms at 32 MB
-#: against 203 ms for the Spark filter, 170 against 183 ms at 51 MB, and
-#: 220 against 159 ms at 65 MB. Above it the Spark filter runs unchanged.
-_POINT_READ_DRIVER_MAX_BYTES = 48 << 20
+#: Input-byte ceiling of the driver-local parquet reads: ``run_on_key``'s
+#: point read and ``merge_upsert``'s pyarrow merge of the touched
+#: partitions. Above it both take their Spark route unchanged. On a
+#: 4-core host (``local[3]``), for the point read on a 16-bucket kv store
+#: it sits at the measured crossover: the pyarrow read plus
+#: ``LocalRelation`` costs 113 ms at 32 MB against 203 ms for the Spark
+#: filter, 170 against 183 ms at 51 MB, and 220 against 159 ms at 65 MB.
+#: The merge wins at every size below it: a 256-key upsert into one
+#: bucket of 8.2 / 25.1 / 46.4 MiB took 220 / 542 / 872 ms on the driver
+#: against 1283 / 2060 / 3144 ms (3 jobs) through Spark (p50 of 6).
+_DRIVER_READ_MAX_BYTES = 48 << 20
 
 #: Edge/hop-count ceiling for the driver-local fast paths in
 #: ``dedup.connected_components`` and ``dedup._resolve_remap``: below it
@@ -75,6 +82,21 @@ def exact_type(dt: T.DataType, types: tuple = _ARROW_EXACT_TYPES) -> bool:
     string compares differently from its UTF-8 bytes) or one of
     ``types``."""
     return dt == T.StringType() or isinstance(dt, types)
+
+
+def stored_exactly(schema, physical, part_names) -> bool:
+    """Whether pyarrow reads a parquet file whose Arrow schema is
+    ``physical`` as Spark does under the Arrow ``schema``: Spark matches
+    names case-insensitively and takes partition values over file
+    columns, so each stored column that matches a field of ``schema``
+    must carry that field's exact name and Arrow type, and must not be
+    one of ``part_names``."""
+    by_lower = {n.lower(): n for n in schema.names}
+    for f in physical:
+        name = by_lower.get(f.name.lower())
+        if name is not None and (name != f.name or name in part_names or schema.field(name).type != f.type):
+            return False
+    return True
 
 
 def is_local(df: DataFrame) -> bool:

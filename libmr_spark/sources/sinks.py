@@ -12,6 +12,8 @@ file.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -40,48 +42,75 @@ def merge_upsert(
 ) -> None:
     """Copy-on-write MERGE (upsert) into a hive-partitioned parquet
     table: rows in ``updates`` replace base rows with the same key;
-    unmatched update rows are inserted.
+    unmatched update rows are inserted. Only the partitions present in
+    the updates are read and rewritten, each as one file for a KB-scale
+    batch; the others are never touched. ``staging_path`` is unused and
+    kept for callers that pass it.
 
-    The 100 TB shape: only partitions PRESENT IN THE UPDATES are
-    rewritten — untouched partitions are never read or written
-    (partition pruning on the read, ``partitionOverwriteMode=dynamic``
-    on the write). The affected-partition list is collected to the
-    driver, bounded by the table's partition count, and pushed into
-    the base scan as an ``isin`` filter so pruning happens at the
-    file listing. Survivors (base rows not matched by an update key)
-    come from a left-anti join over the touched partitions' rows, and
-    each touched partition is rewritten as advisory-sized files
-    (``rebalanced``): one file for a KB-scale batch.
-
-    The merge is ONE Spark write of the touched partitions straight
-    into ``base_path``. Spark accepts a dynamic overwrite of a path the
-    same plan reads: its tasks write under the hidden
-    ``base_path/.spark-staging-<job>`` directory (readers skip it), and
-    the job commit then deletes each touched partition's directory and
-    renames the staged one into its place. That per-partition
-    delete+rename is the whole exposure window: a reader listing the
-    table inside it can miss the partition, and a process killed inside
-    it leaves the partition missing. A failed write aborts before the
-    commit and leaves the table exactly as it was. A log-based table
-    format turns the commit into one metadata swap; semantics and
-    partition scoping are identical. ``staging_path`` is unused and
-    kept for callers that pass it. The base is opened with the data
-    schema of one Spark-written footer (``_footer_data_schema``), so the
-    open runs no schema-inference job.
-
-    The batch is checked before the write: at most one row per key,
-    and the partition list. A driver-bounded batch (``smalldf.is_local``:
-    built by ``smalldf.local_df`` or from pandas/Arrow) whose key and
+    The batch is checked first: at most one row per key, and the
+    partition list. A driver-bounded batch (``smalldf.is_local``: built
+    by ``smalldf.local_df`` or from pandas/Arrow) whose key and
     partition columns group in Spark exactly as their Python values
-    compare is checked on the driver from one ``collect`` that starts no
-    Spark job; any other batch is checked by Spark. Both raise the same
-    ``ValueError``.
+    compare is gathered by one ``collect`` that starts no Spark job and
+    checked on the driver; any other batch is checked by Spark. Both
+    raise the same ``ValueError``.
+
+    **Driver route.** The reference calls a shard directly when it is
+    local (``src/mr.c:2133-2136``). A batch gathered on the driver is
+    merged with pyarrow, with no Spark job, when every condition holds:
+
+    - ``base_path`` is a local directory whose data schema comes from a
+      Spark-written footer (``_footer_data_schema``: ``mergeSchema`` off,
+      no summary file), and whose entries Spark lists are all
+      ``<partition_col>=<v>`` directories, ``v`` a canonical integer or
+      Spark's null partition;
+    - the batch columns are exactly the base data columns plus
+      ``partition_col``, by name, each of the base column's type, which
+      is Arrow-exact (``smalldf.exact_type``); the keys name batch
+      columns; ``partition_col`` is integral, needs no path escaping,
+      and holds no null;
+    - each touched partition directory holds only files, every file
+      stores each column under its exact name and Arrow type
+      (``smalldf.stored_exactly``), no footer asks for the legacy date
+      calendar, and the touched files total less than
+      ``smalldf._DRIVER_READ_MAX_BYTES``.
+
+    The touched partitions are read, the base rows whose keys occur in
+    the batch are dropped (an Arrow left-anti join, where null keys
+    never match, as in Spark's), and the batch rows are appended. Each
+    touched partition is written as one file that carries the base
+    footer's Spark metadata, so later opens still read their schema
+    from it. The files are staged under one hidden
+    ``base_path/.merge-<uuid>/``; an error while staging removes it and
+    leaves the table as it was. Then each partition is published by two
+    renames: the live directory into the staging directory, the staged
+    one into its place; the old files are removed after. Between the
+    two renames a reader that lists the table misses the partition, and
+    a process killed there leaves it missing, with its old files kept
+    under the staging directory. That window is no wider than the Spark
+    route's commit; neither is atomic.
+
+    **Spark route.** Any other batch or base is merged by ONE Spark
+    write of the touched partitions straight into ``base_path``: the
+    touched partitions' rows (an ``isin`` filter that prunes at the file
+    listing) minus the batch keys (a left-anti join), plus the batch,
+    written as advisory-sized files (``rebalanced``) under
+    ``partitionOverwriteMode=dynamic``. Spark's tasks write under the
+    hidden ``base_path/.spark-staging-<job>``, and the job commit
+    deletes each touched partition's directory and renames the staged
+    one into its place: a failed write aborts before the commit and
+    leaves the table exactly as it was, and the per-partition
+    delete+rename is the exposure window. The base is opened with the
+    data schema of one Spark-written footer when there is one, so the
+    open runs no schema-inference job. A log-based table format turns
+    either commit into one metadata swap.
     """
     from pyspark.sql import functions as F
 
     from ..core.layout import rebalanced
 
-    dup, parts = _check_batch(updates, keys, partition_col)
+    rows = _driver_rows(updates, keys, partition_col)
+    dup, parts = _check_batch(updates, keys, partition_col, rows)
     if dup is not None:
         raise ValueError(
             f"duplicate key in update batch (e.g. {dict(zip(keys, dup))}): "
@@ -92,7 +121,12 @@ def merge_upsert(
         # rows would produce a schema-less parquet dir that poisons the
         # next read (a quiet micro-batch must be a no-op)
         return
-    schema = _footer_data_schema(spark, base_path)
+    footer = _spark_footer(spark, base_path)
+    if rows is not None and footer is not None and _driver_merge(
+        base_path, footer, updates.schema, [r[len(keys) + 1:] for r in rows], keys, partition_col, parts
+    ):
+        return
+    schema = footer[0] if footer is not None else None
     base = (spark.read.schema(schema) if schema is not None else spark.read).parquet(base_path)
     touched = base.filter(F.col(partition_col).isin(parts))
     survivors = touched.join(updates.select(*keys), keys, "left_anti")
@@ -106,22 +140,28 @@ def merge_upsert(
 #: types (``ParquetFileFormat.readSchemaFromFooter``).
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+#: The footer key of a file whose dates Spark wrote in the legacy
+#: hybrid calendar and rebases on read; pyarrow reads them unrebased.
+_SPARK_LEGACY_DATES_KEY = b"org.apache.spark.legacyDateTime"
+
+#: A hive partition directory value that Spark reads back as exactly
+#: the integer it spells, or Spark's null partition.
+_CANONICAL_INT_PARTITION = re.compile(r"0|-?[1-9][0-9]*|__HIVE_DEFAULT_PARTITION__")
+
 
 def _hidden(name: str) -> bool:
     """Spark's rule for paths a file-index listing skips."""
     return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
 
 
-def _footer_data_schema(spark, path: str):
-    """The data schema Spark would infer for the parquet table at
-    ``path``, read from the Spark schema in the footer of one data file
-    with pyarrow, so the open starts no schema-inference job; Spark
-    still infers the hive partition columns from the directory names.
-    Spark's inference with ``mergeSchema`` off also reads one footer
-    and assumes the files agree. None (infer as usual) when
-    ``mergeSchema`` is on, the table has a summary file, the file was
-    not written by Spark or stores a partition column, or the read
-    fails."""
+def _spark_footer(spark, path: str):
+    """(the data schema, the Spark key-value metadata) of the footer
+    Spark's schema inference would read for the parquet table at
+    ``path``: the first data file in listing order. Spark's inference
+    with ``mergeSchema`` off also reads one footer and assumes the files
+    agree. None when ``mergeSchema`` is on, the table has a summary
+    file, the file was not written by Spark or stores a partition
+    column, or the read fails."""
     import json
     import os
 
@@ -140,36 +180,60 @@ def _footer_data_schema(spark, path: str):
             continue
         part_cols = {d.split("=", 1)[0].lower() for d in os.path.relpath(root, path).split(os.sep) if "=" in d}
         try:
-            raw = (pq.read_metadata(os.path.join(root, data[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+            metadata = pq.read_metadata(os.path.join(root, data[0])).metadata or {}
         except (pa.ArrowException, OSError):
             return None
-        if raw is None:
+        if _SPARK_SCHEMA_KEY not in metadata:
             return None
-        schema = T.StructType.fromJson(json.loads(raw))
-        return None if any(f.name.lower() in part_cols for f in schema.fields) else schema
+        schema = T.StructType.fromJson(json.loads(metadata[_SPARK_SCHEMA_KEY]))
+        if any(f.name.lower() in part_cols for f in schema.fields):
+            return None
+        return schema, {k: v for k, v in metadata.items() if k.startswith(b"org.apache.spark.")}
     return None
 
 
-def _check_batch(updates: DataFrame, keys: list[str], partition_col: str) -> tuple[tuple | None, list]:
-    """A merge batch's checks: (the values of one key that occurs more
-    than once, or None; the distinct ``partition_col`` values). A
-    driver-bounded batch whose key and partition columns are of
-    ``smalldf._DRIVER_GROUPABLE_TYPES`` is checked from one job-free
-    ``collect``; any other by Spark."""
-    from pyspark.sql import functions as F
+def _footer_data_schema(spark, path: str):
+    """The data schema Spark would infer for the parquet table at
+    ``path``, read from one Spark-written footer with pyarrow
+    (``_spark_footer``), so the open starts no schema-inference job;
+    Spark still infers the hive partition columns from the directory
+    names. None (infer as usual) where ``_spark_footer`` gives none."""
+    footer = _spark_footer(spark, path)
+    return footer[0] if footer is not None else None
 
+
+def _driver_rows(updates: DataFrame, keys: list[str], partition_col: str) -> list | None:
+    """A driver-bounded batch whose key and partition columns are of
+    ``smalldf._DRIVER_GROUPABLE_TYPES``, gathered by one job-free
+    ``collect``: each row holds the key values, the partition value,
+    then every column of ``updates``. None for any other batch."""
     from ..core.smalldf import _DRIVER_GROUPABLE_TYPES, exact_type, is_local
 
-    cols = updates.select(*keys, partition_col)
-    if is_local(updates) and all(exact_type(f.dataType, _DRIVER_GROUPABLE_TYPES) for f in cols.schema.fields):
-        rows = cols.collect()
+    lead = updates.select(*keys, partition_col)
+    if is_local(updates) and all(exact_type(f.dataType, _DRIVER_GROUPABLE_TYPES) for f in lead.schema.fields):
+        return updates.select(*keys, partition_col, "*").collect()
+    return None
+
+
+def _check_batch(
+    updates: DataFrame, keys: list[str], partition_col: str, rows: list | None = None
+) -> tuple[tuple | None, list]:
+    """A merge batch's checks: (the values of one key that occurs more
+    than once, or None; the distinct ``partition_col`` values). A batch
+    that ``_driver_rows`` gathers (``rows``, else gathered here) is
+    checked on the driver; any other by Spark."""
+    from pyspark.sql import functions as F
+
+    if rows is None:
+        rows = _driver_rows(updates, keys, partition_col)
+    if rows is not None:
         seen: set[tuple] = set()
         for r in rows:
             key = tuple(r[: len(keys)])
             if key in seen:
                 return key, []
             seen.add(key)
-        return None, list(dict.fromkeys(r[-1] for r in rows))
+        return None, list(dict.fromkeys(r[len(keys)] for r in rows))
 
     # MERGE contract: at most one source row per key (SQL MERGE raises
     # on multiple matches; silently inserting both would double rows)
@@ -177,6 +241,107 @@ def _check_batch(updates: DataFrame, keys: list[str], partition_col: str) -> tup
     if dup:
         return tuple(dup[0][:-1]), []
     return None, [r[0] for r in updates.select(partition_col).distinct().collect()]
+
+
+def _driver_merge(base_path: str, footer, batch_schema, rows: list, keys: list[str], partition_col: str,
+                  parts: list) -> bool:
+    """``merge_upsert``'s driver route over the batch ``rows`` (tuples
+    in ``batch_schema`` order) and the base's ``_spark_footer``: True
+    when the merge is published, False, with nothing written, when the
+    batch or the base fails the gate in ``merge_upsert``'s docstring."""
+    import os
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..core.smalldf import _DRIVER_READ_MAX_BYTES, _KEY_TYPES, exact_type, stored_exactly
+
+    data_schema, metadata = footer
+    types = {f.name: f.dataType for f in batch_schema.fields}
+    part_type = types.pop(partition_col, None)
+    prefix = f"{partition_col}="
+    if (
+        len(batch_schema.fields) != len(data_schema.fields) + 1
+        or types != {f.name: f.dataType for f in data_schema.fields}
+        or not all(exact_type(t) for t in types.values())
+        or not isinstance(part_type, _KEY_TYPES[int])
+        or not partition_col.replace("_", "").isalnum()  # Spark escapes no such name
+        or not set(keys) <= set(batch_schema.names)
+        or None in parts
+        or _SPARK_LEGACY_DATES_KEY in metadata
+        or not all(
+            d.startswith(prefix) and _CANONICAL_INT_PARTITION.fullmatch(d[len(prefix):])
+            and os.path.isdir(os.path.join(base_path, d))
+            for d in os.listdir(base_path) if not _hidden(d)
+        )
+    ):
+        return False
+    files, size = [], 0
+    for v in parts:
+        live = os.path.join(base_path, f"{prefix}{v}")
+        for name in os.listdir(live) if os.path.isdir(live) else ():
+            path = os.path.join(live, name)
+            if os.path.isdir(path):
+                return False
+            if not _hidden(name):
+                files.append(path)
+                size += os.path.getsize(path)
+    if size >= _DRIVER_READ_MAX_BYTES:
+        return False
+
+    schema = to_arrow_schema(T.StructType(
+        [T.StructField(f.name, f.dataType) for f in (*data_schema.fields, batch_schema[partition_col])]
+    ))
+    columns = dict(zip(batch_schema.names, zip(*rows)))
+    try:
+        data = ds.dataset(
+            files, schema=schema, format="parquet",
+            partitioning=ds.partitioning(pa.schema([schema.field(partition_col)]), flavor="hive"),
+            partition_base_dir=base_path,
+        )
+        for frag in data.get_fragments():
+            physical = frag.physical_schema
+            if not stored_exactly(schema, physical, [partition_col]) or _SPARK_LEGACY_DATES_KEY in (
+                physical.metadata or {}
+            ):
+                return False
+        batch = pa.table([pa.array(columns[f.name], f.type) for f in schema], schema=schema)
+        survivors = data.to_table().join(batch.select(keys), keys, join_type="left anti", use_threads=False)
+    except (pa.ArrowException, OSError):
+        return False
+    merged = pa.concat_tables([survivors, batch])
+
+    stage = os.path.join(base_path, f".merge-{uuid.uuid4().hex}")
+    try:
+        for v in parts:
+            os.makedirs(os.path.join(stage, f"{prefix}{v}"))
+            part = merged.filter(pc.equal(merged[partition_col], v)).drop_columns([partition_col])
+            # Spark's writer drops a column's dictionary when its first page
+            # shows it does not pay; pyarrow keeps it, a third more bytes on
+            # a column of unique keys
+            head = part.slice(0, 1 << 16)
+            pq.write_table(
+                part.replace_schema_metadata(metadata),
+                os.path.join(stage, f"{prefix}{v}", f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
+                use_dictionary=[c for c in head.column_names if 2 * pc.count_distinct(head[c]).as_py() <= len(head)],
+            )
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    for v in parts:
+        live, aside = os.path.join(base_path, f"{prefix}{v}"), os.path.join(stage, f"live-{v}")
+        if os.path.isdir(live):
+            os.rename(live, aside)
+        os.rename(os.path.join(stage, f"{prefix}{v}"), live)
+        shutil.rmtree(aside, ignore_errors=True)
+    os.rmdir(stage)
+    return True
 
 
 def compact_small_files(

@@ -297,57 +297,95 @@ def _spark_jobs(spark, fn):
 
 def test_merge_upsert_randomized_scenarios(spark, sf_dir, tmp_path):
     # seeded random update batches vs an in-memory reference merge:
-    # covers pure-update, pure-insert, mixed, multi-partition, and
-    # empty batches, each as a driver-checked and a Spark-checked
-    # batch; plus the duplicate-source-key contract in both shapes
+    # pure-update, pure-insert, mixed, multi-partition, new-partition and
+    # empty batches, with null keys in the base and the batch, over a
+    # one-column key, a two-column key and a key that holds the partition
+    # column. Each batch is merged in both shapes: the
+    # driver-checked one on the driver with no Spark job, leaving one file
+    # per touched partition of a multi-file base, the Spark-checked one by
+    # Spark; both leave the same table and schema. A driver-merged store
+    # keeps its footer schema and its zero-job point reads and dbsize.
+    # Plus the duplicate-source-key contract in both shapes.
     import random
 
     import pytest as _pytest
 
-    from libmr_spark.sources.sinks import merge_upsert
+    from libmr_spark.core import rpc
+    from libmr_spark.sources.sinks import _footer_data_schema, merge_upsert
 
     rng = random.Random(42)
-    base_rows = [(k, k % 5, float(k)) for k in range(200)]
-    schema = "k bigint, p int, v double"
+    schema = "k bigint, j string, p int, v double"
+    base_rows = [(k, f"j{k % 3}", k % 5, float(k)) for k in range(200)]
+    base_rows += [(None, "j0", 1, -1.0), (None, None, 2, -2.0)]
+    by_key = {k: r for r in base_rows if (k := r[0]) is not None}
 
     def fresh(name):
         path = str(tmp_path / name)
-        spark.createDataFrame(base_rows, schema).write.mode("overwrite").partitionBy(
+        spark.createDataFrame(base_rows, schema).repartition(3).write.mode("overwrite").partitionBy(
             "p"
         ).parquet(path)
         return path
 
     def table(path):
-        return sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect()))
+        return sorted(map(tuple, spark.read.parquet(path).select("k", "j", "p", "v").collect()), key=repr)
 
-    for trial in range(4):
-        upd_keys = rng.sample(range(200), rng.randint(0, 40))          # updates
-        ins_keys = rng.sample(range(1000, 1100), rng.randint(0, 20))   # inserts
-        upd_rows = [(k, k % 5, float(k) + 0.5) for k in upd_keys] + [
-            (k, k % 5, -1.0) for k in ins_keys
-        ]
-        if not upd_rows:
-            continue
-        ref = {k: (k, k % 5, float(k)) for k in range(200)}
-        for k, p, v in upd_rows:
-            ref[k] = (k, p, v)
-        for shape, batch in _batch_shapes(spark, upd_rows, schema).items():
-            path = fresh(f"tbl{trial}_{shape}")
-            merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
-            assert table(path) == sorted(ref.values()), f"trial {trial} {shape}"
+    def reference(batch_rows, keys):
+        def key(r):
+            return tuple(r[("k", "j", "p", "v").index(c)] for c in keys)
+
+        hit = {key(r) for r in batch_rows if None not in key(r)}
+        parts = {r[2] for r in batch_rows}
+        return sorted([r for r in base_rows if r[2] not in parts or key(r) not in hit] + batch_rows, key=repr)
+
+    def parquet_files(path, part):
+        return [f for f in os.listdir(os.path.join(path, f"p={part}")) if f.endswith(".parquet")]
+
+    base_schema = _footer_data_schema(spark, fresh("tbl_base"))
+    for keys in (["k"], ["k", "j"], ["k", "p"]):
+        for trial in range(4):
+            upd = rng.sample(range(200), rng.randint(0, 40))
+            ins = rng.sample(range(1000, 1100), rng.randint(0, 20))
+            batch_rows = [(k, by_key[k][1], k % 5, float(k) + 0.5) for k in upd] + [
+                (k, "new", rng.randint(0, 6), -1.0) for k in ins  # p 5 and 6 are new partitions
+            ]
+            if not batch_rows:
+                continue
+            if trial % 2:
+                batch_rows.append((None, "j0", 1, 9.0))  # a null key never matches
+            want = reference(batch_rows, keys)
+            got = {}
+            for shape, batch in _batch_shapes(spark, batch_rows, schema).items():
+                path = fresh(f"tbl_{'_'.join(keys)}_{trial}_{shape}")
+                assert all(len(parquet_files(path, part)) > 1 for part in range(5))
+                _, jobs = _spark_jobs(spark, lambda: merge_upsert(spark, path, batch, keys=keys, partition_col="p"))
+                got[shape] = table(path), spark.read.parquet(path).schema
+                assert got[shape][0] == want, f"{keys} trial {trial} {shape}"
+                if shape == "local":
+                    assert jobs == 0, f"{keys} trial {trial}"
+                    assert all(len(parquet_files(path, part)) == 1 for part in {r[2] for r in batch_rows})
+                    assert _footer_data_schema(spark, path) == base_schema
+                    df = spark.read.schema(base_schema).parquet(path)
+                    k = batch_rows[0][0]
+                    hit, jobs = _spark_jobs(spark, lambda: rpc.run_on_key(df, "k", k).collect())
+                    assert (sorted(map(tuple, hit), key=repr), jobs) == (
+                        sorted(((k, j, v, p) for k2, j, p, v in want if k2 == k), key=repr), 0)
+                    sizes, jobs = _spark_jobs(spark, lambda: rpc.run_on_all_shards(df, "dbsize", "n bigint").collect())
+                    assert (sum(r.n for r in sizes), jobs) == (len(want), 0)
+            assert got["local"] == got["spark"], f"{keys} trial {trial}"
 
     # duplicate source keys must be rejected alike in both shapes, and
     # the base untouched: a repeated key, a repeated null key, and one
     # key in two partitions
-    for dup_rows in ([(1, 1, 9.0), (1, 1, 8.0)], [(None, 1, 9.0), (2, 2, 1.0), (None, 1, 8.0)],
-                     [(3, 3, 9.0), (3, 4, 8.0)]):
+    for dup_rows in ([(1, "j1", 1, 9.0), (1, "j1", 1, 8.0)],
+                     [(None, "j0", 1, 9.0), (2, "j2", 2, 1.0), (None, "j0", 1, 8.0)],
+                     [(3, "j0", 3, 9.0), (3, "j0", 4, 8.0)]):
         messages = set()
         for shape, batch in _batch_shapes(spark, dup_rows, schema).items():
             path = fresh(f"tbl_dup_{shape}")
             with _pytest.raises(ValueError, match="duplicate key") as err:
                 merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
             messages.add(str(err.value))
-            assert table(path) == sorted(base_rows), shape
+            assert table(path) == sorted(base_rows, key=repr), shape
         assert len(messages) == 1, messages
 
 
@@ -417,6 +455,103 @@ def test_merge_upsert_failed_write_leaves_base_unchanged(spark, tmp_path):
     merge_upsert(spark, path, spark.createDataFrame([(7, 3, "seven")], schema), keys=["k"], partition_col="p")
     got = sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect()))
     assert got == sorted([r for r in base_rows if r[0] != 7] + [(7, 3, "seven")])
+
+
+def test_merge_upsert_driver_route_falls_back_to_spark(spark, tmp_path, monkeypatch):
+    # a driver-checked batch whose merge fails the driver gate is merged
+    # by Spark: with the jobs that takes, into the table the Spark-checked
+    # batch leaves, or raising the same exception class (Spark's analysis
+    # errors start no job)
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from libmr_spark.core import smalldf
+    from libmr_spark.sources.sinks import merge_upsert
+
+    kv = "k bigint, p int, v string"
+
+    def spark_base(schema, rows, parts=("p",)):
+        def make(path):
+            spark.createDataFrame(rows, schema).write.partitionBy(*parts).parquet(path)
+        return make
+
+    def pyarrow_base(path):
+        for p in range(2):
+            os.makedirs(os.path.join(path, f"p={p}"))
+            pq.write_table(pa.table({"k": pa.array([p, p + 2], pa.int64()), "v": ["a", "b"]}),
+                           os.path.join(path, f"p={p}", "part-0.parquet"))
+
+    kv_rows = [(k, k % 2, f"v{k}") for k in range(10)]
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    cases = {
+        "missing base": (lambda path: None, kv, [(1, 1, "new")]),
+        "extra column": (spark_base(kv, kv_rows), "k bigint, p int, v string, w int", [(1, 1, "new", 5)]),
+        "int over string": (spark_base(kv, kv_rows), "k bigint, p int, v int", [(1, 1, 7), (20, 0, 8)]),
+        "timestamp column": (spark_base("k bigint, p int, t timestamp", [(k, k % 2, ts) for k in range(10)]),
+                             "k bigint, p int, t timestamp", [(1, 1, ts.replace(year=2025)), (30, 0, ts)]),
+        "pyarrow base": (pyarrow_base, kv, [(1, 1, "new"), (9, 0, "ins")]),
+        "mergeSchema on": (spark_base(kv, kv_rows), kv, [(1, 1, "new")]),
+        "two levels": (spark_base("k bigint, p int, q int, v string", [(k, k % 2, k % 3, "v") for k in range(10)],
+                                  ("p", "q")), kv, [(1, 1, "new")]),
+        "over the ceiling": (spark_base(kv, kv_rows), kv, [(1, 1, "new"), (20, 0, "ins")]),
+    }
+    for case, (make, schema, rows) in cases.items():
+        outcome = {}
+        with monkeypatch.context() as m:
+            if case == "mergeSchema on":
+                spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+            if case == "over the ceiling":
+                m.setattr(smalldf, "_DRIVER_READ_MAX_BYTES", 1)
+            try:
+                for shape, batch in _batch_shapes(spark, rows, schema).items():
+                    path = str(tmp_path / case.replace(" ", "_") / shape)
+                    make(path)
+                    try:
+                        _, jobs = _spark_jobs(spark, lambda: merge_upsert(spark, path, batch, ["k"], "p"))
+                    except Exception as e:  # the Spark route's error, in either shape
+                        outcome[shape] = type(e)
+                    else:
+                        assert jobs > 0, (case, shape)
+                        df = spark.read.parquet(path)
+                        outcome[shape] = sorted(map(tuple, df.collect()), key=repr), df.schema
+            finally:
+                spark.conf.unset("spark.sql.parquet.mergeSchema")
+        assert outcome["local"] == outcome["spark"], case
+
+
+def test_merge_upsert_driver_write_failure_leaves_base_unchanged(spark, tmp_path, monkeypatch):
+    # the driver route stages every touched partition before it publishes
+    # any: a write that fails on the second partition leaves the table
+    # as it was, with no new file and no staging directory
+    import pyarrow.parquet as pq
+
+    from libmr_spark.sources.sinks import merge_upsert
+
+    schema = "k bigint, p int, v string"
+    path = str(tmp_path / "tbl")
+    base_rows = [(k, k % 4, f"v{k}") for k in range(100)]
+    spark.createDataFrame(base_rows, schema).write.partitionBy("p").parquet(path)
+    files = set(spark.read.parquet(path).inputFiles())
+    batch = _batch_shapes(spark, [(1, 1, "new"), (2, 2, "new")], schema)["local"]
+    writes = []
+    write_table = pq.write_table
+
+    def fail_second(table, where, **kw):
+        writes.append(where)
+        if len(writes) == 2:
+            raise OSError("injected write failure")
+        write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", fail_second)
+    with pytest.raises(OSError, match="injected write failure"):
+        merge_upsert(spark, path, batch, keys=["k"], partition_col="p")
+    assert len(writes) == 2
+    back = spark.read.parquet(path)
+    assert sorted(map(tuple, back.select("k", "p", "v").collect())) == sorted(base_rows)
+    assert set(back.inputFiles()) == files
+    assert not [d for d in os.listdir(path) if d.startswith(".merge-")]
 
 
 def test_incremental_agg_refresh_touches_only_delta_partitions(spark, sf_dir, tmp_path):

@@ -539,22 +539,17 @@ def test_tws_event_profile_composite_state(spark, sf_dir):
     assert got == want
 
 
-def test_tws_timer_heartbeat(spark, sf_dir):
+def test_tws_timer_heartbeat(spark, sf_dir, tmp_path):
     """transformWithStateInPandas timers: registerTimer/listTimers/
     deleteTimer re-armed per batch, handleExpiredTimer emitting
     snapshot rows. The 'live' channel must equal the batch per-user
     counts exactly; the 'timer' channel must have fired (multi-batch
     source) with snapshots bounded by the final count."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from libmr_spark.sources.readers import events_table
     from libmr_spark.streaming.stateful import timer_heartbeat_tws
-    from libmr_spark.streaming.windows import run_to_memory_sink
+    from libmr_spark.streaming.windows import replay_chunks, run_to_memory_sink
 
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -562,22 +557,11 @@ def test_tws_timer_heartbeat(spark, sf_dir):
     )
     # two time-ordered files so batch 1 advances the watermark past
     # the expiries armed in batch 0 (event-time timers are data-driven)
-    srcdir = tempfile.mkdtemp(prefix="tws_timer_src_")
     e = events_table(spark, sf_dir).select("event_id", "ts", "user_id")
     med = e.approxQuantile("event_id", [0.5], 0.0)[0]
-    for k in range(2):
-        cond = (F.col("event_id") <= med) if k == 0 else (F.col("event_id") > med)
-        chunk = e.filter(cond).drop("event_id")
-        stage = os.path.join(srcdir, f"_stage{k}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(srcdir, f"chunk_{k}.parquet"))
-        shutil.rmtree(stage)
-    sdf = (
-        spark.readStream.schema("ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-        .withWatermark("ts", "0 seconds")
+    chunks = [e.filter(F.col("event_id") <= med).drop("event_id"), e.filter(F.col("event_id") > med).drop("event_id")]
+    sdf = replay_chunks(spark, str(tmp_path / "src"), chunks, "ts timestamp, user_id bigint").withWatermark(
+        "ts", "0 seconds"
     )
     run_to_memory_sink(
         timer_heartbeat_tws(sdf.groupBy("user_id")),
@@ -602,7 +586,6 @@ def test_tws_timer_heartbeat(spark, sf_dir):
     # timers actually fired for at least some keys (batch-1 processing
     # happens strictly after batch-0 registration on a wall clock)
     assert fired, "no timer ever expired across the 2-batch drain"
-    shutil.rmtree(srcdir, ignore_errors=True)
 
 
 def test_replay_chunks_drain_every_batch_once_and_remove_checkpoint(
