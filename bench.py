@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from libmr_spark.core.layout import materialised  # noqa: E402
 from libmr_spark.queries import QUERIES  # noqa: E402
 from libmr_spark.session import get_spark  # noqa: E402
 
@@ -502,6 +503,15 @@ def _prior_timings() -> dict:
         return {}
 
 
+def _timed_run(fn, spark, sf_dir) -> float:
+    """Seconds for one run of query ``fn`` to the noop sink, in its own
+    ``materialised()`` scope (its release included)."""
+    t0 = time.time()
+    with materialised():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -520,8 +530,13 @@ def main() -> int:
     # Each query is isolated: one broken query records an error entry
     # instead of killing the whole run (round 2 lost ALL perf data to a
     # single reader failure at query 17).
+    # Each timed run is one materialised() scope: what a query freezes
+    # is released when its run ends, so no run reads another's frozen
+    # frames and the executors do not accumulate them.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    rdds_before = len(persistent_rdds())
     for name in HEADLINE:
         fn = QUERIES[name].fn
         best = float("inf")
@@ -533,13 +548,10 @@ def main() -> int:
         n_runs = 1 if name in LIFECYCLE else 2
         try:
             for _ in range(n_runs):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
+                best = min(best, _timed_run(fn, spark, sf_dir))
             if name in prior and best > 3 * prior[name]:
-                t0 = time.time()  # noise-guard re-run (see _prior_timings)
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
+                # noise-guard re-run (see _prior_timings)
+                best = min(best, _timed_run(fn, spark, sf_dir))
             timings[name] = round(best, 3)
             print(f"# {name}: {timings[name]}s", file=sys.stderr)
         except Exception as e:  # noqa: BLE001 — isolation is the point
@@ -579,13 +591,9 @@ def main() -> int:
             if name in full_timings or name in full_errors:
                 continue
             try:
-                t0 = time.time()
-                q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = time.time() - t0
+                best = _timed_run(q.fn, spark, sf_dir)
                 if name in prior and best > 3 * prior[name]:
-                    t0 = time.time()  # noise-guard re-run
-                    q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                    best = min(best, time.time() - t0)
+                    best = min(best, _timed_run(q.fn, spark, sf_dir))  # noise-guard re-run
                 full_timings[name] = round(best, 3)
                 print(f"# full {name}: {full_timings[name]}s", file=sys.stderr)
             except Exception as e:  # noqa: BLE001 — isolation is the point
@@ -598,6 +606,8 @@ def main() -> int:
         }
         if full_errors:
             out["full"]["errors"] = full_errors
+    # the scopes above leave no frozen frame behind: after == before
+    out["persisted_rdds"] = {"before": rdds_before, "after": len(persistent_rdds())}
 
     # The driver stores only the LAST 2000 chars of stdout and parses
     # the final JSON line — round 4's full-inventory sweep made the

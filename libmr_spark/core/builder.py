@@ -35,6 +35,7 @@ supplied by Spark's scheduler/shuffle and deliberately NOT rebuilt.
 
 from __future__ import annotations
 
+import contextvars
 import dataclasses
 import datetime
 import decimal
@@ -72,7 +73,9 @@ def run_with_job_group_timeout(spark: SparkSession, work: Callable[[], Any], tim
     deadline passes, then ``ExecutionError(error_msg)`` is raised. This
     is the Spark analog of the reference's event-loop delay-task timers
     (execution max-idle /root/reference/src/mr.c:1306-1331, remote-task
-    timeout /root/reference/src/mr.c:2085-2099)."""
+    timeout /root/reference/src/mr.c:2085-2099). ``work`` runs in a copy
+    of the caller's context, so frames it freezes land in the caller's
+    ``layout.materialised()`` scope."""
     sc = spark.sparkContext
     group = f"libmr-timeout-{uuid.uuid4().hex}"
     out: dict[str, Any] = {}
@@ -84,7 +87,7 @@ def run_with_job_group_timeout(spark: SparkSession, work: Callable[[], Any], tim
         except Exception as e:  # surfaced below
             out["exc"] = e
 
-    t = threading.Thread(target=target, daemon=True)
+    t = threading.Thread(target=contextvars.copy_context().run, args=(target,), daemon=True)
     t.start()
     t.join(timeout_ms / 1000.0)
     if t.is_alive():
@@ -323,7 +326,9 @@ class Execution:
         # Persisting a frame that two branches read makes each of its
         # partitions compute once: the second reader waits on the block's
         # write lock, then reads the block. Frames the caller had already
-        # cached are left as they are.
+        # cached are left as they are. This lazy persist is the one cache
+        # call outside core/layout.py: it lives for this one action and
+        # is released below, which keeps an execution at one job.
         persisted = [d for d in self._shared if d.storageLevel == StorageLevel.NONE]
         for d in persisted:
             d.persist()

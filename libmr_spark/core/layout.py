@@ -11,11 +11,36 @@ exchange is added.  Every caller is an operator whose result is
 partitioning-independent by construction (associative integer sums,
 per-row signatures, equi-join candidate generation), so the oracle
 hash cannot change.
+
+Materialisation. This module is the one place the engine freezes an
+intermediate. ``freeze(df)`` takes an eager ``localCheckpoint`` (one
+job: the frame is computed, kept in executor memory or disk, and its
+lineage cut) and records it in the innermost open ``materialised()``
+scope; ``release(df)`` frees one frozen frame at once, through its
+``LogicalRDD``'s RDD, since ``DataFrame.unpersist`` on a checkpointed
+frame frees nothing. ``with materialised():`` releases everything frozen
+inside it when the block exits, frames frozen on worker threads that
+run in a copy of the opening context included. The caller owns the
+scope and operators never open one: an operator may return a lazy
+frame that reads its frozen intermediates, and those stay alive until
+the caller's scope closes; reading such a frame after that raises.
+Outside any scope ``freeze`` is a plain eager ``localCheckpoint`` and
+its blocks stay until Spark's context cleaner finds them unreachable.
+The one cache call outside this module is ``builder.Execution._run``'s
+lazy ``persist`` of the frames two branches read: it lives for the one
+action of an execution and is released in that method's ``finally``.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+
 from pyspark.sql import DataFrame
+
+#: The innermost open ``materialised()`` scope: the frozen RDDs it
+#: releases on exit, by RDD id; None outside any scope.
+_SCOPE: contextvars.ContextVar[dict | None] = contextvars.ContextVar("libmr_materialised", default=None)
 
 
 #: Partition-count gate for ``rebalanced(probe=True)``: a frame already
@@ -106,3 +131,42 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     if key_cols:
         return df.repartition(target, *key_cols)
     return df.repartition(target)
+
+
+def _frozen_rdd(df: DataFrame):
+    """The JVM RDD that holds a frozen frame's blocks."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def freeze(df: DataFrame) -> DataFrame:
+    """``df`` computed now and kept, with its lineage cut, for the
+    innermost open ``materialised()`` scope (module docstring)."""
+    frozen = df.localCheckpoint(eager=True)
+    scope = _SCOPE.get()
+    if scope is not None:
+        rdd = _frozen_rdd(frozen)
+        scope[rdd.id()] = rdd
+    return frozen
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a frame ``freeze`` returned, now."""
+    rdd = _frozen_rdd(df)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.pop(rdd.id(), None)
+    rdd.unpersist(True)
+
+
+@contextlib.contextmanager
+def materialised():
+    """``with materialised():`` releases every frame frozen inside the
+    block when it exits, however it exits."""
+    scope: dict = {}
+    token = _SCOPE.set(scope)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for rdd in scope.values():
+            rdd.unpersist(True)

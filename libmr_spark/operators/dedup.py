@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, word_shingles
 from ..functions.vector import cosine_similarity
-from ..core.layout import fan_out, rebalanced
+from ..core.layout import fan_out, freeze, rebalanced, release
 from ..core import smalldf, store
 from ..core.smalldf import local_df
 
@@ -456,13 +456,13 @@ def ngram_jaccard_pairs(
     the defense. The hot set itself is tiny by construction
     (≤ total_postings / max_df entries).
 
-    Hot DETECTION is one exact aggregate over the persisted index (the
+    Hot DETECTION is one exact aggregate over the frozen index (the
     index is cached anyway — see below — so the extra pass reads
     memory, not the corpus), checked eagerly: when no shingle exceeds
     the cap — the common case for natural corpora — the whole defense
     melts away and the plan is identical to the undefended one.
     (Round 1 used a sampled detection pass to avoid re-tokenizing; with
-    the index persisted, exact detection is both cheaper and free of
+    the index frozen, exact detection is both cheaper and free of
     the missed-hot-shingle class.)
 
     Rejected alternative (measured 1.3× faster at sf0.1, kept out on
@@ -488,23 +488,22 @@ def ngram_jaccard_pairs(
         )
         return sh.select(id_col, F.size("hs").alias("sz"), F.explode("hs").alias("shingle"))
 
-    # the index feeds BOTH self-join sides and hot detection: persist
-    # it (round 1 measured persist as a net loss with only two readers;
+    # the index feeds BOTH self-join sides and hot detection: freeze
+    # it (round 1 measured caching as a net loss with only two readers;
     # with the third reader it's a measured 1.6× end-to-end win at
-    # sf0.1: 3.96s → 2.53s). The cache is left to LRU eviction — the
-    # returned DataFrame is lazy, so an unpersist here would undo the
-    # cache before the caller ever executes.
-    ex = _index(df).persist()
+    # sf0.1: 3.96s → 2.53s). It stays frozen until the caller's
+    # ``materialised()`` scope closes: the returned DataFrame is lazy
+    # and reads it (``core.layout``).
+    ex = freeze(_index(df))
     if max_df is not None:
-        hot = (
+        hot = freeze(
             ex.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_df)
             .select("shingle")
-            .persist()
         )
-        if hot.limit(1).count() == 0:  # eager: melt the defense away
-            hot.unpersist()
+        if hot.isEmpty():  # melt the defense away
+            release(hot)
             max_df = None
     if max_df is not None:
         # both joins below key on `shingle` — same exchange as the self-join
@@ -572,7 +571,7 @@ def winnowing_pairs(
     The index joins on ``xxhash64(fp)`` (8-byte longs), not the 32-char
     md5 hex strings — same shuffle-width/collision argument as the
     n-gram index. Unlike the n-gram path the fingerprint index is
-    persisted (both join sides and hot-detection read it, and it is
+    frozen (both join sides and hot-detection read it, and it is
     ~1/window the size of the shingle index), so hot detection is one
     exact aggregate over the cached index — no sampling pass needed.
     """
@@ -583,20 +582,19 @@ def winnowing_pairs(
         .select(F.col(id_col), winnowing_from_hashes(F.col("__hs__"), window).alias("fps"))
         .withColumn("sz", F.size("fps"))
     )
-    ex = fps.select(
-        id_col, "sz", F.explode(F.transform("fps", lambda s: F.xxhash64(s))).alias("fp")
-    ).persist()
+    ex = freeze(
+        fps.select(id_col, "sz", F.explode(F.transform("fps", lambda s: F.xxhash64(s))).alias("fp"))
+    )
     hot = None
     if max_df is not None:
-        hot = (
+        hot = freeze(
             ex.groupBy("fp")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_df)
             .select("fp")
-            .persist()
         )
-        if hot.limit(1).count() == 0:  # eager: melt the defense away
-            hot.unpersist()
+        if hot.isEmpty():  # melt the defense away
+            release(hot)
             hot = None
     if hot is not None:
         ex_idx = ex.join(hot, "fp", "left_anti")
@@ -719,8 +717,8 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select(id_col, "shingles", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # both sides of the bucket self-join read the banded signatures;
-    # persist them (ids + band keys + shingle sets ≪ corpus bytes)
-    banded = banded.persist()
+    # freeze them (ids + band keys + shingle sets ≪ corpus bytes)
+    banded = freeze(banded)
 
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -872,7 +870,7 @@ def simhash_pairs(
             return shifted
         return shifted.bitwiseAND(F.lit((1 << widths[c]) - 1))
 
-    chunks = sh.select(
+    chunks = freeze(sh.select(
         id_col,
         "simhash64",
         F.explode(
@@ -886,7 +884,7 @@ def simhash_pairs(
                 ]
             )
         ).alias("cv"),
-    ).select(id_col, "simhash64", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val")).persist()
+    ).select(id_col, "simhash64", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val")))
     a, b = chunks.alias("a"), chunks.alias("b")
     ham = hamming_distance(F.col("a.simhash64"), F.col("b.simhash64"))
     return (
@@ -1064,15 +1062,15 @@ def connected_components(
     (pinned by test_connected_components_chain_converges_fast). No
     ``collect_set`` of neighborhoods: the per-node minimum comes from a
     plain ``min`` aggregate, so a 100M-degree hub node never
-    materializes its neighbor list in one row. Each round
-    ``localCheckpoint``s its edge table — persist alone is NOT enough
+    materializes its neighbor list in one row. Each round freezes its
+    edge table (``layout.freeze``) and releases the previous round's
+    — persist alone is NOT enough
     for iterative plans: the logical plan doubles every round and
     Catalyst's analysis/canonicalization work grows exponentially
     (observed: round 10 of a chain graph spent minutes inside plan
     normalization). Checkpointing truncates lineage to O(1) per round;
-    on a real cluster with executor churn, point
-    ``spark.sparkContext.setCheckpointDir`` at durable storage and swap
-    ``localCheckpoint`` for ``checkpoint``.
+    on a real cluster with executor churn, ``layout.freeze`` would need
+    a reliable ``checkpoint`` under a durable checkpoint directory.
 
     ``stats`` (optional dict) receives ``{"rounds": r}`` for
     observability and tests (0 = the driver-local fast path ran).
@@ -1087,11 +1085,10 @@ def connected_components(
     never collected (corpus-sized at scale); only the star/roots table
     changes provenance.
     """
-    e = (
+    e = freeze(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     if e.count() <= smalldf._CC_DRIVER_MAX_EDGES:
         parent: dict = {}
@@ -1110,7 +1107,7 @@ def connected_components(
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        e.unpersist()
+        release(e)
         moved = [x for x in parent if find(x) != x]
         roots = _local_pairs(
             edges.sparkSession, ("u", "__root__"), e.schema["u"].dataType,
@@ -1147,19 +1144,19 @@ def connected_components(
         o = e1.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         smin = o.groupBy("u").agg(F.min("v").alias("m"))
         joined = o.join(smin, "u")
-        new_e = (
+        # frozen: materializes + truncates lineage
+        new_e = freeze(
             joined.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smin.select("u", F.col("m").alias("v")))
             .distinct()
-            .localCheckpoint()  # eager: materializes + truncates lineage
         )
         # bit_xor (not sum): order-independent and overflow-free under
         # ANSI mode; edges are distinct so xor cancellation can't collide
         sig = new_e.agg(
             F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
         ).first()
-        e.unpersist()
+        release(e)
         e = new_e
         if sig["n"] == 0 or prev_sig == (sig["n"], sig["h"]):
             break
@@ -1326,7 +1323,7 @@ def dedup_incremental_exact(
         # freeze the batch aggregate once: it feeds the probe collect,
         # the history semi-probe, and the anti-join (and admission
         # must not re-derive it per use)
-        batch_fp = batch_fp.localCheckpoint(eager=True)
+        batch_fp = freeze(batch_fp)
         paths = _admission_paths(spark, fp_table_path, tags, batch_fp)
         if paths:
             history = spark.read.parquet(*paths)
@@ -1354,7 +1351,7 @@ def dedup_incremental_exact(
     # re-run the anti-join after the history gained this batch's own
     # fingerprints (self-rejection), and the caller's action should not
     # recompute the admission work a second time
-    admitted = admitted.localCheckpoint(eager=True)
+    admitted = freeze(admitted)
     if tags and admitted.isEmpty():
         # an all-duplicate batch (the replayed-micro-batch case)
         # changes no state — committing an empty tag would only
@@ -1407,7 +1404,7 @@ def dedup_incremental_minhash(
 
     Returns the admitted (id, sz) rows; first call bootstraps the
     store. The admission set is materialized BEFORE the appends
-    (localCheckpoint prevents self-rejection re-evaluation, same as
+    (the freeze prevents self-rejection re-evaluation, same as
     dedup_incremental_exact).
 
     Crash consistency: a naive pair of appends would leave a torn
@@ -1465,7 +1462,7 @@ def dedup_incremental_minhash(
         # work on an unzoned store (the gate is a metadata check).
         idx_paths = store.batch_paths(store_path, "index", tags)
         if _table_zoned(store_path, "index", tags, "bucket"):
-            banded = banded.localCheckpoint(eager=True)
+            banded = freeze(banded)
             idx_paths = _probe_paths(
                 store_path, "index", tags, "bucket",
                 _collect_probes(banded, "bucket"),
@@ -1493,7 +1490,7 @@ def dedup_incremental_minhash(
             # files — the scan becomes O(candidates), not O(corpus).
             pay_paths = store.batch_paths(store_path, "payload", tags)
             if _table_zoned(store_path, "payload", tags, id_col):
-                cand = cand.localCheckpoint(eager=True)
+                cand = freeze(cand)
                 pay_paths = _probe_paths(
                     store_path, "payload", tags, id_col,
                     _collect_probes(cand, "hid"),
@@ -1519,7 +1516,7 @@ def dedup_incremental_minhash(
             admitted = sigs
     else:
         admitted = sigs
-    admitted = admitted.select(id_col, "sig", "shingles").localCheckpoint(eager=True)
+    admitted = freeze(admitted.select(id_col, "sig", "shingles"))
     # two-phase commit: write both batch directories, THEN publish the
     # tag with an atomic manifest swap — unpublished directories are
     # invisible to every reader (see docstring)
@@ -1588,7 +1585,7 @@ def dedup_incremental_embedding(
         # column is the fat read): zero extra work on unzoned stores.
         idx_paths = store.batch_paths(store_path, "index", tags)
         if _table_zoned(store_path, "index", tags, "bucket"):
-            banded = banded.localCheckpoint(eager=True)
+            banded = freeze(banded)
             idx_paths = _probe_paths(
                 store_path, "index", tags, "bucket",
                 _collect_probes(banded, "bucket"),
@@ -1606,7 +1603,7 @@ def dedup_incremental_embedding(
         if cand is not None:
             pay_paths = store.batch_paths(store_path, "payload", tags)
             if _table_zoned(store_path, "payload", tags, id_col):
-                cand = cand.localCheckpoint(eager=True)
+                cand = freeze(cand)
                 pay_paths = _probe_paths(
                     store_path, "payload", tags, id_col,
                     _collect_probes(cand, "hid"),
@@ -1640,7 +1637,7 @@ def dedup_incremental_embedding(
         )
     else:
         admitted = sig
-    admitted = admitted.select(id_col, vec_col, "__bh__").localCheckpoint(eager=True)
+    admitted = freeze(admitted.select(id_col, vec_col, "__bh__"))
     if payload_int8:
         from ..functions.vector import symmetric_int8
 
@@ -1710,10 +1707,10 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
     rows, :func:`dedup_incremental_clusters`, maps a doc to its
     component's minimum id, so ``new < old`` holds on every valid row;
     the same check rules out cycles, self-rows and nulls."""
-    r = remap.select("old", "new").localCheckpoint(eager=True)
+    r = freeze(remap.select("old", "new"))
     if r.count() <= smalldf._CC_DRIVER_MAX_EDGES:
         rows = r.collect()
-        r.unpersist()
+        release(r)
         parent: dict = {}
         for o, n in rows:
             if o is None or n is None or not n < o or o in parent:
@@ -1743,8 +1740,9 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
     )
     if not malformed.isEmpty():
         raise ValueError(_MALFORMED_FOREST)
+    frozen = r
     for _ in range(max_iterations):
-        hop = (
+        hop = freeze(
             r.alias("a")
             .join(r.alias("b"), F.col("a.new") == F.col("b.old"), "left")
             .select(
@@ -1752,9 +1750,9 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
                 F.coalesce(F.col("b.new"), F.col("a.new")).alias("new"),
                 F.col("b.new").isNotNull().alias("moved"),
             )
-            .localCheckpoint(eager=True)
         )
-        r = hop.select("old", "new")
+        release(frozen)
+        frozen, r = hop, hop.select("old", "new")
         if hop.filter(F.col("moved")).isEmpty():
             return r
     raise RuntimeError("_resolve_remap: merge-chain compression did not converge")
@@ -1832,7 +1830,7 @@ def dedup_incremental_clusters(
             F.broadcast(uniq.select(id_col)), id_col, "semi"
         )
         uniq = uniq.join(F.broadcast(_hits), id_col, "left_anti")
-    sh_new = _shingle_hash_index(uniq, text_col, id_col, n).localCheckpoint(eager=True)
+    sh_new = freeze(_shingle_hash_index(uniq, text_col, id_col, n))
 
     a = sh_new.select(
         F.col(id_col).alias("id_a"), F.col("sz").alias("sza"), "shingle"
@@ -1875,18 +1873,16 @@ def dedup_incremental_clusters(
         edges = new_new
         nodes = uniq.select(id_col)
 
-    cc = connected_components(edges, nodes, id_col=id_col).localCheckpoint(eager=True)
-    members_new = (
+    cc = freeze(connected_components(edges, nodes, id_col=id_col))
+    members_new = freeze(
         cc.join(uniq.select(id_col), id_col, "left_semi")
         .select(id_col, F.col("cluster_id").alias("cid"))
-        .localCheckpoint(eager=True)
     )
     if touched is not None:
-        remap_new = (
+        remap_new = freeze(
             cc.join(touched, id_col, "left_semi")
             .filter(F.col("cluster_id") != F.col(id_col))
             .select(F.col(id_col).alias("old"), F.col("cluster_id").alias("new"))
-            .localCheckpoint(eager=True)
         )
     else:
         remap_new = local_df(spark, [], "old bigint, new bigint")
@@ -1977,9 +1973,7 @@ def delete_from_cluster_store(
             state["rr"] = _resolve_remap(df)
             return df.filter(F.lit(False))
         if table == "shingles":
-            rem = df.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-                eager=True
-            )
+            rem = freeze(df.join(F.broadcast(ids), id_col, "left_anti"))
             state["sh"] = rem
             return rem
         # members: resolve, drop, recompute within touched clusters
@@ -2009,7 +2003,7 @@ def delete_from_cluster_store(
         relabeled = connected_components(pairs, affected, id_col=id_col).select(
             id_col, F.col("cluster_id").alias("cid")
         )
-        return untouched.unionByName(relabeled).localCheckpoint(eager=True)
+        return freeze(untouched.unionByName(relabeled))
 
     store.rewrite(
         spark, store_path, takedown, tables=("remap", "shingles", "members"),
@@ -2175,9 +2169,9 @@ def dedup_incremental_spans(
             .filter(F.col("d") >= 2)
             .select("h")
         )
-        spans = _spans_from_dup_windows(
-            rw.join(shared_all, "h", "left_semi").select(id_col, "i"), id_col
-        ).persist()
+        spans = freeze(
+            _spans_from_dup_windows(rw.join(shared_all, "h", "left_semi").select(id_col, "i"), id_col)
+        )
 
         tx.write("revspans", spans)
         tx.write("revdocs", recompute)
@@ -2244,7 +2238,7 @@ def _rewrite_span_store(spark, store_path: str, drop_ids=None, id_col: str = "do
                     .count()
                 )
                 win = win.join(F.broadcast(drop_ids), id_col, "left_anti")
-            win = win.persist()
+            win = freeze(win)
             state["win"] = win
             return rebalanced(win)
         if table == "revspans":
@@ -2324,7 +2318,7 @@ def table_store_ingest(
         # restrict-then-anti: scan (never shuffle) the history
         _hits = hist.join(F.broadcast(uniq.select(id_col)), id_col, "semi")
         uniq = uniq.join(F.broadcast(_hits), id_col, "left_anti")
-    uniq = uniq.localCheckpoint(eager=True)
+    uniq = freeze(uniq)
     with store.commit(store_path, params) as tx:
         tx.write(table, uniq)
     return uniq

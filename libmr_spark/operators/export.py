@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import store
-from ..core.layout import rebalanced
+from ..core.layout import freeze, rebalanced
 
 _PARAMS = {"kind": "sharded-export"}
 
@@ -97,7 +97,7 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
     # evaluation and write another — the manifest would then "verify"
     # bytes that were never written), and a deterministic frame
     # shouldn't pay its export chain twice either
-    exp = exp.localCheckpoint(eager=True)
+    exp = freeze(exp)
     rows = export_manifest_rows(exp)
     with store.commit(store_path, _PARAMS) as tx:
         if tags:
@@ -130,7 +130,7 @@ def export_store_commit(spark, store_path: str, exp: DataFrame) -> DataFrame:
             rows = rows.withColumn("reused", F.lit(False)).withColumn(
                 "data_tag", F.lit(tx.tag)
             )
-        rows = rows.localCheckpoint(eager=True)  # freeze before the writes below
+        rows = freeze(rows)  # freeze before the writes below
 
         changed = [
             r.file_idx for r in rows.filter(~F.col("reused")).select("file_idx").collect()

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.layout import freeze, release
+
 
 def pagerank(
     edges: DataFrame,
@@ -52,10 +54,10 @@ def pagerank(
     e = e.distinct()
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # edge table annotated with source out-degree, reused every round
-    ed = e.join(deg, "u").localCheckpoint(eager=True)
+    ed = freeze(e.join(deg, "u"))
     # the dangling node SET is rank-independent — compute once
-    dangling_ids = (
-        nodes.select(F.col(id_col).alias("u")).join(deg, "u", "left_anti").localCheckpoint(eager=True)
+    dangling_ids = freeze(
+        nodes.select(F.col(id_col).alias("u")).join(deg, "u", "left_anti")
     )
 
     # ranks carries every node from round 0, so each update is a LEFT
@@ -65,6 +67,7 @@ def pagerank(
         "rank", F.lit(1.0 / n_nodes)
     )
     base = (1.0 - damping) / n_nodes
+    frozen = None
     for it in range(iterations):
         # mass flowing along edges: rank(u)/deg(u) to each neighbor v
         contrib = (
@@ -95,7 +98,10 @@ def pagerank(
         # but a checkpoint costs a full materialization; every
         # checkpoint_every rounds balances plan growth vs job count
         if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = freeze(ranks)
+            if frozen is not None:
+                release(frozen)
+            frozen = ranks
     return ranks.select(F.col("u").alias(id_col), F.round("rank", 8).alias("rank"))
 
 
@@ -125,7 +131,7 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     # the edge list is consumed four times (two degree scans, the
     # orientation join, the count) and is typically the output of an
     # expensive join/explode + distinct — materialize it once
-    edges = edges.localCheckpoint(eager=False)
+    edges = freeze(edges)
     deg = (
         edges.select(F.col(u).alias("x"))
         .unionAll(edges.select(F.col(v).alias("x")))
@@ -134,7 +140,7 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
     du = deg.select(F.col("x").alias(u), F.col("deg").alias("du"))
     dv = deg.select(F.col("x").alias(v), F.col("deg").alias("dv"))
-    oriented = (
+    oriented = freeze(
         edges.join(du, u)
         .join(dv, v)
         .select(
@@ -147,7 +153,6 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
             .alias("e")
         )
         .select("e.s", "e.d")
-        .localCheckpoint(eager=False)
     )
     adj = oriented.groupBy("s").agg(F.collect_list("d").alias("nb"))
     n_tri = (

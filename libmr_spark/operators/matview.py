@@ -82,6 +82,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..core import store
+from ..core.layout import freeze
 from ..core.smalldf import local_df
 
 MATVIEW_TABLES = ("left", "right", "view")
@@ -208,10 +209,9 @@ def _admit(delta: DataFrame, parts: list, mcol: str) -> DataFrame:
     # checkpoints (r11 experiment) saved that job but were reverted:
     # under AQE the materializing action re-plans the checkpointed
     # subtree, so the "one job" saving was not realized reliably.
-    d = (
+    d = freeze(
         _net(delta, mcol)
         .withColumnRenamed(mcol, "_dm")
-        .localCheckpoint(eager=True)
     )
     n_batch = d.count()
     dk = d.select(*cols)
@@ -425,9 +425,9 @@ def _ingest_locked(
     # reverted)
     if zoned["left"] or zoned["right"]:
         if left_delta is not None:
-            left_delta = left_delta.localCheckpoint(eager=True)
+            left_delta = freeze(left_delta)
         if right_delta is not None:
-            right_delta = right_delta.localCheckpoint(eager=True)
+            right_delta = freeze(right_delta)
 
     def _delta_key_range(delta, needed):
         """The batch's [min, max] over the leading join key — the
@@ -494,7 +494,7 @@ def _ingest_locked(
         # pre-state; the side table's write and the view joins then
         # scan the cached partitions (see _admit on why lazy was
         # reverted)
-        return [f.name for f in fields], adm.localCheckpoint(eager=True)
+        return [f.name for f in fields], freeze(adm)
 
     lcols, ad_l = _side_state("left", left_delta, rng_l)
     rcols, ad_r = _side_state("right", right_delta, rng_r)
@@ -565,7 +565,7 @@ def _ingest_locked(
             # ONE shared delta computation; the (linear) per-view
             # transforms project/filter it, re-canonicalize, and commit
             # under the same tag — all views share the commit clock
-            dv = dv.localCheckpoint(eager=True)
+            dv = freeze(dv)
             for name, fn in sorted(views.items()):
                 out = fn(dv)
                 vcols = [c for c in out.columns if c != "mult"]
@@ -628,7 +628,7 @@ def _serve_net(spark, store_path, table, tags, mcol) -> DataFrame:
     # and the anti probe) and gate the broadcast hint on its size — a
     # very long post-compaction tail degrades to AQE's pick instead of
     # failing the serve at the broadcast limit
-    tkeys = tail.select(*cols).distinct().localCheckpoint(eager=True)
+    tkeys = freeze(tail.select(*cols).distinct())
     n_tail = tkeys.count()  # cheap scan of the eagerly cached partitions
     hit = base.alias("_b").join(
         _bcast_if_small(tkeys.alias("_t"), n_tail),
@@ -853,8 +853,8 @@ def matview_integrity(
     # branches reuse the cached partitions instead of re-running the
     # audit join), and the six counts ride one union-groupBy job
     # instead of six count jobs with six planning gaps.
-    served = served.localCheckpoint(eager=True)
-    recomputed = recomputed.localCheckpoint(eager=True)
+    served = freeze(served)
+    recomputed = freeze(recomputed)
 
     def _tagged(df, t):
         return df.select(F.lit(t).alias("_t"))

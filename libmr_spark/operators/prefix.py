@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.layout import freeze
+
 
 def prefix_sum(
     df: DataFrame,
@@ -58,11 +60,10 @@ def prefix_sum(
 
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
-    d = (
+    d = freeze(
         df.repartitionByRange(n, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("__pid__", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     # pass 2: P subtotal rows -> P starting offsets (driver-bounded).
     # The null guard piggybacks on this aggregate (count(value) vs

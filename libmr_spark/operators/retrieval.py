@@ -36,7 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..core import store
-from ..core.layout import rebalanced
+from ..core.layout import freeze, rebalanced
 from ..core.smalldf import local_df
 
 _PARAMS = {"kind": "bm25", "tokenizer": "ws-lower", "k1": "1.2", "b": "0.75"}
@@ -136,7 +136,7 @@ def bm25_index_ingest(
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     # materialize before the append (no lazy re-run of the anti-join
     # after the store gains this batch's own doc_ids)
-    dl = dl.localCheckpoint(eager=True)
+    dl = freeze(dl)
     with store.commit(index_path, _PARAMS) as tx:
         tx.write("postings", tf)
         tx.write("doclen", dl)
@@ -336,7 +336,7 @@ def ann_index_ingest(
                     ),
                 ),
             )
-        assigned = assigned.localCheckpoint(eager=True)
+        assigned = freeze(assigned)
         tx = store.Batch(index_path)
         tx.write("cells", assigned)
         # the one commit that drives the manifest lock itself (see above)
@@ -357,7 +357,7 @@ def ann_index_ingest(
         return assigned.select(id_col, "cid")
     if store_int8:
         assigned = assigned.withColumn("v", F.col("v").cast("array<tinyint>"))
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = freeze(assigned)
     # params=None preserves the store's recorded params verbatim — an
     # established store's quantizer params were validated above and may
     # legitimately differ from this call's bootstrap-only k_cells/rounds
@@ -508,9 +508,9 @@ def ann_index_retrain(
     def retrain(df, _table):
         # widen int8 codes for the Lloyd/assignment math, re-narrow on
         # the rewrite so the store keeps its declared cell dtype
-        q = df.select(
+        q = freeze(df.select(
             id_col, F.col("v").cast("array<bigint>").alias("v")
-        ).localCheckpoint()
+        ))
         cents = lloyd_exact(q, k=kc, rounds=rnd, id_col=id_col)
         # the pointer target must exist before the manifest (published
         # right after this transform returns) can reference it
@@ -717,10 +717,9 @@ def rrf_fusion(
 
     from ..functions.vector import cosine_similarity
 
-    short = (
+    short = freeze(
         bm25_rank(tf, dl, queries, k=shortlist)
         .select("query_id", F.col("rank").alias("rb"), "doc_id")
-        .localCheckpoint(eager=True)
     )
     wc = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("doc_id").asc())
     cosleg = (
@@ -836,7 +835,7 @@ def hybrid_index_ingest(
         uniq = uniq.join(F.broadcast(_hits), id_col, "left_anti")
     # one materialization of the admitted batch feeds all four tables
     # (and freezes the anti-join before the store gains these doc_ids)
-    uniq = uniq.localCheckpoint(eager=True)
+    uniq = freeze(uniq)
     tf = tokenize_ws(uniq, text_col, id_col).groupBy(id_col, "token").agg(
         F.count(F.lit(1)).alias("tf")
     )

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.layout import freeze
+
 #: hex alphabet is lowercase in both Spark and DuckDB md5()
 _PREFIX_LEN = 4
 _SPACE = 16 ** _PREFIX_LEN  # 65536 buckets
@@ -555,15 +557,15 @@ def dsir_importance_select(
             % buckets
         ).alias("_b"),
     )
-    # ONE corpus-keyed shuffle: per-(doc, bucket) counts. PERSISTED —
+    # ONE corpus-keyed shuffle: per-(doc, bucket) counts. FROZEN —
     # both downstream consumers (the bucket-side model counts and the
     # per-doc dot product) read the materialized count table, so the
     # raw corpus text is tokenized and exploded exactly once; without
     # this Catalyst plans two independent corpus scans (verified on
     # the formatted plan).
-    doc_bucket = occ.groupBy(id_col, "_tgt", "_b").agg(
+    doc_bucket = freeze(occ.groupBy(id_col, "_tgt", "_b").agg(
         F.count(F.lit(1)).alias("_c")
-    ).persist()
+    ))
     side = doc_bucket.groupBy("_b").agg(
         F.sum(F.when(F.col("_tgt") == 1, F.col("_c")).otherwise(0)).alias("_t"),
         F.sum(F.when(F.col("_tgt") == 0, F.col("_c")).otherwise(0)).alias("_r"),

@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..core.layout import fan_out
+from ..core.layout import fan_out, freeze
 from ..core.smalldf import local_df
 
 from ..functions.vector import cosine_similarity, dot, to_double_array
@@ -428,7 +428,7 @@ def kmeans_exact(
     receives ``{"centroids": [(s, n), ...]}`` for introspection.
     """
     scale = float(10 ** quant_digits)
-    q = fan_out(
+    q = freeze(fan_out(
         df.select(
             F.col(id_col),
             F.transform(
@@ -436,7 +436,7 @@ def kmeans_exact(
             ).alias("v"),
         ),
         id_col,
-    ).localCheckpoint()  # reused every round: freeze lineage once
+    ))  # reused every round: freeze lineage once
     cents = lloyd_exact(q, k=k, rounds=rounds, id_col=id_col)
     if stats is not None:
         stats["centroids"] = cents
@@ -609,7 +609,7 @@ def semantic_dedup(
     independent engine. Returns (id, cid BIGINT, keep BOOLEAN).
     """
     a = kmeans_exact(df, k=k, rounds=rounds, vec_col=vec_col, id_col=id_col)
-    a = a.select(id_col, "cid").localCheckpoint()  # one pass; reused 3x below
+    a = freeze(a.select(id_col, "cid"))  # one pass; reused 3x below
     withv = a.join(df.select(id_col, vec_col), id_col)
     # The pair join below is keyed on cid alone, so its shuffle has at
     # most k distinct keys and AQE's parallelism-first coalescing folds
@@ -977,10 +977,10 @@ def pca_power_exact(
     mean = [half_away(float(S[p]) / float(n)) for p in range(dim)]
 
     m_lit = F.array(*[F.lit(int(m)).cast("long") for m in mean])
-    c = fan_out(
+    c = freeze(fan_out(
         q.select(id_col, F.zip_with("v", m_lit, lambda a, b: a - b).alias("c")),
         id_col,
-    ).localCheckpoint()  # reused every iteration: freeze lineage once
+    ))  # reused every iteration: freeze lineage once
 
     w = [10 ** quant_digits] * dim
     for _ in range(iters):

@@ -147,10 +147,13 @@ def takedown_everywhere(
     def run(group):
         return {name: fn() for name, fn in group}
 
+    import contextvars
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(3, len(groups))) as pool:
-        futs = [pool.submit(run, g) for g in groups.values()]
+        # each task in a copy of this context: frames frozen there land
+        # in the caller's materialised() scope (core/layout.py)
+        futs = [pool.submit(contextvars.copy_context().run, run, g) for g in groups.values()]
         done = {name: r for f in futs for name, r in f.result().items()}
     return {name: done[name] for name, _path, _fn in tasks}
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..core import store
+from ..core.layout import freeze, release
 from ..core.smalldf import local_df
 
 
@@ -145,7 +146,7 @@ def bpe_store_train(
     vocab = _corpus_vocab(docs, text_col)
     for _rnd, l, r, _n in stored:
         vocab = vocab.select("word", "freq", apply_merge("syms", l, r).alias("syms"))
-    vocab = vocab.localCheckpoint()
+    vocab = freeze(vocab)
 
     new_merges: list = []
     next_rnd = (stored[-1][0] + 1) if stored else 1
@@ -155,9 +156,8 @@ def bpe_store_train(
             break  # vocabulary exhausted: commit what was learned
         l, r, n = top
         new_merges.append((rnd, l, r, n))
-        vocab = vocab.select(
-            "word", "freq", apply_merge("syms", l, r).alias("syms")
-        ).localCheckpoint()
+        prev, vocab = vocab, freeze(vocab.select("word", "freq", apply_merge("syms", l, r).alias("syms")))
+        release(prev)
 
     with store.commit(store_path, _PARAMS) as tx:
         tx.write("merges", local_df(spark, new_merges, "rnd int, l string, r string, n bigint"))
@@ -192,7 +192,7 @@ def bpe_store_encode(
     seg = _word_syms(words.select("word").distinct())
     for _rnd, l, r, _n in merges:
         seg = seg.select("word", apply_merge("syms", l, r).alias("syms"))
-    seg = seg.localCheckpoint()
+    seg = freeze(seg)
 
     # no broadcast hint: the segmentation map is vocabulary-sized
     # (Heaps-bounded) — AQE broadcasts it while it fits and falls back
@@ -245,10 +245,10 @@ def min_piece_segmentation(
     pieces = pieces.select("piece", F.length("piece").alias("plen"))
     words = words.select("word", F.length("word").alias("wlen"))
     frontier = words.select("word", "wlen", F.lit(0).alias("pos"))
-    seen = frontier.select("word", "pos").localCheckpoint(eager=True)
+    seen = freeze(frontier.select("word", "pos"))
     done_parts = []
     for step in range(1, max_iter + 1):
-        expanded = (
+        expanded = freeze(
             frontier.join(
                 F.broadcast(pieces),
                 F.substring(F.col("word"), F.col("pos") + 1, F.col("plen"))
@@ -256,23 +256,20 @@ def min_piece_segmentation(
             )
             .select("word", "wlen", (F.col("pos") + F.col("plen")).alias("pos"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         finished = expanded.filter(F.col("pos") == F.col("wlen")).select(
             "word", F.lit(step).alias("n_pieces")
         )
         done_parts.append(finished)
-        frontier = (
+        frontier = freeze(
             expanded.filter(F.col("pos") < F.col("wlen"))
             .join(finished.select("word"), "word", "left_anti")
             .join(seen, ["word", "pos"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         if frontier.isEmpty():
             break
-        seen = (
+        seen = freeze(
             seen.unionByName(frontier.select("word", "pos"))
-            .localCheckpoint(eager=True)
         )
     out = done_parts[0]
     for d in done_parts[1:]:
@@ -375,8 +372,8 @@ def unigram_em_train(
     # both inputs are bounded (distinct words / vocabulary); one
     # materialization each keeps the corpus scan and the candidate
     # mining from re-running under every EM round's jobs
-    words = words.localCheckpoint(eager=True)
-    pieces = pieces.localCheckpoint(eager=True)
+    words = freeze(words)
+    pieces = freeze(pieces)
     occ = (
         words.join(F.broadcast(pieces), F.expr("instr(word, piece) > 0"))
         .select(
@@ -408,14 +405,13 @@ def unigram_em_train(
 
     for _ in range(em_rounds):
         seg = unigram_viterbi_segment(spark, words, _costed(counts))
-        counts = (
+        counts = freeze(
             seg.join(words, "word")
             .select(
                 F.explode(F.split("path", " ")).alias("piece"), "freq"
             )
             .groupBy("piece")
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-            .localCheckpoint(eager=True)  # vocabulary-bounded
+            .agg(F.sum("freq").cast("long").alias("cnt"))  # vocabulary-bounded
         )
     return _costed(counts).select(
         "piece", F.col("cnt").alias("n_uses"), "cost_u"

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import store
+from ..core.layout import freeze
 
 _PARAMS = {"kind": "vocab-pmi", "tokenizer": "ws-lower", "ngram": "2"}
 
@@ -109,7 +110,7 @@ def pmi_store_ingest(
         ev = ev.filter(F.col("sign") > 0)  # nothing to delete yet
     # one materialization feeds all three tables and freezes the
     # net-sign admission before the store gains this batch's events
-    ev = ev.localCheckpoint(eager=True)
+    ev = freeze(ev)
     from ..queries_pipeline import _pmi_counts
 
     # _pmi_counts tokenizes the column literally named "text" — rename

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core.builder import create_builder
+from .core.layout import freeze
 from .core.rpc import run_on_all_shards, run_on_key
 from .functions import text as TX
 from .functions.vector import cosine_similarity
@@ -1630,7 +1631,7 @@ def knn_ivf_q(spark, sf_dir):
 def knn_ivf_pretrained_q(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     cents = SIM.train_ivf_centroids(emb, nlist=16, lloyd_iters=2)
-    assigned = SIM.assign_ivf(emb, cents).persist()
+    assigned = freeze(SIM.assign_ivf(emb, cents))
     batch1 = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
     batch2 = (
         emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 10))

@@ -15,19 +15,34 @@ libm-derived values (ln), and unique tie-breaks on every top-k.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .queries import QUERIES, _t, defquery  # noqa: F401
 
-SINK_ROOT = "/tmp/libmr_spark_sinks"
+#: The inventory's sink stores, under a root named for this package's
+#: path, so the sweeps of two checkouts never write the same store.
+SINK_ROOT = os.path.join(
+    tempfile.gettempdir(),
+    "libmr_spark_sinks-" + hashlib.sha1(os.path.dirname(os.path.abspath(__file__)).encode()).hexdigest()[:12],
+)
 
 
 def _sink_dir(name: str, sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/"))
     return os.path.join(SINK_ROOT, name, tag)
+
+
+def _fresh_sink_dir(name: str, sf_dir: str) -> str:
+    """``_sink_dir(name, sf_dir)``, emptied of any earlier run's files."""
+    path = _sink_dir(name, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 # --------------------------------------------------------------------
@@ -697,13 +712,10 @@ def props_map_stats_q(spark, sf_dir):
     "aggregated and must equal the batch count.",
 )
 def streaming_foreach_batch_sink_q(spark, sf_dir):
-    import shutil
-
     from .sources.readers import events_stream
     from .streaming.windows import drain
 
-    path = _sink_dir("foreach_batch_out", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("foreach_batch_out", sf_dir)
 
     def write_batch(bdf, batch_id):
         bdf.write.mode("append").parquet(path)

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from .core.layout import rebalanced
+from .core.layout import freeze, rebalanced, release
 from .core.smalldf import local_df
 from .streaming.windows import drain, replay_chunks, run_to_memory_sink
 
@@ -255,13 +255,10 @@ def dedup_substring_spans_q(spark, sf_dir):
     "serves exactly the batch answer under this three-way slicing.",
 )
 def dedup_spans_incremental_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("span_store", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("span_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_spans(spark, path, d.filter(src_num < 7))
@@ -312,13 +309,10 @@ def dedup_spans_incremental_q(spark, sf_dir):
     "delete / time-travel-by-revision) for the fifth store kind.",
 )
 def dedup_spans_deleted_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("span_store_deleted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("span_store_deleted", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_spans(spark, path, d.filter(src_num < 7))
@@ -394,7 +388,7 @@ def dedup_spans_deleted_q(spark, sf_dir):
 def dedup_substring_rewrite_q(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     t = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    norm = d.select("doc_id", t.alias("t")).localCheckpoint(eager=True)
+    norm = freeze(d.select("doc_id", t.alias("t")))
     spans = dedup_substring_spans_q(spark, sf_dir).select(
         "doc_id",
         F.col("span_start").alias("s"),
@@ -1209,13 +1203,10 @@ WHERE CAST(substr(d.source, 4) AS INT) >= 15
     "documented regime as dedup_minhash_lsh (hash-green since r3).",
 )
 def dedup_incremental_minhash_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("minhash_history", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("minhash_history", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     corpus = d.filter(src_num < 15)
@@ -1436,13 +1427,10 @@ def time_decayed_user_score_q(spark, sf_dir):
     "data, so LSH recall cannot blur the cross-engine comparison.",
 )
 def dedup_incremental_embedding_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("emb_history", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("emb_history", sf_dir)
     e = _t(spark, sf_dir, "embeddings")
     hist = e.filter(F.col("vec_id") % 5 != 0).select("vec_id", "embedding")
     copies = e.filter(F.col("vec_id") % 10 == 1).select(
@@ -1492,13 +1480,10 @@ def dedup_incremental_embedding_q(spark, sf_dir):
     "(no 0.9-boundary pairs within quantization error).",
 )
 def dedup_incremental_embedding_int8_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("emb_history_int8", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("emb_history_int8", sf_dir)
     e = _t(spark, sf_dir, "embeddings")
     hist = e.filter(F.col("vec_id") % 5 != 0).select("vec_id", "embedding")
     copies = e.filter(F.col("vec_id") % 10 == 1).select(
@@ -1636,13 +1621,10 @@ def knn_lsh_candidates_q(spark, sf_dir):
     "test_compaction_preserves_admission.)",
 )
 def dedup_incremental_minhash_compacted_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("minhash_history_compacted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("minhash_history_compacted", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     hist = d.filter(src_num < 15)
@@ -1965,13 +1947,10 @@ def boilerplate_ngram_coverage_q(spark, sf_dir):
     "heavy_hitters_2pass / distinct_users_rolling_hll.",
 )
 def incremental_agg_retract_q(spark, sf_dir):
-    import shutil
-
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
     dec = "decimal(18,6)"
-    path = _sink_dir("agg_retract_state", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("agg_retract_state", sf_dir)
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
 
     base = e.filter(F.col("user_id") % 20 < 15)
@@ -2037,13 +2016,10 @@ def incremental_agg_retract_q(spark, sf_dir):
     "delete — under cross-engine oracle proof, not just pytest.",
 )
 def dedup_incremental_minhash_deleted_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("minhash_history_deleted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("minhash_history_deleted", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     hist = d.filter(src_num < 15)
@@ -2103,14 +2079,12 @@ def dedup_incremental_minhash_deleted_q(spark, sf_dir):
 )
 def streaming_agg_retract_q(spark, sf_dir):
     import os
-    import shutil
 
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     dec = "decimal(18,6)"
     srcdir = _sink_dir("agg_retract_in", sf_dir)
-    state = _sink_dir("agg_retract_stream_state", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    state = _fresh_sink_dir("agg_retract_stream_state", sf_dir)
 
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
     chunks = [
@@ -2152,7 +2126,7 @@ def streaming_agg_retract_q(spark, sf_dir):
                 F.col("dsum").cast(dec).alias("sum_value"),
             ).filter(F.col("n") > 0)
         # materialize before overwriting the directory we just read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state)
+        freeze(merged).write.mode("overwrite").parquet(state)
 
     sdf = replay_chunks(spark, srcdir, chunks, "event_type string, value double, sign int")
     drain(sdf, apply_batch)
@@ -2207,13 +2181,10 @@ SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id FROM reach GROUP BY v
     "dedup_incremental_minhash's job.",
 )
 def dedup_clusters_incremental_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("cc_store", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("cc_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -2268,13 +2239,10 @@ SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id FROM reach GROUP BY v
     "whose SERVING state is derived from two coupled tables).",
 )
 def cluster_store_time_travel_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("cc_store_asof", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("cc_store_asof", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -2328,13 +2296,10 @@ SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id FROM reach GROUP BY v
     "four store kinds (exact/minhash, BM25, ANN, clusters).",
 )
 def dedup_clusters_deleted_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("cc_store_deleted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("cc_store_deleted", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -2396,13 +2361,11 @@ def dedup_clusters_deleted_q(spark, sf_dir):
 )
 def streaming_ohlc_hourly_q(spark, sf_dir):
     import os
-    import shutil
 
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("ohlc_retract_in", sf_dir)
-    state = _sink_dir("ohlc_stream_state", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    state = _fresh_sink_dir("ohlc_stream_state", sf_dir)
 
     e = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -2438,7 +2401,7 @@ def streaming_ohlc_hourly_q(spark, sf_dir):
             merged = delta
         merged = merged.filter(F.col("cnt") > 0)
         # materialize before overwriting the directory we just read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state)
+        freeze(merged).write.mode("overwrite").parquet(state)
 
     schema = (
         "event_type string, window_start_ms bigint, ms bigint, "
@@ -2484,13 +2447,10 @@ def streaming_ohlc_hourly_q(spark, sf_dir):
     "versions) is documented on the operator.",
 )
 def incremental_store_time_travel_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("fp_history_tt", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("fp_history_tt", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     for lo in (0, 5, 10, 15):
@@ -3355,14 +3315,11 @@ def _multipass_er_sql() -> str:
     "function of it.",
 )
 def streaming_snm_er_q(spark, sf_dir):
-    import shutil
-
     from .operators.dedup import table_store_ingest, table_store_read
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("snm_er_in", sf_dir)
-    store = _sink_dir("snm_er_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("snm_er_store", sf_dir)
 
     parts = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
     chunks = [parts.filter(F.col("p_partkey") % 4 == k) for k in range(4)]
@@ -3983,7 +3940,7 @@ def bpe_train_merges_q(spark, sf_dir):
     from .operators.tokenizer_store import _corpus_vocab, apply_merge, top_pair
 
     d = _t(spark, sf_dir, "documents")
-    vocab = _corpus_vocab(d, "text").localCheckpoint()
+    vocab = freeze(_corpus_vocab(d, "text"))
 
     merges = []
     for rnd in range(1, _BPE_ROUNDS + 1):
@@ -3992,9 +3949,8 @@ def bpe_train_merges_q(spark, sf_dir):
             raise ValueError(f"bpe_train_merges: vocabulary exhausted at round {rnd}")
         l, r, n = top
         merges.append((rnd, l, r, n))
-        vocab = vocab.select(
-            "word", "freq", apply_merge("syms", l, r).alias("syms")
-        ).localCheckpoint()
+        prev, vocab = vocab, freeze(vocab.select("word", "freq", apply_merge("syms", l, r).alias("syms")))
+        release(prev)
 
     return local_df(
         spark, merges, "rnd int, merge_left string, merge_right string, n bigint"
@@ -4077,13 +4033,10 @@ def events_ohlc_hourly_q(spark, sf_dir):
     "pinned in tests/test_operators.py.",
 )
 def bm25_index_incremental_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import bm25_index_ingest, bm25_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("bm25_index", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("bm25_index", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     bm25_index_ingest(spark, path, d.filter(src_num < 10))
@@ -4111,14 +4064,11 @@ def bm25_index_incremental_q(spark, sf_dir):
     "compact on cadence, serve forever).",
 )
 def streaming_bm25_index_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import bm25_index_ingest, bm25_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_bm25_in", sf_dir)
-    store = _sink_dir("stream_bm25_index", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_bm25_index", sf_dir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
@@ -4327,13 +4277,10 @@ WHERE rank <= {k}"""
     "test_ann_index_store_lifecycle.",
 )
 def ann_index_incremental_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import ann_index_ingest, ann_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -4364,14 +4311,11 @@ def ann_index_incremental_q(spark, sf_dir):
     "serving side of the house.",
 )
 def bm25_index_deleted_q(spark, sf_dir):
-    import shutil
-
     from .operators.dedup import delete_from_incremental_store
     from .operators.retrieval import bm25_index_ingest, bm25_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("bm25_index_deleted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("bm25_index_deleted", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     bm25_index_ingest(spark, path, d.filter(src_num < 10))
@@ -4401,14 +4345,11 @@ def bm25_index_deleted_q(spark, sf_dir):
     "every survivor's distance and rank is untouched.",
 )
 def ann_index_deleted_q(spark, sf_dir):
-    import shutil
-
     from .operators.dedup import delete_from_incremental_store
     from .operators.retrieval import ann_index_ingest, ann_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index_deleted", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index_deleted", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -4488,13 +4429,10 @@ CROSS JOIN tot t"""
     "skew cross a threshold → schedule the rewrite.",
 )
 def ann_drift_monitor_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import ann_drift_stats, ann_index_ingest
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_drift", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_drift", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -4524,19 +4462,16 @@ def ann_drift_monitor_q(spark, sf_dir):
     "pins.",
 )
 def streaming_drift_retrain_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import (
         ann_drift_stats,
         ann_index_ingest,
         ann_index_retrain,
         ann_index_topk,
     )
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("drift_retrain_in", sf_dir)
-    store = _sink_dir("drift_retrain_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("drift_retrain_store", sf_dir)
 
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
@@ -4581,17 +4516,14 @@ def streaming_drift_retrain_q(spark, sf_dir):
     "serving, probing and ranking all see the retrained geometry.",
 )
 def ann_index_retrained_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import (
         ann_index_ingest,
         ann_index_retrain,
         ann_index_topk,
     )
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index_retrained", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index_retrained", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -5033,14 +4965,11 @@ SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id FROM reach GROUP BY v
     "forever.",
 )
 def streaming_dedup_clusters_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_cc_in", sf_dir)
-    store = _sink_dir("stream_cc_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_cc_store", sf_dir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = d.agg(F.max("doc_id")).first()[0]  # 1-row driver scalar
@@ -5105,27 +5034,22 @@ def streaming_dedup_clusters_q(spark, sf_dir):
     "trusted.",
 )
 def store_ops_dashboard_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
     from .operators.retrieval import ann_index_ingest, bm25_index_ingest
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
 
-    exact = _sink_dir("dash_exact", sf_dir)
-    shutil.rmtree(exact, ignore_errors=True)
+    exact = _fresh_sink_dir("dash_exact", sf_dir)
     DD.dedup_incremental_exact(spark, exact, d.filter(src_num < 10))
     DD.dedup_incremental_exact(spark, exact, d.filter(src_num >= 10))
 
-    bm25 = _sink_dir("dash_bm25", sf_dir)
-    shutil.rmtree(bm25, ignore_errors=True)
+    bm25 = _fresh_sink_dir("dash_bm25", sf_dir)
     bm25_index_ingest(spark, bm25, d.filter(src_num < 10))
     bm25_index_ingest(spark, bm25, d.filter(src_num >= 10))
 
-    ann = _sink_dir("dash_ann", sf_dir)
-    shutil.rmtree(ann, ignore_errors=True)
+    ann = _fresh_sink_dir("dash_ann", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, ann, emb.filter(F.col("vec_id") < half))
@@ -5166,13 +5090,10 @@ def store_ops_dashboard_q(spark, sf_dir):
     "reading one file group and four.",
 )
 def ann_index_int8_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import ann_index_ingest, ann_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index_int8", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index_int8", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(
@@ -5410,7 +5331,7 @@ def _mmr_from_index(tf, dl, qt, dvec, qvec):
     short = bm25_rank(tf, dl, qt, k=_RERANK_SHORTLIST).select("query_id", "doc_id")
     # rel and the candidate-pair sims are computed ONCE (shortlist-
     # bounded: <=50 and <=50*49 rows per query) and reused by all picks
-    rel = (
+    rel = freeze(
         short.join(dvec, "doc_id")
         .join(F.broadcast(qvec), "query_id")
         .select(
@@ -5419,29 +5340,26 @@ def _mmr_from_index(tf, dl, qt, dvec, qvec):
             F.round(cosine_similarity(F.col("dvec"), F.col("qvec")), 6).alias("rel"),
             "dvec",
         )
-        .localCheckpoint(eager=True)
     )
     r1 = rel.select("query_id", F.col("doc_id").alias("a"), F.col("dvec").alias("va"))
     r2 = rel.select("query_id", F.col("doc_id").alias("b"), F.col("dvec").alias("vb"))
-    sims = (
+    sims = freeze(
         r1.join(r2, "query_id")
         .filter(F.col("a") != F.col("b"))
         .select(
             "query_id", "a", "b",
             F.round(cosine_similarity(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
-        .localCheckpoint(eager=True)
     )
     rel = rel.drop("dvec")
 
     lam = F.lit(_MMR_LAMBDA)
     mu = F.lit(round(1 - _MMR_LAMBDA, 6))
     w1 = Window.partitionBy("query_id").orderBy(F.col("rel").desc(), F.col("doc_id").asc())
-    sel = (
+    sel = freeze(
         rel.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select("query_id", "doc_id", F.lit(1).alias("pick"), F.col("rel").alias("mmr"))
-        .localCheckpoint(eager=True)
     )
     for i in range(2, _MMR_K + 1):
         red = (
@@ -5470,7 +5388,7 @@ def _mmr_from_index(tf, dl, qt, dvec, qvec):
         )
         # flatten lineage per pick: selected-set frames stay tiny
         # (|queries| x i rows) and the next step's plan stays O(1)
-        sel = sel.unionByName(picked).localCheckpoint(eager=True)
+        sel = freeze(sel.unionByName(picked))
     return sel.select(
         "query_id", F.col("pick").cast("int").alias("rank"), "doc_id",
         F.col("mmr").alias("mmr_score"),
@@ -5616,13 +5534,10 @@ WHERE r.rk <= CAST(floor(cnt.nc / 2.0) AS BIGINT)
     "production swap is the documented threshold-sampling variant.",
 )
 def cluster_quota_sample_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("cc_quota_store", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("cc_quota_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -5680,14 +5595,11 @@ def _quota_sampled_clusters(labels, d):
     "commit all legs transactionally, serve one snapshot forever).",
 )
 def streaming_hybrid_index_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import hybrid_index_ingest, hybrid_index_rrf
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_hybrid_in", sf_dir)
-    store = _sink_dir("stream_hybrid_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_hybrid_store", sf_dir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     e = _t(spark, sf_dir, "embeddings").select(
@@ -5763,13 +5675,10 @@ def hybrid_store_mmr_q(spark, sf_dir):
     "log from growing with ingest count instead of vocabulary size.",
 )
 def collocation_pmi_compacted_q(spark, sf_dir):
-    import shutil
-
     from .operators.vocab import compact_vocab_store, pmi_store_ingest, pmi_store_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("pmi_store_compact", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("pmi_store_compact", sf_dir)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     src = F.col("doc_id") % 3
     ins = d.withColumn("sign", F.lit(1))
@@ -5859,13 +5768,11 @@ def _quota_export_frame(spark, sf_dir, store_dirname):
     """The curated-export chain (cluster store → quota sample → token
     counts → prefix-sum shard assignment), shared by
     quota_sampled_export and the export-manifest query."""
-    import shutil
 
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir(store_dirname, sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir(store_dirname, sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -5948,27 +5855,22 @@ def _export_frame_from_labels(labels, d):
     "combinable cells pass per monitored ANN store.",
 )
 def ops_dashboard_drift_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
     from .operators.retrieval import ann_index_ingest, bm25_index_ingest
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
 
-    exact = _sink_dir("dash2_exact", sf_dir)
-    shutil.rmtree(exact, ignore_errors=True)
+    exact = _fresh_sink_dir("dash2_exact", sf_dir)
     DD.dedup_incremental_exact(spark, exact, d.filter(src_num < 10))
     DD.dedup_incremental_exact(spark, exact, d.filter(src_num >= 10))
 
-    bm25 = _sink_dir("dash2_bm25", sf_dir)
-    shutil.rmtree(bm25, ignore_errors=True)
+    bm25 = _fresh_sink_dir("dash2_bm25", sf_dir)
     bm25_index_ingest(spark, bm25, d.filter(src_num < 10))
     bm25_index_ingest(spark, bm25, d.filter(src_num >= 10))
 
-    ann = _sink_dir("dash2_ann", sf_dir)
-    shutil.rmtree(ann, ignore_errors=True)
+    ann = _fresh_sink_dir("dash2_ann", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, ann, emb.filter(F.col("vec_id") < half))
@@ -6282,13 +6184,10 @@ GROUP BY file_idx
     "manifest is |shards| rows.",
 )
 def quota_export_manifest_q(spark, sf_dir):
-    import shutil
-
     from .operators.export import export_store_commit, read_export_manifest
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    store = _sink_dir("export_manifest_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("export_manifest_store", sf_dir)
     exp = _quota_export_frame(spark, sf_dir, "cc_export_manifest_cc")
     # one implementation of the hash/commit protocol (operators/export.py)
     # serves both this first-commit query and the update query — the
@@ -6430,6 +6329,7 @@ def fleet_snapshot_reads_q(spark, sf_dir):
         # their commit jobs from a small thread pool so one store's
         # driver-side commit tail back-fills with the next store's
         # scan (guide §2.6); per-store semantics unchanged
+        import contextvars
         from concurrent.futures import ThreadPoolExecutor
 
         jobs = [
@@ -6442,7 +6342,7 @@ def fleet_snapshot_reads_q(spark, sf_dir):
             ),
         ]
         with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(j) for j in jobs]:
+            for f in [pool.submit(contextvars.copy_context().run, j) for j in jobs]:
                 f.result()
 
     ingest(d.filter(src_num < 7))
@@ -6678,13 +6578,10 @@ FROM dseg GROUP BY doc_id"""
     "only ever pays one tokenize pass.",
 )
 def bpe_store_encode_pinned_q(spark, sf_dir):
-    import shutil
-
     from .operators.tokenizer_store import bpe_store_encode, bpe_store_merges, bpe_store_train
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    store = _sink_dir("bpe_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("bpe_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
 
     bpe_store_train(spark, store, d, rounds=3)
@@ -6778,13 +6675,10 @@ FROM a_q WHERE cluster_id NOT IN (SELECT cluster_id FROM b_q)
     "bounded quota windows + one anti-join — never an export replay.",
 )
 def quota_export_diff_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("cc_diff_store", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("cc_diff_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_clusters(spark, path, d.filter(src_num < 7))
@@ -6826,13 +6720,10 @@ def quota_export_diff_q(spark, sf_dir):
     "the value hash.",
 )
 def ann_index_filtered_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import ann_index_ingest, ann_index_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index_filtered", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index_filtered", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -6899,14 +6790,11 @@ def _span_cutlist_sql(where: str | None = None) -> str:
     "shuffle settings.",
 )
 def streaming_span_store_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_span_in", sf_dir)
-    store = _sink_dir("stream_span_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_span_store", sf_dir)
 
     dd = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
@@ -6940,14 +6828,11 @@ def streaming_span_store_q(spark, sf_dir):
     "twin that completes CDC parity for the vocabulary family.",
 )
 def streaming_vocab_cdc_q(spark, sf_dir):
-    import shutil
-
     from .operators.vocab import pmi_store_ingest, pmi_store_topk
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_vocab_in", sf_dir)
-    store = _sink_dir("stream_vocab_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_vocab_store", sf_dir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     src = F.col("doc_id") % 3
@@ -7335,13 +7220,10 @@ def _ann_auto_nprobe_sql(base_nprobe: int = 2, keep_where: str = "vec_id % 3 = 0
     "cost-based optimizer caches column stats.",
 )
 def ann_index_filtered_auto_q(spark, sf_dir):
-    import shutil
-
     from .operators.retrieval import ann_index_ingest, ann_index_topk_auto
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("ann_index_filtered_auto", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("ann_index_filtered_auto", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     half = emb.agg((F.max("vec_id") / 2).cast("bigint").alias("b")).first()[0]
     ann_index_ingest(spark, path, emb.filter(F.col("vec_id") < half))
@@ -7586,14 +7468,11 @@ def matview_compacted_q(spark, sf_dir):
     "one groupBy-SUM behind the freshest commit.",
 )
 def streaming_matview_join_q(spark, sf_dir):
-    import shutil
-
     from .operators.matview import matview_ingest, matview_read
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir, _sink_dir
 
     srcdir = _sink_dir("stream_mv_in", sf_dir)
-    store = _sink_dir("stream_mv_store", sf_dir)
-    shutil.rmtree(store, ignore_errors=True)
+    store = _fresh_sink_dir("stream_mv_store", sf_dir)
 
     left = (
         _t(spark, sf_dir, "orders")
@@ -7967,13 +7846,10 @@ FROM l JOIN r ON l.orderkey = r.orderkey
     "no rewrite of history, old batches stay bytes-identical.",
 )
 def matview_schema_evolution_q(spark, sf_dir):
-    import shutil
-
     from .operators.matview import matview_ingest, matview_read
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("matview_evo", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("matview_evo", sf_dir)
     old_left = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -8067,14 +7943,11 @@ GROUP BY tr.doc_id
     "net-fold amortizes through standard compaction.",
 )
 def decontamination_store_q(spark, sf_dir):
-    import shutil
-
     from .operators.matview import matview_ingest, matview_read
     from .queries import TX
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("decontam_store", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("decontam_store", sf_dir)
     d = _t(spark, sf_dir, "documents")
     ex = d.withColumn("__th__", TX.token_hashes(F.col("text"))).select(
         "doc_id",
@@ -8323,13 +8196,10 @@ FROM j GROUP BY o_custkey, l_linenumber
     "dominate, and they are shared.",
 )
 def matview_multi_view_q(spark, sf_dir):
-    import shutil
-
     from .operators.matview import matview_multi_ingest, matview_read
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("matview_multi", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("matview_multi", sf_dir)
     views = {
         "v_flagged": lambda dv: dv.filter(F.col("o_orderstatus") == "F"),
         "v_lines": lambda dv: dv.select("o_custkey", "l_linenumber", "mult"),
@@ -8709,13 +8579,10 @@ SELECT fp, doc_id, src_tag FROM stored WHERE doc_id % 7 <> 3
     "all-footers union-schema read.",
 )
 def dedup_store_schema_evolution_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("exact_evo", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("exact_evo", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_exact(
@@ -8777,13 +8644,10 @@ SELECT fp, doc_id FROM stored WHERE doc_id BETWEEN 100 AND 299
     "scan bounded by the probe's selectivity.",
 )
 def exact_store_zonemap_lookup_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("exact_zone", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("exact_zone", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     DD.dedup_incremental_exact(
@@ -8988,17 +8852,14 @@ WHERE doc_id % 7 <> 3
     "union-schema read.",
 )
 def vocab_store_payload_evolution_q(spark, sf_dir):
-    import shutil
-
     from .operators.vocab import (
         compact_vocab_store,
         pmi_store_ingest,
         vocab_docs_net,
     )
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("vocab_payload_evo", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("vocab_payload_evo", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     # pre-evolution ingest: no payload columns
@@ -9297,13 +9158,10 @@ def hard_negative_mining_q(spark, sf_dir):
     "corpus's (the payload column is the fat one).",
 )
 def dedup_minhash_zoned_admission_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("minhash_history_zoned", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("minhash_history_zoned", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     hist = d.filter(src_num < 15)

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .core.layout import freeze
 from .queries import QUERIES, _quality_sql, _t, defquery  # noqa: F401
 
 _DEC6 = "decimal(18,6)"  # exact accumulation type for double `value` sums
@@ -918,7 +919,7 @@ def runtime_bloom_join_q(spark, sf_dir):
         # confs must be live at EXECUTION, not planning — queries are
         # lazy, so materialize eagerly inside the conf scope (output is
         # |linestatus| rows; the checkpoint is trivially small)
-        return out.localCheckpoint(eager=True)
+        return freeze(out)
     finally:
         for k, v in prev.items():
             if v is None:
@@ -1113,15 +1114,12 @@ def snapshot_diff_orders_q(spark, sf_dir):
     "test_kv_writer_two_phase_commit.",
 )
 def kv_write_pyds_q(spark, sf_dir):
-    import shutil
-
     from .core.partitioner import slot_col
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
     from .sources.pyds import read_kv_sink, register_kv_datasource
 
     register_kv_datasource(spark)
-    path = _sink_dir("kv_pyds_out", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("kv_pyds_out", sf_dir)
     o = _t(spark, sf_dir, "orders")
     kv = o.select(
         F.concat(F.lit("key"), F.col("o_orderkey").cast("string")).alias("key"),
@@ -1402,13 +1400,10 @@ def variant_extract_props_q(spark, sf_dir):
     "the from-scratch path would.",
 )
 def dedup_incremental_exact_q(spark, sf_dir):
-    import shutil
-
     from .operators import dedup as DD
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
 
-    path = _sink_dir("fp_history", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("fp_history", sf_dir)
     d = _t(spark, sf_dir, "documents")
     src_num = F.substring("source", 4, 10).cast("int")
     corpus = d.filter(src_num < 15)
@@ -1721,15 +1716,12 @@ def ab_welch_t_q(spark, sf_dir):
     "must not change the final table.",
 )
 def streaming_merge_apply_q(spark, sf_dir):
-    import shutil
-
-    from .queries_ext import _sink_dir
+    from .queries_ext import _fresh_sink_dir
     from .sources.readers import events_stream
     from .sources.sinks import merge_upsert_latest
     from .streaming.windows import drain
 
-    path = _sink_dir("merge_apply_state", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _fresh_sink_dir("merge_apply_state", sf_dir)
 
     def apply_batch(bdf, batch_id):
         merge_upsert_latest(

@@ -137,24 +137,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescePartitions.minPartitionSize stays at Spark's
-        # default (1m) — SETTLED by an interleaved min-of-2 A/B at 32
-        # cores this round (OPTIMIZATION_r12.md "minPartitionSize
-        # A/B"): a 64k floor (round-11's experiment, reverted there
-        # without a measurement) speeds the CPU-heavy small-shuffle
-        # analytics paths (dedup_embedding_cosine 3.24->2.30s,
-        # semantic_dedup_kmeans 4.26->3.79s) but slows EVERY
-        # commit-machinery shuffle in the ~40 store-lifecycle soaks
-        # (matview_join_incremental 10.38->14.97s, dedup_spans
-        # 9.67->12.47s, minhash_compacted 11.79->13.27s) — a clear net
-        # loss, and at production scale bytes/parallelism >> the floor
-        # on analytics shuffles while small shuffles are exactly the
-        # incremental commits that want fewer tasks.  Env knob kept
-        # for re-testing on other hardware.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"),
-        )
+        # AQE coalescePartitions.minPartitionSize stays at Spark's default
+        # (1m): a 64k floor lost net in OPTIMIZATION_r12.md's A/B.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")

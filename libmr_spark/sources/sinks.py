@@ -12,6 +12,7 @@ file.
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 from pyspark.sql import DataFrame
@@ -90,8 +91,12 @@ def merge_upsert(
     under the staging directory. That window is no wider than the Spark
     route's commit; neither is atomic.
 
-    **Spark route.** Any other batch or base is merged by ONE Spark
-    write of the touched partitions straight into ``base_path``: the
+    **Spark route.** Before any Spark job, a batch column that would
+    change the type of a base data column in the union raises
+    ``ValueError`` (``v int`` over ``v string``; an ``int`` column into
+    a ``bigint`` base is widened and allowed). Any other batch or base
+    is then merged by ONE Spark write of the touched partitions
+    straight into ``base_path``: the
     touched partitions' rows (an ``isin`` filter that prunes at the file
     listing) minus the batch keys (a left-anti join), plus the batch,
     written as advisory-sized files (``rebalanced``) under
@@ -109,25 +114,30 @@ def merge_upsert(
 
     from ..core.layout import rebalanced
 
-    rows = _driver_rows(updates, keys, partition_col)
-    dup, parts = _check_batch(updates, keys, partition_col, rows)
-    if dup is not None:
-        raise ValueError(
-            f"duplicate key in update batch (e.g. {dict(zip(keys, dup))}): "
-            "MERGE requires at most one source row per key"
-        )
-    if not parts:
-        # empty update batch: nothing to merge — and a rewrite of zero
-        # rows would produce a schema-less parquet dir that poisons the
-        # next read (a quiet micro-batch must be a no-op)
-        return
     footer = _spark_footer(spark, base_path)
-    if rows is not None and footer is not None and _driver_merge(
-        base_path, footer, updates.schema, [r[len(keys) + 1:] for r in rows], keys, partition_col, parts
-    ):
-        return
+    rows = _driver_rows(updates, keys, partition_col)
+    if rows is not None:
+        parts = _checked_parts(updates, keys, partition_col, rows)
+        if not parts or (footer is not None and _driver_merge(
+            base_path, footer, updates.schema, [r[len(keys) + 1:] for r in rows], keys, partition_col, parts
+        )):
+            return
     schema = footer[0] if footer is not None else None
     base = (spark.read.schema(schema) if schema is not None else spark.read).parquet(base_path)
+    # a batch column the union would widen the base column to (``v int``
+    # over ``v string``) would fail the write after the scans, or
+    # rewrite the touched partitions with a type the others lack
+    merged = base.unionByName(updates).schema
+    for was, now in zip(base.schema.fields, merged.fields):
+        if was.name.lower() != partition_col.lower() and was.dataType.simpleString() != now.dataType.simpleString():
+            raise ValueError(
+                f"update batch would change base column {was.name!r} from {was.dataType.simpleString()} "
+                f"to {now.dataType.simpleString()}: cast the batch column to the base type"
+            )
+    if rows is None:
+        parts = _checked_parts(updates, keys, partition_col)
+        if not parts:
+            return
     touched = base.filter(F.col(partition_col).isin(parts))
     survivors = touched.join(updates.select(*keys), keys, "left_anti")
     rebalanced(survivors.unionByName(updates), partition_col).write.mode("overwrite").option(
@@ -241,6 +251,21 @@ def _check_batch(
     if dup:
         return tuple(dup[0][:-1]), []
     return None, [r[0] for r in updates.select(partition_col).distinct().collect()]
+
+
+def _checked_parts(updates: DataFrame, keys: list[str], partition_col: str, rows: list | None = None) -> list:
+    """The distinct ``partition_col`` values of a batch that passes
+    ``_check_batch``, or ValueError for a key that occurs twice. No
+    values for an empty batch, which the merge leaves as a no-op: a
+    rewrite of zero rows would leave a schema-less parquet directory
+    that poisons the next read."""
+    dup, parts = _check_batch(updates, keys, partition_col, rows)
+    if dup is not None:
+        raise ValueError(
+            f"duplicate key in update batch (e.g. {dict(zip(keys, dup))}): "
+            "MERGE requires at most one source row per key"
+        )
+    return parts
 
 
 def _driver_merge(base_path: str, footer, batch_schema, rows: list, keys: list[str], partition_col: str,
@@ -406,17 +431,20 @@ def write_sorted(
     sorted layout under INT96 skips nothing. The write forces
     ``TIMESTAMP_MICROS`` so footers carry stats (restoring the prior
     session setting afterwards)."""
-    spark = df.sparkSession
+    with _micros_timestamps(df.sparkSession):
+        df.repartitionByRange(n_files, range_col).sortWithinPartitions(range_col).write.mode(mode).parquet(path)
+
+
+@contextlib.contextmanager
+def _micros_timestamps(spark):
+    """Parquet timestamps written as ``TIMESTAMP_MICROS`` (with footer
+    min/max statistics) inside the block; the session's setting is
+    restored after."""
     key = "spark.sql.parquet.outputTimestampType"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "TIMESTAMP_MICROS")
     try:
-        (
-            df.repartitionByRange(n_files, range_col)
-            .sortWithinPartitions(range_col)
-            .write.mode(mode)
-            .parquet(path)
-        )
+        yield
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -641,10 +669,6 @@ def write_zorder(
     Morton interleave of ``cols`` (pre-bucketed ints), then drop the
     helper column. Same stats-bearing-timestamp discipline as
     ``write_sorted``."""
-    spark = df.sparkSession
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
     # zorder_col interleaves only bits 0..bits-1: a value >= 2^bits
     # would alias onto a distant z-code and silently degrade the
     # clustering — fail loudly instead (one cheap agg on a path that
@@ -663,7 +687,7 @@ def write_zorder(
                 "first or raise bits= — silent truncation would alias "
                 "distant values onto one Morton code"
             )
-    try:
+    with _micros_timestamps(df.sparkSession):
         (
             df.withColumn("__z__", zorder_col(cols, bits))
             .repartitionByRange(n_files, "__z__")
@@ -672,11 +696,6 @@ def write_zorder(
             .write.mode(mode)
             .parquet(path)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def append_idempotent(

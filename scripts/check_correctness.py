@@ -19,6 +19,7 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from libmr_spark.core.layout import materialised
 from libmr_spark.session import get_spark
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -68,7 +69,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with materialised():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failed.append(name)
             print(f"FAIL  {name}: spark error: {e}")

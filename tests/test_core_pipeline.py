@@ -333,6 +333,13 @@ def test_python_map_comma_typed_schema(spark, sf_dir):
     assert r0.price is not None and r0.tags["n"] == len(r0.key)
 
 
+def test_session_keeps_spark_default_min_partition_size(spark):
+    # AQE's coalescePartitions.minPartitionSize is Spark's own 1 MiB
+    # default: the session sets no other value and has no knob for it
+    value = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    assert spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(value) == 1 << 20
+
+
 def test_package_zip_is_per_session_and_imports_on_executors(spark, tmp_path, monkeypatch):
     # the shipped zip lives in the SparkContext's own temporary
     # directory, never at one fixed path under TMPDIR that another

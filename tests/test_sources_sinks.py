@@ -461,7 +461,9 @@ def test_merge_upsert_driver_route_falls_back_to_spark(spark, tmp_path, monkeypa
     # a driver-checked batch whose merge fails the driver gate is merged
     # by Spark: with the jobs that takes, into the table the Spark-checked
     # batch leaves, or raising the same exception class (Spark's analysis
-    # errors start no job)
+    # errors start no job). A batch column that would change a base
+    # column's type (int over string) is rejected before any job in
+    # both shapes, with the base left as it was
     import datetime
 
     import pyarrow as pa
@@ -508,10 +510,20 @@ def test_merge_upsert_driver_route_falls_back_to_spark(spark, tmp_path, monkeypa
                 for shape, batch in _batch_shapes(spark, rows, schema).items():
                     path = str(tmp_path / case.replace(" ", "_") / shape)
                     make(path)
-                    try:
-                        _, jobs = _spark_jobs(spark, lambda: merge_upsert(spark, path, batch, ["k"], "p"))
-                    except Exception as e:  # the Spark route's error, in either shape
-                        outcome[shape] = type(e)
+
+                    def merge():
+                        try:
+                            merge_upsert(spark, path, batch, ["k"], "p")
+                        except Exception as e:  # the Spark route's error, in either shape
+                            return e
+
+                    err, jobs = _spark_jobs(spark, merge)
+                    if case == "int over string":
+                        assert isinstance(err, ValueError) and "'v' from string to bigint" in str(err), (shape, err)
+                        assert jobs == 0, shape
+                        assert sorted(map(tuple, spark.read.parquet(path).select("k", "p", "v").collect())) == kv_rows
+                    if err is not None:
+                        outcome[shape] = type(err)
                     else:
                         assert jobs > 0, (case, shape)
                         df = spark.read.parquet(path)
@@ -519,6 +531,27 @@ def test_merge_upsert_driver_route_falls_back_to_spark(spark, tmp_path, monkeypa
             finally:
                 spark.conf.unset("spark.sql.parquet.mergeSchema")
         assert outcome["local"] == outcome["spark"], case
+
+
+def test_timestamp_conf_restored_after_sorted_and_zorder_writes(spark, tmp_path):
+    # write_sorted and write_zorder force TIMESTAMP_MICROS for their own
+    # write only: the session's setting is back after each, also when
+    # write_zorder rejects its input before writing
+    from libmr_spark.sources.sinks import write_sorted, write_zorder
+
+    key = "spark.sql.parquet.outputTimestampType"
+    df = spark.range(10).select(F.col("id").alias("a"), (F.col("id") % 3).alias("b"))
+    spark.conf.set(key, "INT96")
+    try:
+        write_sorted(df, str(tmp_path / "sorted"), "a", 2)
+        assert spark.conf.get(key) == "INT96"
+        write_zorder(df, str(tmp_path / "zorder"), ["a", "b"], 2)
+        assert spark.conf.get(key) == "INT96"
+        with pytest.raises(ValueError, match="outside"):
+            write_zorder(df.withColumn("a", F.col("a") + 5000), str(tmp_path / "bad"), ["a", "b"], 2)
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        spark.conf.set(key, "TIMESTAMP_MICROS")
 
 
 def test_merge_upsert_driver_write_failure_leaves_base_unchanged(spark, tmp_path, monkeypatch):
